@@ -28,11 +28,14 @@ from __future__ import annotations
 
 import argparse
 import contextlib
+import ctypes
 import importlib.util
 import json
 import os
 import random
 import shutil
+import signal
+import subprocess
 import sys
 import threading
 import time
@@ -81,21 +84,21 @@ def configure(work: str, trace: bool) -> int:
 
 
 def _descendants() -> list[list[str]]:
-    """/proc stat fields (after the command name) of every process this
-    one started: the driver JVM and Spark's Python workers."""
+    """Pid and /proc stat fields (after the command name) of every
+    process this one started: the driver JVM and Spark's Python workers."""
     stats: dict[int, list[str]] = {}
     for d in os.listdir("/proc"):
         if d.isdigit():
             try:
                 with open(f"/proc/{d}/stat") as fh:
-                    stats[int(d)] = fh.read().rsplit(")", 1)[1].split()
+                    stats[int(d)] = [d, *fh.read().rsplit(")", 1)[1].split()]
             except OSError:
                 continue
     me, out = os.getpid(), []
     for pid, fields in stats.items():
-        p = int(fields[1])
+        p = int(fields[2])
         while p and p != me and p in stats:
-            p = int(stats[p][1])
+            p = int(stats[p][2])
         if p == me:
             out.append(fields)
     return out
@@ -104,9 +107,56 @@ def _descendants() -> list[list[str]]:
 def tree_cpu_s() -> float:
     """CPU seconds used so far by the descendant processes, including
     workers they have already reaped."""
-    ticks = sum(int(f[11]) + int(f[12]) + int(f[13]) + int(f[14])
+    ticks = sum(int(f[12]) + int(f[13]) + int(f[14]) + int(f[15])
                 for f in _descendants())
     return ticks / os.sysconf("SC_CLK_TCK")
+
+
+def adopt_orphans() -> None:
+    """Become the parent of every process started below this one whose
+    own parent dies (the JVM's Python workers), so they can be reaped."""
+    PR_SET_CHILD_SUBREAPER = 36
+    ctypes.CDLL(None, use_errno=True).prctl(PR_SET_CHILD_SUBREAPER, 1, 0, 0, 0)
+
+
+def stop_processes(grace_s: float = 20.0) -> None:
+    """Stop Spark and the driver JVM, then end and reap every process
+    still below this one, so none outlives the run."""
+    context = sys.modules.get("pyspark.core.context")
+    sc = context and context.SparkContext
+    if sc and sc._active_spark_context is not None:
+        with contextlib.suppress(Exception):
+            sc._active_spark_context.stop()
+    proc = getattr(sc and sc._gateway, "proc", None)
+    if proc is not None:
+        # the gateway exits when its stdin closes, running its shutdown hooks
+        with contextlib.suppress(OSError):
+            proc.stdin.close()
+        try:
+            proc.wait(grace_s)
+        except subprocess.TimeoutExpired:
+            proc.kill()
+            proc.wait()
+    deadline = time.monotonic() + grace_s
+    sig = signal.SIGTERM
+    while True:
+        while True:
+            try:
+                if os.waitpid(-1, os.WNOHANG)[0] == 0:
+                    break
+            except ChildProcessError:
+                break
+        left = _descendants()
+        if not left:
+            return
+        if time.monotonic() > deadline:
+            sig = signal.SIGKILL
+        # a zombie ends with its parent: this process inherits and reaps it
+        for f in left:
+            if f[1] != "Z":
+                with contextlib.suppress(OSError):
+                    os.kill(int(f[0]), sig)
+        time.sleep(0.1)
 
 
 class RssSampler(threading.Thread):
@@ -120,7 +170,7 @@ class RssSampler(threading.Thread):
     def run(self) -> None:
         page = os.sysconf("SC_PAGE_SIZE")
         while not self._stop_evt.wait(0.2):
-            rss = sum(int(f[21]) for f in _descendants()) * page / 2**20
+            rss = sum(int(f[22]) for f in _descendants()) * page / 2**20
             self.peak_mb = max(self.peak_mb, rss)
 
     def stop(self) -> float:
@@ -451,9 +501,13 @@ def main() -> int:
 
     work = os.path.join(ROOT, ".bench_work", f"{args.workload}-{os.getpid()}")
     os.makedirs(work)
+    adopt_orphans()
+    # a terminated run still stops Spark and every worker before it exits
+    signal.signal(signal.SIGTERM, lambda sig, _: sys.exit(128 + sig))
     try:
         return run(args, work)
     finally:
+        stop_processes()
         shutil.rmtree(work, ignore_errors=True)
         with contextlib.suppress(OSError):
             os.rmdir(os.path.dirname(work))
