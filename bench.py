@@ -542,11 +542,11 @@ def main() -> None:
     # End-to-end crawl tier over synthesized shards from the sf
     # documents table (10 messy-URL replicas per doc — ~50K JSONL
     # lines at sf0.1): permissive ingest -> HTML extract ->
-    # canonicalize -> frontier filter -> URL+digest dedup +
-    # formula-sized Bloom seen-set -> langid gate -> quality gate
-    # (plans/crawl.py). Shard synthesis is prep, not measurement —
-    # the timed number is the pipeline a crawler actually re-runs
-    # per increment.
+    # canonicalize -> frontier filter -> URL+digest dedup -> seen
+    # filter + epoch 0 of the seen-ledger -> langid gate -> quality
+    # gate (plans/crawl.py), run as the bootstrap increment against
+    # a fresh, empty ledger each rep. Shard synthesis is prep, not
+    # measurement.
     from medallion_data_pipeline_spark.plans import crawl as crawl_plan
 
     crawl_land = tempfile.mkdtemp(prefix="mdp_bench_crawl_land_")
@@ -559,7 +559,9 @@ def main() -> None:
         cw = tempfile.mkdtemp(prefix="mdp_bench_crawl_")
         try:
             t0 = time.time()
-            crawl_plan.run_crawl_pipeline(spark, crawl_land, cw)
+            crawl_plan.run_crawl_increment_epochs(
+                spark, crawl_land, os.path.join(cw, "wh"),
+                seen_root=os.path.join(cw, "seen"))
             reps.append(round(time.time() - t0, 3))
         finally:
             shutil.rmtree(cw, ignore_errors=True)
@@ -568,49 +570,16 @@ def main() -> None:
     timings["pipeline_crawl_50k"] = _min_warm(reps)
     cal.tick("pipeline_crawl_50k")
 
-    # Incremental crawl (plans/crawl.py::run_crawl_increment): the
-    # prior increment is a full run over HALF the documents (untimed
-    # prep); the timed entry processes the FULL landing against its
-    # seen-set — ~half the digests Bloom-probe seen and exact-verify
-    # away, half are genuinely new and flow through the gates. This
-    # is the steady-state cost a crawler pays per increment: probe +
-    # verification join + merged seen-set + gates on the new half.
-    half_land = tempfile.mkdtemp(prefix="mdp_bench_crawl_half_")
-    crawl_plan.synthesize_crawl_shards(spark, sf_dir, half_land,
-                                       replicas=10, shards=8,
-                                       keep_mod=2, keep_rem=0)
-    prior_out = tempfile.mkdtemp(prefix="mdp_bench_crawl_prior_")
-    crawl_plan.run_crawl_pipeline(spark, half_land, prior_out)
-    shutil.rmtree(half_land, ignore_errors=True)
-    reps = []
-    for _rep in range(3):
-        if _rep == 2 and reps[0] <= 1.0:
-            break  # third rep only when the entry runs hot (see _min_warm)
-        cw = tempfile.mkdtemp(prefix="mdp_bench_crawl_inc_")
-        try:
-            t0 = time.time()
-            crawl_plan.run_crawl_increment(spark, crawl_land, cw,
-                                           prior_out_dir=prior_out)
-            reps.append(round(time.time() - t0, 3))
-        finally:
-            shutil.rmtree(cw, ignore_errors=True)
-        _release_cached_blocks(spark)
-    shutil.rmtree(prior_out, ignore_errors=True)
-    all_reps["pipeline_crawl_increment"] = reps
-    timings["pipeline_crawl_increment"] = _min_warm(reps)
-    cal.tick("pipeline_crawl_increment")
-
-    # Epoch-LEDGER incremental crawl (plans/crawl.py::
-    # run_crawl_increment_epochs): same prior/increment split as
-    # above, but the seen-set is the per-epoch ledger — the increment
-    # probes every live epoch filter with its own persisted m,
-    # exact-verifies against only the hit epochs' digest shards, and
-    # writes ONE new epoch sized at its own new-digest count. The
-    # merged-mode entry above re-hashes the whole corpus per
-    # increment; this entry's write is O(new docs), so the delta
-    # between the two is the merge cost a ledger amortizes away.
-    # Each rep gets a FRESH COPY of the prior ledger (the run
-    # appends an epoch — reps must not see each other's appends).
+    # Incremental crawl (plans/crawl.py::run_crawl_increment_epochs):
+    # the prior increment bootstraps the ledger from HALF the
+    # documents (untimed prep); the timed entry processes the FULL
+    # landing against it — ~half the digests Bloom-probe seen and
+    # exact-verify away against only the hit epochs' digest shards,
+    # half are genuinely new, flow through the gates and become ONE
+    # new epoch sized at its own new-digest count. This is the
+    # steady-state cost a crawler pays per increment. Each rep gets
+    # a FRESH COPY of the prior ledger (the run appends an epoch —
+    # reps must not see each other's appends).
     half_land = tempfile.mkdtemp(prefix="mdp_bench_crawl_half_")
     crawl_plan.synthesize_crawl_shards(spark, sf_dir, half_land,
                                        replicas=10, shards=8,

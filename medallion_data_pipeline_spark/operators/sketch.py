@@ -217,7 +217,7 @@ def bloom_epoch_hit_pairs_sized(probes: DataFrame, eblooms: DataFrame,
                                 k: int = BLOOM_K) -> DataFrame:
     """(col, epoch) pairs where epoch's filter reads full-hit — against
     epoch filters whose m DIFFERS per epoch (the seen-ledger shape,
-    plans/crawl.py::append_epoch_seen): each crawl increment sizes its
+    plans/crawl.py::stage_epoch_seen): each crawl increment sizes its
     own epoch filter at its own new-digest count (bloom_m_for), so
     probe positions must be recomputed with each epoch's persisted m —
     probing epoch e with epoch f's m silently loses the

@@ -29,7 +29,8 @@ from __future__ import annotations
 
 import os
 import time
-from dataclasses import dataclass
+from collections.abc import Callable
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -66,6 +67,33 @@ def write_counted(df: DataFrame, path: str,
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
     return int(obs.get["n"])
+
+
+@dataclass
+class StageRecorder:
+    """The one stage-bookkeeping path of the crawl and corpus plans.
+    ``record`` appends a StageResult timed from the caller's ``t0``
+    and then fires ``stage_hook(name)``; ``write`` first lands the
+    stage's frame under ``out_dir`` with its count riding the write
+    action. Results keep call order, so a half that runs overlapped on
+    another thread records into its own recorder, and the caller
+    appends that recorder's results after joining it."""
+    out_dir: str
+    stage_hook: Callable[[str], None] | None = None
+    results: list[StageResult] = field(default_factory=list)
+
+    def record(self, name: str, n_in: int, n_out: int, t0: float) -> int:
+        self.results.append(
+            StageResult(name, n_in, n_out, round(time.time() - t0, 2)))
+        if self.stage_hook is not None:
+            self.stage_hook(name)
+        return n_out
+
+    def write(self, name: str, n_in: int, df: DataFrame, path: str,
+              t0: float, partition_by: list[str] | None = None) -> int:
+        n_out = write_counted(df, os.path.join(self.out_dir, path),
+                              partition_by)
+        return self.record(name, n_in, n_out, t0)
 
 
 def quality_gate(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -192,17 +220,7 @@ def run_corpus_pipeline(spark: SparkSession, sf_dir: str, out_dir: str,
     land the layers under ``out_dir``: filtered/, dedup/, and corpus/
     (partitioned by split, with cluster_id, n_tokens, and bin columns).
     Returns per-stage audited counts + wall times."""
-    results: list[StageResult] = []
-
-    def _stage(name: str, n_in: int, df: DataFrame, path: str | None,
-               t0: float, partition_by: list[str] | None = None) -> int:
-        if path is not None:
-            n_out = write_counted(df, os.path.join(out_dir, path),
-                                  partition_by)
-        else:
-            n_out = df.count()
-        results.append(StageResult(name, n_in, n_out, round(time.time() - t0, 2)))
-        return n_out
+    rec = StageRecorder(out_dir)
 
     # the raw count rides the first stage's write action: observe is
     # placed BEFORE the gate's filter, so it sees every scanned row —
@@ -216,11 +234,11 @@ def run_corpus_pipeline(spark: SparkSession, sf_dir: str, out_dir: str,
 
     t0 = time.time()
     gated = quality_gate(docs)
-    n = _stage("quality_gate", -1, gated, "filtered", t0)
+    n = rec.write("quality_gate", -1, gated, "filtered", t0)
     # patch the just-appended stage in place (StageResult is a mutable
     # dataclass — ADVICE r15: reconstructing results[0] coupled the
     # patch to the stage's index and left a -1 sentinel on failure)
-    results[-1].rows_in = int(raw_obs.get["n"])
+    rec.results[-1].rows_in = int(raw_obs.get["n"])
     gated = spark.read.parquet(os.path.join(out_dir, "filtered"))
 
     t0 = time.time()
@@ -228,21 +246,22 @@ def run_corpus_pipeline(spark: SparkSession, sf_dir: str, out_dir: str,
     # stage (pair generation and the anti-join) — unpersisted, the
     # fingerprint semi-join would re-run per consumer
     exact = drop_exact_duplicates(gated).persist()
-    n = _stage("exact_dedup", n, exact, None, t0)
+    n = rec.record("exact_dedup", n, exact.count(), t0)
 
     t0 = time.time()
     survivors, clusters = drop_near_duplicates(
         exact, threshold=threshold, oversized_star=oversized_star)
     survivors = survivors.persist()
-    n = _stage("near_dedup", n, survivors, "dedup", t0)
+    n = rec.write("near_dedup", n, survivors, "dedup", t0)
 
     t0 = time.time()
     split = cluster_split(survivors, clusters)
     packed = pack_contexts(split, context_tokens=context_tokens)
-    _stage("split_and_pack", n, packed, "corpus", t0, partition_by=["split"])
+    rec.write("split_and_pack", n, packed, "corpus", t0,
+              partition_by=["split"])
     survivors.unpersist()
     exact.unpersist()
-    return results
+    return rec.results
 
 
 def main() -> None:  # pragma: no cover - CLI convenience

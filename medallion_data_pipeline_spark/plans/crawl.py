@@ -1,9 +1,10 @@
-"""End-to-end crawl-ingest pipeline (VERDICT r13 #6): one entry point
-that takes a landing directory of raw JSONL crawl shards through the
-standard web-ingest stages and lands each layer as parquet with
-per-stage audited counts — the crawl dual of plans/corpus.py's
-curation pipeline, so the tier's composed cost is a tracked bench
-number rather than a sum of query walls.
+"""End-to-end crawl-ingest pipeline (VERDICT r13 #6): one entry point,
+run_crawl_increment_epochs, takes a landing directory of raw JSONL
+crawl shards through the standard web-ingest stages against an epoch
+seen-ledger and lands each layer as parquet with per-stage audited
+counts — the crawl dual of plans/corpus.py's curation pipeline, so
+the tier's composed cost is a tracked bench number rather than a sum
+of query walls.
 
     landing JSONL -> permissive ingest (corrupt-line capture)
         -> HTML extraction (title / text / links)
@@ -12,9 +13,12 @@ number rather than a sum of query walls.
            optional — pass robots_dir)
         -> frontier blocklist filter (rule table, lowest rule wins)
         -> dedup: canonical-URL keep-lowest, then content-digest
-           keep-lowest; the surviving digests also build the
-           formula-sized Bloom seen-set artifact the NEXT crawl
-           increment probes (operators/sketch.py::bloom_m_for)
+           keep-lowest
+        -> seen filter: drop digests an earlier increment landed
+           (Bloom probe of every ledger epoch + exact verification)
+        -> epoch append: the new digests and their formula-sized
+           Bloom filter (operators/sketch.py::bloom_m_for) become the
+           ledger's next epoch
         -> language-ID gate (functions/langid.py, keep_langs)
         -> quality gate (plans/corpus.py Gopher/C4 rules)
 
@@ -23,33 +27,20 @@ Every stage is a composition of the oracle-gated operators
 functions/langid.py, plans/corpus.py), so the pipeline inherits their
 verified semantics; this module adds layering, writes, and stats.
 All stages are deterministic — re-running on the same landing dir
-reproduces byte-identical layers.
+and ledger reproduces byte-identical layers.
 
 Landed layers: bronze/ rejects/ extracted/ [robotspass/] admitted/
-deduped/ bloom_seen/ seen_digests/ langpass/ corpus/.
+deduped/ [new_docs/] langpass/ corpus/, plus one ledger epoch under
+seen_root. A from-scratch crawl is the bootstrap increment against an
+empty seen_root: everything is new, so it lands no new_docs/ copy.
 
-Incremental crawling (VERDICT r14 #2): run_crawl_increment takes a
-NEW landing directory plus the PRIOR run's out_dir, probes the prior
-bloom_seen artifact (whose sizing m/k/fpr/n is persisted as constant
+The seen-set's Bloom sizing m/k/fpr/n is persisted as constant
 columns alongside the bits — a prober recomputing m from its own
-count would silently break the zero-false-negative contract), exact-
-verifies the "might contain" candidates against the prior
-seen_digests (the Bloom's false-positive rate makes verification
-mandatory), processes ONLY genuinely-new documents through the
-langid/quality gates, and writes the MERGED seen-set for increment
-N+1. The Bloom prefilter is what scales: new documents mostly probe
-false and never enter the prior-digest join — its left side is
-~(true dupes + fpr x new), not the increment.
-
-The merged seen-set is O(corpus) to rewrite per increment, so for a
-LONG-LIVED crawl run run_crawl_increment_epochs instead: the seen-set
-becomes an append-only epoch LEDGER (seen_root/digests/epoch=N +
-seen_root/bloom_epochs/epoch=N, one epoch per increment, each Bloom
-sized at that increment's own new-digest count), probing ORs across
-all live epoch filters with each epoch's persisted m, verification
-touches only the hit epochs' digest shards, and an increment's write
-is O(new docs) regardless of corpus age (measured:
-tools/scale_crawl_ledger.py, SCALING.md addendum 17).
+count would silently break the zero-false-negative contract — and
+the "might contain" candidates are exact-verified against the
+ledger's digests (the Bloom's false-positive rate makes verification
+mandatory). The Bloom prefilter is what scales: new documents mostly
+probe false and never enter the digest join.
 
 Scale shape: ingest/extract/canonicalize/frontier are scan-local
 expressions (the rules side broadcasts); both dedup stages are
@@ -64,6 +55,7 @@ a join or window that wouldn't hold at 100 TB.
 from __future__ import annotations
 
 import os
+import shutil
 import time
 from concurrent.futures import ThreadPoolExecutor
 
@@ -71,7 +63,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .corpus import StageResult, quality_gate, write_counted
+from .corpus import StageRecorder, StageResult, quality_gate, write_counted
 from ..sources.testdata import load_table
 
 #: landing contract for synthesized + real crawl shards
@@ -87,10 +79,6 @@ CRAWL_BLOCK_RULES = [
     (1, "host_suffix", ".example.net"),
     (2, "path_prefix", "/page/13"),
 ]
-
-
-#: audited write — the count rides the write action (plans/corpus.py)
-_write_counted = write_counted
 
 
 def synthesize_crawl_shards(spark: SparkSession, sf_dir: str,
@@ -206,47 +194,13 @@ def keep_lowest(df: DataFrame, key: str,
     return df.join(reps, cond, "left_semi")
 
 
-def write_seen_set(spark: SparkSession, deduped: DataFrame,
-                   out_dir: str, n: int | None,
-                   bloom_fpr: float) -> tuple[int, int]:
-    """Land the two-part seen-set contract for the NEXT increment:
-    seen_digests/ (the exact side — one slim digest column) and
-    bloom_seen/ (the prefilter — packed words WITH the sizing
-    persisted as constant columns m/k/fpr/n, because m is
-    data-dependent and a prober recomputing it from a different count
-    silently loses the zero-false-negative guarantee). Returns (m, n).
-
-    r15 optimization: the digest write observes its own row count
-    (pass n=None to size the Bloom from it) and the Bloom builds from
-    the JUST-WRITTEN parquet, so a computed ``deduped`` — the
-    increment's merged union+distinct — executes once, where the old
-    shape re-ran it three times (count, digest write, bit build)."""
-    from ..operators import sketch as K
-
-    path = os.path.join(out_dir, "seen_digests")
-    n_written = _write_counted(deduped.select("digest"), path)
-    if n is None:
-        n = n_written
-    digests = spark.read.parquet(path)
-    m = K.bloom_m_for(max(int(n), 1), bloom_fpr)
-    (K.bloom_bits(digests.select(F.col("digest").alias("item")), m=m)
-     .select("word_idx", "bits",
-             F.lit(m).cast("int").alias("m"),
-             F.lit(K.BLOOM_K).cast("int").alias("k"),
-             F.lit(float(bloom_fpr)).alias("fpr"),
-             F.lit(int(n)).cast("long").alias("n"))
-     .write.mode("overwrite")
-     .parquet(os.path.join(out_dir, "bloom_seen")))
-    return m, int(n)
-
-
-def _crawl_front(spark: SparkSession, landing_dir: str, out_dir: str,
-                 results: list[StageResult],
-                 stage_hook=None, robots_dir: str | None = None,
+def _crawl_front(spark: SparkSession, landing_dir: str,
+                 rec: StageRecorder, robots_dir: str | None = None,
                  robots_agent: str = "sparkbot") -> int:
-    """The shared front half — ingest through within-run dedup; lands
-    bronze/ rejects/ extracted/ admitted/ deduped/ and appends stage
-    stats. Returns the deduped count.
+    """The front half — ingest through within-run dedup; lands
+    bronze/ rejects/ extracted/ admitted/ deduped/ under
+    ``rec.out_dir`` and records their stages. Returns the deduped
+    count.
 
     ``robots_dir`` (optional) points at a parquet of per-host
     robots.txt bodies (host, robots_txt); when given, an RFC 9309
@@ -258,22 +212,7 @@ def _crawl_front(spark: SparkSession, landing_dir: str, out_dir: str,
     from ..functions.urls import with_canonical_url
     from ..sources.jsonl import read_jsonl, split_rejects
 
-    def _audit(name: str, n_in: int, n_out: int, t0: float) -> int:
-        results.append(StageResult(name, n_in, n_out,
-                                   round(time.time() - t0, 2)))
-        if stage_hook is not None:
-            stage_hook(name)
-        return n_out
-
-    def _stage(name: str, n_in: int, df: DataFrame, path: str,
-               t0: float) -> int:
-        # the audited count rides the write action via observe (r15,
-        # guide §5 / the silver-plan pattern) — one job per stage, not
-        # a write plus a re-read count job; count() observes every
-        # row the write sinks, so the audited number is identical
-        n_out = _write_counted(df, os.path.join(out_dir, path))
-        return _audit(name, n_in, n_out, t0)
-
+    out_dir = rec.out_dir
     t0 = time.time()
     good, bad = split_rejects(read_jsonl(spark, landing_dir, CRAWL_SCHEMA))
     # rejects and bronze are independent sinks over the same parsed
@@ -285,20 +224,22 @@ def _crawl_front(spark: SparkSession, landing_dir: str, out_dir: str,
             bad.write.mode("overwrite").parquet,
             os.path.join(out_dir, "rejects"))
         try:
-            n_good = _write_counted(good, os.path.join(out_dir, "bronze"))
+            n_good = write_counted(good, os.path.join(out_dir, "bronze"))
         except BaseException:
             # both sinks read the same landing scan, so a bad shard
             # typically fails BOTH — surface the worker's exception
             # (the likelier shared root cause) instead of silently
-            # discarding it with the pool exit (ADVICE r15)
-            exc = fut_bad.exception()
+            # discarding it with the pool exit (ADVICE r15). Only a
+            # finished sink is asked: waiting on a still-running one
+            # would hold the original exception until it completes.
+            exc = fut_bad.exception() if fut_bad.done() else None
             if exc is not None:
                 import logging
                 logging.getLogger(__name__).error(
                     "rejects sink also failed: %r", exc)
             raise
         fut_bad.result()
-    n = _audit("ingest", -1, n_good, t0)
+    n = rec.record("ingest", -1, n_good, t0)
     bronze = spark.read.parquet(os.path.join(out_dir, "bronze"))
 
     t0 = time.time()
@@ -306,7 +247,7 @@ def _crawl_front(spark: SparkSession, landing_dir: str, out_dir: str,
         .select("doc_id", "url", "title",
                 F.col("text_extracted").alias("text"),
                 F.size("links").alias("n_links"))
-    n = _stage("html_extract", n, extracted, "extracted", t0)
+    n = rec.write("html_extract", n, extracted, "extracted", t0)
     extracted = spark.read.parquet(os.path.join(out_dir, "extracted"))
 
     canon = with_canonical_url(extracted, "url")
@@ -320,12 +261,12 @@ def _crawl_front(spark: SparkSession, landing_dir: str, out_dir: str,
         canon = canon.join(
             verdicts.filter(F.col("allowed")).select("doc_id"),
             "doc_id", "left_semi")
-        n = _stage("robots_gate", n, canon, "robotspass", t0)
+        n = rec.write("robots_gate", n, canon, "robotspass", t0)
         canon = spark.read.parquet(os.path.join(out_dir, "robotspass"))
 
     t0 = time.time()
     admitted = frontier_admit(canon)
-    n = _stage("canonicalize_frontier", n, admitted, "admitted", t0)
+    n = rec.write("canonicalize_frontier", n, admitted, "admitted", t0)
     admitted = spark.read.parquet(os.path.join(out_dir, "admitted"))
 
     t0 = time.time()
@@ -334,15 +275,14 @@ def _crawl_front(spark: SparkSession, landing_dir: str, out_dir: str,
     by_url = keep_lowest(admitted, "canonical_url")
     digested = by_url.withColumn("digest", F.md5(F.col("text")))
     deduped = keep_lowest(digested, "digest")
-    return _stage("dedup", n, deduped, "deduped", t0)
+    return rec.write("dedup", n, deduped, "deduped", t0)
 
 
-def _crawl_back(spark: SparkSession, docs: DataFrame, out_dir: str,
-                keep_langs: tuple[str, ...],
-                results: list[StageResult], n: int,
-                stage_hook=None) -> int:
-    """The shared back half — script-aware langid gate + quality
-    gate; lands langpass/ corpus/.
+def _crawl_back(spark: SparkSession, docs: DataFrame,
+                keep_langs: tuple[str, ...], rec: StageRecorder,
+                n: int) -> int:
+    """The back half — script-aware langid gate + quality gate; lands
+    langpass/ corpus/ under ``rec.out_dir``.
 
     Within-script profile routing is derived from ``keep_langs``: the
     flat script->language maps can only ever say ru for Cyrillic and
@@ -365,182 +305,20 @@ def _crawl_back(spark: SparkSession, docs: DataFrame, out_dir: str,
         lang.filter(F.col("lang").isin(list(keep_langs))
                     & (F.col("margin") > 0)).select("doc_id"),
         "doc_id", "left_semi")
-    n_out = _write_counted(kept, os.path.join(out_dir, "langpass"))
-    results.append(StageResult("langid_gate", n, n_out,
-                               round(time.time() - t0, 2)))
-    if stage_hook is not None:
-        stage_hook("langid_gate")
-    kept = spark.read.parquet(os.path.join(out_dir, "langpass"))
+    n_out = rec.write("langid_gate", n, kept, "langpass", t0)
+    kept = spark.read.parquet(os.path.join(rec.out_dir, "langpass"))
 
     t0 = time.time()
-    final = quality_gate(kept)
-    n_final = _write_counted(final, os.path.join(out_dir, "corpus"))
-    results.append(StageResult("quality_gate", n_out, n_final,
-                               round(time.time() - t0, 2)))
-    if stage_hook is not None:
-        stage_hook("quality_gate")
-    return n_final
-
-
-def run_crawl_pipeline(spark: SparkSession, landing_dir: str,
-                       out_dir: str, keep_langs: tuple[str, ...] = ("en",),
-                       bloom_fpr: float = 0.01,
-                       stage_hook=None,
-                       robots_dir: str | None = None,
-                       robots_agent: str = "sparkbot") -> list[StageResult]:
-    """Run the crawl tier end-to-end over ``landing_dir``'s JSONL
-    shards and land the layers under ``out_dir``: bronze/ rejects/
-    extracted/ admitted/ deduped/ bloom_seen/ seen_digests/ langpass/
-    corpus/. The language gate is SCRIPT-AWARE (functions/langid.py::
-    with_langid_script) — non-Latin documents classify by Unicode
-    script (zh/ja/ko/ru/ar/he/hi/el) instead of silently failing the
-    trigram gate, so keep_langs=("en", "zh") keeps Chinese pages.
-    Returns per-stage audited counts + wall times.
-
-    ``stage_hook(name)`` contract (changed by the r15 stage overlap):
-    the hook may fire from a NON-MAIN thread, CONCURRENTLY with
-    another firing, and OUT of canonical stage order inside an
-    overlapped pair (bloom_seen vs langid_gate/quality_gate) — hooks
-    must be thread-safe, and consumers differencing cumulative
-    cluster counters between firings (tools/scale_crawl_pipeline.py)
-    get blended attribution WITHIN a pair (their sum stays exact).
-    The returned StageResult list keeps canonical order regardless."""
-    results: list[StageResult] = []
-    n = _crawl_front(spark, landing_dir, out_dir, results, stage_hook,
-                     robots_dir=robots_dir, robots_agent=robots_agent)
-    deduped = spark.read.parquet(os.path.join(out_dir, "deduped"))
-
-    # the seen-set artifact (exact digests + formula-sized Bloom with
-    # persisted sizing) and the back half (langid + quality gates) are
-    # INDEPENDENT consumers of the just-landed deduped/ layer, so they
-    # run as overlapped jobs (guide §2.6) — the seen-set's tail tasks
-    # back-fill executors the langid explode leaves idle. Stage
-    # results keep their canonical order; each stage times itself.
-    t0 = time.time()
-    back: list[StageResult] = []
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        fut_back = pool.submit(_crawl_back, spark, deduped, out_dir,
-                               keep_langs, back, n, stage_hook)
-        m, _ = write_seen_set(spark, deduped, out_dir, n, bloom_fpr)
-        bloom_wall = round(time.time() - t0, 2)
-        if stage_hook is not None:
-            stage_hook("bloom_seen")
-        # record the COMPLETED seen-set stage before joining the back
-        # half — if _crawl_back raised, the audit trail would
-        # otherwise lose a stage that did finish (ADVICE r15)
-        results.append(StageResult("bloom_seen", n, m, bloom_wall))
-        fut_back.result()
-    results.extend(back)
-    return results
-
-
-def run_crawl_increment(spark: SparkSession, landing_dir: str,
-                        out_dir: str, prior_out_dir: str,
-                        keep_langs: tuple[str, ...] = ("en",),
-                        bloom_fpr: float = 0.01,
-                        stage_hook=None,
-                        robots_dir: str | None = None,
-                        robots_agent: str = "sparkbot") -> list[StageResult]:
-    """Process crawl increment N+1 against increment N's seen-set
-    (VERDICT r14 #2 — the batch twin of the streaming dedup sink):
-
-    1. the shared front half over the NEW landing dir (ingest ->
-       extract -> canonicalize -> frontier -> within-increment dedup);
-    2. probe the prior ``bloom_seen`` with this increment's surviving
-       digests, reading m/k from the artifact's persisted sizing
-       columns (recomputing m from this run's count would probe a
-       DIFFERENT filter and silently break zero-false-negatives);
-    3. exact-verify the "might contain" candidates against the prior
-       ``seen_digests`` (mandatory — the Bloom's fpr means a hit is
-       only probable); docs whose digest verifies seen are dropped,
-       everything else is genuinely new;
-    4. langid + quality gates run on the NEW docs only;
-    5. land the MERGED seen-set (prior digests ∪ this increment's
-       survivors, Bloom re-sized at the merged count) for increment
-       N+2.
-
-    Cross-increment identity is CONTENT (digest): a URL recrawled
-    with changed content is a new document by design, and a digest
-    first seen in increment N keeps N's copy (keep-lowest is
-    per-increment, so the global doc_id tiebreak is first-increment-
-    wins, not global-min — parity with a from-scratch run on the
-    union therefore holds on digest sets, which is what the parity
-    test pins). At 100 TB: the probe is a broadcast join against a
-    ~m/32-row filter, and only candidates (true dupes + fpr x new)
-    ever reach the prior-digest shuffle.
-
-    ``stage_hook`` fires concurrently / out of canonical order inside
-    overlapped stage pairs — see run_crawl_pipeline's contract note."""
-    from ..operators import sketch as K
-
-    results: list[StageResult] = []
-    n = _crawl_front(spark, landing_dir, out_dir, results, stage_hook,
-                     robots_dir=robots_dir, robots_agent=robots_agent)
-    deduped = spark.read.parquet(os.path.join(out_dir, "deduped"))
-
-    t0 = time.time()
-    bloom = spark.read.parquet(
-        os.path.join(prior_out_dir, "bloom_seen"))
-    meta = bloom.select("m", "k").limit(1).collect()
-    if meta:
-        pm, pk = int(meta[0]["m"]), int(meta[0]["k"])
-        verdicts = K.bloom_might_contain(
-            deduped.select(F.col("digest").alias("item")),
-            bloom.select("word_idx", "bits"), m=pm, k=pk)
-        cand = verdicts.filter(F.col("might_contain")) \
-            .select(F.col("item").alias("digest"))
-        prior = spark.read.parquet(
-            os.path.join(prior_out_dir, "seen_digests"))
-        verified = cand.join(prior, "digest", "left_semi")
-        new_docs = deduped.join(verified, "digest", "left_anti")
-    else:  # empty prior filter: nothing was ever seen
-        prior = spark.read.parquet(
-            os.path.join(prior_out_dir, "seen_digests"))
-        new_docs = deduped
-    n_new = _write_counted(new_docs, os.path.join(out_dir, "new_docs"))
-    results.append(StageResult("seen_filter", n, n_new,
-                               round(time.time() - t0, 2)))
-    if stage_hook is not None:
-        stage_hook("seen_filter")
-    new_docs = spark.read.parquet(os.path.join(out_dir, "new_docs"))
-
-    # merged seen-set for increment N+2: prior ∪ this increment's
-    # survivors (distinct — replays and cross-increment dupes collapse).
-    # The merge and the back half (langid + quality over new_docs) are
-    # independent — overlapped jobs, guide §2.6 (the merge is the
-    # O(corpus) cost of this mode, so backfilling it under the gates
-    # is the increment's biggest local win).
-    t0 = time.time()
-    back: list[StageResult] = []
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        fut_back = pool.submit(_crawl_back, spark, new_docs, out_dir,
-                               keep_langs, back, n_new, stage_hook)
-        merged = prior.unionByName(deduped.select("digest")) \
-            .dropDuplicates(["digest"])
-        m, n_seen = write_seen_set(spark, merged, out_dir, None,
-                                   bloom_fpr)
-        bloom_wall = round(time.time() - t0, 2)
-        if stage_hook is not None:
-            stage_hook("bloom_seen")
-        # completed-stage audit lands before joining the back half
-        # (ADVICE r15 — see run_crawl_pipeline)
-        results.append(StageResult("bloom_seen", n_seen, m, bloom_wall))
-        fut_back.result()
-    results.extend(back)
-    return results
+    return rec.write("quality_gate", n_out, quality_gate(kept), "corpus",
+                     t0)
 
 
 # ---------------------------------------------------------------------------
-# Epoch-ledger incremental crawling: the O(new-docs) increment.
-#
-# run_crawl_increment above is correct but pays an O(total corpus)
-# merge every increment — the merged seen-set re-hashes EVERY digest
-# ever seen into a re-sized Bloom, so increment cost grows with
-# corpus age even when the increment itself is small. The ledger form
-# stores the seen-set the way the r14 rolling-epoch contract says to:
-# one epoch per increment, each holding only THAT increment's
-# genuinely-new digests plus a Bloom filter sized at that count
-# (operators/sketch.py::bloom_m_for), laid out as parquet partitions
+# The epoch seen-ledger. The seen-set is stored the way the r14
+# rolling-epoch contract says to: one epoch per increment, each holding
+# only THAT increment's genuinely-new digests plus a Bloom filter sized
+# at that count (operators/sketch.py::bloom_m_for), laid out as parquet
+# partitions
 #
 #     seen_root/digests/epoch=N/       (exact side, append-only)
 #     seen_root/bloom_epochs/epoch=N/  (prefilter, persisted m/k/fpr/n)
@@ -552,24 +330,28 @@ def run_crawl_increment(spark: SparkSession, landing_dir: str,
 # partition pruning: the per-epoch candidate sets are filters on the
 # hit pairs, and each epoch shard is read by its own path). Writes
 # are one new epoch: O(this increment's new digests), independent of
-# corpus age. Retiring old epochs = deleting their two directories.
+# corpus age — a merged seen-set re-hashed the whole corpus into a
+# re-sized Bloom every increment (SCALING.md addendum 17). The epoch
+# set is the bloom_epochs/epoch=N directories; a new epoch is staged
+# under seen_root/_staging/ and renamed into place. Retiring old
+# epochs = deleting their two directories.
 # ---------------------------------------------------------------------------
 
 
-def append_epoch_seen(spark: SparkSession, new_digests: DataFrame,
-                      seen_root: str, epoch: int, n: int,
-                      bloom_fpr: float) -> int:
-    """Append ONE epoch to the seen-ledger: digests/epoch=N/ (only
-    this increment's genuinely-new digests — the ledger stays
-    globally distinct because an increment never re-writes a digest
-    an earlier epoch verified) and bloom_epochs/epoch=N/ (the filter
-    sized at this epoch's OWN count, sizing persisted as constant
-    columns). Returns m. O(new digests) — prior epochs are never
-    touched."""
+def stage_epoch_seen(spark: SparkSession, new_digests: DataFrame,
+                     seen_root: str, n: int, bloom_fpr: float) -> int:
+    """Write the ledger's next epoch to seen_root/_staging/:
+    digests/ (only this increment's genuinely-new digests — the
+    ledger stays globally distinct because an increment never
+    re-writes a digest an earlier epoch verified) and bloom_epochs/
+    (the filter sized at this epoch's OWN count, sizing persisted as
+    constant columns). Returns m. O(new digests) — live epochs are
+    never touched; publish_epoch_seen moves the staged epoch in."""
     from ..operators import sketch as K
 
+    staging = os.path.join(seen_root, "_staging")
     new_digests.select("digest").write.mode("overwrite").parquet(
-        os.path.join(seen_root, "digests", f"epoch={epoch}"))
+        os.path.join(staging, "digests"))
     m = K.bloom_m_for(max(int(n), 1), bloom_fpr)
     (K.bloom_bits(new_digests.select(F.col("digest").alias("item")),
                   m=m)
@@ -579,8 +361,24 @@ def append_epoch_seen(spark: SparkSession, new_digests: DataFrame,
              F.lit(float(bloom_fpr)).alias("fpr"),
              F.lit(int(n)).cast("long").alias("n"))
      .write.mode("overwrite")
-     .parquet(os.path.join(seen_root, "bloom_epochs", f"epoch={epoch}")))
+     .parquet(os.path.join(staging, "bloom_epochs")))
     return m
+
+
+def publish_epoch_seen(seen_root: str, epoch: int) -> None:
+    """Rename the staged epoch into the live ledger as epoch ``epoch``.
+    The Bloom filter moves last: epochs are discovered by listing
+    bloom_epochs/, so its epoch=N directory is the commit marker. A
+    crash between the two renames leaves a digest shard no probe
+    reads, which the re-run's epoch N replaces."""
+    staging = os.path.join(seen_root, "_staging")
+    shutil.rmtree(os.path.join(seen_root, "digests", f"epoch={epoch}"),
+                  ignore_errors=True)
+    for part in ("digests", "bloom_epochs"):
+        os.makedirs(os.path.join(seen_root, part), exist_ok=True)
+        os.rename(os.path.join(staging, part),
+                  os.path.join(seen_root, part, f"epoch={epoch}"))
+    os.rmdir(staging)
 
 
 def run_crawl_increment_epochs(spark: SparkSession, landing_dir: str,
@@ -590,52 +388,71 @@ def run_crawl_increment_epochs(spark: SparkSession, landing_dir: str,
                                stage_hook=None,
                                robots_dir: str | None = None,
                                robots_agent: str = "sparkbot") -> list[StageResult]:
-    """Process a crawl increment against the epoch seen-LEDGER at
-    ``seen_root`` (see the block comment above): the front half runs
-    as usual, the seen-filter probes every live epoch filter with its
+    """Run one crawl increment over ``landing_dir``'s JSONL shards
+    against the epoch seen-LEDGER at ``seen_root`` (see the block
+    comment above) and land its layers under ``out_dir``. The front
+    half lands bronze/ rejects/ extracted/ [robotspass/] admitted/
+    deduped/; the seen-filter probes every live epoch filter with its
     own persisted m and exact-verifies candidates against only the
-    hit epochs' digest shards, the gates run on genuinely-new docs,
-    and the ledger gains exactly one new epoch. Bootstrap: an empty
-    ``seen_root`` means nothing was ever seen — everything is new and
-    the ledger starts at epoch 0.
+    hit epochs' digest shards, landing the genuinely-new docs as
+    new_docs/; the language gate (SCRIPT-AWARE, functions/langid.py::
+    with_langid_script — keep_langs=("en", "zh") keeps Chinese pages)
+    and the quality gate land langpass/ corpus/; and the ledger gains
+    exactly one new epoch. Returns per-stage audited counts + wall
+    times, epoch_append recorded as (new docs, Bloom bits m).
 
-    Cross-increment identity is CONTENT (digest), first-increment-
-    wins, exactly as run_crawl_increment — the parity test pins both
-    modes to the same from-scratch digest sets. The difference is
-    purely cost shape: merged mode re-hashes the whole corpus per
-    increment; ledger mode writes O(new) and reads O(candidate
-    epochs), so increment cost no longer grows with corpus age.
+    A from-scratch crawl is the bootstrap increment: an empty
+    ``seen_root`` means nothing was ever seen, so the new docs are
+    deduped/ itself (seen_filter records (n, n) and writes no
+    new_docs/) and the ledger starts at epoch 0.
 
-    ``stage_hook`` fires concurrently / out of canonical order inside
-    overlapped stage pairs — see run_crawl_pipeline's contract note."""
+    Cross-increment identity is CONTENT (digest): a URL recrawled
+    with changed content is a new document by design, and a digest
+    first seen in increment N keeps N's copy (keep-lowest is
+    per-increment, so the global doc_id tiebreak is first-increment-
+    wins — parity with a from-scratch run on the union holds on
+    digest sets, which is what the parity test pins).
+
+    Crash consistency: the new epoch is staged outside the live
+    ledger and renamed in only after the back half has landed
+    corpus/, so an increment that fails at any stage leaves the
+    ledger as it was and its re-run treats the same docs as new.
+    Two increments running concurrently against one ``seen_root``
+    would pick the same next epoch; that is not supported.
+
+    ``stage_hook(name)`` contract: the epoch append and the back half
+    run as overlapped jobs, so the hook may fire from a NON-MAIN
+    thread, CONCURRENTLY with another firing, and OUT of canonical
+    stage order inside that pair (epoch_append vs langid_gate/
+    quality_gate) — hooks must be thread-safe, and consumers
+    differencing cumulative cluster counters between firings
+    (tools/scale_crawl_ledger.py) get blended attribution WITHIN the
+    pair (their sum stays exact). The returned StageResult list keeps
+    canonical order regardless."""
     from ..operators import sketch as K
 
-    results: list[StageResult] = []
-    n = _crawl_front(spark, landing_dir, out_dir, results, stage_hook,
-                     robots_dir=robots_dir, robots_agent=robots_agent)
+    rec = StageRecorder(out_dir, stage_hook)
+    n = _crawl_front(spark, landing_dir, rec, robots_dir=robots_dir,
+                     robots_agent=robots_agent)
     deduped = spark.read.parquet(os.path.join(out_dir, "deduped"))
 
     bloom_root = os.path.join(seen_root, "bloom_epochs")
     t0 = time.time()
-    epochs: list[int] = []
-    if os.path.isdir(bloom_root):
-        eblooms = spark.read.parquet(bloom_root)
-        epochs = sorted(int(r["epoch"]) for r in
-                        eblooms.select("epoch").dropDuplicates().collect())
-    pairs = None
+    live = os.listdir(bloom_root) if os.path.isdir(bloom_root) else []
+    epochs = sorted(int(d.split("=", 1)[1]) for d in live
+                    if d.startswith("epoch="))
     if epochs:
-        # persisted: the old shape referenced `pairs` once per live
-        # epoch, re-running the whole probe (deduped x ALL epoch
-        # filters) E times — O(E²) filter probes for an E-epoch
-        # ledger (r15 optimization, guide §2.4)
+        # persisted: the verification below filters `pairs` once per
+        # hit epoch, and each reference would otherwise re-run the
+        # whole probe (deduped x ALL epoch filters) — guide §2.4
         pairs = K.bloom_epoch_hit_pairs_sized(
-            deduped.select(F.col("digest").alias("item")), eblooms) \
+            deduped.select(F.col("digest").alias("item")),
+            spark.read.parquet(bloom_root)) \
             .select(F.col("item").alias("digest"), "epoch").persist()
         # which epochs actually hit: one tiny collect, then exact
         # verification reads ONLY the hit epochs' digest shards (by
-        # path — explicit partition pruning; the old loop opened
-        # every live epoch's shard whether or not any candidate
-        # pointed at it). The Bloom's fpr makes this join mandatory.
+        # path — explicit partition pruning). The Bloom's fpr makes
+        # this join mandatory.
         hit_epochs = sorted(int(r["epoch"]) for r in
                             pairs.select("epoch").dropDuplicates()
                             .collect())
@@ -650,35 +467,32 @@ def run_crawl_increment_epochs(spark: SparkSession, landing_dir: str,
         # so the union is already distinct
         new_docs = (deduped.join(verified, "digest", "left_anti")
                     if verified is not None else deduped)
-    else:
-        new_docs = deduped
-    n_new = _write_counted(new_docs, os.path.join(out_dir, "new_docs"))
-    if pairs is not None:
+        n_new = write_counted(new_docs, os.path.join(out_dir, "new_docs"))
         pairs.unpersist()
-    results.append(StageResult("seen_filter", n, n_new,
-                               round(time.time() - t0, 2)))
-    if stage_hook is not None:
-        stage_hook("seen_filter")
-    new_docs = spark.read.parquet(os.path.join(out_dir, "new_docs"))
+        rec.record("seen_filter", n, n_new, t0)
+        new_docs = spark.read.parquet(os.path.join(out_dir, "new_docs"))
+    else:
+        # bootstrap: nothing was ever seen, so the landed deduped/ is
+        # already the new docs — no copy
+        new_docs = deduped
+        n_new = rec.record("seen_filter", n, n, t0)
 
-    # the new epoch's ledger append and the back half both consume the
-    # just-landed new_docs/ layer and nothing of each other —
-    # overlapped jobs, guide §2.6 (same shape as run_crawl_pipeline's
-    # bloom_seen overlap)
+    # the staged epoch and the back half both consume the new docs and
+    # nothing of each other — overlapped jobs, guide §2.6. The epoch
+    # is published only after the back half returns (crash
+    # consistency, see the docstring).
     t0 = time.time()
     next_epoch = (max(epochs) + 1) if epochs else 0
-    back: list[StageResult] = []
+    back = StageRecorder(out_dir, stage_hook)
     with ThreadPoolExecutor(max_workers=1) as pool:
-        fut_back = pool.submit(_crawl_back, spark, new_docs, out_dir,
-                               keep_langs, back, n_new, stage_hook)
-        m = append_epoch_seen(spark, new_docs, seen_root, next_epoch,
-                              n_new, bloom_fpr)
-        append_wall = round(time.time() - t0, 2)
-        if stage_hook is not None:
-            stage_hook("epoch_append")
-        # completed-stage audit lands before joining the back half
-        # (ADVICE r15 — see run_crawl_pipeline)
-        results.append(StageResult("epoch_append", n_new, m, append_wall))
+        fut_back = pool.submit(_crawl_back, spark, new_docs, keep_langs,
+                               back, n_new)
+        m = stage_epoch_seen(spark, new_docs, seen_root, n_new, bloom_fpr)
+        # record the COMPLETED stage before joining the back half — if
+        # _crawl_back raised, the audit trail would otherwise lose a
+        # stage that did finish (ADVICE r15)
+        rec.record("epoch_append", n_new, m, t0)
         fut_back.result()
-    results.extend(back)
-    return results
+    publish_epoch_seen(seen_root, next_epoch)
+    rec.results.extend(back.results)
+    return rec.results

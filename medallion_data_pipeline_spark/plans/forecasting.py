@@ -399,8 +399,8 @@ def run_global_forecast(spark: SparkSession, warehouse: str, level: str = "wareh
     fc = series.groupBy("entity_id").applyInPandas(
         make_autoregressive_worker(model, horizon, run_id, level), FORECAST_SCHEMA)
     path = os.path.join(warehouse, "gold", "forecasts")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    fc.write.mode("overwrite").partitionBy("run_id").parquet(path)
+    fc.write.mode("overwrite").option("partitionOverwriteMode", "dynamic") \
+        .partitionBy("run_id").parquet(path)
     return spark.read.parquet(path).filter(F.col("run_id") == run_id)
 
 
@@ -475,6 +475,6 @@ def run_forecasts(spark: SparkSession, warehouse: str,
     all_fc = series.groupBy("level", "entity_id").applyInPandas(
         make_forecast_worker_multi(horizon, run_id), FORECAST_SCHEMA)
     path = os.path.join(warehouse, "gold", "forecasts")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    all_fc.write.mode("overwrite").partitionBy("run_id").parquet(path)
+    all_fc.write.mode("overwrite").option("partitionOverwriteMode", "dynamic") \
+        .partitionBy("run_id").parquet(path)
     return spark.read.parquet(path).filter(F.col("run_id") == run_id)

@@ -4847,9 +4847,9 @@ def bloom_seen_digests(spark, sf_dir):
 
 # ---------------------------------------------------------------------------
 # q — the incremental-crawl SEEN FILTER decision, composed end-to-end
-# (VERDICT r14 #2's logic tier): plans/crawl.py::run_crawl_increment
-# drops a doc iff its digest Bloom-probes "might contain" against the
-# prior increment's filter AND exact-verifies against the prior
+# (VERDICT r14 #2's logic tier): plans/crawl.py::run_crawl_increment_epochs
+# drops a doc iff its digest Bloom-probes "might contain" against a
+# ledger epoch's filter AND exact-verifies against that epoch's
 # digest set (the fpr makes verification mandatory; zero false
 # negatives makes skipping non-candidates safe). Here the "prior
 # increment" is the even-doc_id half of the corpus, the increment is
@@ -4924,8 +4924,8 @@ def crawl_increment_seen_filter(spark, sf_dir):
     verification intercepted — the rows a Bloom-only dedup would have
     WRONGLY dropped), fn_violation (provably all false: a prior
     digest always hits all k bits). Fixed m for oracle determinism;
-    the formula-sized production path is bloom_rolling_epochs +
-    plans/crawl.py::write_seen_set. At 100 TB the filter side is
+    the formula-sized production path is bloom_sized_epochs +
+    plans/crawl.py::stage_epoch_seen. At 100 TB the filter side is
     <= m/32 rows broadcast and only candidates reach the exact
     semi-join — new documents never shuffle against the prior corpus."""
     from ..operators import sketch as K

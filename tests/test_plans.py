@@ -334,15 +334,19 @@ def test_corpus_pipeline_layers_and_leakage(spark, tmp_path):
 
 
 def test_crawl_pipeline_stages_and_parity(spark, tmp_path):
-    """End-to-end crawl tier (plans/crawl.py): corrupt lines are
-    captured not dropped, the frontier blocklist removes exactly the
-    rule-matching hosts/paths, dedup collapses each document's messy
-    replicas to ONE row (keep-lowest), the Bloom seen-set artifact is
-    formula-sized over the surviving digests with zero false
-    negatives, the langid gate keeps only confident keep_langs rows,
-    and every quality-gate survivor satisfies the corpus
+    """End-to-end crawl tier (plans/crawl.py), a from-scratch crawl as
+    the bootstrap increment against an empty ledger: corrupt lines
+    are captured not dropped, the frontier blocklist removes exactly
+    the rule-matching hosts/paths, dedup collapses each document's
+    messy replicas to ONE row (keep-lowest), the seen filter keeps
+    everything without copying deduped/, ledger epoch 0's Bloom
+    filter is formula-sized over the surviving digests with zero
+    false negatives, the langid gate keeps only confident keep_langs
+    rows, and every quality-gate survivor satisfies the corpus
     quality_gate predicate — stage-by-stage parity with the
     operators the pipeline composes."""
+    import os
+
     from pyspark.sql import functions as F
 
     from medallion_data_pipeline_spark.operators import sketch as K
@@ -351,13 +355,14 @@ def test_crawl_pipeline_stages_and_parity(spark, tmp_path):
 
     land = str(tmp_path / "landing")
     out = str(tmp_path / "wh")
+    seen = str(tmp_path / "seen")
     n_lines = C.synthesize_crawl_shards(
         spark, "/root/testdata/sf0.001", land, replicas=6, shards=2)
-    results = C.run_crawl_pipeline(spark, land, out)
+    results = C.run_crawl_increment_epochs(spark, land, out, seen_root=seen)
     stages = {r.stage: r for r in results}
     assert [r.stage for r in results] == [
         "ingest", "html_extract", "canonicalize_frontier", "dedup",
-        "bloom_seen", "langid_gate", "quality_gate"]
+        "seen_filter", "epoch_append", "langid_gate", "quality_gate"]
 
     # ingest: good + captured rejects account for every line
     n_rejects = spark.read.parquet(f"{out}/rejects").count()
@@ -403,25 +408,32 @@ def test_crawl_pipeline_stages_and_parity(spark, tmp_path):
     assert dd.groupBy("digest").count() \
         .filter(F.col("count") > 1).count() == 0
 
-    # bloom artifact: formula-sized, sizing PERSISTED as constant
+    # bootstrap seen filter: nothing was seen, deduped/ is not copied
+    n_dd = stages["dedup"].rows_out
+    assert (stages["seen_filter"].rows_in,
+            stages["seen_filter"].rows_out) == (n_dd, n_dd)
+    assert not os.path.isdir(f"{out}/new_docs")
+
+    # ledger epoch 0: formula-sized, sizing PERSISTED as constant
     # columns (ADVICE r14 — m is data-dependent, a prober recomputing
     # it from a different count silently loses zero-false-negatives),
-    # zero false negatives on digests; seen_digests carries the exact
-    # side of the seen-set contract
-    m = stages["bloom_seen"].rows_out  # recorded as m
-    assert m == K.bloom_m_for(stages["dedup"].rows_out, 0.01)
-    bloom = spark.read.parquet(f"{out}/bloom_seen")
+    # zero false negatives on digests; its digest shard carries the
+    # exact side of the seen-set contract
+    m = stages["epoch_append"].rows_out  # recorded as m
+    assert m == K.bloom_m_for(n_dd, 0.01)
+    assert os.listdir(f"{seen}/bloom_epochs") == ["epoch=0"]
+    bloom = spark.read.parquet(f"{seen}/bloom_epochs/epoch=0")
     metas = bloom.select("m", "k", "fpr", "n").distinct().collect()
     assert len(metas) == 1 and metas[0]["m"] == m \
         and metas[0]["k"] == K.BLOOM_K and metas[0]["fpr"] == 0.01 \
-        and metas[0]["n"] == stages["dedup"].rows_out
+        and metas[0]["n"] == n_dd
     miss = K.bloom_might_contain(
         dd.select(F.col("digest").alias("item")),
         bloom.select("word_idx", "bits"), m=m) \
         .filter(~F.col("might_contain")).count()
     assert miss == 0
-    seen = spark.read.parquet(f"{out}/seen_digests")
-    assert {r.digest for r in seen.collect()} == \
+    digests = spark.read.parquet(f"{seen}/digests/epoch=0")
+    assert {r.digest for r in digests.collect()} == \
         {r.digest for r in dd.select("digest").collect()}
 
     # langid gate: survivors are exactly the confident-en deduped rows
@@ -439,7 +451,7 @@ def test_crawl_pipeline_stages_and_parity(spark, tmp_path):
     re_gated = quality_gate(lp).count()
     assert corpus.count() == re_gated
     for r in results:
-        if r.stage not in ("ingest", "bloom_seen"):
+        if r.stage not in ("ingest", "epoch_append"):
             assert r.rows_out <= r.rows_in
 
 
@@ -478,95 +490,6 @@ def test_crawl_keep_lowest_skew_safe(spark):
     assert rows[None] == 200_000
 
 
-def test_crawl_increment_parity(spark, tmp_path):
-    """plans/crawl.py::run_crawl_increment (VERDICT r14 #2):
-    increment(A) then increment(B | seen(A)) must equal a from-scratch
-    run on A∪B on the surviving corpus DIGEST sets (cross-increment
-    identity is content; the doc_id tiebreak is first-increment-wins
-    by design). Also pins: the seen_filter stage drops exactly the
-    digests increment A already saw (Bloom prefilter + mandatory
-    exact verification — zero false negatives means no new doc is
-    ever wrongly dropped), and the merged seen-set artifact covers
-    A∪B with its re-sized Bloom's sizing persisted."""
-    import json as J
-
-    from pyspark.sql import functions as F
-
-    from medallion_data_pipeline_spark.operators import sketch as K
-    from medallion_data_pipeline_spark.plans import crawl as C
-    from medallion_data_pipeline_spark.sources.testdata import load_table
-
-    docs = (load_table(spark, "/root/testdata/sf0.001", "documents")
-            .filter(F.col("text").isNotNull())
-            .orderBy("doc_id").limit(20)
-            .select("doc_id", "source", "text").collect())
-    assert len(docs) == 20
-
-    def line(rid, d):
-        html = (f"<html><head><title>Doc {d.doc_id}</title></head>"
-                f"<body><h1>Heading</h1><p>{d.text}</p>"
-                f"<a href=\"/next\">next</a></body></html>")
-        # /doc/, not /page/: the frontier's /page/13 path-prefix rule
-        # would swallow one planted doc and blur the exact counts (the
-        # frontier stage is pinned in the main stage-parity test)
-        url = f"http://{d.source}.example.com/doc/{d.doc_id}"
-        return J.dumps({"doc_id": rid, "url": url, "html": html})
-
-    # A = docs 0..11; B = docs 6..19 under HIGHER line ids (so the
-    # overlap 6..11 re-appears as content dupes, 12..19 are new)
-    a_lines = [line(i, d) for i, d in enumerate(docs[:12])]
-    b_lines = [line(100_000 + i, d) for i, d in enumerate(docs[6:])]
-    for name, lines in [("land_a", a_lines), ("land_b", b_lines),
-                        ("land_full", a_lines + b_lines)]:
-        p = tmp_path / name
-        p.mkdir()
-        (p / "part0.jsonl").write_text("\n".join(lines) + "\n")
-
-    out_a, out_b, out_full = (str(tmp_path / x)
-                              for x in ("wh_a", "wh_b", "wh_full"))
-    C.run_crawl_pipeline(spark, str(tmp_path / "land_a"), out_a)
-    res_b = C.run_crawl_increment(spark, str(tmp_path / "land_b"),
-                                  out_b, prior_out_dir=out_a)
-    C.run_crawl_pipeline(spark, str(tmp_path / "land_full"), out_full)
-
-    stages = {r.stage: r for r in res_b}
-    # B's within-increment dedup keeps all 14 (distinct texts); the
-    # seen-filter then drops exactly A's 6 already-seen digests
-    assert stages["dedup"].rows_out == 14
-    assert stages["seen_filter"].rows_out == 8
-    new_digests = {r.digest for r in spark.read.parquet(
-        f"{out_b}/new_docs").select("digest").collect()}
-    a_digests = {r.digest for r in spark.read.parquet(
-        f"{out_a}/seen_digests").collect()}
-    assert not (new_digests & a_digests)
-
-    # merged seen-set covers A∪B, Bloom re-sized at the merged count
-    # with the sizing persisted and zero false negatives
-    merged = spark.read.parquet(f"{out_b}/seen_digests")
-    b_deduped = {r.digest for r in spark.read.parquet(
-        f"{out_b}/deduped").select("digest").collect()}
-    assert {r.digest for r in merged.collect()} == a_digests | b_deduped
-    bloom = spark.read.parquet(f"{out_b}/bloom_seen")
-    meta = bloom.select("m", "k", "n").distinct().collect()
-    assert len(meta) == 1
-    assert meta[0]["m"] == K.bloom_m_for(meta[0]["n"], 0.01)
-    assert meta[0]["n"] == stages["bloom_seen"].rows_in
-    miss = K.bloom_might_contain(
-        merged.select(F.col("digest").alias("item")),
-        bloom.select("word_idx", "bits"), m=meta[0]["m"]) \
-        .filter(~F.col("might_contain")).count()
-    assert miss == 0
-
-    # corpus parity on digest sets: A's corpus ∪ B's new corpus ==
-    # the from-scratch corpus on A∪B
-    def corpus_digests(out):
-        return {r.digest for r in spark.read.parquet(f"{out}/corpus")
-                .select("digest").collect()}
-
-    assert corpus_digests(out_a) | corpus_digests(out_b) == \
-        corpus_digests(out_full)
-
-
 def test_crawl_langid_gate_profile_routing(spark, tmp_path):
     """plans/crawl.py::_crawl_back derives within-script profile
     routing from keep_langs: asking for Urdu turns the ARABIC_SEEDS
@@ -602,8 +525,9 @@ def test_crawl_langid_gate_profile_routing(spark, tmp_path):
     (land / "part0.jsonl").write_text("\n".join(lines) + "\n")
 
     out = str(tmp_path / "rwh")
-    C.run_crawl_pipeline(spark, str(land), out,
-                         keep_langs=("en", "ur"))
+    C.run_crawl_increment_epochs(spark, str(land), out,
+                                 seen_root=str(tmp_path / "rseen"),
+                                 keep_langs=("en", "ur"))
     kept = {r.doc_id for r in spark.read.parquet(f"{out}/langpass")
             .select("doc_id").collect()}
     assert kept == {1, 2}
@@ -647,7 +571,9 @@ def test_crawl_robots_gate(spark, tmp_path):
     robots.write.parquet(rdir)
 
     out = str(tmp_path / "rbwh")
-    res = C.run_crawl_pipeline(spark, str(land), out, robots_dir=rdir)
+    res = C.run_crawl_increment_epochs(spark, str(land), out,
+                                       seen_root=str(tmp_path / "rbseen"),
+                                       robots_dir=rdir)
     stages = {r.stage: r for r in res}
     assert stages["robots_gate"].rows_in == 3
     assert stages["robots_gate"].rows_out == 2
@@ -658,33 +584,31 @@ def test_crawl_robots_gate(spark, tmp_path):
     assert kept == {2, 3}
 
     out2 = str(tmp_path / "rbwh2")
-    C.run_crawl_pipeline(spark, str(land), out2)
+    C.run_crawl_increment_epochs(spark, str(land), out2,
+                                 seen_root=str(tmp_path / "rbseen2"))
     assert not os.path.isdir(os.path.join(out2, "robotspass"))
     assert {r.doc_id for r in spark.read.parquet(f"{out2}/deduped")
             .select("doc_id").collect()} == {1, 2, 3}
 
 
-def test_crawl_increment_epochs_parity(spark, tmp_path):
-    """plans/crawl.py::run_crawl_increment_epochs — the O(new-docs)
-    epoch-LEDGER increment must agree with both the merged-mode
-    increment and a from-scratch run on A∪B, while writing only one
-    new epoch per increment: epoch 0 holds exactly A's deduped
-    digests, epoch 1 exactly B's genuinely-new ones, each Bloom sized
-    at ITS OWN count (different m across epochs — the arithmetic the
-    gated bloom_sized_epochs query hash-pins), and probing the ledger
-    never false-negatives a seen digest."""
+def _crawl_ab_landings(spark, tmp_path):
+    """Two overlapping crawl landings plus their union: A = docs 0..11,
+    B = docs 6..19 under HIGHER line ids, so the overlap 6..11
+    re-appears as content dupes and 12..19 are new. URLs use /doc/,
+    not /page/, so the frontier's /page/13 rule cannot swallow a
+    planted doc and blur the exact counts. Returns the three landing
+    dirs (a, b, a∪b)."""
     import json as J
 
     from pyspark.sql import functions as F
 
-    from medallion_data_pipeline_spark.operators import sketch as K
-    from medallion_data_pipeline_spark.plans import crawl as C
     from medallion_data_pipeline_spark.sources.testdata import load_table
 
     docs = (load_table(spark, "/root/testdata/sf0.001", "documents")
             .filter(F.col("text").isNotNull())
             .orderBy("doc_id").limit(20)
             .select("doc_id", "source", "text").collect())
+    assert len(docs) == 20
 
     def line(rid, d):
         html = (f"<html><head><title>Doc {d.doc_id}</title></head>"
@@ -695,20 +619,58 @@ def test_crawl_increment_epochs_parity(spark, tmp_path):
 
     a_lines = [line(i, d) for i, d in enumerate(docs[:12])]
     b_lines = [line(100_000 + i, d) for i, d in enumerate(docs[6:])]
+    lands = []
     for name, lines in [("eland_a", a_lines), ("eland_b", b_lines),
                         ("eland_full", a_lines + b_lines)]:
         p = tmp_path / name
         p.mkdir()
         (p / "part0.jsonl").write_text("\n".join(lines) + "\n")
+        lands.append(str(p))
+    return lands
 
+
+def _ledger_epochs(spark, ledger):
+    """{epoch: digest count} of the live seen-ledger."""
+    from pyspark.sql import functions as F
+
+    return {int(r["epoch"]): r["cnt"] for r in
+            spark.read.parquet(f"{ledger}/digests").groupBy("epoch")
+            .agg(F.count(F.lit(1)).alias("cnt")).collect()}
+
+
+def _corpus_digests(spark, out):
+    return {r.digest for r in spark.read.parquet(f"{out}/corpus")
+            .select("digest").collect()}
+
+
+def test_crawl_increment_epochs_parity(spark, tmp_path):
+    """plans/crawl.py::run_crawl_increment_epochs — increment(A) then
+    increment(B | ledger(A)) must agree with a from-scratch run on
+    A∪B on the surviving corpus DIGEST sets (cross-increment identity
+    is content; the doc_id tiebreak is first-increment-wins by
+    design), while writing only one new epoch per increment: the
+    seen filter drops exactly the digests A already saw (Bloom
+    prefilter + mandatory exact verification), epoch 0 holds exactly
+    A's deduped digests, epoch 1 exactly B's genuinely-new ones, each
+    Bloom sized at ITS OWN count (different m across epochs — the
+    arithmetic the gated bloom_sized_epochs query hash-pins), and
+    probing the ledger never false-negatives a seen digest."""
+    from pyspark.sql import functions as F
+
+    from medallion_data_pipeline_spark.operators import sketch as K
+    from medallion_data_pipeline_spark.plans import crawl as C
+
+    land_a, land_b, land_full = _crawl_ab_landings(spark, tmp_path)
     ledger = str(tmp_path / "seen_ledger")
     out_a, out_b, out_full = (str(tmp_path / x)
                               for x in ("ewh_a", "ewh_b", "ewh_full"))
-    res_a = C.run_crawl_increment_epochs(
-        spark, str(tmp_path / "eland_a"), out_a, seen_root=ledger)
-    res_b = C.run_crawl_increment_epochs(
-        spark, str(tmp_path / "eland_b"), out_b, seen_root=ledger)
-    C.run_crawl_pipeline(spark, str(tmp_path / "eland_full"), out_full)
+    res_a = C.run_crawl_increment_epochs(spark, land_a, out_a,
+                                         seen_root=ledger)
+    res_b = C.run_crawl_increment_epochs(spark, land_b, out_b,
+                                         seen_root=ledger)
+    full_ledger = str(tmp_path / "full_ledger")
+    C.run_crawl_increment_epochs(spark, land_full, out_full,
+                                 seen_root=full_ledger)
 
     # bootstrap: everything new, epoch 0 holds A's 12 deduped digests
     st_a = {r.stage: r for r in res_a}
@@ -719,11 +681,13 @@ def test_crawl_increment_epochs_parity(spark, tmp_path):
     assert st_b["seen_filter"].rows_out == 8
 
     # the ledger: two epochs, disjoint digest shards, per-epoch sizing
+    assert _ledger_epochs(spark, ledger) == {0: 12, 1: 8}
     ldg = spark.read.parquet(f"{ledger}/digests")
-    per_epoch = {int(r["epoch"]): r["cnt"] for r in
-                 ldg.groupBy("epoch").agg(F.count(F.lit(1)).alias("cnt"))
-                 .collect()}
-    assert per_epoch == {0: 12, 1: 8}
+    new_digests = {r.digest for r in spark.read.parquet(
+        f"{out_b}/new_docs").select("digest").collect()}
+    a_digests = {r.digest for r in ldg.filter(F.col("epoch") == 0)
+                 .select("digest").collect()}
+    assert not (new_digests & a_digests)
     eblooms = spark.read.parquet(f"{ledger}/bloom_epochs")
     meta = {int(r["epoch"]): r for r in
             eblooms.select("epoch", "m", "k", "n").distinct().collect()}
@@ -735,20 +699,59 @@ def test_crawl_increment_epochs_parity(spark, tmp_path):
     # every ledger digest full-hits its OWN epoch's filter
     ledger_digests = {r.digest for r in ldg.select("digest").collect()}
     scratch = {r.digest for r in spark.read.parquet(
-        f"{out_full}/seen_digests").collect()}
+        f"{full_ledger}/digests").select("digest").collect()}
     assert ledger_digests == scratch
     pairs = {(r.item, int(r.epoch)) for r in K.bloom_epoch_hit_pairs_sized(
         ldg.select(F.col("digest").alias("item")), eblooms).collect()}
     for r in ldg.collect():
         assert (r.digest, int(r.epoch)) in pairs
 
-    # corpus parity across all three runs
-    def corpus_digests(out):
-        return {r.digest for r in spark.read.parquet(f"{out}/corpus")
-                .select("digest").collect()}
+    # corpus parity: A's corpus ∪ B's new corpus == from-scratch A∪B
+    assert _corpus_digests(spark, out_a) | _corpus_digests(spark, out_b) \
+        == _corpus_digests(spark, out_full)
 
-    assert corpus_digests(out_a) | corpus_digests(out_b) == \
-        corpus_digests(out_full)
+
+def test_crawl_increment_failure_leaves_ledger_unchanged(spark, tmp_path):
+    """An increment that fails after its epoch is staged (here: the
+    langid gate's stage_hook raises while the epoch append runs
+    overlapped) must leave the seen-ledger as it was. Otherwise the
+    re-run would treat the failed increment's digests as seen and
+    silently drop its new docs. The re-run then gives the same ledger
+    and corpus as an uninterrupted A-then-B run."""
+    from medallion_data_pipeline_spark.plans import crawl as C
+
+    land_a, land_b, _ = _crawl_ab_landings(spark, tmp_path)
+    ledger = str(tmp_path / "seen_ledger")
+    C.run_crawl_increment_epochs(spark, land_a, str(tmp_path / "wh_a"),
+                                 seen_root=ledger)
+
+    def fail_at_langid(name):
+        if name == "langid_gate":
+            raise RuntimeError("injected langid_gate failure")
+
+    out_b = str(tmp_path / "wh_b")
+    with pytest.raises(RuntimeError, match="injected langid_gate"):
+        C.run_crawl_increment_epochs(spark, land_b, out_b,
+                                     seen_root=ledger,
+                                     stage_hook=fail_at_langid)
+    assert _ledger_epochs(spark, ledger) == {0: 12}
+
+    C.run_crawl_increment_epochs(spark, land_b, out_b, seen_root=ledger)
+    assert _ledger_epochs(spark, ledger) == {0: 12, 1: 8}
+
+    clean = str(tmp_path / "clean_ledger")
+    clean_b = str(tmp_path / "cwh_b")
+    C.run_crawl_increment_epochs(spark, land_a, str(tmp_path / "cwh_a"),
+                                 seen_root=clean)
+    C.run_crawl_increment_epochs(spark, land_b, clean_b, seen_root=clean)
+
+    def ledger_digests(root):
+        return {(r.digest, int(r.epoch)) for r in
+                spark.read.parquet(f"{root}/digests").collect()}
+
+    assert ledger_digests(ledger) == ledger_digests(clean)
+    assert _corpus_digests(spark, out_b) == _corpus_digests(spark, clean_b)
+    assert _corpus_digests(spark, out_b)
 
 
 def test_session_excludes_infer_filters_from_generate(spark):

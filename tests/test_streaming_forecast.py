@@ -93,6 +93,7 @@ def test_forecast_fanout(spark, tmp_path):
     wh = str(tmp_path / "wh")
     bronze.write_bronze(fixtures.generate_bronze(spark, n_orders=3000), wh)
     silver.run_silver(spark, wh, run_id="t")
+    overwrite_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
     fc = forecasting.run_forecasts(spark, wh, levels=("warehouse",), horizon=7, run_id="r1")
     rows = fc.collect()
     assert len(rows) > 0
@@ -104,6 +105,8 @@ def test_forecast_fanout(spark, tmp_path):
     assert fc2.count() > 0
     both = spark.read.parquet(f"{wh}/gold/forecasts")
     assert {r.run_id for r in both.select("run_id").distinct().collect()} == {"r1", "r2"}
+    # the dynamic overwrite is per write: the session's mode is left as it was
+    assert spark.conf.get("spark.sql.sources.partitionOverwriteMode") == overwrite_mode
 
 
 def test_stateful_running_totals_across_batches(spark, tmp_path):

@@ -1,5 +1,5 @@
 #!/usr/bin/env python
-"""Per-stage wall breakdown of the three crawl bench entries at bench
+"""Per-stage wall breakdown of the two crawl bench entries at bench
 scale (sf0.1 synthesized shards) — guide §1 measurement for the r15
 optimization round. Mirrors bench.py's prep exactly; prints each
 StageResult so the optimization targets the stage, not the total.
@@ -37,24 +37,15 @@ def main() -> None:
     for rep in range(reps):
         cw = tempfile.mkdtemp(prefix="crawlprof_full_")
         t0 = time.time()
-        res = crawl_plan.run_crawl_pipeline(spark, land, cw)
+        res = crawl_plan.run_crawl_increment_epochs(
+            spark, land, os.path.join(cw, "wh"),
+            seen_root=os.path.join(cw, "seen"))
         show(f"pipeline_crawl_50k rep{rep}", res, time.time() - t0)
         shutil.rmtree(cw, ignore_errors=True)
 
     half = tempfile.mkdtemp(prefix="crawlprof_half_")
     crawl_plan.synthesize_crawl_shards(spark, sf_dir, half, replicas=10,
                                        shards=8, keep_mod=2, keep_rem=0)
-    prior = tempfile.mkdtemp(prefix="crawlprof_prior_")
-    crawl_plan.run_crawl_pipeline(spark, half, prior)
-    for rep in range(reps):
-        cw = tempfile.mkdtemp(prefix="crawlprof_inc_")
-        t0 = time.time()
-        res = crawl_plan.run_crawl_increment(spark, land, cw,
-                                             prior_out_dir=prior)
-        show(f"pipeline_crawl_increment rep{rep}", res, time.time() - t0)
-        shutil.rmtree(cw, ignore_errors=True)
-    shutil.rmtree(prior, ignore_errors=True)
-
     prior_root = tempfile.mkdtemp(prefix="crawlprof_ledg_")
     boot = tempfile.mkdtemp(prefix="crawlprof_boot_")
     crawl_plan.run_crawl_increment_epochs(spark, half, boot,

@@ -31,7 +31,8 @@ def main() -> None:
     out = tempfile.mkdtemp(prefix="lgprof_out_")
     crawl_plan.synthesize_crawl_shards(spark, sf_dir, land,
                                        replicas=10, shards=8)
-    crawl_plan.run_crawl_pipeline(spark, land, out)
+    crawl_plan.run_crawl_increment_epochs(
+        spark, land, out, seen_root=os.path.join(out, "seen"))
     deduped_path = os.path.join(out, "deduped")
 
     reps = int(os.environ.get("REPS", "3"))

@@ -1,21 +1,20 @@
 #!/usr/bin/env python
-"""Round-15 measurement: epoch-LEDGER vs MERGED seen-set maintenance
-as the corpus AGES (plans/crawl.py::run_crawl_increment_epochs vs
-run_crawl_increment).
+"""Round-15 measurement: epoch-LEDGER seen-set maintenance as the
+corpus AGES (plans/crawl.py::run_crawl_increment_epochs).
 
-Claim to pin: merged mode re-hashes the ENTIRE seen corpus into a
-re-sized Bloom every increment, so its maintenance stage (bloom_seen)
-grows linearly with corpus age even at constant increment size; the
-ledger appends one epoch sized at the increment's own new-digest
-count, so its maintenance stage (epoch_append) stays FLAT. The
-seen-filter probe is near-constant in both (the filter side is packed
-words; candidates are few when increments are disjoint).
+Claim to pin: the ledger appends one epoch sized at the increment's
+own new-digest count, so its maintenance stage (epoch_append) stays
+FLAT at constant increment size, and the seen-filter probe is
+near-constant (the filter side is packed words; candidates are few
+when increments are disjoint). The merged seen-set this replaced
+re-hashed the ENTIRE seen corpus every increment and grew linearly;
+that comparison is recorded in SCALING.md addendum 17.
 
 Method: N_INC increments of IDENTICAL size and fully disjoint content
 (every line's text carries the increment id, so each increment is
-100% new — gate cost is constant across increments and modes, and
-the maintenance delta is the signal). Per increment we record the
-seen_filter and maintenance stage walls plus executor-CPU /
+100% new — gate cost is constant across increments, and the
+maintenance stage is the signal). Per increment we record the
+seen_filter and epoch_append stage walls plus executor-CPU /
 bytes-written deltas (tools/scale_heavy.cpu_write_totals), so the
 growth attribution is measured, not argued.
 
@@ -45,8 +44,7 @@ def synth_increment(spark, land: str, inc: int, mult: int) -> int:
     ``mult`` times with the increment id AND variant id appended to
     the text, so every line is a distinct digest and no increment
     ever overlaps another. Distinct URLs per line (URL dedup keeps
-    all) — the dedup stages do equal, constant work per increment in
-    both modes."""
+    all) — the dedup stages do equal, constant work per increment."""
     from pyspark.sql import functions as F
 
     from medallion_data_pipeline_spark.sources.testdata import load_table
@@ -73,54 +71,39 @@ def synth_increment(spark, land: str, inc: int, mult: int) -> int:
     return int(spark.read.text(land).count())
 
 
-def run_mode(spark, mode: str, lands: list[str]) -> list[dict]:
+def run_ledger(spark, lands: list[str]) -> list[dict]:
     from medallion_data_pipeline_spark.plans import crawl as C
 
     rows: list[dict] = []
     keep: list[str] = []
     root = tempfile.mkdtemp(prefix="scale_ledger_root_")
     keep.append(root)
-    prev_out: str | None = None
     corpus = 0
     try:
         for i, land in enumerate(lands):
-            out = tempfile.mkdtemp(prefix=f"scale_ledger_{mode}_{i}_")
+            out = tempfile.mkdtemp(prefix=f"scale_ledger_{i}_")
             keep.append(out)
             marks = [("_base", cpu_write_totals(spark))]
             hook = lambda nm: marks.append((nm, cpu_write_totals(spark)))
             t0 = time.time()
-            if mode == "ledger":
-                res = C.run_crawl_increment_epochs(
-                    spark, land, out, seen_root=root, stage_hook=hook)
-                maint = "epoch_append"
-            elif prev_out is None:
-                res = C.run_crawl_pipeline(spark, land, out,
-                                           stage_hook=hook)
-                maint = "bloom_seen"
-            else:
-                res = C.run_crawl_increment(
-                    spark, land, out, prior_out_dir=prev_out,
-                    stage_hook=hook)
-                maint = "bloom_seen"
+            res = C.run_crawl_increment_epochs(
+                spark, land, out, seen_root=root, stage_hook=hook)
             wall = round(time.time() - t0, 2)
             stages = {r.stage: r for r in res}
             deltas = {}
             for (_, pm), (name, m) in zip(marks, marks[1:]):
                 deltas[name] = {k: round(m[k] - pm[k], 2) for k in pm}
-            n_new = stages["seen_filter"].rows_out \
-                if "seen_filter" in stages else stages["dedup"].rows_out
+            n_new = stages["seen_filter"].rows_out
             corpus += n_new
             rows.append({
-                "mode": mode, "inc": i, "new_digests": n_new,
+                "inc": i, "new_digests": n_new,
                 "corpus_digests": corpus, "total_s": wall,
-                "seen_filter_s": stages["seen_filter"].wall_s
-                if "seen_filter" in stages else None,
-                "maint_s": stages[maint].wall_s,
-                "maint_cpu": deltas.get(maint, {}),
+                "seen_filter_s": stages["seen_filter"].wall_s,
+                "maint_s": stages["epoch_append"].wall_s,
+                "maint_cpu": deltas.get("epoch_append", {}),
                 "probe_cpu": deltas.get("seen_filter", {}),
             })
             print(json.dumps(rows[-1]), flush=True)
-            prev_out = out
     finally:
         for d in keep:
             shutil.rmtree(d, ignore_errors=True)
@@ -138,16 +121,13 @@ def main() -> None:
         print(json.dumps({"synth_inc": i, "lines": n}), flush=True)
         lands.append(land)
     try:
-        merged = run_mode(spark, "merged", lands)
-        ledger = run_mode(spark, "ledger", lands)
+        ledger = run_ledger(spark, lands)
     finally:
         for land in lands:
             shutil.rmtree(land, ignore_errors=True)
     print(json.dumps({
         "summary": {
-            "merged_maint_s": [r["maint_s"] for r in merged],
             "ledger_maint_s": [r["maint_s"] for r in ledger],
-            "merged_probe_s": [r["seen_filter_s"] for r in merged],
             "ledger_probe_s": [r["seen_filter_s"] for r in ledger],
         }}), flush=True)
 

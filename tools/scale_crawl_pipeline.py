@@ -3,9 +3,10 @@
 tier across decades (5K -> 50K -> 500K docs on the grown corpora).
 
 Claims to pin:
-- run_crawl_pipeline (plans/crawl.py): every stage is scan-local or
-  one content-key shuffle, so end-to-end wall should grow ~linearly
-  with the landing size (10 messy replicas per doc at every decade);
+- run_crawl_increment_epochs (plans/crawl.py) bootstrapping an empty
+  ledger: every stage is scan-local or one content-key shuffle, so
+  end-to-end wall should grow ~linearly with the landing size (10
+  messy replicas per doc at every decade);
 - langid_confidence: one explode (~chars) + doc-partitioned window +
   broadcast scoring joins — wall ~linear in corpus chars, profile
   side constant.
@@ -42,6 +43,7 @@ def measure(spark, sf_dir, label):
     out["synth_s"] = round(time.time() - t0, 2)
     wh = tempfile.mkdtemp(prefix="scale_crawl_wh_")
     wh2 = tempfile.mkdtemp(prefix="scale_crawl_inc_")
+    seen = os.path.join(wh, "seen")
     try:
         # per-stage executor CPU + bytes-written deltas alongside the
         # walls (VERDICT r14 #6): wall >> cpu with out_mb ~ the layer
@@ -49,8 +51,8 @@ def measure(spark, sf_dir, label):
         # spread attribution becomes a measurement.
         marks = [("_base", cpu_write_totals(spark))]
         t0 = time.time()
-        stages = C.run_crawl_pipeline(
-            spark, land, wh,
+        stages = C.run_crawl_increment_epochs(
+            spark, land, os.path.join(wh, "crawl"), seen_root=seen,
             stage_hook=lambda nm: marks.append(
                 (nm, cpu_write_totals(spark))))
         out["pipeline_s"] = round(time.time() - t0, 2)
@@ -62,11 +64,11 @@ def measure(spark, sf_dir, label):
                          for r in stages}
 
         # steady-state increment replay: same landing against its own
-        # seen-set — every digest Bloom-probes seen and exact-verifies
-        # away, so this prices the probe + verification + merged
-        # seen-set path with zero new docs flowing to the gates.
+        # ledger — every digest Bloom-probes seen and exact-verifies
+        # away, so this prices the probe + verification + epoch-append
+        # path with zero new docs flowing to the gates.
         t0 = time.time()
-        inc = C.run_crawl_increment(spark, land, wh2, prior_out_dir=wh)
+        inc = C.run_crawl_increment_epochs(spark, land, wh2, seen_root=seen)
         out["increment_replay_s"] = round(time.time() - t0, 2)
         out["increment_new_docs"] = \
             {r.stage: r.rows_out for r in inc}["seen_filter"]
