@@ -361,20 +361,25 @@ ARABIC_SEEDS: dict[str, str] = {
 }
 
 
+#: the Latin keep-class: ASCII lowercase only, so accented letters
+#: strip to spaces in both engines.
+_LAT_KEEP = "a-z"
+
+
 def langid_norm(col: Column) -> Column:
     """lowercase -> strip to [a-z ] -> collapse runs -> trim: the
     canonical form both profiles and documents are trigrammed from.
     Mirrors langid_norm_sql exactly (strip AFTER lower, so any
     engine-specific unicode lowering lands on characters the strip
     removes either way)."""
-    s = F.regexp_replace(F.lower(col), "[^a-z ]", " ")
+    s = F.regexp_replace(F.lower(col), f"[^{_LAT_KEEP} ]", " ")
     return F.trim(F.regexp_replace(s, " +", " "))
 
 
 def langid_norm_sql(col: str) -> str:
     """DuckDB dual of langid_norm (RE2 needs the explicit g flag)."""
     return (f"trim(regexp_replace(regexp_replace(lower({col}), "
-            f"'[^a-z ]', ' ', 'g'), ' +', ' ', 'g'))")
+            f"'[^{_LAT_KEEP} ]', ' ', 'g'), ' +', ' ', 'g'))")
 
 
 #: the Cyrillic keep-class: а-я covers Russian/Bulgarian lowercase
@@ -425,7 +430,7 @@ def langid_norm_arabic_sql(col: str) -> str:
 #: plan-build-time seed-profile derivation (seed_profiles); a norm
 #: not listed here falls back to the in-plan derivation.
 _PY_NORM_STRIP = {
-    langid_norm: "[^a-z ]",
+    langid_norm: f"[^{_LAT_KEEP} ]",
     langid_norm_cyrillic: f"[^{_CYR_KEEP} ]",
     langid_norm_arabic: f"[^{_AR_KEEP} ]",
 }

@@ -1,15 +1,30 @@
 """Similarity search over embedding columns (array<float>).
 
-Two paths:
+Every top-k operator is one pipeline: prepare the query and corpus
+sides, optionally route them to coarse partitions, score candidate
+pairs from a vector code, optionally re-rank a shortlist exactly, and
+rank per query (``_top_k``):
 
-- ``knn_bruteforce``: exact top-k cosine neighbors. The query set is
-  broadcast against the candidate corpus, so the plan is a single
-  broadcast-nested-loop with codegen'd array math — correct baseline at
-  any corpus size as long as |queries| is bounded.
-- ``knn_lsh``: sign-random-projection LSH buckets prune the candidate
-  set before the exact cosine — the 100 TB path. Buckets come from
-  deterministic md5-derived hyperplanes (functions/vectors.py), so
-  results are reproducible run-to-run and engine-to-engine.
+=================  ===========  =====  =============  ==============
+operator           route        code   re-rank        output score
+=================  ===========  =====  =============  ==============
+knn_bruteforce     none         raw    —              cosine
+knn_matmul         none         raw    —              cosine (BLAS)
+hard_negatives     none         raw    —              cosine + labels
+knn_lsh            sign-LSH     raw    —              cosine
+knn_ivf_probe      IVF(nprobe)  raw    —              cosine
+knn_pq_adc         none         PQ     —              cosine_adc
+knn_pq_rerank      none         PQ     exact top-k′   cosine
+knn_ivf_pq         IVF(nprobe)  PQ     exact top-k′   cosine
+knn_sq8            none         SQ8    —              cosine_sq8
+knn_ivf_sq8        IVF(nprobe)  SQ8    —              cosine_sq8
+=================  ===========  =====  =============  ==============
+
+Ranking is cosine descending, NULL (zero-norm pair) last, ties to the
+lower neighbor id; a query never matches itself. LSH buckets come from
+deterministic md5-derived hyperplanes (functions/vectors.py) and IVF
+cells from deterministic centroids, so results are reproducible
+run-to-run and engine-to-engine.
 
 No MLlib: higher-order array functions keep everything inside
 whole-stage codegen and avoid Vector serialization.
@@ -27,6 +42,138 @@ from ..functions import vectors as V
 
 def _as_double(col):
     return F.transform(col, lambda x: x.cast("double"))
+
+
+_SIDES = {"q": ("query_id", "qv", "qn"), "c": ("neighbor_id", "cv", "cn")}
+
+
+def _side(df: DataFrame, role: str, id_col: str, vec, *extra) -> DataFrame:
+    """One side of a top-k join: (id, *extra, double vector, norm),
+    named (query_id, qv, qn) for ``role="q"`` and (neighbor_id, cv, cn)
+    for ``role="c"``. The norm is a second select over the aliased
+    vector, so a decoded or cast vector is computed once per row
+    (CollapseProject does not inline a non-cheap expression into a
+    Project that references it twice)."""
+    i, v, n = _SIDES[role]
+    return (df.select(F.col(id_col).alias(i), *extra, vec.alias(v))
+            .select("*", V.norm(F.col(v)).alias(n)))
+
+
+def _route_nprobe(q: DataFrame, cents, nprobe: int) -> DataFrame:
+    """Coarse IVF route of the query side: one row per (query, probed
+    cell) for the ``nprobe`` nearest centroids. Sorting the (d2, cell)
+    structs ascending breaks distance ties toward the lower cell id
+    (struct field order), like the corpus side's staged argmin."""
+    dists = []
+    for i, cent in enumerate(cents):
+        d = F.aggregate(F.zip_with(F.col("qv"), V.lit_double_array(cent),
+                                   lambda x, y: (x - y) * (x - y)),
+                        F.lit(0.0), lambda acc, v: acc + v)
+        dists.append(F.struct(d.alias("d2"), F.lit(i).alias("cell")))
+    near = F.explode(F.slice(F.array_sort(F.array(*dists)), 1, nprobe))
+    return (q.select("*", near.alias("pc"))
+            .select(*q.columns, F.col("pc.cell").alias("cell")))
+
+
+def _cosine_pairs(pairs: DataFrame, *keep) -> DataFrame:
+    """Raw-vector scorer: exact cosine of joined (qv, cv) pairs as
+    ``cos_raw``, self-matches dropped."""
+    return (pairs.filter(F.col("query_id") != F.col("neighbor_id"))
+            .select("query_id", "neighbor_id", *keep,
+                    _paired_cosine().alias("cos_raw")))
+
+
+def _adc_lut(q: DataFrame, books) -> DataFrame:
+    """Per-query PQ-ADC lookup: dot(q_sub, centroid) and the centroid's
+    squared norm for every (subspace, code). Each entry is ONE F.expr
+    parse (same plan-construction rationale as _staged_argmin_multi),
+    the same zip_with/aggregate fold as V.dot."""
+    subdim = len(books[0][0][1])
+    entries = []
+    for s, book in enumerate(books):
+        for code, cent in book:
+            arr = ",".join(f"CAST('{float(x)!r}' AS DOUBLE)" for x in cent)
+            cn2 = float(sum(x * x for x in cent))
+            entries.append(F.expr(
+                f"named_struct('subspace', {s}, 'code', {code}, "
+                f"'qdot', aggregate(zip_with("
+                f"slice(qv, {s * subdim + 1}, {subdim}), array({arr}), "
+                "(x, y) -> x * y), CAST(0.0 AS DOUBLE), "
+                "(acc, v) -> acc + v), "
+                f"'cn2', CAST('{cn2!r}' AS DOUBLE))"))
+    return q.select(
+        "query_id", "qn", F.explode(F.array(*entries)).alias("e")
+    ).select("query_id", "qn", "e.subspace", "e.code", "e.qdot", "e.cn2")
+
+
+def _adc_cosine(codes: DataFrame, lut: DataFrame, keys) -> DataFrame:
+    """PQ-ADC scorer: join the long-form corpus codes to the broadcast
+    lookup on ``keys`` and assemble each pair's approximate cosine
+    from its m lookup entries as ``cos_raw``."""
+    d = F.col("qn") * F.sqrt("cn2_sum")
+    return (
+        codes.join(F.broadcast(lut), keys)
+        .filter(F.col("query_id") != F.col("neighbor_id"))
+        .groupBy("query_id", "neighbor_id")
+        .agg(F.sum("qdot").alias("dot_adc"), F.sum("cn2").alias("cn2_sum"),
+             F.min("qn").alias("qn"))
+        .withColumn("cos_raw", F.when(d > 0, F.col("dot_adc") / d))
+    )
+
+
+def _sq8_codec(vmins, vmaxs, levels: int):
+    """(encode, decode) Column builders of the 8-bit scalar quantizer.
+    encode: per element ``round((x - vmin_d) * levels / span_d)``
+    clamped to [0, levels], code 0 when the dimension is constant;
+    decode: ``vmin_d + code_d * span_d / levels``. Every step is a
+    single IEEE op in a fixed order (subtract, multiply, divide, +0.5,
+    floor), so the DuckDB oracle replays the exact codes."""
+    mn = V.lit_double_array(vmins)
+    span = V.lit_double_array([mx - mnv for mnv, mx in zip(vmins, vmaxs)])
+    lv = F.lit(float(levels))
+
+    def encode(dv):
+        shifted = F.zip_with(dv, mn, lambda x, m: x - m)
+        return F.zip_with(
+            shifted, span,
+            lambda y, s: F.when(
+                s > 0,
+                F.floor(F.greatest(F.lit(0.0), F.least(lv, y * lv / s))
+                        + F.lit(0.5))
+            ).otherwise(F.lit(0)).cast("int"))
+
+    def decode(codes):
+        return F.zip_with(F.zip_with(codes, span, lambda c, s: c * s / lv),
+                          mn, lambda x, m: x + m)
+
+    return encode, decode
+
+
+def _rerank(cand: DataFrame, queries: DataFrame, corpus: DataFrame,
+            id_col: str, vec_col: str) -> DataFrame:
+    """Exact re-rank of a (query_id, neighbor_id) shortlist: only those
+    pairs fetch their raw vectors."""
+    q = _side(queries, "q", id_col, _as_double(vec_col))
+    c = _side(corpus, "c", id_col, _as_double(vec_col))
+    return _cosine_pairs(
+        cand.join(F.broadcast(q), "query_id").join(c, "neighbor_id"))
+
+
+_TOPK_COLS = ("query_id", "rank", "neighbor_id")
+
+
+def _top_k(scored: DataFrame, k: int, out: str = "cosine",
+           cols=_TOPK_COLS) -> DataFrame:
+    """Per-query top-``k`` of ``cos_raw`` (descending, NULL last, ties
+    to the lower neighbor id), emitted as ``cols`` plus the 6-dp score
+    named ``out``."""
+    w = W.partitionBy("query_id").orderBy(F.desc("cos_raw"),
+                                          F.asc("neighbor_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(*cols, F.round("cos_raw", 6).alias(out))
+    )
 
 
 _INTEGRAL_TYPES = ("tinyint", "smallint", "int", "bigint")
@@ -287,29 +434,9 @@ def knn_bruteforce(corpus: DataFrame, queries: DataFrame, k: int = 5,
     """Exact top-k cosine neighbors of each query vector (excluding
     itself). Embeddings are cast float->double BEFORE the products so
     the arithmetic is engine-portable (float*float truncates)."""
-    qv = _as_double(F.col(vec_col))
-    q = queries.select(
-        F.col(id_col).alias("query_id"), qv.alias("qv"), V.norm(qv).alias("qn")
-    )
-    cv = _as_double(F.col(vec_col))
-    c = spread(corpus).select(
-        F.col(id_col).alias("neighbor_id"), cv.alias("cv"), V.norm(cv).alias("cn")
-    )
-    scored = (
-        F.broadcast(q).crossJoin(c)
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            _paired_cosine().alias("cos_raw"),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cos_raw"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", F.round("cos_raw", 6).alias("cosine"))
-    )
+    q = _side(queries, "q", id_col, _as_double(vec_col))
+    c = _side(spread(corpus), "c", id_col, _as_double(vec_col))
+    return _top_k(_cosine_pairs(F.broadcast(q).crossJoin(c)), k)
 
 
 def knn_matmul(corpus: DataFrame, queries: DataFrame, k: int = 5,
@@ -338,7 +465,6 @@ def knn_matmul(corpus: DataFrame, queries: DataFrame, k: int = 5,
 
     def run(batches):
         b_qids, b_qm, b_qnorm = bq.value
-        kk = k
         for pdf in batches:
             if not len(pdf):
                 continue
@@ -348,18 +474,27 @@ def knn_matmul(corpus: DataFrame, queries: DataFrame, k: int = 5,
             # dot / (|q| * |c|) — the same final-division order as
             # V.cosine, so ties rank identically across the two paths
             # (normalize-then-matmul rounds differently in the low bits)
-            sims = (b_qm @ cm.T) / (b_qnorm[:, None] * cnorm[None, :])
-            # a query vector present in this batch must not match itself
-            self_mask = b_qids[:, None] == nids[None, :]
-            sims[self_mask] = -np.inf
-            take = min(kk, sims.shape[1])
-            idx = np.argpartition(-sims, take - 1, axis=1)[:, :take]
+            denom = b_qnorm[:, None] * cnorm[None, :]
+            with np.errstate(divide="ignore", invalid="ignore"):
+                sims = (b_qm @ cm.T) / denom
+            # sort key: NULL cosines (zero norm product) after every
+            # real one, the self-match (NaN) after everything
+            key = np.where(denom > 0, -sims, np.inf)
+            key[b_qids[:, None] == nids[None, :]] = np.nan
+            take = min(k, key.shape[1])
+            head = np.partition(key, take - 1, axis=1)[:, :take]
+            kth = np.max(np.where(np.isnan(head), -np.inf, head), axis=1)
             out_q, out_n, out_c = [], [], []
-            for qi in range(sims.shape[0]):
-                cols = idx[qi][np.isfinite(sims[qi, idx[qi]])]
+            for qi in range(key.shape[0]):
+                cols = np.nonzero(key[qi] <= kth[qi])[0]
+                # ties at the cut keep the lower neighbor ids, as the
+                # final window does
+                cols = cols[np.lexsort((nids[cols], key[qi, cols]))[:take]]
                 out_q.extend([b_qids[qi]] * len(cols))
                 out_n.extend(nids[cols])
-                out_c.extend(sims[qi, cols])
+                out_c.extend(np.where(np.isinf(key[qi, cols]), np.nan,
+                                      sims[qi, cols]))
+            # NaN crosses Arrow as NULL, which the window ranks last
             yield pd.DataFrame({
                 "query_id": np.array(out_q, dtype="int64"),
                 "neighbor_id": np.array(out_n, dtype="int64"),
@@ -368,12 +503,7 @@ def knn_matmul(corpus: DataFrame, queries: DataFrame, k: int = 5,
 
     candidates = spread(corpus).select(id_col, vec_col).mapInPandas(
         run, schema="query_id long, neighbor_id long, cos_raw double")
-    w = W.partitionBy("query_id").orderBy(F.desc("cos_raw"), F.asc("neighbor_id"))
-    return (
-        candidates.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", F.round("cos_raw", 6).alias("cosine"))
-    )
+    return _top_k(candidates, k)
 
 
 def all_pairs_cosine_matmul(emb: DataFrame, threshold: float = 0.42,
@@ -457,44 +587,6 @@ def deterministic_centroids(corpus: DataFrame, n_cells: int = 8,
     return [list(r.v) for r in rows]
 
 
-def knn_ivf(corpus: DataFrame, queries: DataFrame, k: int = 5, n_cells: int = 8,
-            id_col: str = "vec_id", vec_col: str = "embedding",
-            cents: list | None = None) -> DataFrame:
-    """IVF-style ANN: route query + corpus vectors to centroid cells,
-    search exactly within the query's cell. The 100 TB shape: one
-    equi-join on cell id; recall tuned by probing >1 cell (nprobe).
-
-    Both assignment frames are locally checkpointed: CollapseProject
-    merges the staged-argmin projections back together when the join
-    consumes them, re-substituting every per-centroid distance fold
-    into the least()/when-chain references — a 276 KB plan with 161
-    zip_with folds whose per-action analysis+codegen dominated the
-    query (measured 7.9 s -> 1.9 s at sf0.1 with the barrier).
-
-    ``cents``: pre-selected cell centroids (the registry pattern —
-    IVF index construction is offline in production); omitted, the
-    deterministic seed pick runs inline (identical result)."""
-    if cents is None:
-        cents = deterministic_centroids(corpus, n_cells, id_col, vec_col)
-    c = ivf_assign(corpus, cents, id_col, vec_col).select(
-        F.col(id_col).alias("neighbor_id"), F.col("dv").alias("cv"),
-        V.norm(F.col("dv")).alias("cn"), "cell").localCheckpoint(eager=False)
-    q = ivf_assign(queries, cents, id_col, vec_col).select(
-        F.col(id_col).alias("query_id"), F.col("dv").alias("qv"),
-        V.norm(F.col("dv")).alias("qn"), "cell").localCheckpoint(eager=False)
-    scored = (
-        q.join(c, "cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", _paired_cosine().alias("cos_raw"))
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cos_raw"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", F.round("cos_raw", 6).alias("cosine"))
-    )
-
-
 def knn_lsh(corpus: DataFrame, queries: DataFrame, k: int = 5,
             id_col: str = "vec_id", vec_col: str = "embedding",
             n_planes: int = 8, seed: int = 7, dim: int = 64) -> DataFrame:
@@ -503,29 +595,11 @@ def knn_lsh(corpus: DataFrame, queries: DataFrame, k: int = 5,
     equi-join (shuffle on bucket key) instead of a cross join; recall
     is tuned by n_planes (fewer planes = bigger buckets = higher
     recall, more compute)."""
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        _as_double(F.col(vec_col)).alias("qv"),
-        V.norm(_as_double(F.col(vec_col))).alias("qn"),
-        V.sign_lsh_key(_as_double(F.col(vec_col)), n_planes, seed, dim).alias("bucket"),
-    )
-    c = spread(corpus).select(
-        F.col(id_col).alias("neighbor_id"),
-        _as_double(F.col(vec_col)).alias("cv"),
-        V.norm(_as_double(F.col(vec_col))).alias("cn"),
-        V.sign_lsh_key(_as_double(F.col(vec_col)), n_planes, seed, dim).alias("bucket"),
-    )
-    scored = (
-        q.join(c, "bucket")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", _paired_cosine().alias("cos_raw"))
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cos_raw"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", F.round("cos_raw", 6).alias("cosine"))
-    )
+    dv = _as_double(vec_col)
+    bucket = V.sign_lsh_key(dv, n_planes, seed, dim).alias("bucket")
+    q = _side(queries, "q", id_col, dv, bucket)
+    c = _side(spread(corpus), "c", id_col, dv, bucket)
+    return _top_k(_cosine_pairs(q.join(c, "bucket")), k)
 
 
 def embedding_lsh_pairs(emb: DataFrame, threshold: float = 0.42,
@@ -808,58 +882,37 @@ def knn_ivf_probe(corpus: DataFrame, queries: DataFrame, k: int = 5,
                   n_cells: int = 8, nprobe: int = 2,
                   id_col: str = "vec_id", vec_col: str = "embedding",
                   cents: list | None = None) -> DataFrame:
-    """IVF ANN with multi-cell probing: the query searches its
-    ``nprobe`` nearest cells instead of 1 — the standard recall knob
-    (recall grows with nprobe at proportional cost; nprobe = n_cells
-    degenerates to exact search). Corpus routing stays single-cell;
-    only the query side fans out, so the join cost scales with
-    queries × nprobe, not corpus size. The corpus assignment is
-    locally checkpointed (same CollapseProject plan blowup as
-    knn_ivf; see its docstring). ``cents`` as in :func:`knn_ivf`."""
+    """IVF ANN: route query and corpus vectors to centroid cells and
+    search exactly within the query's ``nprobe`` nearest cells — the
+    standard recall knob (recall grows with nprobe at proportional
+    cost; nprobe = n_cells degenerates to exact search). Corpus routing
+    stays single-cell; only the query side fans out, so the join cost
+    scales with queries × nprobe, not corpus size.
+
+    The corpus assignment is locally checkpointed: CollapseProject
+    merges the staged-argmin projections back together when the join
+    consumes them, re-substituting every per-centroid distance fold
+    into the least()/when-chain references — a 276 KB plan with 161
+    zip_with folds whose per-action analysis+codegen dominated the
+    query (measured 7.9 s -> 1.9 s at sf0.1 with the barrier).
+
+    ``cents``: pre-selected cell centroids (the registry pattern —
+    IVF index construction is offline in production); omitted, the
+    deterministic seed pick runs inline (identical result)."""
     if cents is None:
         cents = deterministic_centroids(corpus, n_cells, id_col, vec_col)
-    c = ivf_assign(corpus, cents, id_col, vec_col).select(
-        F.col(id_col).alias("neighbor_id"), F.col("dv").alias("cv"),
-        V.norm(F.col("dv")).alias("cn"), "cell").localCheckpoint(eager=False)
-
-    qv = queries.select(F.col(id_col).alias("query_id"),
-                        _as_double(F.col(vec_col)).alias("qv"))
-    dists = []
-    for i, cent in enumerate(cents):
-        cvec = V.lit_double_array(cent)
-        d = F.aggregate(F.zip_with(F.col("qv"), cvec,
-                                   lambda x, y: (x - y) * (x - y)),
-                        F.lit(0.0), lambda acc, v: acc + v)
-        dists.append(F.struct(d.alias("d2"), F.lit(i).alias("cell")))
-    # sort the k (d2, cell) structs ascending -> first nprobe cells;
-    # ties break toward the lower cell id (struct field order)
-    probed = qv.select(
-        "query_id", "qv",
-        F.explode(F.slice(F.array_sort(F.array(*dists)), 1, nprobe))
-        .alias("pc"))
-    q = probed.select("query_id", "qv", V.norm(F.col("qv")).alias("qn"),
-                      F.col("pc.cell").alias("cell"))
+    c = _side(ivf_assign(corpus, cents, id_col, vec_col), "c", id_col,
+              F.col("dv"), "cell").localCheckpoint(eager=False)
+    q = _route_nprobe(_side(queries, "q", id_col, _as_double(vec_col)),
+                      cents, nprobe)
     # No post-score dedup is needed: ivf_assign routes every corpus
     # vector to exactly ONE cell (strict-< argmin) and the probed cells
     # per query are distinct by construction, so each (query, neighbor)
-    # pair is scored at most once. The previous `.distinct()` here
-    # inserted a full shuffle of every scored candidate pair (4.4x
-    # slower than single-probe at sf0.1) for rows that were already
-    # unique. If corpus routing ever becomes multi-cell, dedupe with
-    # groupBy(query_id, neighbor_id).agg(F.max("cos_raw")) — map-side
-    # combine — never `.distinct()` on the near-unique scored triple.
-    scored = (
-        q.join(c, "cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", _paired_cosine().alias("cos_raw"))
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cos_raw"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id",
-                F.round("cos_raw", 6).alias("cosine"))
-    )
+    # pair is scored at most once. If corpus routing ever becomes
+    # multi-cell, dedupe with groupBy(query_id, neighbor_id)
+    # .agg(F.max("cos_raw")) — map-side combine — never `.distinct()`
+    # on the near-unique scored triple (a full shuffle of every pair).
+    return _top_k(_cosine_pairs(q.join(c, "cell")), k)
 
 
 def semantic_dedup_cells(emb: DataFrame, k: int = 4, iters: int = 2,
@@ -1194,49 +1247,11 @@ def knn_pq_adc(corpus: DataFrame, queries: DataFrame, k: int = 5,
     """
     if books is None:
         books = pq_train(corpus, m, n_codes, iters, id_col, vec_col, dim)
-    subdim = len(books[0][0][1])
     codes = pq_assign_long(corpus, books, id_col, vec_col).select(
         F.col(id_col).alias("neighbor_id"), "subspace", "code")
-
-    qv = _as_double(F.col(vec_col))
-    q = queries.select(F.col(id_col).alias("query_id"), qv.alias("qv"),
-                       V.norm(qv).alias("qn"))
-    # per-query ADC lookup: qdot + centroid norm² for every (s, code).
-    # Each entry is ONE F.expr parse (same plan-construction rationale
-    # as _staged_argmin_multi): same zip_with/aggregate fold as V.dot.
-    lut_rows = []
-    for s, book in enumerate(books):
-        for code, cent in book:
-            arr = ",".join(f"CAST('{float(x)!r}' AS DOUBLE)" for x in cent)
-            cn2 = float(sum(x * x for x in cent))
-            lut_rows.append(F.expr(
-                f"named_struct('subspace', {s}, 'code', {code}, "
-                f"'qdot', aggregate(zip_with("
-                f"slice(qv, {s * subdim + 1}, {subdim}), array({arr}), "
-                "(x, y) -> x * y), CAST(0.0 AS DOUBLE), "
-                "(acc, v) -> acc + v), "
-                f"'cn2', CAST('{cn2!r}' AS DOUBLE))"))
-    lut = q.select(
-        "query_id", "qn", F.explode(F.array(*lut_rows)).alias("e")
-    ).select("query_id", "qn", "e.subspace", "e.code", "e.qdot", "e.cn2")
-
-    scored = (
-        codes.join(F.broadcast(lut), ["subspace", "code"])
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.sum("qdot").alias("dot_adc"), F.sum("cn2").alias("cn2_sum"),
-             F.min("qn").alias("qn"))
-        .withColumn("cos_adc",
-                    F.when(F.col("qn") * F.sqrt("cn2_sum") > 0,
-                           F.col("dot_adc") / (F.col("qn") * F.sqrt("cn2_sum"))))
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cos_adc"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id",
-                F.round("cos_adc", 6).alias("cosine_adc"))
-    )
+    lut = _adc_lut(_side(queries, "q", id_col, _as_double(vec_col)), books)
+    return _top_k(_adc_cosine(codes, lut, ["subspace", "code"]), k,
+                  "cosine_adc")
 
 
 def knn_pq_rerank(corpus: DataFrame, queries: DataFrame, k: int = 5,
@@ -1261,23 +1276,7 @@ def knn_pq_rerank(corpus: DataFrame, queries: DataFrame, k: int = 5,
     cand = knn_pq_adc(corpus, queries, k=shortlist, m=m, n_codes=n_codes,
                       iters=iters, id_col=id_col, vec_col=vec_col,
                       dim=dim, books=books).select("query_id", "neighbor_id")
-    qv = _as_double(F.col(vec_col))
-    q = queries.select(F.col(id_col).alias("query_id"), qv.alias("qv"),
-                       V.norm(qv).alias("qn"))
-    cv = _as_double(F.col(vec_col))
-    c = corpus.select(F.col(id_col).alias("neighbor_id"), cv.alias("cv"),
-                      V.norm(cv).alias("cn"))
-    scored = (
-        cand.join(F.broadcast(q), "query_id").join(c, "neighbor_id")
-        .select("query_id", "neighbor_id", _paired_cosine().alias("cos_raw"))
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cos_raw"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id",
-                F.round("cos_raw", 6).alias("cosine"))
-    )
+    return _top_k(_rerank(cand, queries, corpus, id_col, vec_col), k)
 
 
 def knn_ivf_pq(corpus: DataFrame, queries: DataFrame, k: int = 5,
@@ -1318,15 +1317,10 @@ def knn_ivf_pq(corpus: DataFrame, queries: DataFrame, k: int = 5,
 
     # corpus side: one row per (vector, subspace) carrying its coarse
     # cell + PQ code — the entire serving index. The coarse-cell argmin
-    # and the m subspace argmins are all independent argmins over the
-    # SAME row, so they run in ONE _staged_argmin_multi pass over ONE
-    # corpus scan (r15, guide §2.4: the previous shape ran ivf_assign
-    # and pq_assign_long as separate scans and re-attached them with a
-    # neighbor_id shuffle join — two Exchanges plus a SortMergeJoin to
-    # glue together columns born on the same row). Assignments are
-    # bit-identical: same argmin machinery, same centroid literals,
-    # same lower-label tie-break. Lineage barrier for the same
-    # CollapseProject reason as knn_ivf/knn_ivf_probe.
+    # and the m subspace argmins are independent argmins over the SAME
+    # row, so they run in ONE _staged_argmin_multi pass over ONE corpus
+    # scan, with a lineage barrier for the CollapseProject reason given
+    # in knn_ivf_probe.
     m_sub = len(books)
     cdf = spread(corpus).select(F.col(id_col),
                                 _as_double(F.col(vec_col)).alias("dv"))
@@ -1348,81 +1342,17 @@ def knn_ivf_pq(corpus: DataFrame, queries: DataFrame, k: int = 5,
         .localCheckpoint(eager=False)
     )
 
-    # query side: nprobe nearest cells (struct-sort argmin, ties to
-    # the lower cell id — same as knn_ivf_probe) ...
-    qv = queries.select(F.col(id_col).alias("query_id"),
-                        _as_double(F.col(vec_col)).alias("qv"))
-    dists = []
-    for i, cent in enumerate(cents):
-        cvec = V.lit_double_array(cent)
-        d = F.aggregate(F.zip_with(F.col("qv"), cvec,
-                                   lambda x, y: (x - y) * (x - y)),
-                        F.lit(0.0), lambda acc, v: acc + v)
-        dists.append(F.struct(d.alias("d2"), F.lit(i).alias("cell")))
-    probed = qv.select(
-        "query_id",
-        F.explode(F.slice(F.array_sort(F.array(*dists)), 1, nprobe))
-        .alias("pc")).select("query_id", F.col("pc.cell").alias("cell"))
-
-    # ... and the ADC lookup (identical construction to knn_pq_adc)
-    q = queries.select(F.col(id_col).alias("query_id"),
-                       _as_double(F.col(vec_col)).alias("qv"))
-    q = q.select("query_id", "qv", V.norm(F.col("qv")).alias("qn"))
-    lut_rows = []
-    for s, book in enumerate(books):
-        for code, cent in book:
-            arr = ",".join(f"CAST('{float(x)!r}' AS DOUBLE)" for x in cent)
-            cn2 = float(sum(x * x for x in cent))
-            lut_rows.append(F.expr(
-                f"named_struct('subspace', {s}, 'code', {code}, "
-                f"'qdot', aggregate(zip_with("
-                f"slice(qv, {s * subdim + 1}, {subdim}), array({arr}), "
-                "(x, y) -> x * y), CAST(0.0 AS DOUBLE), "
-                "(acc, v) -> acc + v), "
-                f"'cn2', CAST('{cn2!r}' AS DOUBLE))"))
-    lut = q.select(
-        "query_id", "qn", F.explode(F.array(*lut_rows)).alias("e")
-    ).select("query_id", "qn", "e.subspace", "e.code", "e.qdot", "e.cn2")
-
+    q = _side(queries, "q", id_col, _as_double(vec_col))
+    probed = _route_nprobe(q, cents, nprobe).select("query_id", "cell")
     # broadcast |Q| x nprobe x m x n_codes probe-scoped lookup; the
     # (cell, subspace, code) equi-join restricts the ADC scan to the
     # probed cells. Corpus routing is single-cell and a query's probed
     # cells are distinct, so each (query, neighbor, subspace) scores
     # exactly once — the groupBy sums exactly m rows per pair.
-    probe_lut = probed.join(lut, "query_id")
-    scored = (
-        coded.join(F.broadcast(probe_lut), ["cell", "subspace", "code"])
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.sum("qdot").alias("dot_adc"), F.sum("cn2").alias("cn2_sum"),
-             F.min("qn").alias("qn"))
-        .withColumn("cos_adc",
-                    F.when(F.col("qn") * F.sqrt("cn2_sum") > 0,
-                           F.col("dot_adc") / (F.col("qn") * F.sqrt("cn2_sum"))))
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cos_adc"), F.asc("neighbor_id"))
-    cand = (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= shortlist)
-            .select("query_id", "neighbor_id"))
-
-    # exact re-rank of the shortlist (identical tail to knn_pq_rerank)
-    qx = queries.select(F.col(id_col).alias("query_id"),
-                        _as_double(F.col(vec_col)).alias("qv"))
-    qx = qx.select("query_id", "qv", V.norm(F.col("qv")).alias("qn"))
-    cx = corpus.select(F.col(id_col).alias("neighbor_id"),
-                       _as_double(F.col(vec_col)).alias("cv"))
-    cx = cx.select("neighbor_id", "cv", V.norm(F.col("cv")).alias("cn"))
-    exact = (
-        cand.join(F.broadcast(qx), "query_id").join(cx, "neighbor_id")
-        .select("query_id", "neighbor_id", _paired_cosine().alias("cos_raw"))
-    )
-    w2 = W.partitionBy("query_id").orderBy(F.desc("cos_raw"), F.asc("neighbor_id"))
-    return (
-        exact.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id",
-                F.round("cos_raw", 6).alias("cosine"))
-    )
+    scored = _adc_cosine(coded, probed.join(_adc_lut(q, books), "query_id"),
+                         ["cell", "subspace", "code"])
+    cand = _top_k(scored, shortlist).select("query_id", "neighbor_id")
+    return _top_k(_rerank(cand, queries, corpus, id_col, vec_col), k)
 
 
 def sq_train(emb: DataFrame, id_col: str = "vec_id",
@@ -1459,19 +1389,9 @@ def sq_assign(emb: DataFrame, vmins: list[float], vmaxs: list[float],
     Out-of-range values (queries quantized against stale stats) clamp
     to the edge codes instead of corrupting neighbors — the same
     graceful-degradation contract as functions/layout.normalize_dim."""
-    mn = V.lit_double_array(vmins)
-    span = V.lit_double_array([mx - mnv for mnv, mx in zip(vmins, vmaxs)])
-    lv = float(levels)
-    dv = _as_double(F.col(vec_col))
-    shifted = F.zip_with(dv, mn, lambda x, m: x - m)
-    codes = F.zip_with(
-        shifted, span,
-        lambda y, s: F.when(
-            s > 0,
-            F.floor(F.greatest(F.lit(0.0), F.least(
-                F.lit(lv), y * F.lit(lv) / s)) + F.lit(0.5))
-        ).otherwise(F.lit(0)).cast("int"))
-    return spread(emb).select(F.col(id_col), codes.alias("codes"))
+    encode, _ = _sq8_codec(vmins, vmaxs, levels)
+    return spread(emb).select(F.col(id_col),
+                              encode(_as_double(vec_col)).alias("codes"))
 
 
 def knn_sq8(corpus: DataFrame, queries: DataFrame, k: int = 5,
@@ -1501,40 +1421,14 @@ def knn_sq8(corpus: DataFrame, queries: DataFrame, k: int = 5,
     registry (train-once-serve-many, as the other ANN ops)."""
     if stats is None:
         stats = sq_train(corpus, id_col, vec_col, dim)
-    vmins, vmaxs = stats
-    mn = V.lit_double_array(vmins)
-    span = V.lit_double_array([mx - mnv for mnv, mx in zip(vmins, vmaxs)])
-    lv = float(levels)
-
-    coded = sq_assign(corpus, vmins, vmaxs, levels, id_col, vec_col)
-    # decode-at-scan: vhat derives from the CODES (the persisted form),
-    # never from the raw vector — information flows through 1 byte/dim.
-    vhat = F.zip_with(
-        F.zip_with(F.col("codes"), span, lambda c, s: c * s / F.lit(lv)),
-        mn, lambda x, m: x + m)
-    c = coded.select(F.col(id_col).alias("neighbor_id"),
-                     vhat.alias("vhat"))
-    c = c.select("neighbor_id", "vhat", V.norm(F.col("vhat")).alias("cn"))
-
-    qv = _as_double(F.col(vec_col))
-    q = queries.select(F.col(id_col).alias("query_id"), qv.alias("qv"),
-                       V.norm(qv).alias("qn"))
-    scored = (
-        c.join(F.broadcast(q),
-               F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id",
-                F.when(F.col("qn") * F.col("cn") > 0,
-                       V.dot(F.col("qv"), F.col("vhat"))
-                       / (F.col("qn") * F.col("cn"))).alias("cos_sq"))
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cos_sq"),
-                                          F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id",
-                F.round("cos_sq", 6).alias("cosine_sq8"))
-    )
+    _, decode = _sq8_codec(*stats, levels)
+    # decode-at-scan: the candidate vector derives from the CODES (the
+    # persisted form), never from the raw vector — information flows
+    # through 1 byte/dim
+    c = _side(sq_assign(corpus, *stats, levels, id_col, vec_col), "c",
+              id_col, decode(F.col("codes")))
+    q = _side(queries, "q", id_col, _as_double(vec_col))
+    return _top_k(_cosine_pairs(c.join(F.broadcast(q))), k, "cosine_sq8")
 
 
 def hard_negatives(corpus: DataFrame, queries: DataFrame, k: int = 3,
@@ -1552,29 +1446,16 @@ def hard_negatives(corpus: DataFrame, queries: DataFrame, k: int = 3,
     at 100 TB the pruned pairs never enter the pair stream. Swap the
     corpus side for an IVF/SQ8-indexed variant exactly as the main
     search tier does when exhaustive stops paying."""
-    qv = _as_double(F.col(vec_col))
-    q = queries.select(F.col(id_col).alias("query_id"),
-                       F.col(label_col).alias("query_label"),
-                       qv.alias("qv"), V.norm(qv).alias("qn"))
-    cv = _as_double(F.col(vec_col))
-    c = corpus.select(F.col(id_col).alias("neighbor_id"),
-                      F.col(label_col).alias("neighbor_label"),
-                      cv.alias("cv"), V.norm(cv).alias("cn"))
-    scored = (
+    q = _side(queries, "q", id_col, _as_double(vec_col),
+              F.col(label_col).alias("query_label"))
+    c = _side(corpus, "c", id_col, _as_double(vec_col),
+              F.col(label_col).alias("neighbor_label"))
+    scored = _cosine_pairs(
         c.join(F.broadcast(q),
-               (F.col("query_id") != F.col("neighbor_id"))
-               & (F.col("query_label") != F.col("neighbor_label")))
-        .select("query_id", "query_label", "neighbor_id",
-                "neighbor_label", _paired_cosine().alias("cos_raw"))
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cos_raw"),
-                                          F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "query_label", "rank", "neighbor_id",
-                "neighbor_label", F.round("cos_raw", 6).alias("cosine"))
-    )
+               F.col("query_label") != F.col("neighbor_label")),
+        "query_label", "neighbor_label")
+    return _top_k(scored, k, cols=("query_id", "query_label", "rank",
+                                   "neighbor_id", "neighbor_label"))
 
 
 def knn_ivf_sq8(corpus: DataFrame, queries: DataFrame, k: int = 5,
@@ -1601,74 +1482,18 @@ def knn_ivf_sq8(corpus: DataFrame, queries: DataFrame, k: int = 5,
         cents = deterministic_centroids(corpus, n_cells, id_col, vec_col)
     if stats is None:
         stats = sq_train(corpus, id_col, vec_col, dim)
-    vmins, vmaxs = stats
-    mn = V.lit_double_array(vmins)
-    span = V.lit_double_array([mx - mnv for mnv, mx in zip(vmins, vmaxs)])
-    lv = float(levels)
-
-    # corpus index: (neighbor_id, cell, vhat, cn) — decode-at-scan from
-    # the 1-byte codes, routed by the coarse quantizer. The coarse-cell
-    # argmin and the quantize/dequantize are independent row-local
-    # functions of the same vector, so they run in ONE pass over ONE
-    # corpus scan (r15, guide §2.4 — previously sq_assign and
-    # ivf_assign scanned the corpus separately and a neighbor_id
-    # shuffle join glued together columns born on the same row; the
-    # fused form is map-only end to end). Codes/cells are
-    # bit-identical: same fixed-order quantize ops (sq_assign's
-    # formula), same staged argmin + lower-cell tie-break. Lineage
-    # barrier for the same CollapseProject reason as knn_ivf_pq.
-    v = spread(corpus).select(F.col(id_col).alias("neighbor_id"),
-                              _as_double(F.col(vec_col)).alias("dv"))
-    v = _staged_argmin(v, "dv", list(enumerate(cents)),
-                       cell_name="cell", d2_name="_d2c")
-    shifted = F.zip_with(F.col("dv"), mn, lambda x, m: x - m)
-    codes = F.zip_with(
-        shifted, span,
-        lambda y, s: F.when(
-            s > 0,
-            F.floor(F.greatest(F.lit(0.0), F.least(
-                F.lit(lv), y * F.lit(lv) / s)) + F.lit(0.5))
-        ).otherwise(F.lit(0)).cast("int"))
-    # vhat derives from the CODES (the persisted form), never from the
-    # raw vector — information still flows through 1 byte/dim
-    vhat = F.zip_with(
-        F.zip_with(codes, span, lambda c, s: c * s / F.lit(lv)),
-        mn, lambda x, m: x + m)
-    c = v.select("neighbor_id", "cell", vhat.alias("vhat"))
-    c = c.select("neighbor_id", "cell", "vhat",
-                 V.norm(F.col("vhat")).alias("cn")) \
-        .localCheckpoint(eager=False)
-
-    # query side: nprobe nearest cells (struct-sort argmin, ties to
-    # the lower cell id — identical to knn_ivf_pq's router)
-    qv0 = queries.select(F.col(id_col).alias("query_id"),
-                         _as_double(F.col(vec_col)).alias("qv"))
-    dists = []
-    for i, cent in enumerate(cents):
-        cvec = V.lit_double_array(cent)
-        d = F.aggregate(F.zip_with(F.col("qv"), cvec,
-                                   lambda x, y: (x - y) * (x - y)),
-                        F.lit(0.0), lambda acc, v: acc + v)
-        dists.append(F.struct(d.alias("d2"), F.lit(i).alias("cell")))
-    probed = qv0.select(
-        "query_id",
-        F.explode(F.slice(F.array_sort(F.array(*dists)), 1, nprobe))
-        .alias("pc")).select("query_id", F.col("pc.cell").alias("cell"))
-    q = qv0.select("query_id", "qv", V.norm(F.col("qv")).alias("qn"))
-
-    scored = (
-        c.join(F.broadcast(probed.join(q, "query_id")), "cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id",
-                F.when(F.col("qn") * F.col("cn") > 0,
-                       V.dot(F.col("qv"), F.col("vhat"))
-                       / (F.col("qn") * F.col("cn"))).alias("cos_sq"))
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cos_sq"),
-                                          F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id",
-                F.round("cos_sq", 6).alias("cosine_sq8"))
-    )
+    encode, decode = _sq8_codec(*stats, levels)
+    # corpus index: (neighbor_id, cell, cv, cn) — decode-at-scan from the
+    # 1-byte codes, routed by the coarse quantizer. The coarse-cell
+    # argmin and the quantize/dequantize are row-local functions of the
+    # same vector, so they run in ONE map-only pass over ONE corpus
+    # scan, with a lineage barrier for the CollapseProject reason given
+    # in knn_ivf_probe.
+    c = _side(ivf_assign(corpus, cents, id_col, vec_col), "c", id_col,
+              decode(encode(F.col("dv"))), "cell")
+    c = c.localCheckpoint(eager=False)
+    q = _side(queries, "q", id_col, _as_double(vec_col))
+    probed = _route_nprobe(q, cents, nprobe).select("query_id", "cell")
+    return _top_k(_cosine_pairs(
+        c.join(F.broadcast(probed.join(q, "query_id")), "cell")), k,
+        "cosine_sq8")

@@ -944,14 +944,15 @@ WHERE rank <= 5
 @register("knn_cosine_ivf", oracle=_IVF_SQL, bench=True)
 def knn_cosine_ivf(spark, sf_dir):
     """IVF-bucketed approximate top-5 cosine neighbors
-    (operators/similarity.py::knn_ivf): deterministic centroid routing,
-    exact search within the query's cell — the inverted-file scale path
-    next to the LSH variant. The oracle replays the same routing in
-    SQL: strict-less argmin == ORDER BY d2, cell_idx."""
+    (operators/similarity.py::knn_ivf_probe with nprobe=1):
+    deterministic centroid routing, exact search within the query's
+    nearest cell — the inverted-file scale path next to the LSH
+    variant. The oracle replays the same routing in SQL: the nearest
+    cell with ties to the lower index == ORDER BY d2, cell_idx."""
     emb = t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") % 50 == 0)
-    return S.knn_ivf(emb, queries, k=5,
-                     cents=_ivf_cents(spark, sf_dir, 8))
+    return S.knn_ivf_probe(emb, queries, k=5, nprobe=1,
+                           cents=_ivf_cents(spark, sf_dir, 8))
 
 
 # ---------------------------------------------------------------------------

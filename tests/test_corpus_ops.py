@@ -138,7 +138,7 @@ def test_ann_variants_recall_floor(spark):
     # is weak — floors sit far above the ~0.01 chance baseline, not at
     # production levels (real clustered embeddings bucket far better)
     lsh = pairs(S.knn_lsh(emb, qs, k=5, n_planes=4))
-    ivf = pairs(S.knn_ivf(emb, qs, k=5))
+    ivf = pairs(S.knn_ivf_probe(emb, qs, k=5, nprobe=1))
     assert len(exact) > 0
     assert len(lsh & exact) / len(exact) >= 0.1
     assert len(ivf & exact) / len(exact) >= 0.3

@@ -65,6 +65,7 @@ def test_knn_matmul_matches_bruteforce(spark):
 
     rng = random.Random(11)
     rows = [(i, [rng.uniform(-1, 1) for _ in range(16)]) for i in range(60)]
+    rows.append((80, [0.0] * 16))  # zero vector: NULL cosines, ranked last
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     queries = emb.filter("vec_id % 20 = 0")
     bf = sorted(map(tuple, S.knn_bruteforce(emb, queries, k=4).collect()))
@@ -114,7 +115,8 @@ def test_knn_ivf_finds_identical_in_cell(spark):
     rows = [(i, [float(i == j) for j in range(8)]) for i in range(8)]
     rows.append((100, [1.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0]))  # dup of vec 0
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    out = S.knn_ivf(emb, emb.filter("vec_id = 0"), k=3, n_cells=4).collect()
+    out = S.knn_ivf_probe(emb, emb.filter("vec_id = 0"), k=3, n_cells=4,
+                          nprobe=1).collect()
     assert any(r.neighbor_id == 100 and r.cosine == 1.0 for r in out)
 
 

@@ -883,17 +883,35 @@ def test_bm25_top_k_is_take_ordered_not_global_window(spark):
     assert "SortMergeJoin" not in plan
 
 
-def test_sq8_quantize_is_map_only_scoring_broadcasts_queries(spark):
-    """knn_cosine_sq8: quantize/dequantize is map-side column math (no
-    join, no aggregation shuffle on the corpus side); the scoring join
-    broadcasts the bounded query side (BroadcastNestedLoopJoin — the
-    same allowed shape as knn_cosine_bruteforce); the only exchanges
-    are the spread() round-robin, the top-k window's hash partition,
-    and the query broadcast."""
-    plan = _plan(spark, "knn_cosine_sq8")
-    assert plan.count("BroadcastNestedLoopJoin") == 1
-    assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan
-    assert plan.count("Exchange") <= 3
+_ANN_OPS = ("Exchange", "BroadcastNestedLoopJoin", "BroadcastHashJoin",
+            "SortMergeJoin", "ShuffledHashJoin", "Window", "Generate")
+_ANN_PLAN_COUNTS = {
+    "knn_cosine_bruteforce": (3, 1, 0, 0, 0, 3, 0),
+    "knn_cosine_matmul": (2, 0, 0, 0, 0, 3, 0),
+    "knn_cosine_lsh": (3, 0, 1, 0, 0, 3, 0),
+    "knn_cosine_ivf": (2, 0, 1, 0, 0, 3, 1),
+    "knn_cosine_ivf_probe2": (2, 0, 1, 0, 0, 3, 1),
+    "knn_cosine_pq_adc": (4, 0, 1, 0, 0, 3, 2),
+    "knn_cosine_pq_rerank": (6, 0, 3, 0, 0, 5, 2),
+    "knn_cosine_ivf_pq": (6, 0, 4, 0, 0, 5, 2),
+    "knn_cosine_sq8": (3, 1, 0, 0, 0, 3, 0),
+    "knn_cosine_ivf_sq8": (3, 0, 2, 0, 0, 3, 1),
+    "knn_label_vote": (5, 1, 2, 0, 0, 5, 0),
+    "hard_negative_mining": (2, 1, 0, 0, 0, 3, 0),
+}
+
+
+@pytest.mark.parametrize("name", list(_ANN_PLAN_COUNTS))
+def test_ann_tier_plan_shape(spark, name):
+    """Pin the ANN tier's plan shapes at sf0.001 as operator counts
+    (substring counts over the executed plan, so Exchange includes
+    BroadcastExchange and Window includes WindowGroupLimit): no
+    shuffled scoring join anywhere in the tier.
+    knn_cosine_sq8 in particular keeps quantize/decode as map-side
+    column math: its only exchanges are the spread() round-robin, the
+    top-k window's hash partition and the query broadcast."""
+    plan = _plan(spark, name)
+    assert tuple(plan.count(op) for op in _ANN_OPS) == _ANN_PLAN_COUNTS[name]
 
 
 def test_jsonl_roundtrip_single_agg_shuffle(spark):

@@ -1,7 +1,8 @@
 #!/usr/bin/env python
-"""Round-9 measurement: the n_cells knob on knn_ivf ITSELF, at the
-deployment shape (fixed |Q| = 200, sf100 = 2M vectors) — closing the
-r8 gap that the k ~ sqrt(n) rule was only measured for semantic cells
+"""Round-9 measurement: the n_cells knob on single-probe IVF
+(knn_ivf_probe, nprobe=1) ITSELF, at the deployment shape (fixed
+|Q| = 200, sf100 = 2M vectors) — closing the r8 gap that the
+k ~ sqrt(n) rule was only measured for semantic cells
 (tools/scale_semantic_k.py) while the ANN fixed-|Q| curve pinned
 cells = 8 (tools/scale_knn_fixedq.py).
 
@@ -47,7 +48,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 
 from medallion_data_pipeline_spark.operators.similarity import (
-    knn_ivf, knn_ivf_probe, knn_matmul)
+    knn_ivf_probe, knn_matmul)
 from medallion_data_pipeline_spark.sources.testdata import load_table
 from tools.scale_heavy import get_ui_spark, shuffle_totals
 from tools.scale_knn_fixedq import ensure_embeddings_only
@@ -84,12 +85,13 @@ def main():
             spark.catalog.clearCache()
             w0, _ = shuffle_totals(spark)
             t0 = time.time()
-            knn_ivf(emb, q, k=5, n_cells=cells) \
+            knn_ivf_probe(emb, q, k=5, n_cells=cells, nprobe=1) \
                 .write.format("noop").mode("overwrite").save()
             wall = time.time() - t0
             if wall < best:
                 best, sh_w = wall, shuffle_totals(spark)[0] - w0
-        got = neighbor_sets(knn_ivf(emb, q, k=5, n_cells=cells).collect())
+        got = neighbor_sets(knn_ivf_probe(emb, q, k=5, n_cells=cells,
+                                          nprobe=1).collect())
         hits = sum(len(got.get(qid, set()) & t) for qid, t in truth.items())
         recall = hits / sum(len(t) for t in truth.values())
         out[f"cells{cells}"] = {

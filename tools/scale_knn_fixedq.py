@@ -17,7 +17,8 @@ corpus-side.
 
 Measured ops (min-of-2, shuffle deltas, same harness as
 scale_sf10.py):
-- knn_ivf at the oracle-pinned 8 cells (assignment linear in n,
+- knn_ivf_probe with nprobe=1 at the oracle-pinned 8 cells
+  (assignment linear in n,
   in-cell candidates |Q| x n/8 — asymptotically linear at fixed
   parameters; the k ~ sqrt(n) cell knob is measured separately for
   semantic cells in docs/SCALING.md)
@@ -48,14 +49,16 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
-from medallion_data_pipeline_spark.operators.similarity import knn_ivf, knn_pq_adc
+from medallion_data_pipeline_spark.operators.similarity import (
+    knn_ivf_probe, knn_pq_adc)
 from medallion_data_pipeline_spark.sources.testdata import load_table
 from tools.scale_heavy import get_ui_spark, grow_sf1, shuffle_totals
 
 Q_MAX = 200  # fixed batch: original-base vec_ids < 200 at every SF
 
 OPS = {
-    "knn_ivf_fixedq": lambda emb, q: knn_ivf(emb, q, k=5, n_cells=8),
+    "knn_ivf_fixedq": lambda emb, q: knn_ivf_probe(emb, q, k=5, n_cells=8,
+                                                   nprobe=1),
     "knn_pq_adc_fixedq": lambda emb, q: knn_pq_adc(emb, q, k=5, m=4,
                                                    n_codes=8, iters=1),
 }
