@@ -79,6 +79,26 @@ def test_all_twelve_gold_dq_checks_pass(spark, warehouse):
     assert failed == []
 
 
+def test_consistent_calculations_bound_follows_rounding(spark):
+    """avg_revenue_per_unit is rounded to 4 dp, so a correct group of
+    100K units is off by up to 5 after multiplying back: it must pass,
+    while planted inconsistent rows (large and small) are still
+    flagged by the same single-pass predicate."""
+    chk = next(c for c in quality.gold_checks()
+               if c.name == "consistent_calculations")
+    rows = [  # (id, total_quantity_sold, total_revenue, avg_revenue_per_unit)
+        ("large_ok", 100_000, 1_234_567.89, round(1_234_567.89 / 100_000, 4)),
+        ("small_ok", 3, 10.0, round(10.0 / 3, 4)),
+        ("large_bad", 100_000, 1_234_567.89, 12.40),
+        ("small_bad", 10, 100.0, 10.5),
+    ]
+    df = spark.createDataFrame(
+        rows, "id string, total_quantity_sold long, total_revenue double, "
+              "avg_revenue_per_unit double")
+    flagged = sorted(r.id for r in df.filter(chk.predicate).collect())
+    assert flagged == ["large_bad", "small_bad"]
+
+
 def test_silver_gold_reconciliation_within_tolerance(spark, warehouse):
     recon = quality.reconcile_silver_gold(spark, warehouse)
     assert all(r.passed for r in recon.collect())
@@ -204,89 +224,77 @@ def test_eda_report_generates_all_sections(spark, tmp_path):
     assert len(csvs) >= 10
 
 
-def test_bench_calibration_math_and_probe(spark):
-    """bench.py::_Calibration: the probe is a real bounded Spark job,
-    checkpoints record median-of-3 at the tick cadence, the run
-    factor is REF_SEC / median(points), and normalize scales every
-    entry by that single run-level factor (per-entry neighbor
-    interpolation was measured too noisy — PERFORMANCE.md r13)."""
-    import sys
+def test_metrics_capture_counts_exactly_the_window(spark):
+    """metrics.capture: a fixed shuffle job gives identical count
+    columns on every run; a job submitted from a ThreadPoolExecutor
+    thread inside the window is counted like one from the caller's
+    thread; work done before the window is not counted."""
+    from concurrent.futures import ThreadPoolExecutor
 
-    sys.path.insert(0, __file__.rsplit("/tests/", 1)[0])
-    from bench import _Calibration
+    from pyspark.sql import functions as F
 
-    cal = _Calibration(spark)
-    cal.probe()
-    assert len(cal.points) == 1 and cal.points[0][0] == 0
-    assert 0.0 < cal.points[0][1] < 60.0
+    from medallion_data_pipeline_spark.metrics import capture
 
-    # tick cadence: EVERY entries per checkpoint
-    for i in range(cal.EVERY):
-        cal.tick(f"q{i}")
-    assert len(cal.points) == 2 and cal.points[1][0] == cal.EVERY
+    def job():
+        (spark.range(0, 20_000, 1, 4)
+         .groupBy((F.col("id") % 7).alias("k")).count()
+         .write.format("noop").mode("overwrite").save())
 
-    # factor/normalize arithmetic on pinned synthetic points
-    cal.points = [(0, 0.5), (5, 1.3), (10, 0.65)]
-    assert abs(cal.factor() - _Calibration.REF_SEC / 0.65) < 1e-12
-    norm = cal.normalize({"a": 2.0, "b": 0.0})
-    f = _Calibration.REF_SEC / 0.65
-    assert norm == {"a": round(2.0 * f, 3), "b": 0.0}
-    # empty points -> identity factor (no probe data, no correction)
-    cal.points = []
-    assert cal.factor() == 1.0
+    def counts(window):
+        return {k: v for k, v in window.items() if k not in ("run_s", "cpu_s")}
 
+    runs = []
+    for _ in range(2):
+        with capture(spark) as c:
+            job()
+        runs.append(counts(c))
+    assert runs[0] == runs[1]
+    for col in ("jobs", "stages", "tasks", "input_records",
+                "shuffle_read_bytes", "shuffle_read_records",
+                "shuffle_write_bytes", "shuffle_write_records"):
+        assert runs[0][col] > 0, col
+    assert runs[0]["shuffle_write_records"] == \
+        runs[0]["shuffle_read_records"] == 4 * 7
 
-def test_bench_burst_guard_selection(tmp_path):
-    """bench.py burst guard (VERDICT r13 #1): entries whose main-pass
-    min exceeds BURST_X x the prior round's committed min are selected
-    for one end-of-run retry; absent/zero/new entries never are."""
-    import json as _json
-    import sys
+    job()  # before the window: must not be counted
+    with capture(spark) as threaded:
+        with ThreadPoolExecutor(max_workers=2) as pool:
+            pool.submit(job).result()
+    assert counts(threaded) == runs[0]
 
-    sys.path.insert(0, __file__.rsplit("/tests/", 1)[0])
-    from bench import BURST_X, burst_candidates, load_prior_mins
-
-    detail = tmp_path / "BENCH_DETAIL.json"
-    detail.write_text(_json.dumps({
-        "reps": {"a": [1.0, 0.9, 1.1], "b": [2.0, 2.2],
-                 "zero": [0.0], "empty": []}}))
-    prior = load_prior_mins(str(detail))
-    assert prior == {"a": 0.9, "b": 2.0, "zero": 0.0}
-
-    timings = {"a": 0.9 * BURST_X + 0.01,   # burst -> retry
-               "b": 2.0 * BURST_X,           # exactly at bound -> no
-               "zero": 5.0,                  # prior 0 -> never
-               "new_entry": 9.9}             # no prior -> never
-    assert burst_candidates(timings, prior) == ["a"]
-    # threshold is parameterizable (the 2.5-3x band from the brief)
-    assert burst_candidates(timings, prior, burst_x=3.0) == []
-    # unreadable/missing detail file -> no priors -> no retries
-    assert load_prior_mins(str(tmp_path / "nope.json")) == {}
-    assert burst_candidates(timings, {}) == []
+    with capture(spark) as empty:
+        pass
+    assert set(counts(empty).values()) == {0}
 
 
-def test_bench_prior_detail_archive_resolution(tmp_path):
-    """bench.py per-round detail archive (VERDICT r14 #4): prior-min
-    and normalized-pair loading resolve to the newest committed
-    docs/bench_history/BENCH_DETAIL_r{N}.json, falling back to the
-    rotating BENCH_DETAIL.json when no archive matches — so the
-    cross-round pair survives same-round bench reruns."""
-    import sys
+def test_metrics_window_raises_once_its_start_is_evicted():
+    """The status store evicts its oldest entries: a window whose first
+    stage id is gone must raise instead of under-counting, while a
+    window whose start is still held (or that ran nothing) reads."""
+    import pytest
 
-    sys.path.insert(0, __file__.rsplit("/tests/", 1)[0])
-    from bench import prior_detail_path, prior_round_n
+    from medallion_data_pipeline_spark.metrics import _since
 
-    here = str(tmp_path)
-    assert prior_round_n(here) is None
-    assert prior_detail_path(here) == f"{here}/BENCH_DETAIL.json"
+    class Listing:  # a status-store listing, newest id first
+        def __init__(self, *ids):
+            self.items = [type("Stage", (), {"stageId": lambda s, i=i: i})()
+                          for i in ids]
 
-    (tmp_path / "BENCH_r3.json").write_text("{}")
-    (tmp_path / "BENCH_r12.json").write_text("{}")
-    (tmp_path / "BENCH_rX.json").write_text("{}")  # non-numeric: skip
-    assert prior_round_n(here) == 12
-    # archive absent for r12 -> fallback to the rotating file
-    assert prior_detail_path(here) == f"{here}/BENCH_DETAIL.json"
-    hist = tmp_path / "docs" / "bench_history"
-    hist.mkdir(parents=True)
-    (hist / "BENCH_DETAIL_r12.json").write_text("{}")
-    assert prior_detail_path(here) == str(hist / "BENCH_DETAIL_r12.json")
+        def iterator(self):
+            return self
+
+        def hasNext(self):
+            return bool(self.items)
+
+        def next(self):
+            return self.items.pop(0)
+
+    def ids(listing, lo):
+        return [x.stageId() for x in _since(listing, "stageId", lo)]
+
+    assert ids(Listing(7, 6, 5, 4), 5) == [7, 6, 5]
+    assert ids(Listing(7, 6, 5), 5) == [7, 6, 5]
+    assert ids(Listing(7, 6), 8) == []
+    assert ids(Listing(), 0) == []
+    with pytest.raises(RuntimeError, match="evicted"):
+        ids(Listing(7, 6), 5)

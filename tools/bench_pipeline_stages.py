@@ -23,6 +23,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from medallion_data_pipeline_spark.metrics import release_cached_blocks
 from medallion_data_pipeline_spark.session import get_spark
 
 
@@ -30,7 +31,6 @@ def main() -> None:
     reps = int(sys.argv[1]) if len(sys.argv) > 1 else 3
     spark = get_spark("bench_pipeline_stages", 32)
 
-    from bench import _release_cached_blocks  # same inter-entry hygiene
     from medallion_data_pipeline_spark.plans import (
         bronze, fixtures, forecasting, gold, quality, silver)
 
@@ -43,7 +43,7 @@ def main() -> None:
         forecasting.run_forecasts(spark, wh_warm, run_id="warm").count()
     finally:
         shutil.rmtree(wh_warm, ignore_errors=True)
-    _release_cached_blocks(spark)
+    release_cached_blocks(spark)
 
     all_reps: dict[str, list[float]] = {}
     fc_split: list[dict[str, float]] = []
@@ -85,7 +85,7 @@ def main() -> None:
                              "plan_build": round(time.time() - t0, 3)})
         finally:
             shutil.rmtree(wh, ignore_errors=True)
-        _release_cached_blocks(spark)
+        release_cached_blocks(spark)
 
     out = {k: {"reps": v, "min": min(v)} for k, v in sorted(all_reps.items())}
     out["forecast_split"] = fc_split

@@ -26,8 +26,8 @@ from pyspark.sql import functions as F
 from medallion_data_pipeline_spark.functions import text as X
 from medallion_data_pipeline_spark.operators import bpe as B
 from medallion_data_pipeline_spark.operators.dedup import containment_pairs
+from medallion_data_pipeline_spark.session import get_spark
 from medallion_data_pipeline_spark.sources.testdata import load_table
-from tools.scale_heavy import get_ui_spark
 
 
 def measure(spark, sf_dir, label, n_merges: int = 8):
@@ -66,7 +66,7 @@ def measure(spark, sf_dir, label, n_merges: int = 8):
 
 
 def main() -> None:
-    spark = get_ui_spark()
+    spark = get_spark("scale-bpe-contain", shuffle_partitions=32)
     for label, sf_dir in (("sf0.1", "/root/testdata/sf0.1"),
                           ("sf1", "/tmp/mdp_sf1_keep"),
                           ("sf10", "/tmp/mdp_sf10_keep")):

@@ -39,8 +39,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
+from medallion_data_pipeline_spark.session import get_spark
 from medallion_data_pipeline_spark.sources.testdata import load_table
-from tools.scale_heavy import get_ui_spark, grow_sf1, shuffle_totals
+from tools.scale_heavy import best_of, grow_sf1
 
 N_BUCKETS = 32
 
@@ -89,16 +90,8 @@ def fact_fact(li, o):
 
 
 def run(spark, label, df):
-    best, sh_w = float("inf"), 0
-    for _ in range(2):
-        spark.catalog.clearCache()
-        w0, _ = shuffle_totals(spark)
-        t0 = time.time()
-        df.write.format("noop").mode("overwrite").save()
-        wall = time.time() - t0
-        w1, _ = shuffle_totals(spark)
-        if wall < best:
-            best, sh_w = wall, w1 - w0
+    best, c = best_of(spark, df.write.format("noop").mode("overwrite").save)
+    sh_w = c["shuffle_write_bytes"]
     plan = df._jdf.queryExecution().executedPlan().toString()
     n_ex = plan.count("Exchange")
     print(f"  {label:28s} {best:7.2f}s write={sh_w / 1e6:9.1f}MB "
@@ -108,7 +101,7 @@ def run(spark, label, df):
 
 
 def main() -> None:
-    spark = get_ui_spark()
+    spark = get_spark("scale-bucketed", shuffle_partitions=32)
     sf10_dir = os.environ.get("MDP_SF10_DIR", "/tmp/mdp_sf10_keep")
     if not os.path.exists(os.path.join(sf10_dir, "embeddings.parquet")):
         t0 = time.time()

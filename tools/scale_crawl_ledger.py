@@ -15,7 +15,7 @@ Method: N_INC increments of IDENTICAL size and fully disjoint content
 100% new — gate cost is constant across increments, and the
 maintenance stage is the signal). Per increment we record the
 seen_filter and epoch_append stage walls plus executor-CPU /
-bytes-written deltas (tools/scale_heavy.cpu_write_totals), so the
+bytes-written deltas (medallion_data_pipeline_spark/metrics.py), so the
 growth attribution is measured, not argued.
 
 Usage: python tools/scale_crawl_ledger.py [n_increments] [mult]
@@ -34,7 +34,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from tools.scale_heavy import cpu_write_totals, get_ui_spark
+from medallion_data_pipeline_spark.metrics import capture
+from medallion_data_pipeline_spark.session import get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -71,6 +72,16 @@ def synth_increment(spark, land: str, inc: int, mult: int) -> int:
     return int(spark.read.text(land).count())
 
 
+def stage_delta(before: dict, after: dict) -> dict:
+    """{cpu_s, out_mb, shuf_mb} between two ``Window.read()`` marks:
+    executor CPU, table-output and shuffle-write bytes of one stage."""
+    return {"cpu_s": round(after["cpu_s"] - before["cpu_s"], 2),
+            "out_mb": round((after["output_bytes"]
+                             - before["output_bytes"]) / 2 ** 20, 1),
+            "shuf_mb": round((after["shuffle_write_bytes"]
+                              - before["shuffle_write_bytes"]) / 2 ** 20, 1)}
+
+
 def run_ledger(spark, lands: list[str]) -> list[dict]:
     from medallion_data_pipeline_spark.plans import crawl as C
 
@@ -83,16 +94,16 @@ def run_ledger(spark, lands: list[str]) -> list[dict]:
         for i, land in enumerate(lands):
             out = tempfile.mkdtemp(prefix=f"scale_ledger_{i}_")
             keep.append(out)
-            marks = [("_base", cpu_write_totals(spark))]
-            hook = lambda nm: marks.append((nm, cpu_write_totals(spark)))
-            t0 = time.time()
-            res = C.run_crawl_increment_epochs(
-                spark, land, out, seen_root=root, stage_hook=hook)
-            wall = round(time.time() - t0, 2)
+            with capture(spark) as win:
+                marks = [("_base", win.read())]
+                t0 = time.time()
+                res = C.run_crawl_increment_epochs(
+                    spark, land, out, seen_root=root,
+                    stage_hook=lambda nm: marks.append((nm, win.read())))
+                wall = round(time.time() - t0, 2)
             stages = {r.stage: r for r in res}
-            deltas = {}
-            for (_, pm), (name, m) in zip(marks, marks[1:]):
-                deltas[name] = {k: round(m[k] - pm[k], 2) for k in pm}
+            deltas = {name: stage_delta(pm, m)
+                      for (_, pm), (name, m) in zip(marks, marks[1:])}
             n_new = stages["seen_filter"].rows_out
             corpus += n_new
             rows.append({
@@ -113,7 +124,7 @@ def run_ledger(spark, lands: list[str]) -> list[dict]:
 def main() -> None:
     n_inc = int(sys.argv[1]) if len(sys.argv) > 1 else 6
     mult = int(sys.argv[2]) if len(sys.argv) > 2 else 10
-    spark = get_ui_spark()
+    spark = get_spark("scale-crawl-ledger", shuffle_partitions=32)
     lands = []
     for i in range(n_inc):
         land = tempfile.mkdtemp(prefix=f"scale_ledger_land_{i}_")

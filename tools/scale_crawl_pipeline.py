@@ -25,13 +25,14 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from medallion_data_pipeline_spark.metrics import capture
 from medallion_data_pipeline_spark.queries import REGISTRY, _load
-from tools.scale_heavy import get_ui_spark
+from medallion_data_pipeline_spark.session import get_spark
 
 
 def measure(spark, sf_dir, label):
     from medallion_data_pipeline_spark.plans import crawl as C
-    from tools.scale_heavy import cpu_write_totals
+    from tools.scale_crawl_ledger import stage_delta
 
     _load()
     out = {"label": label}
@@ -49,16 +50,15 @@ def measure(spark, sf_dir, label):
         # walls (VERDICT r14 #6): wall >> cpu with out_mb ~ the layer
         # size is disk writeback, wall ~ cpu is compute — the sf10
         # spread attribution becomes a measurement.
-        marks = [("_base", cpu_write_totals(spark))]
-        t0 = time.time()
-        stages = C.run_crawl_increment_epochs(
-            spark, land, os.path.join(wh, "crawl"), seen_root=seen,
-            stage_hook=lambda nm: marks.append(
-                (nm, cpu_write_totals(spark))))
-        out["pipeline_s"] = round(time.time() - t0, 2)
-        deltas = {}
-        for (_, pm), (name, m) in zip(marks, marks[1:]):
-            deltas[name] = {k: round(m[k] - pm[k], 2) for k in pm}
+        with capture(spark) as win:
+            marks = [("_base", win.read())]
+            t0 = time.time()
+            stages = C.run_crawl_increment_epochs(
+                spark, land, os.path.join(wh, "crawl"), seen_root=seen,
+                stage_hook=lambda nm: marks.append((nm, win.read())))
+            out["pipeline_s"] = round(time.time() - t0, 2)
+        deltas = {name: stage_delta(pm, m)
+                  for (_, pm), (name, m) in zip(marks, marks[1:])}
         out["stages"] = {r.stage: {"out": r.rows_out, "s": r.wall_s,
                                    **deltas.get(r.stage, {})}
                          for r in stages}
@@ -86,7 +86,7 @@ def measure(spark, sf_dir, label):
 
 
 def main() -> None:
-    spark = get_ui_spark()
+    spark = get_spark("scale-crawl-pipeline", shuffle_partitions=32)
     points = [("sf0.1", "/root/testdata/sf0.1"),
               ("sf1", "/tmp/mdp_sf1_keep"),
               ("sf10", "/tmp/mdp_sf10_keep")]

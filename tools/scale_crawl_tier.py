@@ -25,8 +25,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 
 from medallion_data_pipeline_spark.queries import REGISTRY, _load
+from medallion_data_pipeline_spark.session import get_spark
 from medallion_data_pipeline_spark.sources.testdata import load_table
-from tools.scale_heavy import get_ui_spark
 
 
 def wall(fn) -> float:
@@ -64,7 +64,7 @@ def measure(spark, sf_dir, label):
 
 
 def main() -> None:
-    spark = get_ui_spark()
+    spark = get_spark("scale-crawl-tier", shuffle_partitions=32)
     points = [("sf0.1", "/root/testdata/sf0.1"),
               ("sf1", "/tmp/mdp_sf1_keep"),
               ("sf10", "/tmp/mdp_sf10_keep")]

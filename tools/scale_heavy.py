@@ -33,8 +33,8 @@ structure-preserving replication (replicas = 10):
 
 Per (query, sf): min-of-2 wall (cache cleared before each run; plans
 pre-warmed at sf0.001 so codegen compile is excluded — same
-methodology as bench.py) plus per-run shuffle-write/read deltas from
-the Spark UI REST API (/api/v1/applications/{app}/stages).
+methodology as bench.py) plus that run's shuffle-write/read bytes
+(medallion_data_pipeline_spark/metrics.py).
 
 Usage:
     python tools/scale_heavy.py            # full curve, prints a table
@@ -49,14 +49,14 @@ import shutil
 import sys
 import tempfile
 import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from medallion_data_pipeline_spark.session import default_parallelism
+from medallion_data_pipeline_spark.metrics import capture
+from medallion_data_pipeline_spark.session import default_parallelism, get_spark
 from medallion_data_pipeline_spark.sources.testdata import TABLES, load_table
 
 HEAVY = (
@@ -76,80 +76,19 @@ _VEC_OFF = 10_000_000   # divisible by 50  -> query-point density kept
 _ORD_OFF = 100_000_000
 
 
-def get_ui_spark() -> SparkSession:
-    """session.get_spark dual with the UI server ON (it is the only
-    public surface exposing per-stage shuffle metrics) and the stage
-    retention raised so sequential deltas never lose history."""
-    cpus = default_parallelism()
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("scale-heavy")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory",
-                os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
-        .config("spark.ui.enabled", "true")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.ui.retainedStages", "100000")
-        .config("spark.ui.retainedJobs", "100000")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.sql.optimizer.excludedRules",
-                "org.apache.spark.sql.catalyst.optimizer"
-                ".InferFiltersFromGenerate")   # see session.py
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("WARN")
-    return spark
-
-
-def shuffle_totals(spark: SparkSession) -> tuple[int, int]:
-    """(shuffle_write_bytes, shuffle_read_bytes) summed over all
-    completed stages so far — callers take deltas around a query."""
-    base = spark.sparkContext.uiWebUrl
-    app = spark.sparkContext.applicationId
-    url = f"{base}/api/v1/applications/{app}/stages?status=complete"
-    stages = json.loads(urllib.request.urlopen(url).read())
-    return (sum(s.get("shuffleWriteBytes", 0) for s in stages),
-            sum(s.get("shuffleReadBytes", 0) for s in stages))
-
-
-def cpu_write_totals(spark: SparkSession, settle: bool = True) -> dict:
-    """Cumulative {cpu_s, out_mb, shuf_mb} over all completed stages
-    (executor CPU seconds, table-output bytes, shuffle-write bytes) —
-    callers take deltas around a pipeline stage, so wall-vs-CPU
-    attribution (is the excess compute or disk writeback?) is
-    MEASURED rather than argued (VERDICT r14 #6). The UI status store
-    is fed by an ASYNC listener bus, so a sample taken right after an
-    action returns can miss its final stages (the delta then smears
-    into the next stage's window); ``settle`` polls until two
-    consecutive samples agree (≤2 s) before returning."""
-    def one() -> dict:
-        base = spark.sparkContext.uiWebUrl
-        app = spark.sparkContext.applicationId
-        url = f"{base}/api/v1/applications/{app}/stages?status=complete"
-        stages = json.loads(urllib.request.urlopen(url).read())
-        return {
-            "cpu_s": round(sum(s.get("executorCpuTime", 0)
-                               for s in stages) / 1e9, 2),
-            "out_mb": round(sum(s.get("outputBytes", 0)
-                                for s in stages) / 2 ** 20, 1),
-            "shuf_mb": round(sum(s.get("shuffleWriteBytes", 0)
-                                 for s in stages) / 2 ** 20, 1),
-        }
-
-    cur = one()
-    if settle:
-        for _ in range(10):
-            time.sleep(0.2)
-            nxt = one()
-            if nxt == cur:
-                break
-            cur = nxt
-    return cur
+def best_of(spark: SparkSession, action, reps: int = 2) -> tuple[float, dict]:
+    """(min wall, metrics.capture counters of that rep) over ``reps``
+    runs of ``action()``, with the cache cleared before each."""
+    best, counters = float("inf"), {}
+    for _ in range(reps):
+        spark.catalog.clearCache()
+        with capture(spark) as c:
+            t0 = time.time()
+            action()
+            wall = time.time() - t0
+        if wall < best:
+            best, counters = wall, dict(c)
+    return best, counters
 
 
 def _fresh_vectors(r: int, n: int, dim: int):
@@ -223,16 +162,9 @@ def measure(spark: SparkSession, registry, sf_label: str, sf_dir: str,
     out = {}
     for name in HEAVY:
         q = registry[name]
-        best, sh_w, sh_r = float("inf"), 0, 0
-        for rep in range(reps):
-            spark.catalog.clearCache()
-            w0, r0 = shuffle_totals(spark)
-            t0 = time.time()
-            q.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            wall = time.time() - t0
-            w1, r1 = shuffle_totals(spark)
-            if wall < best:
-                best, sh_w, sh_r = wall, w1 - w0, r1 - r0
+        best, c = best_of(spark, lambda: q.fn(spark, sf_dir).write
+                          .format("noop").mode("overwrite").save(), reps)
+        sh_w, sh_r = c["shuffle_write_bytes"], c["shuffle_read_bytes"]
         n_rows = q.fn(spark, sf_dir).count()  # untimed; count() prunes
         out[name] = {"wall_s": round(best, 2),
                      "shuffle_write_mb": round(sh_w / 1e6, 1),
@@ -246,7 +178,7 @@ def measure(spark: SparkSession, registry, sf_label: str, sf_dir: str,
 
 def main() -> None:
     sf1_only = "--sf1-only" in sys.argv
-    spark = get_ui_spark()
+    spark = get_spark("scale-heavy", shuffle_partitions=32)
     from medallion_data_pipeline_spark.queries import REGISTRY, _load
     _load()
 

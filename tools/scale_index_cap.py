@@ -41,8 +41,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 
 from medallion_data_pipeline_spark.operators import dedup as D
+from medallion_data_pipeline_spark.session import get_spark
 from medallion_data_pipeline_spark.sources.testdata import load_table
-from tools.scale_heavy import get_ui_spark
 from tools.scale_skew import SKEW_DIR, ensure_skew_documents, measure
 
 CAP = 64
@@ -123,7 +123,7 @@ def run_one(spark, corpus, batch, tag: str, n_clique: int) -> dict:
 
 
 def main():
-    spark = get_ui_spark()
+    spark = get_spark("scale-index-cap", shuffle_partitions=32)
     if "--regen" in sys.argv:
         import shutil
         shutil.rmtree(SKEW_DIR, ignore_errors=True)

@@ -49,8 +49,9 @@ from pyspark.sql import functions as F
 
 from medallion_data_pipeline_spark.operators.similarity import (
     knn_ivf_probe, knn_matmul)
+from medallion_data_pipeline_spark.session import get_spark
 from medallion_data_pipeline_spark.sources.testdata import load_table
-from tools.scale_heavy import get_ui_spark, shuffle_totals
+from tools.scale_heavy import best_of
 from tools.scale_knn_fixedq import ensure_embeddings_only
 
 CELLS = (8, 14, 45, 141)
@@ -65,7 +66,7 @@ def neighbor_sets(rows):
 
 
 def main():
-    spark = get_ui_spark()
+    spark = get_spark("scale-ivf-cells", shuffle_partitions=32)
     sf100_dir = os.environ.get("MDP_SF100_DIR", "/tmp/mdp_sf100emb_keep")
     ensure_embeddings_only(spark, "/root/testdata/sf0.1", sf100_dir, 1000)
     emb = load_table(spark, sf100_dir, "embeddings")
@@ -80,16 +81,10 @@ def main():
     out = {}
     cells_sweep = CELLS if "--nprobe" not in sys.argv else ()
     for cells in cells_sweep:
-        best, sh_w = float("inf"), 0
-        for _ in range(2):
-            spark.catalog.clearCache()
-            w0, _ = shuffle_totals(spark)
-            t0 = time.time()
-            knn_ivf_probe(emb, q, k=5, n_cells=cells, nprobe=1) \
-                .write.format("noop").mode("overwrite").save()
-            wall = time.time() - t0
-            if wall < best:
-                best, sh_w = wall, shuffle_totals(spark)[0] - w0
+        best, c = best_of(spark, lambda: knn_ivf_probe(
+            emb, q, k=5, n_cells=cells, nprobe=1)
+            .write.format("noop").mode("overwrite").save())
+        sh_w = c["shuffle_write_bytes"]
         got = neighbor_sets(knn_ivf_probe(emb, q, k=5, n_cells=cells,
                                           nprobe=1).collect())
         hits = sum(len(got.get(qid, set()) & t) for qid, t in truth.items())
@@ -103,16 +98,10 @@ def main():
               f"write={sh_w / 1e6:8.1f}MB recall@5={recall:.3f}", flush=True)
     if "--nprobe" in sys.argv:
         for nprobe in (1, 2, 4, 8):
-            best, sh_w = float("inf"), 0
-            for _ in range(2):
-                spark.catalog.clearCache()
-                w0, _ = shuffle_totals(spark)
-                t0 = time.time()
-                knn_ivf_probe(emb, q, k=5, n_cells=45, nprobe=nprobe) \
-                    .write.format("noop").mode("overwrite").save()
-                wall = time.time() - t0
-                if wall < best:
-                    best, sh_w = wall, shuffle_totals(spark)[0] - w0
+            best, c = best_of(spark, lambda: knn_ivf_probe(
+                emb, q, k=5, n_cells=45, nprobe=nprobe)
+                .write.format("noop").mode("overwrite").save())
+            sh_w = c["shuffle_write_bytes"]
             got = neighbor_sets(
                 knn_ivf_probe(emb, q, k=5, n_cells=45,
                               nprobe=nprobe).collect())

@@ -51,8 +51,9 @@ from pyspark.sql import functions as F
 
 from medallion_data_pipeline_spark.operators.similarity import (
     knn_ivf_probe, knn_pq_adc)
+from medallion_data_pipeline_spark.session import get_spark
 from medallion_data_pipeline_spark.sources.testdata import load_table
-from tools.scale_heavy import get_ui_spark, grow_sf1, shuffle_totals
+from tools.scale_heavy import best_of, grow_sf1
 
 Q_MAX = 200  # fixed batch: original-base vec_ids < 200 at every SF
 
@@ -113,16 +114,9 @@ def measure(spark, sf_dir, label):
     assert nq == Q_MAX, f"query batch drifted: {nq} != {Q_MAX}"
     out = {}
     for name, fn in OPS.items():
-        best, sh_w = float("inf"), 0
-        for _ in range(2):
-            spark.catalog.clearCache()
-            w0, _ = shuffle_totals(spark)
-            t0 = time.time()
-            fn(emb, q).write.format("noop").mode("overwrite").save()
-            wall = time.time() - t0
-            w1, _ = shuffle_totals(spark)
-            if wall < best:
-                best, sh_w = wall, w1 - w0
+        best, c = best_of(spark, lambda: fn(emb, q).write
+                          .format("noop").mode("overwrite").save())
+        sh_w = c["shuffle_write_bytes"]
         rows = fn(emb, q).count()
         out[name] = {"wall_s": round(best, 2),
                      "shuffle_write_mb": round(sh_w / 1e6, 1), "rows": rows}
@@ -132,7 +126,7 @@ def measure(spark, sf_dir, label):
 
 
 def main() -> None:
-    spark = get_ui_spark()
+    spark = get_spark("scale-knn-fixedq", shuffle_partitions=32)
     sf1_dir = os.environ.get("MDP_SF1_DIR", "/tmp/mdp_sf1_keep")
     sf10_dir = os.environ.get("MDP_SF10_DIR", "/tmp/mdp_sf10_keep")
     ensure(spark, "/root/testdata/sf0.1", sf1_dir, 10)

@@ -53,8 +53,9 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from medallion_data_pipeline_spark.operators.similarity import embedding_lsh_pairs
+from medallion_data_pipeline_spark.session import get_spark
 from medallion_data_pipeline_spark.sources.testdata import load_table
-from tools.scale_heavy import get_ui_spark, grow_sf1, shuffle_totals
+from tools.scale_heavy import best_of, grow_sf1
 
 # (n_planes, n_tables) all at theoretical recall 0.765 @ c=0.42
 SWEEP = [(4, 8), (6, 21), (7, 33), (8, 52), (10, 129)]
@@ -70,18 +71,10 @@ def ensure(spark, base, out, replicas):
 
 def measure(spark, sf_dir, label, planes, tables):
     emb = load_table(spark, sf_dir, "embeddings")
-    best, sh_w = float("inf"), 0
-    for _ in range(2):
-        spark.catalog.clearCache()
-        w0, _ = shuffle_totals(spark)
-        t0 = time.time()
-        embedding_lsh_pairs(emb, threshold=0.42, n_planes=planes,
-                            n_tables=tables) \
-            .write.format("noop").mode("overwrite").save()
-        wall = time.time() - t0
-        w1, _ = shuffle_totals(spark)
-        if wall < best:
-            best, sh_w = wall, w1 - w0
+    best, c = best_of(spark, lambda: embedding_lsh_pairs(
+        emb, threshold=0.42, n_planes=planes, n_tables=tables)
+        .write.format("noop").mode("overwrite").save())
+    sh_w = c["shuffle_write_bytes"]
     pairs = embedding_lsh_pairs(emb, threshold=0.42, n_planes=planes,
                                 n_tables=tables).count()
     rec = {"wall_s": round(best, 2),
@@ -93,7 +86,7 @@ def measure(spark, sf_dir, label, planes, tables):
 
 
 def main() -> None:
-    spark = get_ui_spark()
+    spark = get_spark("scale-lsh-planes", shuffle_partitions=32)
     sf1_dir = os.environ.get("MDP_SF1_DIR", "/tmp/mdp_sf1_keep")
     sf10_dir = os.environ.get("MDP_SF10_DIR", "/tmp/mdp_sf10_keep")
     ensure(spark, "/root/testdata/sf0.1", sf1_dir, 10)

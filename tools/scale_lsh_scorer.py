@@ -27,12 +27,13 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 
 from medallion_data_pipeline_spark.operators.similarity import embedding_lsh_pairs
+from medallion_data_pipeline_spark.session import get_spark
 from medallion_data_pipeline_spark.sources.testdata import load_table
-from tools.scale_heavy import get_ui_spark, grow_sf1
+from tools.scale_heavy import grow_sf1
 
 
 def main() -> None:
-    spark = get_ui_spark()
+    spark = get_spark("scale-lsh-scorer", shuffle_partitions=32)
     sf1_dir = os.environ.get("MDP_SF1_DIR", "/tmp/mdp_sf1_keep")
     if not os.path.exists(os.path.join(sf1_dir, "embeddings.parquet")):
         t0 = time.time()

@@ -37,8 +37,8 @@ from medallion_data_pipeline_spark.operators.dedup import (
     fingerprint_hamming_pairs)
 from medallion_data_pipeline_spark.queries.llmops import (
     _PHASH_MAXDIST, _PHASH_VARIANT_OFFSET)
+from medallion_data_pipeline_spark.session import get_spark
 from medallion_data_pipeline_spark.sources.testdata import load_table
-from tools.scale_heavy import get_ui_spark
 
 
 def fingerprints(spark, sf_dir):
@@ -109,7 +109,7 @@ def measure_grouped_only(spark, sf_dir, label):
 
 
 def main() -> None:
-    spark = get_ui_spark()
+    spark = get_spark("scale-phash", shuffle_partitions=32)
     points = [("sf0.1", "/root/testdata/sf0.1")]
     if "sf0.1-only" not in sys.argv:
         for lbl, d in (("sf1", "/tmp/mdp_sf1_keep"),

@@ -24,12 +24,12 @@ import json
 import math
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from medallion_data_pipeline_spark.queries import REGISTRY, _load
-from tools.scale_heavy import get_ui_spark, shuffle_totals
+from medallion_data_pipeline_spark.session import get_spark
+from tools.scale_heavy import best_of
 from tools.scale_knn_fixedq import ensure
 
 OPS = ("bm25_doc_ranking", "cms_frequency_sketch", "doc_chunking_stride")
@@ -39,16 +39,9 @@ def measure(spark, sf_dir, label):
     out = {}
     for name in OPS:
         fn = REGISTRY[name].fn
-        best, sh_w = float("inf"), 0
-        for _ in range(2):
-            spark.catalog.clearCache()
-            w0, _ = shuffle_totals(spark)
-            t0 = time.time()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            wall = time.time() - t0
-            w1, _ = shuffle_totals(spark)
-            if wall < best:
-                best, sh_w = wall, w1 - w0
+        best, c = best_of(spark, lambda: fn(spark, sf_dir).write
+                          .format("noop").mode("overwrite").save())
+        sh_w = c["shuffle_write_bytes"]
         out[name] = {"wall_s": round(best, 2),
                      "shuffle_write_mb": round(sh_w / 1e6, 1)}
         print(f"  {label} {name:22s} {best:8.2f}s "
@@ -58,7 +51,7 @@ def measure(spark, sf_dir, label):
 
 def main() -> None:
     _load()
-    spark = get_ui_spark()
+    spark = get_spark("scale-retrieval", shuffle_partitions=32)
     sf1_dir = os.environ.get("MDP_SF1_DIR", "/tmp/mdp_sf1_keep")
     sf10_dir = os.environ.get("MDP_SF10_DIR", "/tmp/mdp_sf10_keep")
     ensure(spark, "/root/testdata/sf0.1", sf1_dir, 10)

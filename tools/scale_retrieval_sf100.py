@@ -21,7 +21,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from tools.scale_heavy import get_ui_spark, shuffle_totals
+from medallion_data_pipeline_spark.session import get_spark
+from tools.scale_heavy import best_of
 from tools.scale_text_sf100 import grow_documents
 
 OPS = ("bm25_doc_ranking", "cms_frequency_sketch", "doc_chunking_stride")
@@ -31,7 +32,7 @@ PREV = {"bm25_doc_ranking": 10.95, "cms_frequency_sketch": 5.46,
 
 
 def main() -> None:
-    spark = get_ui_spark()
+    spark = get_spark("scale-retrieval-sf100", shuffle_partitions=32)
     from medallion_data_pipeline_spark.queries import REGISTRY, _load
     _load()
 
@@ -47,17 +48,9 @@ def main() -> None:
 
     out = {"docs": n}
     for name in OPS:
-        best, sh_w = float("inf"), 0
-        for _ in range(2):
-            spark.catalog.clearCache()
-            w0, _ = shuffle_totals(spark)
-            t0 = time.time()
-            REGISTRY[name].fn(spark, d).write.format("noop") \
-                .mode("overwrite").save()
-            wall = time.time() - t0
-            w1, _ = shuffle_totals(spark)
-            if wall < best:
-                best, sh_w = wall, w1 - w0
+        best, c = best_of(spark, lambda: REGISTRY[name].fn(spark, d).write
+                          .format("noop").mode("overwrite").save())
+        sh_w = c["shuffle_write_bytes"]
         e = math.log10(best / PREV[name])
         out[name] = {"wall_s": round(best, 2),
                      "shuffle_write_mb": round(sh_w / 1e6, 1),

@@ -27,13 +27,14 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from medallion_data_pipeline_spark.operators.similarity import semantic_dedup_cells
+from medallion_data_pipeline_spark.session import get_spark
 from medallion_data_pipeline_spark.sources.testdata import load_table
-from tools.scale_heavy import get_ui_spark, grow_sf1
+from tools.scale_heavy import grow_sf1
 
 
 def main() -> None:
     replicas = int(sys.argv[1]) if len(sys.argv) > 1 else 10
-    spark = get_ui_spark()
+    spark = get_spark("scale-semantic-k", shuffle_partitions=32)
     sf1_dir = tempfile.mkdtemp(prefix="mdp_sfk_")
     out = {}
     try:

@@ -36,7 +36,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from tools.scale_heavy import get_ui_spark, grow_sf1, shuffle_totals
+from medallion_data_pipeline_spark.session import get_spark
+from tools.scale_heavy import best_of, grow_sf1
 
 QUERIES = (
     "dedup_ngram_jaccard",
@@ -49,7 +50,7 @@ LSH = "dedup_embedding_lsh"
 
 
 def main() -> None:
-    spark = get_ui_spark()
+    spark = get_spark("scale-sf10", shuffle_partitions=32)
     from medallion_data_pipeline_spark.queries import REGISTRY, _load
     _load()
 
@@ -68,21 +69,13 @@ def main() -> None:
         print(f"   grown in {time.time() - t0:.1f}s", flush=True)
         for name in names:
             q = REGISTRY[name]
-            best, sh_w = float("inf"), 0
             # min-of-2: the first rep after the 6 GB growth reads a
             # cold page cache and the host has noise windows — the
             # single-shot first pass measured dedup_ngram_jaccard at
             # 152 s vs 56 s warm/min
-            for _ in range(2):
-                spark.catalog.clearCache()
-                w0, r0 = shuffle_totals(spark)
-                t0 = time.time()
-                q.fn(spark, sf10_dir).write.format("noop") \
-                    .mode("overwrite").save()
-                wall = time.time() - t0
-                w1, r1 = shuffle_totals(spark)
-                if wall < best:
-                    best, sh_w = wall, w1 - w0
+            best, c = best_of(spark, lambda: q.fn(spark, sf10_dir).write
+                              .format("noop").mode("overwrite").save())
+            sh_w = c["shuffle_write_bytes"]
             n_rows = q.fn(spark, sf10_dir).count()
             out[name] = {"wall_s": round(best, 2),
                          "shuffle_write_mb": round(sh_w / 1e6, 1),

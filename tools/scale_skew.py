@@ -48,7 +48,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -57,7 +56,8 @@ from pyspark.sql import functions as F
 from medallion_data_pipeline_spark.operators import dedup as D
 from medallion_data_pipeline_spark.operators import similarity as S
 from medallion_data_pipeline_spark.sources.testdata import load_table
-from tools.scale_heavy import get_ui_spark, shuffle_totals
+from medallion_data_pipeline_spark.session import get_spark
+from tools.scale_heavy import best_of
 
 SKEW_DIR = os.environ.get("MDP_SKEW_DIR", "/tmp/mdp_skew_keep")
 
@@ -154,28 +154,10 @@ def ensure_skew_documents(spark, out_dir):
     print(f"skew documents -> {dst}", flush=True)
 
 
-def _runtime_ms(spark):
-    import urllib.request
-    base = spark.sparkContext.uiWebUrl
-    app = spark.sparkContext.applicationId
-    url = f"{base}/api/v1/applications/{app}/stages?status=complete"
-    stages = json.loads(urllib.request.urlopen(url).read())
-    return sum(s.get("executorRunTime", 0) for s in stages)
-
-
 def measure(spark, label, frame_fn, reps=2):
-    best, work_ms, sh_w, rows = float("inf"), 0, 0, None
-    for _ in range(reps):
-        spark.catalog.clearCache()
-        r0 = _runtime_ms(spark)
-        w0, _ = shuffle_totals(spark)
-        t0 = time.time()
-        frame_fn().write.format("noop").mode("overwrite").save()
-        wall = time.time() - t0
-        if wall < best:
-            best = wall
-            work_ms = _runtime_ms(spark) - r0
-            sh_w = shuffle_totals(spark)[0] - w0
+    best, c = best_of(spark, lambda: frame_fn().write.format("noop")
+                      .mode("overwrite").save(), reps)
+    work_ms, sh_w = c["run_s"] * 1000, c["shuffle_write_bytes"]
     rows = frame_fn().count()
     print(f"  {label:42s} wall={best:7.2f}s work={work_ms/1000:8.1f}s "
           f"(/32={work_ms/32000:6.2f}s) write={sh_w/1e6:8.1f}MB rows={rows}",
@@ -185,7 +167,7 @@ def measure(spark, label, frame_fn, reps=2):
 
 
 def main():
-    spark = get_ui_spark()
+    spark = get_spark("scale-skew", shuffle_partitions=32)
     regen = "--regen" in sys.argv
     if regen:
         import shutil

@@ -44,7 +44,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
-from tools.scale_heavy import get_ui_spark
+from medallion_data_pipeline_spark.session import get_spark
 
 N_BIG = 16_000_000
 N_DIM = 100_000
@@ -66,7 +66,7 @@ def _timed(df, reps: int = 3) -> tuple[float, int]:
 
 
 def main() -> None:
-    spark = get_ui_spark()
+    spark = get_spark("scale-skew-aqe", shuffle_partitions=32)
     conf = spark.conf
     root = tempfile.mkdtemp(prefix="mdp_skew_aqe_")
     out: dict[str, dict] = {"n_big": N_BIG, "n_dim": N_DIM,

@@ -9,8 +9,9 @@ Spark's spillable code paths (ExternalSorter / ObjectHashAggregate
 fallback / UnsafeExternalSorter) rather than accumulating unbounded
 JVM state. We run the heavy tier at sf1 (~6M lineitem rows, 50K docs,
 200K vectors) inside a deliberately small driver=executor heap and read
-per-stage memoryBytesSpilled / diskBytesSpilled from the UI REST API
-(the same StageData source the Spark UI renders).
+each workload's memory and disk spill bytes with
+medallion_data_pipeline_spark/metrics.py (the StageData the Spark UI
+renders).
 
 Two phases because growing the corpus wants a normal heap while the
 measurement wants a tiny one (one JVM per process):
@@ -31,12 +32,14 @@ import json
 import os
 import sys
 import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+
+from medallion_data_pipeline_spark.session import get_spark
+from tools.scale_heavy import best_of, grow_sf1
 
 CORPUS = "/tmp/mdp_sf1spill_keep"
 
@@ -49,10 +52,10 @@ QUERIES = (
 
 
 def get_small_spark(mem: str) -> SparkSession:
-    """local[32] with a deliberately small heap; UI on for StageData.
-    Everything else matches tools/scale_heavy.get_ui_spark, minus the
-    64 MB broadcast override (a constrained heap should keep the
-    default 10 MB broadcast bound — that IS the production setting)."""
+    """local[32] with a deliberately small heap. Everything else
+    matches session.get_spark(shuffle_partitions=32), minus the 64 MB
+    broadcast override (a constrained heap should keep the default
+    10 MB broadcast bound — that IS the production setting)."""
     spark = (
         SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
         .appName("scale-spill")
@@ -68,10 +71,8 @@ def get_small_spark(mem: str) -> SparkSession:
         # remedy when a planned broadcast no longer fits the heap
         .config("spark.sql.autoBroadcastJoinThreshold",
                 os.environ.get("SPILL_BROADCAST", "10485760"))
-        .config("spark.ui.enabled", "true")
+        .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.ui.retainedStages", "100000")
-        .config("spark.ui.retainedJobs", "100000")
         .config("spark.sql.optimizer.excludedRules",
                 "org.apache.spark.sql.catalyst.optimizer"
                 ".InferFiltersFromGenerate")   # see session.py
@@ -81,28 +82,11 @@ def get_small_spark(mem: str) -> SparkSession:
     return spark
 
 
-def stage_totals(spark: SparkSession) -> dict[str, int]:
-    """Cumulative (spill, shuffle) byte counters over completed stages."""
-    base = spark.sparkContext.uiWebUrl
-    app = spark.sparkContext.applicationId
-    url = f"{base}/api/v1/applications/{app}/stages?status=complete"
-    stages = json.loads(urllib.request.urlopen(url).read())
-    return {
-        "mem_spill": sum(s.get("memoryBytesSpilled", 0) for s in stages),
-        "disk_spill": sum(s.get("diskBytesSpilled", 0) for s in stages),
-        "shuffle_w": sum(s.get("shuffleWriteBytes", 0) for s in stages),
-        "spilled_stages": sum(
-            1 for s in stages if s.get("diskBytesSpilled", 0) > 0),
-    }
-
-
 def grow() -> None:
-    from tools.scale_heavy import get_ui_spark, grow_sf1
-
     if os.path.exists(os.path.join(CORPUS, "lineitem.parquet")):
         print(f"{CORPUS} already grown; reusing", flush=True)
         return
-    spark = get_ui_spark()
+    spark = get_spark("scale-spill", shuffle_partitions=32)
     t0 = time.time()
     grow_sf1(spark, "/root/testdata/sf0.1", CORPUS, replicas=10)
     print(f"grown sf1 -> {CORPUS} in {time.time() - t0:.1f}s", flush=True)
@@ -139,24 +123,18 @@ def measure(mem: str) -> None:
     runs.append(("wide_hash_agg_6m_groups", wide_hash_agg))
 
     for name, fn in runs:
-        spark.catalog.clearCache()
-        before = stage_totals(spark)
-        t0 = time.time()
-        fn(spark, CORPUS).write.format("noop").mode("overwrite").save()
-        wall = time.time() - t0
-        after = stage_totals(spark)
+        wall, c = best_of(spark, lambda: fn(spark, CORPUS).write
+                          .format("noop").mode("overwrite").save(), reps=1)
         rec = {
             "wall_s": round(wall, 2),
-            "mem_spill_mb": round((after["mem_spill"] - before["mem_spill"]) / 1e6, 1),
-            "disk_spill_mb": round((after["disk_spill"] - before["disk_spill"]) / 1e6, 1),
-            "shuffle_write_mb": round((after["shuffle_w"] - before["shuffle_w"]) / 1e6, 1),
-            "spilled_stages": after["spilled_stages"] - before["spilled_stages"],
+            "mem_spill_mb": round(c["memory_spill_bytes"] / 1e6, 1),
+            "disk_spill_mb": round(c["disk_spill_bytes"] / 1e6, 1),
+            "shuffle_write_mb": round(c["shuffle_write_bytes"] / 1e6, 1),
         }
         out[name] = rec
         print(f"  {name:24s} {rec['wall_s']:8.2f}s "
               f"mem_spill={rec['mem_spill_mb']:10.1f}MB "
-              f"disk_spill={rec['disk_spill_mb']:9.1f}MB "
-              f"stages_spilled={rec['spilled_stages']}", flush=True)
+              f"disk_spill={rec['disk_spill_mb']:9.1f}MB", flush=True)
 
     print(json.dumps(out))
 

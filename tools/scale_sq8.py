@@ -34,8 +34,9 @@ from pyspark.sql import functions as F
 
 from medallion_data_pipeline_spark.operators.similarity import (
     knn_bruteforce, knn_sq8, sq_assign, sq_train)
+from medallion_data_pipeline_spark.session import get_spark
 from medallion_data_pipeline_spark.sources.testdata import load_table
-from tools.scale_heavy import get_ui_spark, shuffle_totals
+from tools.scale_heavy import best_of
 from tools.scale_knn_fixedq import Q_MAX, ensure
 
 
@@ -63,16 +64,9 @@ def measure(spark, sf_dir, label):
         "knn_sq8": lambda: knn_sq8(emb, q, k=5, stats=stats),
     }
     for name, fn in ops.items():
-        best, sh_w = float("inf"), 0
-        for _ in range(2):
-            spark.catalog.clearCache()
-            w0, _ = shuffle_totals(spark)
-            t0 = time.time()
-            fn().write.format("noop").mode("overwrite").save()
-            wall = time.time() - t0
-            w1, _ = shuffle_totals(spark)
-            if wall < best:
-                best, sh_w = wall, w1 - w0
+        best, c = best_of(
+            spark, lambda: fn().write.format("noop").mode("overwrite").save())
+        sh_w = c["shuffle_write_bytes"]
         out[name] = {"wall_s": round(best, 2),
                      "shuffle_write_mb": round(sh_w / 1e6, 1)}
         print(f"  {label} {name:15s} {best:8.2f}s "
@@ -98,7 +92,7 @@ def index_bytes(spark, emb, stats, tag):
 
 
 def main() -> None:
-    spark = get_ui_spark()
+    spark = get_spark("scale-sq8", shuffle_partitions=32)
     sf1_dir = os.environ.get("MDP_SF1_DIR", "/tmp/mdp_sf1_keep")
     sf10_dir = os.environ.get("MDP_SF10_DIR", "/tmp/mdp_sf10_keep")
     ensure(spark, "/root/testdata/sf0.1", sf1_dir, 10)

@@ -107,9 +107,9 @@ def drain(spark, land: str, max_bucket):
 
 
 def main():
-    from tools.scale_heavy import get_ui_spark
+    from medallion_data_pipeline_spark.session import get_spark
 
-    spark = get_ui_spark()
+    spark = get_spark("scale-stream-ingest", shuffle_partitions=32)
     land = tempfile.mkdtemp(prefix="mdp_stream_land_")
     write_landing(land)
     out = {}

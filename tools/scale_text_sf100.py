@@ -37,7 +37,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
-from tools.scale_heavy import get_ui_spark, shuffle_totals
+from medallion_data_pipeline_spark.session import get_spark
+from tools.scale_heavy import best_of
 
 _DOC_OFF = 10_000_000   # divisible by 100 -> doc_id % 100 structure kept
 QUERIES = ("dedup_minhash_lsh", "dedup_exact_segments")
@@ -77,7 +78,7 @@ def grow_documents(spark, base_dir: str, out_dir: str, replicas: int) -> None:
 
 
 def main() -> None:
-    spark = get_ui_spark()
+    spark = get_spark("scale-text-sf100", shuffle_partitions=32)
     from medallion_data_pipeline_spark.queries import REGISTRY, _load
     _load()
 
@@ -99,17 +100,9 @@ def main() -> None:
             out[label] = {"docs": n}
             for name in QUERIES:
                 q = REGISTRY[name]
-                best, sh_w, rows = float("inf"), 0, None
-                for _ in range(2):
-                    spark.catalog.clearCache()
-                    w0, _r0 = shuffle_totals(spark)
-                    t0 = time.time()
-                    res = q.fn(spark, d)
-                    res.write.format("noop").mode("overwrite").save()
-                    wall = time.time() - t0
-                    w1, _r1 = shuffle_totals(spark)
-                    if wall < best:
-                        best, sh_w = wall, w1 - w0
+                best, c = best_of(spark, lambda: q.fn(spark, d).write
+                                  .format("noop").mode("overwrite").save())
+                sh_w = c["shuffle_write_bytes"]
                 rows = q.fn(spark, d).count()
                 out[label][name] = {
                     "wall_s": round(best, 2),

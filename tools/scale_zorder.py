@@ -38,7 +38,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
-from tools.scale_heavy import get_ui_spark
+from medallion_data_pipeline_spark.session import get_spark
 
 FILES = 64
 COLS = ("l_partkey", "l_suppkey")
@@ -71,7 +71,7 @@ def footer_overlap(path: str, box: dict[str, tuple[int, int]]) -> tuple[int, int
 
 
 def main() -> None:
-    spark = get_ui_spark()
+    spark = get_spark("scale-zorder", shuffle_partitions=32)
     li = spark.read.parquet("/root/testdata/sf0.1/lineitem.parquet")
     mm = li.agg(
         F.min("l_partkey"), F.max("l_partkey"),

@@ -18,6 +18,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from medallion_data_pipeline_spark.metrics import release_cached_blocks
 from medallion_data_pipeline_spark.queries import REGISTRY, _load
 from medallion_data_pipeline_spark.session import get_spark, default_parallelism
 from medallion_data_pipeline_spark.sources.testdata import TABLES, load_table
@@ -48,14 +49,13 @@ def main() -> None:
             # codegen warm-up at the smallest SF, as bench.py does
             q.fn(spark, "/root/testdata/sf0.001") \
                 .write.format("noop").mode("overwrite").save()
-            from bench import _release_cached_blocks
             reps = []
             for _ in range(reps_n):
                 t0 = time.time()
                 q.fn(spark, layout_dir) \
                     .write.format("noop").mode("overwrite").save()
                 reps.append(round(time.time() - t0, 3))
-                _release_cached_blocks(spark)
+                release_cached_blocks(spark)
             print(f"{name}: min_warm={min(reps[1:]) if reps[0] > 1.0 and len(reps) > 1 else min(reps)} reps={reps}")
     finally:
         shutil.rmtree(layout_dir, ignore_errors=True)
