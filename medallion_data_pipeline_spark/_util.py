@@ -2,7 +2,8 @@
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 
 def tiny_df(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
@@ -35,3 +36,18 @@ def spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     if df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target)
+
+
+def write_counted(df: DataFrame, path: str,
+                  partition_by: list[str] | None = None) -> int:
+    """Write ``df`` to parquet and return the row count observed ON
+    the write action itself, instead of a second job re-reading the
+    files just written. count() observes every row the write sinks and
+    never returns NULL on empty input, so no normalization is needed."""
+    obs = Observation()
+    writer = df.observe(obs, F.count(F.lit(1)).alias("n")) \
+        .write.mode("overwrite")
+    if partition_by:
+        writer = writer.partitionBy(*partition_by)
+    writer.parquet(path)
+    return int(obs.get["n"])

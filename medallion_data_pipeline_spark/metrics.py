@@ -1,5 +1,6 @@
-"""Spark execution counters for a window of work — the one reader of
-Spark's job and stage metrics in this repo.
+"""Spark execution counters for a window of work and operator counts of
+a physical plan — the one reader of Spark's job and stage metrics and
+of executed plans in this repo.
 
     with capture(spark) as c:
         run_something(spark)
@@ -19,6 +20,14 @@ submitted before it. The store keeps a bounded history
 evicts skipped, then oldest-completed entries first; once it has
 evicted the start of a window, reading that window raises instead of
 under-counting.
+
+``plan_fingerprint(df)`` counts the operator nodes of a DataFrame's
+executed plan by walking the JVM plan tree (not its printed text):
+
+    plan_fingerprint(df)["exchange_hash"], ...["BroadcastHashJoin"], ...
+
+``tests/plan_snapshot.json`` holds the fingerprint of every registered
+query; ``tests/test_plans.py`` compares against it.
 """
 
 from __future__ import annotations
@@ -135,3 +144,80 @@ def release_cached_blocks(spark, wait_s: float = 2.0) -> int:
             return left
         sc._jvm.System.gc()
         time.sleep(0.05)
+
+
+#: shuffle-exchange partitioning class -> fingerprint key
+_EXCHANGES = {
+    "HashPartitioning": "exchange_hash",
+    "RoundRobinPartitioning": "exchange_round_robin",
+    "SinglePartition": "exchange_single",
+    "RangePartitioning": "exchange_range",
+}
+#: physical nodes counted by name (class name without ``Exec``)
+_NODES = (
+    "BroadcastHashJoin", "BroadcastNestedLoopJoin", "SortMergeJoin",
+    "ShuffledHashJoin", "CartesianProduct", "Window", "WindowGroupLimit",
+    "Generate", "Expand", "Union", "TakeOrderedAndProject",
+    "InMemoryTableScan",
+)
+#: the keys of every fingerprint, in this order
+FINGERPRINT_KEYS = (*_EXCHANGES.values(), "exchange_broadcast", *_NODES,
+                    "python_eval", "scan", "read_schema_width")
+_PYTHON_PKG = "org.apache.spark.sql.execution.python."
+
+
+def executed_plan(df) -> str:
+    """The executed physical plan of ``df`` as Spark prints it."""
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _seq(seq) -> list:
+    out, it = [], seq.iterator()
+    while it.hasNext():
+        out.append(it.next())
+    return out
+
+
+def plan_fingerprint(df) -> dict[str, int]:
+    """Operator counts of ``df``'s executed plan, keyed by
+    ``FINGERPRINT_KEYS``: shuffle exchanges by partitioning, broadcast
+    exchanges, the join/window/generate/expand/union/top-k/cache nodes
+    of ``_NODES``, Python evaluation nodes, file scans and the total
+    number of top-level columns those scans read.
+
+    The walk covers the current plan of every adaptive node (inside its
+    query stages once it has run), subquery plans and the plans behind
+    cached relations; a reused exchange is not counted again. A cached
+    relation enters the plan of every later DataFrame with the same
+    logical plan, so the counts depend on what the session has
+    cached."""
+    out = dict.fromkeys(FINGERPRINT_KEYS, 0)
+    stack = [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        cls = node.getClass().getName()
+        name = cls.rsplit(".", 1)[1].removesuffix("Exec")
+        if name == "AdaptiveSparkPlan":
+            stack.append(node.executedPlan())
+            continue
+        if name.endswith("QueryStage"):
+            stack.append(node.plan())
+            continue
+        if name == "ShuffleExchange":
+            part = node.outputPartitioning().getClass().getSimpleName()
+            out[_EXCHANGES[part.removesuffix("$")]] += 1
+        elif name == "BroadcastExchange":
+            out["exchange_broadcast"] += 1
+        elif name in out:
+            out[name] += 1
+        elif cls.startswith(_PYTHON_PKG):
+            out["python_eval"] += 1
+        elif name == "FileSourceScan":
+            out["scan"] += 1
+            out["read_schema_width"] += node.requiredSchema().length()
+        elif name == "BatchScan":
+            out["scan"] += 1
+            out["read_schema_width"] += node.scan().readSchema().length()
+        stack.extend(_seq(node.children()))
+        stack.extend(_seq(node.innerChildren()))
+    return out

@@ -1493,7 +1493,7 @@ def knn_ivf_sq8(corpus: DataFrame, queries: DataFrame, k: int = 5,
               decode(encode(F.col("dv"))), "cell")
     c = c.localCheckpoint(eager=False)
     q = _side(queries, "q", id_col, _as_double(vec_col))
-    probed = _route_nprobe(q, cents, nprobe).select("query_id", "cell")
+    # the routed query side keeps q's columns: broadcast it directly
     return _top_k(_cosine_pairs(
-        c.join(F.broadcast(probed.join(q, "query_id")), "cell")), k,
+        c.join(F.broadcast(_route_nprobe(q, cents, nprobe)), "cell")), k,
         "cosine_sq8")

@@ -21,6 +21,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .._util import write_counted
+
 BRONZE_TABLES = ("suppliers", "products", "warehouses", "retail_stores",
                  "inventory", "supply_orders")
 
@@ -43,10 +45,10 @@ def write_bronze(dfs: dict[str, DataFrame], warehouse: str) -> dict[str, int]:
     UPDATE semantics, bronze/data_loader.py:112-119).
 
     Independent tables are submitted concurrently (same scheduler-
-    overlap pattern as silver), and row counts come from the WRITTEN
-    parquet footers — a metadata-only job; counting the `deduped` plan
-    would re-execute the whole upstream source a second time (measured
-    2x on the 50K bench)."""
+    overlap pattern as silver), and row counts ride the write action
+    (``write_counted``); counting the `deduped` plan would re-execute
+    the whole upstream source a second time (measured 2x on the 50K
+    bench)."""
     from concurrent.futures import ThreadPoolExecutor
 
     from pyspark.sql import functions as F
@@ -66,9 +68,6 @@ def write_bronze(dfs: dict[str, DataFrame], warehouse: str) -> dict[str, int]:
             .dropDuplicates([pk])
         )
         path = os.path.join(warehouse, "bronze", name)
-        # the landed count rides the write action (observe — r15, the
-        # silver-plan pattern) instead of a second re-read count job
-        from .corpus import write_counted
         return name, write_counted(deduped, path)
 
     with ThreadPoolExecutor(max_workers=len(dfs)) as pool:

@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from .._util import write_counted
 from ..functions import text as X
 from ..operators.dedup import exact_duplicates, minhash_near_duplicates
 from ..operators.graph import connected_components
@@ -48,25 +49,6 @@ class StageResult:
     rows_in: int
     rows_out: int
     wall_s: float
-
-
-def write_counted(df: DataFrame, path: str,
-                  partition_by: list[str] | None = None) -> int:
-    """Write ``df`` to parquet and return the row count observed ON
-    the write action itself (r15 optimization, the silver-plan observe
-    pattern): every stage audit used to pay a second job re-reading
-    the files it had just written. count() observes every row the
-    write sinks — the audited number is identical — and never returns
-    NULL on empty input, so no normalization is needed."""
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    writer = df.observe(obs, F.count(F.lit(1)).alias("n")) \
-        .write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
-    return int(obs.get["n"])
 
 
 @dataclass

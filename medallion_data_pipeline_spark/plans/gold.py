@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 
 from ..functions.cleaning import guarded_div
 from .silver import read_silver
-from .._util import tiny_df
+from .._util import tiny_df, write_counted
 
 GOLD_TABLES = ("monthly_sales_performance", "inventory_health_metrics",
                "supplier_performance_monthly", "supply_chain_dashboard",
@@ -233,9 +233,6 @@ def run_gold(spark: SparkSession, warehouse: str) -> dict[str, int]:
 
     def _write(item: tuple[str, DataFrame]) -> tuple[str, int]:
         name, df = item
-        # the landed count rides the write action (observe — r15, the
-        # silver-plan pattern) instead of a second re-read count job
-        from .corpus import write_counted
         if name == "supply_chain_dashboard":
             # canonical dynamic-partition write: one shuffle on the
             # partition key first, else every upstream task writes one

@@ -60,92 +60,30 @@ PRIORITY: tuple[str, ...] = (
     "pricing_summary", "monthly_sales", "supplier_performance",
     "dashboard_wide", "top_customers_per_region", "reconcile_layers",
     "q3_shipping_priority", "q5_local_supplier_volume", "orders_page",
-    # silver cleaning library parity
-    # (string_functions_parity moved past the prefix — string
-    # expressions are already exercised by clean_text_parity plus the
-    # whole text tier; its slot goes to the category parser, the one
-    # cleaner family that previously had no oracle-gated entry)
+    # silver cleaning library parity, one entry per cleaner family
     "clean_numeric_parity", "clean_date_parity", "clean_text_parity",
     "clean_status_parity", "rejection_split", "quality_scores",
     "clean_category_parity", "date_functions_parity",
-    # analytics / windows / multi-dim aggregation
-    # (describe_extendedprice moved past the prefix — profiling is
-    # covered by null_dup_profile + correlation_pairs; its slot goes to
-    # the PQ compressed-search tier)
-    # (ranking_functions moved past the prefix — the rank-family
-    # windows are already exercised by top_customers_per_region and
-    # orders_page's total ordering; its slot goes to
-    # forecast_seasonal_naive, which hash-gates the applyInPandas
-    # forecast worker itself — the U2 surface previously covered only
-    # by unit tests)
+    # analytics / windows / multi-dim aggregation, plus the PQ search,
+    # applyInPandas forecast and span-dedup shapes nothing else exercises
     "null_dup_profile", "knn_cosine_pq_rerank",
     "correlation_pairs", "quantile_bins_broadcast", "forecast_seasonal_naive",
     "grouping_sets_revenue", "rolling_7day_range_window",
     "pivot_status_by_region",
-    # (cube_priority_status moved past the prefix — grouping_sets +
-    # rollup already cover the multi-dim agg class; its slot goes to
-    # the span-level dedup tier)
     "dedup_exact_segments", "rollup_customer_balance",
-    # event-stream operators
+    # event-stream operators, then the block-offset row_number and salted join
     "sessionize_events", "asof_last_click", "range_join_followups",
     "funnel_view_click_purchase", "events_tumbling_hour",
     "latest_event_per_user", "weekly_retention_cohorts",
-    # (events_gap_fill moved past the prefix in r13 — its date-spine
-    # sequence + left-join zero-fill shape is already in-prefix via
-    # forecast_seasonal_naive's demand series; its slot goes to
-    # training_order_shuffle, which gates the block-offset distributed
-    # row_number — a shape previously only beyond the prefix in
-    # event_id_islands/quantile tiers)
     "training_order_shuffle", "skew_salted_join",
-    # LLM-data-pipeline tier: dedup / similarity / text / multimodal
-    # (dedup_simhash_hamming moved past the prefix in r9 — the
-    # Hamming-probe tier stays pinned by
-    # test_simhash_hamming_probe_equals_all_pairs plus the full-
-    # inventory record at both SFs; its slot goes to
-    # dedup_embedding_lsh_skew, which hash-gates the round-9
-    # oversized-bucket chunk-split's cross-rectangle scoring path on
-    # a power-law corpus — the one new execution shape this round)
-    # (dedup_embedding_lsh moved past the prefix in r13 — hyperplane
-    # sign-LSH banding stays in-prefix via dedup_embedding_lsh_skew, a
-    # strict superset shape that adds the oversized-bucket chunk
-    # split; its slot goes to dedup_canonical_url, gating the crawl
-    # tier's regex canonicalization rules + per-host WindowGroupLimit
-    # cap — shapes nothing else in the prefix exercises)
-    # (multimodal_features moved past the prefix in r13 — its
-    # mapInPandas binary-payload plumbing is a strict subset of
-    # dedup_image_phash, which runs the same decode-path batching AND
-    # the pigeonhole Hamming retrieval on top; the planted-pair design
-    # also certifies recall, not just plumbing)
-    # (dedup_image_phash moved past the prefix in r14 — same
-    # strict-subset argument one level up: phash_recall_certification
-    # runs the identical decode path and pigeonhole retrieval AND
-    # plants variants at seven exactly-known Hamming distances,
-    # scoring retrieval against an independent brute-force truth —
-    # recall@d per distance, not just the d<=4 pair set)
-    # (corpus_token_stats moved past the prefix in r14 — the
-    # whitespace/BPE-ish counter family stays exercised in-prefix by
-    # text_analysis and beyond it by the exact bpe_token_counts gate;
-    # its slot goes to langid_confidence, the Cavnar-Trenkle trigram
-    # rank-profile classifier — profile windows + out-of-place
-    # distance, a shape nothing else in the prefix has)
-    # (langid_confidence moved past the prefix in r15 — langid_script
-    # is a strict superset shape: it runs the IDENTICAL trigram
-    # profile chain on its Latin rows AND adds the Unicode-script
-    # codepoint histogram + script routing on a transparently planted
-    # multi-script corpus, the capability VERDICT r14 ranked the #1
-    # real-user gap; langid_confidence stays in the full inventory)
+    # LLM-data-pipeline tier: each entry is the superset shape of its
+    # family (dedup / similarity / text / multimodal / langid)
     "dedup_exact", "dedup_minhash_lsh", "dedup_embedding_lsh_skew",
     "dedup_ngram_jaccard", "dedup_canonical_url",
     "knn_cosine_bruteforce", "text_analysis",
     "phash_recall_certification", "langid_script",
     "gopher_quality_filters",
-    # (knn_cosine_lsh moved past the prefix — hyperplane sign-LSH
-    # banding is already pinned in-prefix by dedup_embedding_lsh, and
-    # the KNN class keeps three gated entries here (bruteforce, IVF,
-    # PQ-rerank); its slot goes to forecast_backtest_accuracy, which
-    # computes the reference's last uncomputed claim — "85%+ accuracy
-    # for 30-day demand predictions" (README.md:364) — through the
-    # real applyInPandas worker on a 30-day holdout)
+    # the reference's 30-day forecast-accuracy claim
     "forecast_backtest_accuracy",
     # the prefix's costliest checks go last so a time-bounded harness
     # still completes everything above before starting them

@@ -36,6 +36,10 @@ def get_spark(app_name: str = "medallion_data_pipeline_spark",
         # local mode: ~1 shuffle partition per core; on a real cluster this
         # would scale with executors * cores (and AQE coalesces the excess).
         shuffle_partitions = max(cpus, 8)
+    # a quarter of physical memory: in local mode the driver JVM runs
+    # every task and its resident size grows well past the heap, so a
+    # heap near the host's RAM gets it OOM-killed instead of spilling
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -45,7 +49,8 @@ def get_spark(app_name: str = "medallion_data_pipeline_spark",
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM", f"{ram_mb // 4}m"))
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))

@@ -12,7 +12,7 @@ have three Spark equivalents, each here:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -153,10 +153,3 @@ def write_hilbert(df: DataFrame, path: str,
     _write_curve_clustered(df, path, L.hilbert_key(
         [(F.col(c), lo, hi) for c, lo, hi in dims], **kw), files, mode)
 
-
-def shuffle_free_join_plan(spark: SparkSession, left_table: str, right_table: str,
-                           key: str) -> str:
-    """Explain string for a join of two bucketed tables — used by tests
-    to ASSERT the shuffle elimination (no Exchange above the scans)."""
-    df = spark.table(left_table).join(spark.table(right_table), key)
-    return df._jdf.queryExecution().executedPlan().toString()

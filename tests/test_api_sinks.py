@@ -8,6 +8,7 @@ import os
 from pyspark.sql import functions as F
 
 from medallion_data_pipeline_spark.api import MedallionEngine
+from medallion_data_pipeline_spark.metrics import executed_plan
 from medallion_data_pipeline_spark.plans import bronze, fixtures
 from medallion_data_pipeline_spark.sources import sinks
 
@@ -187,7 +188,7 @@ def test_orc_roundtrip_preserves_values_and_prunes(spark, tmp_path):
     back = sinks.read_orc(spark, path)
     assert back.count() == 1000
     assert back.agg(F.sum("v")).collect()[0][0] == src.agg(F.sum("v")).collect()[0][0]
-    plan = back.filter(F.col("id") < 10)._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(back.filter(F.col("id") < 10))
     assert "PushedFilters: [" in plan and "id" in plan.split("PushedFilters:")[1].split("]")[0]
     # partition pruning: bucket filter prunes directories, not rows
     pruned = back.filter(F.col("bucket") == 3)

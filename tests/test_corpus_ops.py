@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from medallion_data_pipeline_spark.functions import text as X
+from medallion_data_pipeline_spark.metrics import executed_plan
 from medallion_data_pipeline_spark.queries import REGISTRY, _load
 from medallion_data_pipeline_spark.sources.testdata import load_table
 
@@ -1630,8 +1631,7 @@ def test_langid_script_routing(spark):
     # the script stage itself is scan-local: no shuffle below the
     # script columns (Exchange appears only in the Latin branch's
     # trigram profile build)
-    plan = L.with_script(lat, "doc_id", "text") \
-        ._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(L.with_script(lat, "doc_id", "text"))
     assert "Exchange" not in plan, plan
 
 

@@ -19,6 +19,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
+from medallion_data_pipeline_spark._util import write_counted
 from medallion_data_pipeline_spark.functions import langid as LG
 from medallion_data_pipeline_spark.plans import crawl as crawl_plan
 from medallion_data_pipeline_spark.session import get_spark
@@ -58,7 +59,6 @@ def main() -> None:
                         & (F.col("margin") > 0)).select("doc_id"),
             "doc_id", "left_semi")
         lp = tempfile.mkdtemp(prefix="lgprof_lp_")
-        from medallion_data_pipeline_spark.plans.corpus import write_counted
         n = write_counted(kept, os.path.join(lp, "langpass"))
         t_full = time.time() - t0
         shutil.rmtree(lp, ignore_errors=True)

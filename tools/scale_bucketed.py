@@ -39,6 +39,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
+from medallion_data_pipeline_spark.metrics import plan_fingerprint
 from medallion_data_pipeline_spark.session import get_spark
 from medallion_data_pipeline_spark.sources.testdata import load_table
 from tools.scale_heavy import best_of, grow_sf1
@@ -92,8 +93,8 @@ def fact_fact(li, o):
 def run(spark, label, df):
     best, c = best_of(spark, df.write.format("noop").mode("overwrite").save)
     sh_w = c["shuffle_write_bytes"]
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    n_ex = plan.count("Exchange")
+    n_ex = sum(v for k, v in plan_fingerprint(df).items()
+               if k.startswith("exchange_"))
     print(f"  {label:28s} {best:7.2f}s write={sh_w / 1e6:9.1f}MB "
           f"exchanges={n_ex}", flush=True)
     return {"wall_s": round(best, 2),
