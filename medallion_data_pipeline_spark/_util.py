@@ -2,6 +2,13 @@
 
 from __future__ import annotations
 
+import os
+import time
+from collections.abc import Callable, Sequence
+from concurrent.futures import ThreadPoolExecutor
+from dataclasses import dataclass, field
+from typing import Any
+
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -51,3 +58,66 @@ def write_counted(df: DataFrame, path: str,
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
     return int(obs.get["n"])
+
+
+@dataclass
+class StageResult:
+    """One pipeline stage's audited counts. ``rows_in`` is -1 where the
+    stage does not count its input (a landing or mart write)."""
+    stage: str
+    rows_in: int
+    rows_out: int
+    wall_s: float
+
+
+@dataclass
+class StageRecorder:
+    """The one stage-bookkeeping path of every pipeline (bronze,
+    silver, gold, quality, crawl, corpus). ``record`` appends a
+    StageResult timed from the caller's ``t0`` and then fires
+    ``stage_hook(name)``; ``write`` first lands the stage's frame under
+    ``out_dir`` with its count riding the write action; ``fan_out``
+    runs independent stages concurrently. Results keep call order, so a
+    half that runs overlapped on another thread records into its own
+    recorder, and the caller appends that recorder's results after
+    joining it."""
+    out_dir: str
+    stage_hook: Callable[[str], None] | None = None
+    results: list[StageResult] = field(default_factory=list)
+
+    def _append(self, result: StageResult) -> int:
+        self.results.append(result)
+        if self.stage_hook is not None:
+            self.stage_hook(result.stage)
+        return result.rows_out
+
+    def record(self, name: str, n_in: int, n_out: int, t0: float) -> int:
+        return self._append(
+            StageResult(name, n_in, n_out, round(time.time() - t0, 2)))
+
+    def write(self, name: str, n_in: int, df: DataFrame, path: str,
+              t0: float, partition_by: list[str] | None = None) -> int:
+        n_out = write_counted(df, os.path.join(self.out_dir, path),
+                              partition_by)
+        return self.record(name, n_in, n_out, t0)
+
+    def fan_out(self, names: Sequence[str],
+                fn: Callable[[str], tuple[int, int, Any]]) -> list[Any]:
+        """Run ``fn(name)`` for every name at once, one pool thread per
+        name, so the Spark scheduler overlaps the independent stages'
+        jobs instead of serializing their fixed latencies. ``fn``
+        returns ``(rows_in, rows_out, value)``; each call is recorded
+        as a StageResult timed over the call, in ``names`` order, and
+        the values come back in that order. The first failing call (in
+        name order) re-raises once every call has finished."""
+        def timed(name: str) -> tuple[StageResult, Any]:
+            t0 = time.time()
+            n_in, n_out, value = fn(name)
+            return (StageResult(name, n_in, n_out,
+                                round(time.time() - t0, 2)), value)
+
+        with ThreadPoolExecutor(max_workers=max(1, len(names))) as pool:
+            done = list(pool.map(timed, names))
+        for result, _ in done:
+            self._append(result)
+        return [value for _, value in done]

@@ -388,21 +388,6 @@ def clean_category_field(col: Column) -> Column:
 # silver: defaults instead of NULLs where the loader needed a value.
 # ---------------------------------------------------------------------------
 
-def extract_id(col: Column) -> Column:
-    """Bronze id extraction (data_loader.py:136-141): first digit run in
-    the raw cell ('SUP-1042' -> 1042); none -> NULL (row then skipped)."""
-    m = F.regexp_extract(_as_trimmed_string(col), r"\d+", 0)
-    return F.when(m != "", m).cast("long")
-
-
-def extract_decimal(col: Column, default: float = 0.0) -> Column:
-    """Bronze decimal extraction (data_loader.py:335-346): strip currency
-    symbols/commas, parse signed decimal, default on failure."""
-    s = F.regexp_replace(nullify_sentinels(col), r"[$,]", "")
-    m = F.regexp_extract(s, r"[-+]?\d*\.?\d+", 0)
-    return F.coalesce(F.when(m != "", m).cast("double"), F.lit(default))
-
-
 def extract_int(col: Column, default: int | None = None) -> Column:
     """Bronze int extraction (data_loader.py:432-441): allows a leading
     sign (unlike silver's clean_integer_field — generate-both quirk,
@@ -411,13 +396,6 @@ def extract_int(col: Column, default: int | None = None) -> Column:
     m = F.regexp_extract(s, r"-?\d+", 0)
     v = F.when(m != "", m).cast("long")
     return v if default is None else F.coalesce(v, F.lit(default))
-
-
-def safe_str(col: Column) -> Column:
-    """Bronze safe_str_conversion (data_loader.py:88-92): NaN/None/'' ->
-    NULL else trimmed string."""
-    s = _as_trimmed_string(col)
-    return F.when(s == "", F.lit(None).cast("string")).otherwise(s)
 
 
 def quality_score(issue_flags: list[Column], total_fields: int) -> Column:

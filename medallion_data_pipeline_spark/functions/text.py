@@ -183,23 +183,6 @@ def detect_lang_from_tokens(toks: Column) -> Column:
     return best_lang
 
 
-def detect_lang(col: Column) -> Column:
-    """Function-word language heuristic: the language whose marker set
-    has the most token hits wins (ties broken by fixed language order);
-    no hits at all -> 'und' (undetermined)."""
-    toks = words(col)
-    best_lang = F.lit("und")
-    best_hits = F.lit(0)
-    # iterate in reverse so earlier languages win ties via strict '>'
-    for lang in reversed(list(LANG_MARKERS)):
-        markers = LANG_MARKERS[lang]
-        hits = F.size(F.filter(toks, lambda t: t.isin(markers)))
-        is_better = hits > best_hits
-        best_lang = F.when(is_better, F.lit(lang)).otherwise(best_lang)
-        best_hits = F.when(is_better, hits).otherwise(best_hits)
-    return best_lang
-
-
 # ---------------------------------------------------------------------------
 # Fingerprints & shingles (dedup building blocks)
 # ---------------------------------------------------------------------------
@@ -341,11 +324,6 @@ def minhash_signature(col: Column, k: int = 3, num_hashes: int = 16) -> Column:
     """Convenience single-expression form; for bulk paths stage
     words/shingles as columns first (see word_shingles PERF note)."""
     return minhash_sig_from_shingles(word_shingles(col, k), num_hashes)
-
-
-def lsh_bands(col: Column, k: int = 3, num_hashes: int = 16, bands: int = 4) -> Column:
-    """Convenience single-expression form of the band keys."""
-    return band_keys_from_sig(minhash_signature(col, k, num_hashes), num_hashes, bands)
 
 
 def simhash(col: Column, bits: int = 16) -> Column:

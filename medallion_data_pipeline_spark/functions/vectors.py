@@ -51,16 +51,6 @@ def cosine(a: Column, b: Column) -> Column:
     return F.when(d > 0, dot(a, b) / d)
 
 
-def l2_distance(a: Column, b: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-    )
-
-
 def _plane_component(seed: int, p: int, j: int) -> float:
     """Deterministic pseudo-random plane component in [-1, 1): derived
     from md5(seed:p:j) so the planes are reproducible across runs,

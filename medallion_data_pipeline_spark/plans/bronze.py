@@ -20,8 +20,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
-from .._util import write_counted
+from .._util import StageRecorder, write_counted
 
 BRONZE_TABLES = ("suppliers", "products", "warehouses", "retail_stores",
                  "inventory", "supply_orders")
@@ -44,17 +45,13 @@ def write_bronze(dfs: dict[str, DataFrame], warehouse: str) -> dict[str, int]:
     write wins per pk within the batch, the reference's ON CONFLICT
     UPDATE semantics, bronze/data_loader.py:112-119).
 
-    Independent tables are submitted concurrently (same scheduler-
-    overlap pattern as silver), and row counts ride the write action
-    (``write_counted``); counting the `deduped` plan would re-execute
-    the whole upstream source a second time (measured 2x on the 50K
-    bench)."""
-    from concurrent.futures import ThreadPoolExecutor
+    Independent tables land concurrently (``StageRecorder.fan_out``),
+    and row counts ride the write action (``write_counted``); counting
+    the `deduped` plan would re-execute the whole upstream source a
+    second time (measured 2x on the 50K bench)."""
+    rec = StageRecorder(os.path.join(warehouse, "bronze"))
 
-    from pyspark.sql import functions as F
-
-    def _land(item: tuple[str, DataFrame]) -> tuple[str, int]:
-        name, df = item
+    def _land(name: str) -> tuple[int, int, None]:
         pk = PRIMARY_KEYS[name]
         # Landing-file sizing: fact tables write several files so the
         # silver scan parallelizes (1 parquet row group = 1 scan task);
@@ -64,14 +61,14 @@ def write_bronze(dfs: dict[str, DataFrame], warehouse: str) -> dict[str, int]:
         # coalescing. The 100 TB dual is the standard 128MB-1GB
         # target-file-size policy on the landing writer.
         deduped = (
-            df.repartition(_LANDING_FILES.get(name, 1), F.col(pk))
+            dfs[name].repartition(_LANDING_FILES.get(name, 1), F.col(pk))
             .dropDuplicates([pk])
         )
-        path = os.path.join(warehouse, "bronze", name)
-        return name, write_counted(deduped, path)
+        n = write_counted(deduped, os.path.join(rec.out_dir, name))
+        return -1, n, None
 
-    with ThreadPoolExecutor(max_workers=len(dfs)) as pool:
-        return dict(pool.map(_land, dfs.items()))
+    rec.fan_out(list(dfs), _land)
+    return {r.stage: r.rows_out for r in rec.results}
 
 
 def read_bronze(spark: SparkSession, warehouse: str, name: str) -> DataFrame:

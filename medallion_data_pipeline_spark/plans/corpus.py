@@ -29,53 +29,16 @@ from __future__ import annotations
 
 import os
 import time
-from collections.abc import Callable
-from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from .._util import write_counted
+from .._util import StageRecorder, StageResult
 from ..functions import text as X
 from ..operators.dedup import exact_duplicates, minhash_near_duplicates
 from ..operators.graph import connected_components
 from ..sources.testdata import load_table
-
-
-@dataclass
-class StageResult:
-    stage: str
-    rows_in: int
-    rows_out: int
-    wall_s: float
-
-
-@dataclass
-class StageRecorder:
-    """The one stage-bookkeeping path of the crawl and corpus plans.
-    ``record`` appends a StageResult timed from the caller's ``t0``
-    and then fires ``stage_hook(name)``; ``write`` first lands the
-    stage's frame under ``out_dir`` with its count riding the write
-    action. Results keep call order, so a half that runs overlapped on
-    another thread records into its own recorder, and the caller
-    appends that recorder's results after joining it."""
-    out_dir: str
-    stage_hook: Callable[[str], None] | None = None
-    results: list[StageResult] = field(default_factory=list)
-
-    def record(self, name: str, n_in: int, n_out: int, t0: float) -> int:
-        self.results.append(
-            StageResult(name, n_in, n_out, round(time.time() - t0, 2)))
-        if self.stage_hook is not None:
-            self.stage_hook(name)
-        return n_out
-
-    def write(self, name: str, n_in: int, df: DataFrame, path: str,
-              t0: float, partition_by: list[str] | None = None) -> int:
-        n_out = write_counted(df, os.path.join(self.out_dir, path),
-                              partition_by)
-        return self.record(name, n_in, n_out, t0)
 
 
 def quality_gate(docs: DataFrame, text_col: str = "text") -> DataFrame:

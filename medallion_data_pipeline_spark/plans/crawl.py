@@ -63,8 +63,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .corpus import StageRecorder, StageResult, quality_gate
-from .._util import write_counted
+from .corpus import quality_gate
+from .._util import StageRecorder, StageResult, write_counted
 from ..sources.testdata import load_table
 
 #: landing contract for synthesized + real crawl shards

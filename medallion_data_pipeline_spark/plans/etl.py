@@ -20,6 +20,15 @@ from ..session import get_spark
 from . import bronze, fixtures, gold, quality, silver
 
 
+def _report(layer: str, records: dict[str, object], ok: bool, t0: float) -> bool:
+    """Print a layer's records, one ``[layer] name: value`` line each,
+    then its verdict and wall time; returns ``ok``."""
+    for name, value in records.items():
+        print(f"[{layer}] {name}: {value}")
+    print(f"[{layer}] ok={ok} ({time.time() - t0:.1f}s)")
+    return ok
+
+
 def run_pipeline(spark: SparkSession, warehouse: str, layer: str = "all",
                  use_fixtures: bool = True, csv_dir: str | None = None) -> bool:
     t0 = time.time()
@@ -32,27 +41,21 @@ def run_pipeline(spark: SparkSession, warehouse: str, layer: str = "all",
             counts = bronze.write_bronze(fixtures.generate_bronze(spark), warehouse)
         else:
             raise ValueError("bronze needs --fixtures or --csv-dir")
-        ok = all(v > 0 for v in counts.values())
-        print(f"[bronze] {counts} ok={ok} ({time.time() - t0:.1f}s)")
-        if not ok:
+        if not _report("bronze", counts, all(v > 0 for v in counts.values()), t0):
             return False
 
     if layer in ("silver", "all"):
         t = time.time()
         results = silver.run_silver(spark, warehouse)
-        for r in results:
-            print(f"[silver] {r.name}: in={r.rows_in} out={r.rows_out} rejected={r.rows_rejected}")
-        ok = all(r.rows_out > 0 for r in results)
-        print(f"[silver] ok={ok} ({time.time() - t:.1f}s)")
-        if not ok:
+        records = {r.stage: f"in={r.rows_in} out={r.rows_out} "
+                            f"rejected={r.rows_in - r.rows_out}" for r in results}
+        if not _report("silver", records, all(r.rows_out > 0 for r in results), t):
             return False
 
     if layer in ("gold", "all"):
         t = time.time()
         counts = gold.run_gold(spark, warehouse)
-        ok = all(v > 0 for v in counts.values())
-        print(f"[gold] {counts} ok={ok} ({time.time() - t:.1f}s)")
-        if not ok:
+        if not _report("gold", counts, all(v > 0 for v in counts.values()), t):
             return False
 
     if layer == "forecast":
@@ -61,25 +64,22 @@ def run_pipeline(spark: SparkSession, warehouse: str, layer: str = "all",
         # etl.py --layer all (etl.py:153-167, forecasting.py:434-449)
         t = time.time()
         from . import forecasting
-        fc = forecasting.run_forecasts(spark, warehouse)
-        n = fc.count()
-        ok = n > 0
-        print(f"[forecast] {n} forecast rows ok={ok} ({time.time() - t:.1f}s)")
-        if not ok:
+        n = forecasting.run_forecasts(spark, warehouse).count()
+        if not _report("forecast", {"forecast rows": n}, n > 0, t):
             return False
 
     if layer in ("quality", "all"):
         t = time.time()
-        checks = quality.run_quality_checks(spark, warehouse)
-        failed = checks.filter(~checks.passed).collect()
-        for row in failed:
-            print(f"[quality] FAIL {row.check_name} on {row.table_name}: {row.violations} violations")
-        recon = quality.reconcile_silver_gold(spark, warehouse)
-        for row in recon.collect():
-            print(f"[quality] reconcile {row.measure}: silver={row.silver_value} "
-                  f"gold={row.gold_value} diff={row.pct_diff}% passed={row.passed}")
-        ok = not failed and all(r.passed for r in recon.collect())
-        print(f"[quality] ok={ok} ({time.time() - t:.1f}s)")
+        failed = quality.run_quality_checks(spark, warehouse).filter("NOT passed").collect()
+        recon = quality.reconcile_silver_gold(spark, warehouse).collect()
+        records = {
+            **{f"FAIL {r.check_name} on {r.table_name}": f"{r.violations} violations"
+               for r in failed},
+            **{f"reconcile {r.measure}": f"silver={r.silver_value} gold={r.gold_value} "
+                                          f"dropped={r.dropped_value} diff={r.pct_diff}% "
+                                          f"passed={r.passed}" for r in recon},
+        }
+        ok = _report("quality", records, not failed and all(r.passed for r in recon), t)
 
     print(f"[pipeline] total {time.time() - t0:.1f}s ok={ok}")
     return ok

@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 
 from ..functions.cleaning import guarded_div
 from .silver import read_silver
-from .._util import tiny_df, write_counted
+from .._util import StageRecorder, tiny_df, write_counted
 
 GOLD_TABLES = ("monthly_sales_performance", "inventory_health_metrics",
                "supplier_performance_monthly", "supply_chain_dashboard",
@@ -227,12 +227,12 @@ def run_gold(spark: SparkSession, warehouse: str) -> dict[str, int]:
         "supplier_performance_monthly": build_supplier_performance(orders, products, suppliers),
         "supply_chain_dashboard": build_dashboard(orders, products, suppliers, warehouses_t, stores),
     }
-    # four independent marts: submit concurrently (scheduler overlaps the
-    # stages; same pattern as bronze/silver), count written footers only
-    from concurrent.futures import ThreadPoolExecutor
+    # four independent marts: written concurrently (the scheduler
+    # overlaps their stages), counts ride the write actions
+    rec = StageRecorder(os.path.join(warehouse, "gold"))
 
-    def _write(item: tuple[str, DataFrame]) -> tuple[str, int]:
-        name, df = item
+    def _write(name: str) -> tuple[int, int, None]:
+        df, partition_by = marts[name], None
         if name == "supply_chain_dashboard":
             # canonical dynamic-partition write: one shuffle on the
             # partition key first, else every upstream task writes one
@@ -241,15 +241,12 @@ def run_gold(spark: SparkSession, warehouse: str) -> dict[str, int]:
             # file; at cluster scale that's the classic
             # dynamic-partition small-file explosion). AQE coalesces
             # the month shuffle to the real output width.
-            df = df.repartition("order_year_month")
-            return name, write_counted(
-                df, os.path.join(warehouse, "gold", name),
-                partition_by=["order_year_month"])
-        return name, write_counted(
-            df, os.path.join(warehouse, "gold", name))
+            df, partition_by = df.repartition("order_year_month"), ["order_year_month"]
+        n = write_counted(df, os.path.join(rec.out_dir, name), partition_by)
+        return -1, n, None
 
-    with ThreadPoolExecutor(max_workers=len(marts)) as pool:
-        counts = dict(pool.map(_write, marts.items()))
+    rec.fan_out(list(marts), _write)
+    counts = {r.stage: r.rows_out for r in rec.results}
 
     meta = tiny_df(
         spark,

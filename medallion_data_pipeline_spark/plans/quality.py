@@ -7,13 +7,15 @@ pipeline warnings (run_quality_checks) and as pytest assertions
 
 from __future__ import annotations
 
+from collections import defaultdict
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .gold import read_gold
-from .._util import tiny_df
+from .silver import read_silver
+from .._util import StageRecorder, tiny_df
 
 
 @dataclass
@@ -68,29 +70,25 @@ def run_quality_checks(spark: SparkSession, warehouse: str) -> DataFrame:
     All checks against one mart fold into a SINGLE aggregation pass
     (conditional sums), so each mart is scanned exactly once — 4 jobs
     for 12 checks instead of 12 filter-counts, and the only shape that
-    survives a 100 TB dashboard table. The per-table jobs submit
-    concurrently."""
-    from collections import defaultdict
-    from concurrent.futures import ThreadPoolExecutor
-
+    survives a 100 TB dashboard table. The per-table jobs run
+    concurrently (``StageRecorder.fan_out``)."""
     by_table: dict[str, list[Check]] = defaultdict(list)
     for chk in gold_checks():
         by_table[chk.table].append(chk)
 
-    def _check_table(item: tuple[str, list[Check]]) -> list[tuple]:
-        table, checks = item
-        df = read_gold(spark, warehouse, table)
-        row = df.agg(*[
+    def _check_table(table: str) -> tuple[int, int, list[tuple]]:
+        checks = by_table[table]
+        row = read_gold(spark, warehouse, table).agg(*[
             F.sum(F.when(chk.predicate, 1).otherwise(0)).cast("long").alias(f"c{i}")
             for i, chk in enumerate(checks)
         ]).collect()[0]
-        return [
+        rows = [
             (chk.name, table, chk.description, row[f"c{i}"] or 0, (row[f"c{i}"] or 0) == 0)
             for i, chk in enumerate(checks)
         ]
+        return -1, len(rows), rows
 
-    with ThreadPoolExecutor(max_workers=len(by_table)) as pool:
-        table_rows = list(pool.map(_check_table, by_table.items()))
+    table_rows = StageRecorder(warehouse).fan_out(list(by_table), _check_table)
     rows = [r for rs in table_rows for r in rs]
     return tiny_df(
         spark, rows, "check_name string, table_name string, description string, "
@@ -101,26 +99,41 @@ def reconcile_silver_gold(spark: SparkSession, warehouse: str,
                           tolerance_pct: float = 5.0) -> DataFrame:
     """Cross-layer reconciliation (reference eda/supply_chain_eda.py:
     822-888): silver order totals vs the monthly sales mart, within
-    tolerance. The mart filters to delivered/shipped — compare against
-    the same silver subset, like the reference does."""
-    from .silver import read_silver
-
-    silver_orders = read_silver(spark, warehouse, "supply_orders").filter(
-        F.col("status").isin("delivered", "shipped")
-        & F.col("retail_store_id").isNotNull() & F.col("product_id").isNotNull()
+    tolerance. The silver side is what the mart keeps: delivered/shipped
+    orders whose store and product keys its inner joins find. Each
+    key's match rides a broadcast left join as a flag (the mart's join
+    condition, so the kept rows are its rows), and one aggregation sums
+    the kept orders and, as ``dropped_value``, the dangling-key orders
+    the mart loses. Both sides sum exact decimals (cents), so equal
+    totals compare equal rather than within float noise."""
+    orders = read_silver(spark, warehouse, "supply_orders").filter(
+        F.col("status").isin("delivered", "shipped"))
+    stores = read_silver(spark, warehouse, "retail_stores").select(
+        F.col("retail_store_id").alias("_store"))
+    products = read_silver(spark, warehouse, "products").select(
+        F.col("product_id").alias("_product"))
+    flagged = (
+        orders.join(F.broadcast(stores), orders.retail_store_id == stores._store, "left")
+        .join(F.broadcast(products), orders.product_id == products._product, "left")
     )
-    gold_ms = read_gold(spark, warehouse, "monthly_sales_performance")
-    s = silver_orders.agg(
-        F.sum("total_invoice").alias("revenue"), F.sum("quantity").alias("units")
-    ).collect()[0]
-    g = gold_ms.agg(
-        F.sum("total_revenue").alias("revenue"), F.sum("total_quantity_sold").alias("units")
+    kept = F.col("_store").isNotNull() & F.col("_product").isNotNull()
+    measures = {"revenue": "total_invoice", "units": "quantity"}
+    s = flagged.agg(*[
+        F.sum(F.when(keep, F.col(c).cast("decimal(18,2)"))).alias(f"{m}_{tag}")
+        for m, c in measures.items()
+        for tag, keep in (("kept", kept), ("dropped", ~kept))
+    ]).collect()[0]
+    g = read_gold(spark, warehouse, "monthly_sales_performance").agg(
+        F.sum(F.col("total_revenue").cast("decimal(18,2)")).alias("revenue"),
+        F.sum(F.col("total_quantity_sold").cast("decimal(18,2)")).alias("units"),
     ).collect()[0]
     rows = []
-    for measure in ("revenue", "units"):
-        sv, gv = float(s[measure] or 0), float(g[measure] or 0)
-        pct = 100.0 * abs(sv - gv) / max(abs(sv), 1e-9)
-        rows.append((measure, sv, gv, round(pct, 4), pct <= tolerance_pct))
+    for measure in measures:
+        sv, gv = s[f"{measure}_kept"] or 0, g[measure] or 0
+        pct = 100.0 * float(abs(sv - gv)) / max(abs(float(sv)), 1e-9)
+        rows.append((measure, float(sv), float(gv),
+                     float(s[f"{measure}_dropped"] or 0), round(pct, 4),
+                     pct <= tolerance_pct))
     return tiny_df(
         spark, rows, "measure string, silver_value double, gold_value double, "
-                     "pct_diff double, passed boolean")
+                     "dropped_value double, pct_diff double, passed boolean")

@@ -18,14 +18,14 @@ from __future__ import annotations
 
 import os
 import time
-from dataclasses import dataclass
+from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import cleaning as C
 from .bronze import read_bronze
-from .._util import spread, tiny_df
+from .._util import StageRecorder, StageResult, spread, tiny_df
 
 #: tables whose cleaning projections are CPU-heavy enough (regex
 #: chains per column) to justify re-spreading a degenerate
@@ -36,14 +36,6 @@ _SPREAD_TABLES = {"products", "supply_orders"}
 
 SILVER_TABLES = ("suppliers", "products", "warehouses", "retail_stores",
                  "inventory", "supply_orders")
-
-
-@dataclass
-class TableResult:
-    name: str
-    rows_in: int
-    rows_out: int
-    rows_rejected: int
 
 
 def _split_and_write(raw: DataFrame, cleaned: DataFrame, reject_reason, name: str,
@@ -70,10 +62,9 @@ def _split_and_write(raw: DataFrame, cleaned: DataFrame, reject_reason, name: st
     recomputing — acceptable for a batch stage that reruns
     idempotently.
 
-    Returns (TableResult, dq_check_rows, rejected_df).
+    Returns (rows_in, rows_out, (dq_check_rows, rejected_df)), the
+    shape ``StageRecorder.fan_out`` records.
     """
-    from pyspark.sql import Observation
-
     flagged = cleaned.withColumn("_reject_reason", reject_reason) \
         .localCheckpoint(eager=False)
 
@@ -100,7 +91,6 @@ def _split_and_write(raw: DataFrame, cleaned: DataFrame, reject_reason, name: st
     # sums over an EMPTY table observe as NULL (count observes 0) —
     # normalize so a zero-row source lands as honest zero counts
     row = {k: (v if v is not None else 0) for k, v in obs.get.items()}
-    res = TableResult(name, row["_rows_in"], row["_rows_in"] - row["_rejected"], row["_rejected"])
     checks = [(name, f"{c}_not_null", row[c] == 0, row[c], run_id) for c in check_cols]
 
     rejected = (
@@ -112,7 +102,7 @@ def _split_and_write(raw: DataFrame, cleaned: DataFrame, reject_reason, name: st
             F.lit(run_id).alias("run_id"),
         )
     )
-    return res, checks, rejected
+    return row["_rows_in"], row["_rows_in"] - row["_rejected"], (checks, rejected)
 
 
 def _expr_cache(build):
@@ -126,13 +116,13 @@ def _expr_cache(build):
     run_silver call, and because py4j calls serialize on the driver
     GIL, the thread-pool overlap in run_silver cannot hide plan
     construction the way it hides job latency — profiled as the
-    dominant cost of the 50k silver bench entry (tools/
-    profile_silver.py). On a long-lived cluster driver this is the
-    difference between paying tree construction per micro-batch/run
-    and paying it once. run_silver calls the cleaners from a
-    ThreadPoolExecutor, so the first build is double-checked-locked:
-    without the lock two threads could race past the empty check and
-    both pay the py4j build (defeating the cache on the run that
+    dominant cost of the 50k silver bench entry (docs/PERFORMANCE.md
+    #37). On a long-lived cluster driver this is the difference
+    between paying tree construction per micro-batch/run and paying
+    it once. run_silver calls the cleaners from
+    ``StageRecorder.fan_out``'s pool threads, so the first build is
+    double-checked-locked: without the lock two threads could race
+    past the empty check and both pay the py4j build (defeating the cache on the run that
     matters most) — and the pattern would silently misbehave for any
     future non-idempotent builder."""
     import threading
@@ -314,22 +304,27 @@ _CLEANERS = {
 }
 
 
-def run_silver(spark: SparkSession, warehouse: str, run_id: str | None = None) -> list[TableResult]:
+def run_silver(spark: SparkSession, warehouse: str,
+               run_id: str | None = None) -> list[StageResult]:
     """Clean all six tables (reference order silver_builder.py:1117-1124),
-    emitting audit rows per table.
+    emitting audit rows per table. Returns one StageResult per table in
+    that order; a table's rejected rows are ``rows_in - rows_out``.
 
-    The six table pipelines are independent, so they are SUBMITTED
-    CONCURRENTLY from a thread pool — the cluster scheduler overlaps
-    their stages instead of serializing 6 × (write + stats) fixed job
-    latencies (the same driver pattern that overlaps independent table
-    loads on a real cluster; measured ~2x on the 50K-order bench).
-    Rejected rows from all tables batch into ONE append (a shared
-    FileOutputCommitter staging dir is not safe for concurrent appends,
+    The six table pipelines are independent, so they run CONCURRENTLY
+    (``StageRecorder.fan_out``) — the cluster scheduler overlaps their
+    stages instead of serializing 6 × (write + stats) fixed job
+    latencies (measured ~2x on the 50K-order bench). Rejected rows
+    from all tables batch into ONE write (a shared
+    FileOutputCommitter staging dir is not safe for concurrent writes,
     and one file per run beats six) alongside the etl_log/dq_results
-    batch writes.
+    batch writes. Each audit sink is partitioned by run_id and
+    overwrites only its own run's partition, so a re-run with the same
+    run_id (say, after a crash between sinks) replaces that run's
+    audit rows instead of appending them twice.
     """
     run_id = run_id or f"silver_{int(time.time())}"
     order = ["suppliers", "warehouses", "retail_stores", "products", "inventory", "supply_orders"]
+    rec = StageRecorder(os.path.join(warehouse, "silver"))
 
     def _process(name: str):
         raw = read_bronze(spark, warehouse, name)
@@ -352,53 +347,49 @@ def run_silver(spark: SparkSession, warehouse: str, run_id: str | None = None) -
         cleaned, reason = _CLEANERS[name](raw)
         return _split_and_write(raw, cleaned, reason, name, warehouse, run_id)
 
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=len(order)) as pool:
-        outcomes = list(pool.map(_process, order))
-
-    results = [res for res, _, _ in outcomes]
-    all_checks = [c for _, checks, _ in outcomes for c in checks]
-    rejected_all = None
-    for _, _, rejected in outcomes:
-        rejected_all = rejected if rejected_all is None else rejected_all.unionByName(rejected)
+    outcomes = rec.fan_out(order, _process)
+    checks = [c for table_checks, _ in outcomes for c in table_checks]
+    n_rejected = sum(r.rows_in - r.rows_out for r in rec.results)
     # the three audit sinks land in distinct directories, so their
     # jobs overlap safely (the per-DIRECTORY committer constraint
-    # that batches all rejected rows into one append still holds);
+    # that batches all rejected rows into one write still holds);
     # the rejected union recomputes each table's cleaning projection
     # off the bronze scan — cheaper than the persist it replaced
     # (see _split_and_write) and overlapped here anyway
-    with ThreadPoolExecutor(max_workers=3) as tail:
-        futs = [
-            tail.submit(lambda: rejected_all.write.mode("append").parquet(
-                os.path.join(warehouse, "audit", "rejected_rows"))),
-            tail.submit(_write_etl_log, spark, warehouse, results, run_id),
-            tail.submit(_write_dq_results, spark, warehouse, all_checks),
-        ]
-        for f in futs:
-            f.result()
-    return results
+    sinks = {
+        "rejected_rows": (n_rejected, reduce(
+            DataFrame.unionByName, [rejected for _, rejected in outcomes])),
+        "etl_log": (len(rec.results), _etl_log(spark, rec.results, run_id)),
+        "dq_results": (len(checks), _dq_results(spark, checks)),
+    }
+
+    def _sink(name: str) -> tuple[int, int, None]:
+        n, df = sinks[name]
+        df.write.mode("overwrite") \
+            .option("partitionOverwriteMode", "dynamic") \
+            .partitionBy("run_id").parquet(os.path.join(warehouse, "audit", name))
+        return n, n, None
+
+    StageRecorder(os.path.join(warehouse, "audit")).fan_out(list(sinks), _sink)
+    return rec.results
 
 
-def _write_etl_log(spark: SparkSession, warehouse: str,
-                   results: list[TableResult], run_id: str) -> None:
+def _etl_log(spark: SparkSession, results: list[StageResult],
+             run_id: str) -> DataFrame:
     """audit.etl_log (reference silver_builder.py:497-516)."""
-    rows = [(r.name, r.rows_in, r.rows_out, r.rows_rejected, run_id) for r in results]
-    df = tiny_df(
+    rows = [(r.stage, r.rows_in, r.rows_out, r.rows_in - r.rows_out, run_id)
+            for r in results]
+    return tiny_df(
         spark, rows,
         "table_name string, rows_in long, rows_out long, rows_rejected long, run_id string",
     ).withColumn("logged_at", F.current_timestamp())
-    df.write.mode("append").parquet(os.path.join(warehouse, "audit", "etl_log"))
 
 
-def _write_dq_results(spark: SparkSession, warehouse: str, checks: list[tuple]) -> None:
-    if not checks:
-        return
-    df = tiny_df(
+def _dq_results(spark: SparkSession, checks: list[tuple]) -> DataFrame:
+    return tiny_df(
         spark, checks,
         "table_name string, check_name string, passed boolean, bad_rows long, run_id string",
     ).withColumn("checked_at", F.current_timestamp())
-    df.write.mode("append").parquet(os.path.join(warehouse, "audit", "dq_results"))
 
 
 def read_silver(spark: SparkSession, warehouse: str, name: str) -> DataFrame:

@@ -315,7 +315,7 @@ def test_sheets_to_silver_end_to_end(spark, tmp_path):
         assert counts["supply_orders"] == 300
 
         results = silver.run_silver(spark, wh)
-        by_name = {r.name: r for r in results}
+        by_name = {r.stage: r for r in results}
         assert set(by_name) == set(sheets.SHEET_RANGES)
         for name, r in by_name.items():
             assert r.rows_out > 0, name

@@ -99,9 +99,29 @@ def test_consistent_calculations_bound_follows_rounding(spark):
     assert flagged == ["large_bad", "small_bad"]
 
 
+def _assert_reconciles_exactly(spark, wh):
+    """Silver's kept orders and the mart agree to the cent and unit; the
+    dangling-key orders the mart drops are reported, not hidden under
+    the tolerance."""
+    rows = quality.reconcile_silver_gold(spark, wh).collect()
+    assert {r.measure for r in rows} == {"revenue", "units"}
+    for r in rows:
+        assert (r.pct_diff, r.passed) == (0, True), r
+        assert r.silver_value == r.gold_value > 0, r
+        assert r.dropped_value > 0, r
+
+
 def test_silver_gold_reconciliation_within_tolerance(spark, warehouse):
-    recon = quality.reconcile_silver_gold(spark, warehouse)
-    assert all(r.passed for r in recon.collect())
+    _assert_reconciles_exactly(spark, warehouse)
+
+
+@pytest.mark.parametrize("seed", [1, 103])
+def test_reconciliation_exact_on_fixture_seeds(spark, tmp_path, seed):
+    wh = str(tmp_path / "wh")
+    bronze.write_bronze(fixtures.generate_bronze(spark, n_orders=2000, seed=seed), wh)
+    silver.run_silver(spark, wh, run_id="recon")
+    gold.run_gold(spark, wh)
+    _assert_reconciles_exactly(spark, wh)
 
 
 def test_legacy_gold_views(spark, warehouse):
@@ -137,12 +157,20 @@ def test_query_runner_sample_queries(spark, warehouse):
 
 
 def test_silver_rerun_is_idempotent(spark, warehouse):
+    def audit_counts():
+        return {t: spark.read.parquet(f"{warehouse}/audit/{t}").count()
+                for t in ("rejected_rows", "etl_log", "dq_results")}
+
     before = {t: silver.read_silver(spark, warehouse, t).count()
               for t in silver.SILVER_TABLES}
     silver.run_silver(spark, warehouse, run_id="silver_test_2")
     after = {t: silver.read_silver(spark, warehouse, t).count()
              for t in silver.SILVER_TABLES}
     assert before == after   # overwrite semantics: same input -> same output
+    # a re-run under the same run id replaces that run's audit rows
+    audit = audit_counts()
+    silver.run_silver(spark, warehouse, run_id="silver_test_2")
+    assert audit_counts() == audit
 
 
 def test_bronze_json_ingest(spark, tmp_path):
@@ -177,14 +205,14 @@ def test_bronze_json_ingest(spark, tmp_path):
 def test_silver_empty_table_yields_zero_counts(spark, tmp_path):
     """A zero-row bronze table must flow through silver as honest zero
     counts (observe sums NULL over empty input; the stats normalizer
-    maps that to 0), not a crash or a null TableResult."""
+    maps that to 0), not a crash or a null StageResult."""
     wh = str(tmp_path / "wh_empty")
     dfs = fixtures.generate_bronze(spark, n_orders=50)
     dfs["suppliers"] = dfs["suppliers"].filter(F.lit(False))
     bronze.write_bronze(dfs, wh)
-    results = {r.name: r for r in silver.run_silver(spark, wh, run_id="e")}
+    results = {r.stage: r for r in silver.run_silver(spark, wh, run_id="e")}
     sup = results["suppliers"]
-    assert (sup.rows_in, sup.rows_out, sup.rows_rejected) == (0, 0, 0)
+    assert (sup.rows_in, sup.rows_out) == (0, 0)
     assert spark.read.parquet(f"{wh}/silver/suppliers").count() == 0
 
 

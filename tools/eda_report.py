@@ -164,7 +164,7 @@ def main() -> int:
     rec = quality.reconcile_silver_gold(spark, wh)
     rec_rows = [r.asDict() for r in rec.collect()]
     sec += _md_table(rec_rows)
-    bad = [r for r in rec_rows if not r.get("within_tolerance", True)]
+    bad = [r for r in rec_rows if not r["passed"]]
     insights.append("All silver↔gold measures reconcile within tolerance"
                     if not bad else
                     f"{len(bad)} reconciliation measures OUT of tolerance")
