@@ -45,6 +45,13 @@ def spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     return df.repartition(target)
 
 
+def read_table(spark: SparkSession, warehouse: str, layer: str,
+               name: str) -> DataFrame:
+    """One warehouse table, ``<warehouse>/<layer>/<name>``: the single
+    read path for every medallion layer (bronze, silver, gold, audit)."""
+    return spark.read.parquet(os.path.join(warehouse, layer, name))
+
+
 def write_counted(df: DataFrame, path: str,
                   partition_by: list[str] | None = None) -> int:
     """Write ``df`` to parquet and return the row count observed ON

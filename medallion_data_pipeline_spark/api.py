@@ -15,6 +15,8 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ._util import read_table
+
 
 class MedallionEngine:
     """Query/catalog facade over a parquet warehouse laid out as
@@ -38,7 +40,7 @@ class MedallionEngine:
         return out
 
     def table(self, layer: str, name: str) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.warehouse, layer, name))
+        return read_table(self.spark, self.warehouse, layer, name)
 
     def table_schema(self, layer: str, name: str) -> list[tuple[str, str]]:
         """information_schema.columns equivalent (app.py:1305-1311)."""

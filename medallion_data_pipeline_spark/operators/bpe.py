@@ -173,7 +173,7 @@ def bpe_train_batched(word_counts: DataFrame, n_merges: int,
     pairwise-disjoint prefix (select_disjoint), and apply them all in
     ONE fold pass — ~batch x fewer Spark jobs for the same vocabulary
     size (2 jobs per ITERATION instead of 2 per merge; measured in
-    tools/scale_bpe_contain.py).
+    docs/SCALING.md addendum 15).
 
     Semantics, stated exactly: APPLYING a selected batch is provably
     identical to applying its merges sequentially (disjoint merges

@@ -824,7 +824,6 @@ def fingerprint_hamming_pairs(fp: DataFrame, id_col: str = "doc_id",
                               fp_col: str = "phash", bits: int = 64,
                               max_distance: int = 4,
                               persist_intermediate: bool = True,
-                              filter_distance: bool = True,
                               group_identical: bool = False) -> DataFrame:
     """All pairs of fingerprints at Hamming distance <= ``max_distance``
     via pigeonhole block retrieval (Manku/Jain/Das Sarma, WWW'07 — the
@@ -851,9 +850,6 @@ def fingerprint_hamming_pairs(fp: DataFrame, id_col: str = "doc_id",
     Used by the perceptual-image dedup query (dedup_image_phash) over
     operators/multimodal.py::phash_binary fingerprints; works on any
     integer fingerprint column (simhash included).
-    ``filter_distance=False`` returns the raw block-collision
-    candidates (deduped, hamming attached, unfiltered) — the verify
-    workload, for capacity diagnostics (tools/scale_phash.py).
 
     ``group_identical=True`` is the oversized-clique guard (measured,
     SCALING.md addendum 14: the replica-grown sf1 corpus has identical-
@@ -923,10 +919,9 @@ def fingerprint_hamming_pairs(fp: DataFrame, id_col: str = "doc_id",
         .select("id_a", "id_b",
                 F.bit_count(F.col("fp_a").bitwiseXOR(F.col("fp_b")))
                 .alias("hamming"))
+        .filter(F.col("hamming") <= max_distance)
+        .dropDuplicates(["id_a", "id_b"])
     )
-    if filter_distance:
-        out = out.filter(F.col("hamming") <= max_distance)
-    out = out.dropDuplicates(["id_a", "id_b"])
     if member_edges is not None:
         out = out.unionByName(member_edges)
     return out

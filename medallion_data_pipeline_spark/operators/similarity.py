@@ -198,47 +198,6 @@ def _paired_cosine(qv="qv", cv="cv", qn="qn", cn="cn"):
     return F.when(d > 0, V.dot(F.col(qv), F.col(cv)) / d)
 
 
-def _numpy_paired_scores(pairs: DataFrame) -> DataFrame:
-    """Vectorized dual of :func:`_paired_cosine` for candidate-pair
-    scoring: input (id_a, id_b, va, vb, na, nb), output
-    (id_a, id_b, cos_raw) — one einsum row-wise dot per Arrow batch
-    instead of a per-row 64-element expression fold. The fold costs
-    ~10 us per pair (it is what pinned dedup_embedding_lsh's sf1 wall
-    at ~37 s, ~2.5M collision candidates — docs/SCALING.md); the
-    batched kernel is ~100x cheaper per pair. numpy pairwise
-    summation may reassociate the dot vs the sequential JVM fold —
-    6-dp agreement is pinned empirically by the kernels-equality
-    tests, the same contract as all_pairs_cosine_matmul. Pairs with
-    na*nb == 0 are dropped in the kernel (the expression path NULLs
-    them via ``when(d > 0, ...)`` and they die at the caller's
-    threshold filter — NaN must not reach that filter, since Spark
-    orders NaN above every double and ``NaN >= t`` is true)."""
-    import numpy as np
-    import pandas as pd
-
-    def run(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            va = np.stack([np.asarray(v, dtype="float64")
-                           for v in pdf["va"]])
-            vb = np.stack([np.asarray(v, dtype="float64")
-                           for v in pdf["vb"]])
-            denom = pdf["na"].to_numpy(dtype="float64") \
-                * pdf["nb"].to_numpy(dtype="float64")
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = np.einsum("ij,ij->i", va, vb) / denom
-            keep = denom > 0
-            yield pd.DataFrame({
-                "id_a": pdf["id_a"].to_numpy(dtype="int64")[keep],
-                "id_b": pdf["id_b"].to_numpy(dtype="int64")[keep],
-                "cos_raw": cos[keep],
-            })
-
-    return pairs.mapInPandas(
-        run, schema="id_a long, id_b long, cos_raw double")
-
-
 def _chunk_split_oversized(keyed: DataFrame, group_cols, max_group: int,
                            row_bound: int | None = None):
     """Straggler split for the per-group pair-scoring kernels.
@@ -608,7 +567,6 @@ def embedding_lsh_pairs(emb: DataFrame, threshold: float = 0.42,
                         vec_col: str = "embedding",
                         carry_vectors: bool = True,
                         kernel: str = "bucket",
-                        scorer: str = "expr",
                         max_group: int | None = 8192,
                         n_rows: int | None = None) -> DataFrame:
     """Embedding-cosine near-dup pairs via banded sign-LSH — the scale
@@ -658,13 +616,11 @@ def embedding_lsh_pairs(emb: DataFrame, threshold: float = 0.42,
     per candidate pair. This is decisive on collision-heavy corpora:
     at 10x sf0.1 the uniform test embeddings produce 104.6M
     table-collisions (82.1M distinct candidate pairs) under the 4x8
-    default, and the join kernels pay per pair — measured 30.4s
-    (expression fold, ~14 us/pair/core) and 45.9s (per-pair einsum:
-    the row-wise kernel is fast but ships 2 x 64 doubles per PAIR
-    through Arrow, ~84 GB) vs the bucket kernel's one 90 MB explode
-    plus BLAS arithmetic (docs/SCALING.md). Same empirical 6-dp BLAS
-    parity contract as all_pairs_cosine_matmul, pinned by the
-    path-equality tests. Per-bucket memory is chunk x |bucket|
+    default, and the join kernel pays per pair — measured 30.4s
+    (expression fold, ~14 us/pair/core) vs the bucket kernel's one
+    90 MB explode plus BLAS arithmetic (docs/SCALING.md). Same
+    empirical 6-dp BLAS parity contract as all_pairs_cosine_matmul,
+    pinned by the path-equality tests. Per-bucket memory is chunk x |bucket|
     doubles; n_planes ~ log2(n) keeps |bucket| bounded at scale —
     for UNIFORM data. A power-law corpus (real crawls: one
     boilerplate cluster holding 5-10% of all docs) lands its whole
@@ -686,10 +642,7 @@ def embedding_lsh_pairs(emb: DataFrame, threshold: float = 0.42,
     ``kernel="join"`` keeps the pure-plan bucket self-join (the
     in-engine cross-check and the shape to reach for when buckets are
     sharp and collisions sparse): ``carry_vectors`` picks the shuffle
-    width as above, and ``scorer`` picks the candidate scorer —
-    ``"expr"`` (default) the JVM fold, ``"numpy"`` the Arrow einsum
-    (:func:`_numpy_paired_scores`, only sensible when candidates are
-    few and wide).
+    width as above.
     """
     dv = _as_double(F.col(vec_col))
     pre_spread = emb  # count the un-spread frame (spread's round-robin
@@ -745,22 +698,15 @@ def embedding_lsh_pairs(emb: DataFrame, threshold: float = 0.42,
             F.posexplode(keys).alias("tbl", "bucket"),
         )
         a, b = keyed.alias("a"), keyed.alias("b")
-        cand = (
+        scored = (
             a.join(b, (F.col("a.tbl") == F.col("b.tbl"))
                    & (F.col("a.bucket") == F.col("b.bucket"))
                    & (F.col("a.vid") < F.col("b.vid")))
+            .select(F.col("a.vid").alias("id_a"), F.col("b.vid").alias("id_b"),
+                    _paired_cosine("a.v", "b.v", "a.nrm", "b.nrm")
+                    .alias("cos_raw"))
+            .filter(F.col("cos_raw") >= threshold)
         )
-        if scorer == "numpy":
-            scored = _numpy_paired_scores(cand.select(
-                F.col("a.vid").alias("id_a"), F.col("b.vid").alias("id_b"),
-                F.col("a.v").alias("va"), F.col("b.v").alias("vb"),
-                F.col("a.nrm").alias("na"), F.col("b.nrm").alias("nb")))
-        else:
-            scored = cand.select(
-                F.col("a.vid").alias("id_a"), F.col("b.vid").alias("id_b"),
-                _paired_cosine("a.v", "b.v", "a.nrm", "b.nrm")
-                .alias("cos_raw"))
-        scored = scored.filter(F.col("cos_raw") >= threshold)
         return (
             scored.groupBy("id_a", "id_b")
             .agg(F.round(F.max("cos_raw"), 6).alias("cosine"))
@@ -784,14 +730,10 @@ def embedding_lsh_pairs(emb: DataFrame, threshold: float = 0.42,
         .join(vecs.select(F.col("vid").alias("id_b"), F.col("v").alias("vb"),
                           F.col("nrm").alias("nb")), "id_b")
     )
-    if scorer == "numpy":
-        scored = _numpy_paired_scores(
-            paired.select("id_a", "id_b", "va", "vb", "na", "nb"))
-    else:
-        scored = paired.select(
-            "id_a", "id_b",
-            _paired_cosine("va", "vb", "na", "nb").alias("cos_raw"))
-    scored = scored.filter(F.col("cos_raw") >= threshold)
+    scored = paired.select(
+        "id_a", "id_b",
+        _paired_cosine("va", "vb", "na", "nb").alias("cos_raw")) \
+        .filter(F.col("cos_raw") >= threshold)
     return scored.select("id_a", "id_b",
                          F.round("cos_raw", 6).alias("cosine"))
 

@@ -7,10 +7,9 @@ replicated. Pattern: append salt 0..n-1 to the big side's key, explode
 the small side across all salt values, equi-join on (key, salt) —
 the hot key's rows spread over n partitions.
 
-Measured head-to-head (tools/scale_skew_aqe.py, SCALING.md addendum
-11; 16M-row fact with 50% on one hot key, broadcast disabled, all
-variants moving the SAME columns through the shuffle, minima over
-two tool runs of min-of-3):
+Measured head-to-head (docs/SCALING.md addendum 11; 16M-row fact
+with 50% on one hot key, broadcast disabled, all variants moving the
+SAME columns through the shuffle, minima over two runs of min-of-3):
 
 - **Shuffle JOINS: let AQE handle it first.** Runtime skew splitting
   beat manual salting at equal workload (4.36 s unsplit -> 1.35 s

@@ -71,10 +71,6 @@ def write_bronze(dfs: dict[str, DataFrame], warehouse: str) -> dict[str, int]:
     return {r.stage: r.rows_out for r in rec.results}
 
 
-def read_bronze(spark: SparkSession, warehouse: str, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(warehouse, "bronze", name))
-
-
 def ingest_csv_dir(spark: SparkSession, csv_dir: str, warehouse: str) -> dict[str, int]:
     """CSV ingest path (the Sheets-export equivalent of S1): PERMISSIVE
     mode tolerates short/dirty rows like the reference's row padding

@@ -427,7 +427,7 @@ def run_crawl_increment_epochs(spark: SparkSession, landing_dir: str,
     stage order inside that pair (epoch_append vs langid_gate/
     quality_gate) — hooks must be thread-safe, and consumers
     differencing cumulative cluster counters between firings
-    (tools/scale_crawl_ledger.py) get blended attribution WITHIN the
+    (docs/SCALING.md addenda 16-17) get blended attribution WITHIN the
     pair (their sum stays exact). The returned StageResult list keeps
     canonical order regardless."""
     from ..operators import sketch as K

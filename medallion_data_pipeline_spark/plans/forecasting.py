@@ -24,7 +24,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .silver import read_silver
+from .._util import read_table
 
 FORECAST_SCHEMA = ("level string, entity_id string, ds date, yhat double, "
                    "yhat_lower double, yhat_upper double, model string, "
@@ -392,7 +392,7 @@ def run_global_forecast(spark: SparkSession, warehouse: str, level: str = "wareh
     """The U3 path end-to-end: distributed feature panel -> ONE global
     model fit (panel collected — it is aggregate-sized, entities x
     days, not fact-sized) -> per-entity autoregressive fan-out."""
-    orders = read_silver(spark, warehouse, "supply_orders")
+    orders = read_table(spark, warehouse, "silver", "supply_orders")
     series = build_series(orders, level)
     panel = _panel_features(series).toPandas()
     model = fit_global_model(panel)  # lightgbm when importable, else OLS
@@ -401,7 +401,8 @@ def run_global_forecast(spark: SparkSession, warehouse: str, level: str = "wareh
     path = os.path.join(warehouse, "gold", "forecasts")
     fc.write.mode("overwrite").option("partitionOverwriteMode", "dynamic") \
         .partitionBy("run_id").parquet(path)
-    return spark.read.parquet(path).filter(F.col("run_id") == run_id)
+    return read_table(spark, warehouse, "gold", "forecasts") \
+        .filter(F.col("run_id") == run_id)
 
 
 def build_series_multi(orders: DataFrame,
@@ -470,11 +471,12 @@ def run_forecasts(spark: SparkSession, warehouse: str,
     which is what matters when the fact table is 100 TB, not 50k
     rows. Row-for-row equality with the per-level union is pinned by
     test_single_pass_forecast_equals_per_level."""
-    orders = read_silver(spark, warehouse, "supply_orders")
+    orders = read_table(spark, warehouse, "silver", "supply_orders")
     series = build_series_multi(orders, levels)
     all_fc = series.groupBy("level", "entity_id").applyInPandas(
         make_forecast_worker_multi(horizon, run_id), FORECAST_SCHEMA)
     path = os.path.join(warehouse, "gold", "forecasts")
     all_fc.write.mode("overwrite").option("partitionOverwriteMode", "dynamic") \
         .partitionBy("run_id").parquet(path)
-    return spark.read.parquet(path).filter(F.col("run_id") == run_id)
+    return read_table(spark, warehouse, "gold", "forecasts") \
+        .filter(F.col("run_id") == run_id)

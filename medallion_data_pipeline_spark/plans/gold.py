@@ -16,8 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.cleaning import guarded_div
-from .silver import read_silver
-from .._util import StageRecorder, tiny_df, write_counted
+from .._util import StageRecorder, read_table, tiny_df, write_counted
 
 GOLD_TABLES = ("monthly_sales_performance", "inventory_health_metrics",
                "supplier_performance_monthly", "supply_chain_dashboard",
@@ -214,16 +213,16 @@ def build_dashboard(orders: DataFrame, products: DataFrame, suppliers: DataFrame
 
 
 def run_gold(spark: SparkSession, warehouse: str) -> dict[str, int]:
-    orders = read_silver(spark, warehouse, "supply_orders")
-    products = read_silver(spark, warehouse, "products")
-    suppliers = read_silver(spark, warehouse, "suppliers")
-    warehouses_t = read_silver(spark, warehouse, "warehouses")
-    stores = read_silver(spark, warehouse, "retail_stores")
+    orders = read_table(spark, warehouse, "silver", "supply_orders")
+    products = read_table(spark, warehouse, "silver", "products")
+    suppliers = read_table(spark, warehouse, "silver", "suppliers")
+    warehouses_t = read_table(spark, warehouse, "silver", "warehouses")
+    stores = read_table(spark, warehouse, "silver", "retail_stores")
 
     marts = {
         "monthly_sales_performance": build_monthly_sales(orders, stores, products),
         "inventory_health_metrics": build_inventory_health(
-            read_silver(spark, warehouse, "inventory"), warehouses_t, products),
+            read_table(spark, warehouse, "silver", "inventory"), warehouses_t, products),
         "supplier_performance_monthly": build_supplier_performance(orders, products, suppliers),
         "supply_chain_dashboard": build_dashboard(orders, products, suppliers, warehouses_t, stores),
     }
@@ -255,10 +254,6 @@ def run_gold(spark: SparkSession, warehouse: str) -> dict[str, int]:
     ).withColumn("built_at", F.current_timestamp())
     meta.write.mode("overwrite").parquet(os.path.join(warehouse, "gold", "table_metadata"))
     return counts
-
-
-def read_gold(spark: SparkSession, warehouse: str, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(warehouse, "gold", name))
 
 
 # ---------------------------------------------------------------------------

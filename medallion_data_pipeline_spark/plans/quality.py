@@ -13,9 +13,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .gold import read_gold
-from .silver import read_silver
-from .._util import StageRecorder, tiny_df
+from .._util import StageRecorder, read_table, tiny_df
 
 
 @dataclass
@@ -78,7 +76,7 @@ def run_quality_checks(spark: SparkSession, warehouse: str) -> DataFrame:
 
     def _check_table(table: str) -> tuple[int, int, list[tuple]]:
         checks = by_table[table]
-        row = read_gold(spark, warehouse, table).agg(*[
+        row = read_table(spark, warehouse, "gold", table).agg(*[
             F.sum(F.when(chk.predicate, 1).otherwise(0)).cast("long").alias(f"c{i}")
             for i, chk in enumerate(checks)
         ]).collect()[0]
@@ -106,11 +104,11 @@ def reconcile_silver_gold(spark: SparkSession, warehouse: str,
     the kept orders and, as ``dropped_value``, the dangling-key orders
     the mart loses. Both sides sum exact decimals (cents), so equal
     totals compare equal rather than within float noise."""
-    orders = read_silver(spark, warehouse, "supply_orders").filter(
+    orders = read_table(spark, warehouse, "silver", "supply_orders").filter(
         F.col("status").isin("delivered", "shipped"))
-    stores = read_silver(spark, warehouse, "retail_stores").select(
+    stores = read_table(spark, warehouse, "silver", "retail_stores").select(
         F.col("retail_store_id").alias("_store"))
-    products = read_silver(spark, warehouse, "products").select(
+    products = read_table(spark, warehouse, "silver", "products").select(
         F.col("product_id").alias("_product"))
     flagged = (
         orders.join(F.broadcast(stores), orders.retail_store_id == stores._store, "left")
@@ -123,7 +121,7 @@ def reconcile_silver_gold(spark: SparkSession, warehouse: str,
         for m, c in measures.items()
         for tag, keep in (("kept", kept), ("dropped", ~kept))
     ]).collect()[0]
-    g = read_gold(spark, warehouse, "monthly_sales_performance").agg(
+    g = read_table(spark, warehouse, "gold", "monthly_sales_performance").agg(
         F.sum(F.col("total_revenue").cast("decimal(18,2)")).alias("revenue"),
         F.sum(F.col("total_quantity_sold").cast("decimal(18,2)")).alias("units"),
     ).collect()[0]

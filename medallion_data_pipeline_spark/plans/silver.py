@@ -24,8 +24,8 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import cleaning as C
-from .bronze import read_bronze
-from .._util import StageRecorder, StageResult, spread, tiny_df
+from .bronze import BRONZE_TABLES
+from .._util import StageRecorder, StageResult, read_table, spread, tiny_df
 
 #: tables whose cleaning projections are CPU-heavy enough (regex
 #: chains per column) to justify re-spreading a degenerate
@@ -34,8 +34,7 @@ from .._util import StageRecorder, StageResult, spread, tiny_df
 #: output file taxes the marts that re-scan silver.
 _SPREAD_TABLES = {"products", "supply_orders"}
 
-SILVER_TABLES = ("suppliers", "products", "warehouses", "retail_stores",
-                 "inventory", "supply_orders")
+SILVER_TABLES = BRONZE_TABLES
 
 
 def _split_and_write(raw: DataFrame, cleaned: DataFrame, reject_reason, name: str,
@@ -327,7 +326,7 @@ def run_silver(spark: SparkSession, warehouse: str,
     rec = StageRecorder(os.path.join(warehouse, "silver"))
 
     def _process(name: str):
-        raw = read_bronze(spark, warehouse, name)
+        raw = read_table(spark, warehouse, "bronze", name)
         if name in _SPREAD_TABLES:
             # Spark packs tiny landing files into ONE scan partition
             # (openCostInBytes packing), serializing the regex-heavy
@@ -390,7 +389,3 @@ def _dq_results(spark: SparkSession, checks: list[tuple]) -> DataFrame:
         spark, checks,
         "table_name string, check_name string, passed boolean, bad_rows long, run_id string",
     ).withColumn("checked_at", F.current_timestamp())
-
-
-def read_silver(spark: SparkSession, warehouse: str, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(warehouse, "silver", name))

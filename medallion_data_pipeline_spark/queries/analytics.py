@@ -1563,7 +1563,7 @@ def forecast_backtest_accuracy(spark, sf_dir):
 # every bucket's per-dimension extent is a small fraction of the
 # global span — which is precisely why parquet min/max pruning works
 # for BOTH dimensions of a z-sorted layout (measured file-level in
-# tools/scale_zorder.py / SCALING.md addendum 9).
+# docs/SCALING.md addendum 9).
 # ---------------------------------------------------------------------------
 
 def _zorder_oracle() -> str:
@@ -1625,8 +1625,8 @@ def zorder_locality(spark, sf_dir):
 # are always Manhattan-adjacent cells, so a key-range slice maps to a
 # tighter bounding box and prunes FEWER files for the same box
 # predicate (measured head-to-head at sf0.1/64 files: the 10%x10% box
-# reads 2/64 files vs z-order's 4/64, tools/scale_zorder.py /
-# SCALING.md addendum 10). The oracle regenerates the identical
+# reads 2/64 files vs z-order's 4/64, docs/SCALING.md addendum
+# 10). The oracle regenerates the identical
 # 4-state shift/mask machine via layout.hilbert_sql, so the gate pins
 # the exact key arithmetic AND the per-bucket locality it buys.
 # ---------------------------------------------------------------------------

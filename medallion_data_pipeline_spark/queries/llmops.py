@@ -3473,11 +3473,15 @@ def _jsonl_shards(spark, sf_dir: str) -> str:
     """Write the documents table as a JSONL shard set ONCE per
     distinct source file (the _trained_model stat-keyed registry —
     same rationale: the conversion is the amortized upstream step,
-    the query under test is the READ path)."""
+    the query under test is the READ path). Each shard dir is removed
+    when the process exits."""
+    import atexit
+    import shutil
     import tempfile
 
     def _write():
         out = tempfile.mkdtemp(prefix="mdp_jsonl_")
+        atexit.register(shutil.rmtree, out, ignore_errors=True)
         from ..sources import jsonl as J
         J.write_jsonl(t(spark, sf_dir, "documents"), out)
         return out
@@ -6344,7 +6348,7 @@ def bpe_train_merges_batched(spark, sf_dir):
     exactly that documented divergence. 2 Spark jobs per ITERATION
     rather than per merge: a 32K-merge production vocabulary does
     ~8K scheduler round-trips instead of ~64K (measured 4-6.5x wall
-    in tools/scale_bpe_contain.py; flat across vocab decades)."""
+    in docs/SCALING.md addendum 15; flat across vocab decades)."""
     from ..operators import bpe as B
 
     wc = (td(spark, sf_dir)

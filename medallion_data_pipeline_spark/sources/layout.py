@@ -119,7 +119,7 @@ def write_zordered(df: DataFrame, path: str,
     skips the data pages), and as whole-file skipping under a
     stats-indexing table format (Delta/Iceberg) or any planner that
     consults footers. Measured at sf0.1/64 files
-    (tools/scale_zorder.py, SCALING.md addendum 9):
+    (docs/SCALING.md addendum 9):
     a 10%×10% two-column box reads 4/64 files (linear sort: 7, and
     only because the box also constrains its sort key; unsorted: 64),
     and a second-column-only 10% range reads 12/64 where the linear
@@ -144,8 +144,8 @@ def write_hilbert(df: DataFrame, path: str,
     machine, no UDF). A key-range slice of a Hilbert-sorted file
     therefore maps to a tighter bounding box than the same slice
     z-sorted, which typically prunes fewer files for the same box
-    predicate (measured head-to-head in tools/scale_zorder.py /
-    SCALING.md addendum 10). 2-D only; z-order remains the shipped
+    predicate (measured head-to-head in docs/SCALING.md addendum
+    10). 2-D only; z-order remains the shipped
     default for 3+ dims."""
     from ..functions import layout as L
 

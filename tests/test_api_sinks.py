@@ -7,6 +7,7 @@ import os
 
 from pyspark.sql import functions as F
 
+from medallion_data_pipeline_spark._util import read_table
 from medallion_data_pipeline_spark.api import MedallionEngine
 from medallion_data_pipeline_spark.metrics import executed_plan
 from medallion_data_pipeline_spark.plans import bronze, fixtures
@@ -285,7 +286,7 @@ def test_sheets_source_fetch_pad_and_land(spark, tmp_path):
             ranges={"suppliers": "Suppliers!A:D", "products": "Products!A:G"},
             base_url=base)
         assert counts == {"suppliers": 3}
-        landed = spark.read.parquet(os.path.join(wh, "bronze", "suppliers"))
+        landed = read_table(spark, wh, "bronze", "suppliers")
         assert landed.count() == 3
     finally:
         srv.shutdown()
@@ -320,7 +321,7 @@ def test_sheets_to_silver_end_to_end(spark, tmp_path):
         for name, r in by_name.items():
             assert r.rows_out > 0, name
             assert r.rows_in == counts[name], name
-        landed = spark.read.parquet(os.path.join(wh, "silver", "supply_orders"))
+        landed = read_table(spark, wh, "silver", "supply_orders")
         assert "total_invoice_clean" in landed.columns or landed.count() > 0
     finally:
         srv.shutdown()
@@ -434,7 +435,7 @@ def test_sheets_ingest_skips_broken_ranges_loudly(spark, tmp_path):
         assert counts == {"suppliers": 2}
         assert any("skipping range 'products'" in str(w.message)
                    for w in caught)
-        landed = spark.read.parquet(os.path.join(wh, "bronze", "suppliers"))
+        landed = read_table(spark, wh, "bronze", "suppliers")
         assert landed.count() == 2
     finally:
         srv.shutdown()

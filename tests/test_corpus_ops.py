@@ -337,9 +337,8 @@ def test_embedding_lsh_pairs_sound_and_recalls(spark):
 def test_embedding_lsh_ids_only_path_equals_default(spark):
     """Every execution shape of the banded-LSH pair search must
     produce EXACTLY the same pair set and 6-dp cosines: the default
-    bucket-grouped BLAS kernel, and the join kernel in all four
-    (carry_vectors x scorer) combinations — wide/narrow shuffle,
-    JVM expression fold vs Arrow einsum candidate scoring."""
+    bucket-grouped BLAS kernel, and the join kernel with and without
+    carried vectors (wide vs narrow shuffle)."""
     from medallion_data_pipeline_spark.operators import similarity as S
 
     emb = load_table(spark, "/root/testdata/sf0.01", "embeddings")
@@ -347,12 +346,11 @@ def test_embedding_lsh_ids_only_path_equals_default(spark):
               for r in S.embedding_lsh_pairs(emb, threshold=0.42).collect()}
     assert len(bucket) > 0
     for cv in (True, False):
-        for scorer in ("expr", "numpy"):
-            join = {(r.id_a, r.id_b): r.cosine
-                    for r in S.embedding_lsh_pairs(
-                        emb, threshold=0.42, kernel="join",
-                        carry_vectors=cv, scorer=scorer).collect()}
-            assert join == bucket, (cv, scorer)
+        join = {(r.id_a, r.id_b): r.cosine
+                for r in S.embedding_lsh_pairs(
+                    emb, threshold=0.42, kernel="join",
+                    carry_vectors=cv).collect()}
+        assert join == bucket, cv
 
 
 def test_embedding_kernels_fall_back_on_string_ids(spark):
@@ -1177,6 +1175,32 @@ def test_jsonl_shards_registry_keyed_by_file_stat(spark, tmp_path):
     d2 = L._jsonl_shards(spark, sf)
     assert d2 != d1                                # re-converted
     assert spark.read.json(d2).count() == 2
+
+
+def test_jsonl_shards_removed_at_exit(spark, tmp_path, monkeypatch):
+    """Every shard dir _jsonl_shards converts into is registered for
+    removal at process exit, so building jsonl_ingest_roundtrip leaves
+    no temp dir behind."""
+    import atexit
+
+    from medallion_data_pipeline_spark.queries import llmops as L
+
+    exits = []
+    monkeypatch.setattr(atexit, "register",
+                        lambda fn, *a, **kw: exits.append((fn, a, kw)))
+    sf = str(tmp_path / "sf")
+    spark.createDataFrame(
+        [(1, "a b", "en", "s", 3)],
+        "doc_id long, text string, lang string, source string, n_chars long"
+    ).coalesce(1).write.parquet(os.path.join(sf, "documents.parquet"))
+
+    shards = L._jsonl_shards(spark, sf)
+    assert os.path.isdir(shards)
+    mine = [(fn, a, kw) for fn, a, kw in exits if shards in a]
+    assert len(mine) == 1, exits
+    fn, a, kw = mine[0]
+    fn(*a, **kw)
+    assert not os.path.exists(shards)
 
 
 def test_doc_chunking_null_text_parity_with_oracle(spark, tmp_path):

@@ -10,6 +10,7 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
+from medallion_data_pipeline_spark._util import read_table
 from medallion_data_pipeline_spark.plans import bronze, fixtures, gold, quality, silver
 
 
@@ -24,7 +25,7 @@ def warehouse(spark, tmp_path_factory):
 
 
 def test_silver_rejects_are_audited(spark, warehouse):
-    rejected = spark.read.parquet(f"{warehouse}/audit/rejected_rows")
+    rejected = read_table(spark, warehouse, "audit", "rejected_rows")
     assert rejected.count() > 0
     reasons = {r.reason for r in rejected.select("reason").distinct().collect()}
     assert "invalid_quantity" in reasons or "invalid_order_date" in reasons
@@ -37,14 +38,14 @@ def test_silver_rejects_are_audited(spark, warehouse):
 
 
 def test_etl_log_counts_reconcile(spark, warehouse):
-    log = spark.read.parquet(f"{warehouse}/audit/etl_log")
+    log = read_table(spark, warehouse, "audit", "etl_log")
     for row in log.collect():
         assert row.rows_in == row.rows_out + row.rows_rejected
         assert row.rows_out > 0
 
 
 def test_silver_cleaning_applied(spark, warehouse):
-    orders = silver.read_silver(spark, warehouse, "supply_orders")
+    orders = read_table(spark, warehouse, "silver", "supply_orders")
     dtypes = dict(orders.dtypes)
     assert dtypes["quantity"] == "bigint"
     assert dtypes["order_date"] == "date"
@@ -54,20 +55,20 @@ def test_silver_cleaning_applied(spark, warehouse):
     assert statuses <= {"pending", "shipped", "delivered", "cancelled", "unknown"}
     # no rejected rows leaked
     assert orders.filter(F.col("quantity").isNull() | F.col("order_date").isNull()).count() == 0
-    products = silver.read_silver(spark, warehouse, "products")
+    products = read_table(spark, warehouse, "silver", "products")
     cats = {r.main_category for r in products.select("main_category").distinct().collect()}
     assert "Automotive Parts" in cats        # typo map canonicalized
     assert not any("autmootive" in c.lower() for c in cats)
 
 
 def test_gold_marts_nonempty_and_typed(spark, warehouse):
-    ms = gold.read_gold(spark, warehouse, "monthly_sales_performance")
+    ms = read_table(spark, warehouse, "gold", "monthly_sales_performance")
     assert ms.count() > 0
-    dash = gold.read_gold(spark, warehouse, "supply_chain_dashboard")
+    dash = read_table(spark, warehouse, "gold", "supply_chain_dashboard")
     assert dash.count() > 0
     # partitioned output: order_year_month is a partition column
     assert "order_year_month" in dash.columns
-    meta = gold.read_gold(spark, warehouse, "table_metadata")
+    meta = read_table(spark, warehouse, "gold", "table_metadata")
     assert meta.count() == 4
 
 
@@ -125,11 +126,11 @@ def test_reconciliation_exact_on_fixture_seeds(spark, tmp_path, seed):
 
 
 def test_legacy_gold_views(spark, warehouse):
-    inv = silver.read_silver(spark, warehouse, "inventory")
-    wh = silver.read_silver(spark, warehouse, "warehouses")
-    prod = silver.read_silver(spark, warehouse, "products")
-    orders = silver.read_silver(spark, warehouse, "supply_orders")
-    stores = silver.read_silver(spark, warehouse, "retail_stores")
+    inv = read_table(spark, warehouse, "silver", "inventory")
+    wh = read_table(spark, warehouse, "silver", "warehouses")
+    prod = read_table(spark, warehouse, "silver", "products")
+    orders = read_table(spark, warehouse, "silver", "supply_orders")
+    stores = read_table(spark, warehouse, "silver", "retail_stores")
 
     summary = gold.build_inventory_summary(inv, wh, prod)
     assert summary.count() > 0
@@ -158,13 +159,13 @@ def test_query_runner_sample_queries(spark, warehouse):
 
 def test_silver_rerun_is_idempotent(spark, warehouse):
     def audit_counts():
-        return {t: spark.read.parquet(f"{warehouse}/audit/{t}").count()
+        return {t: read_table(spark, warehouse, "audit", t).count()
                 for t in ("rejected_rows", "etl_log", "dq_results")}
 
-    before = {t: silver.read_silver(spark, warehouse, t).count()
+    before = {t: read_table(spark, warehouse, "silver", t).count()
               for t in silver.SILVER_TABLES}
     silver.run_silver(spark, warehouse, run_id="silver_test_2")
-    after = {t: silver.read_silver(spark, warehouse, t).count()
+    after = {t: read_table(spark, warehouse, "silver", t).count()
              for t in silver.SILVER_TABLES}
     assert before == after   # overwrite semantics: same input -> same output
     # a re-run under the same run id replaces that run's audit rows
@@ -196,7 +197,7 @@ def test_bronze_json_ingest(spark, tmp_path):
     wh = str(tmp_path / "wh_json")
     counts = B.ingest_json_dir(spark, str(jd), wh)
     assert counts["suppliers"] == 3  # 2 valid pks + 1 corrupt-record row
-    landed = spark.read.parquet(f"{wh}/bronze/suppliers")
+    landed = read_table(spark, wh, "bronze", "suppliers")
     assert "_corrupt_record" in landed.columns
     assert landed.filter(F.col("_corrupt_record").isNotNull()).count() == 1
     assert {r.supplier_id for r in landed.select("supplier_id").collect()} == {1, 2, None}
@@ -213,7 +214,7 @@ def test_silver_empty_table_yields_zero_counts(spark, tmp_path):
     results = {r.stage: r for r in silver.run_silver(spark, wh, run_id="e")}
     sup = results["suppliers"]
     assert (sup.rows_in, sup.rows_out) == (0, 0)
-    assert spark.read.parquet(f"{wh}/silver/suppliers").count() == 0
+    assert read_table(spark, wh, "silver", "suppliers").count() == 0
 
 
 def test_eda_report_generates_all_sections(spark, tmp_path):

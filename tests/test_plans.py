@@ -156,6 +156,19 @@ def test_grouping_sets_is_single_expand(fingerprints):
     assert row["Union"] == 0
 
 
+@pytest.mark.parametrize("name", ("event_id_islands", "quartile_bins"))
+def test_block_offset_ranking_single_partition_counts_only(fingerprints,
+                                                           name):
+    """Global row_number / exact ntile by block offsets: partitioned
+    row_number per key-range block plus broadcast cumulative block
+    counts. Only the tiny per-block counts frame crosses a single
+    partition (exactly one single exchange) — never the rows
+    themselves — and no pair scan ranks them."""
+    row = fingerprints[name]
+    assert row["exchange_single"] == 1, row
+    assert row["CartesianProduct"] == 0, row
+
+
 def test_phash_retrieval_is_block_equijoin(fingerprints):
     """dedup_image_phash: candidate retrieval must be the pigeonhole
     block EQUI-join on (blk, val) — a hash join, never a nested-loop

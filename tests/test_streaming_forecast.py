@@ -4,6 +4,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from medallion_data_pipeline_spark._util import read_table
 from medallion_data_pipeline_spark.sources import load_table
 from medallion_data_pipeline_spark.streaming import events as SE
 
@@ -58,7 +59,7 @@ def test_single_pass_forecast_equals_per_level(spark, tmp_path):
     wh = str(tmp_path / "wh")
     bronze.write_bronze(fixtures.generate_bronze(spark, n_orders=3000), wh)
     silver.run_silver(spark, wh, run_id="t")
-    orders = silver.read_silver(spark, wh, "supply_orders")
+    orders = read_table(spark, wh, "silver", "supply_orders")
     levels = ("product", "warehouse", "store")
 
     multi = forecasting.build_series_multi(orders, levels)
@@ -103,7 +104,7 @@ def test_forecast_fanout(spark, tmp_path):
     # run_id overwrite: second run replaces, first run stays
     fc2 = forecasting.run_forecasts(spark, wh, levels=("warehouse",), horizon=7, run_id="r2")
     assert fc2.count() > 0
-    both = spark.read.parquet(f"{wh}/gold/forecasts")
+    both = read_table(spark, wh, "gold", "forecasts")
     assert {r.run_id for r in both.select("run_id").distinct().collect()} == {"r1", "r2"}
     # the dynamic overwrite is per write: the session's mode is left as it was
     assert spark.conf.get("spark.sql.sources.partitionOverwriteMode") == overwrite_mode
@@ -337,7 +338,7 @@ def test_streaming_bronze_csv_ingest(spark, tmp_path):
 
     SI.run_csv_ingest(spark, str(land), wh, "suppliers", schema, cp)
     got = {r.supplier_id: r.supplier_name
-           for r in spark.read.parquet(f"{wh}/bronze/suppliers").collect()}
+           for r in read_table(spark, wh, "bronze", "suppliers").collect()}
     assert got == {1: "Acme Corp", 2: "Beta LLC"}
 
     # second landing file: one pk update, one new row
@@ -347,7 +348,7 @@ def test_streaming_bronze_csv_ingest(spark, tmp_path):
         "3,Gamma Inc,c@x.com,555-0003\n")
     SI.run_csv_ingest(spark, str(land), wh, "suppliers", schema, cp)
     got = {r.supplier_id: r.supplier_name
-           for r in spark.read.parquet(f"{wh}/bronze/suppliers").collect()}
+           for r in read_table(spark, wh, "bronze", "suppliers").collect()}
     assert got == {1: "Acme Corp", 2: "Beta Holdings", 3: "Gamma Inc"}
 
 
@@ -396,20 +397,20 @@ def test_streaming_incremental_dedup_ingest(spark, tmp_path):
     wh = str(tmp_path / "wh")
     SI.run_dedup_ingest(spark, str(land), wh, str(tmp_path / "cp1"))
 
-    docs = spark.read.parquet(f"{wh}/silver/documents")
+    docs = read_table(spark, wh, "silver", "documents")
     accepted = {r.doc_id for r in docs.select("doc_id").collect()}
     assert accepted == {1, 3, 5}
 
     # the index holds exactly the keepers' band rows
-    idx = spark.read.parquet(f"{wh}/silver/doc_band_index")
+    idx = read_table(spark, wh, "silver", "doc_band_index")
     assert {r.doc for r in idx.select("doc").distinct().collect()} == {1, 3, 5}
 
     # full replay with a fresh checkpoint: accepted ids are dropped by
     # the replay guard, rejected ids are re-flagged -> no growth
     SI.run_dedup_ingest(spark, str(land), wh, str(tmp_path / "cp2"))
-    docs2 = spark.read.parquet(f"{wh}/silver/documents")
+    docs2 = read_table(spark, wh, "silver", "documents")
     assert docs2.count() == 3
-    assert spark.read.parquet(f"{wh}/silver/doc_band_index").count() == idx.count()
+    assert read_table(spark, wh, "silver", "doc_band_index").count() == idx.count()
 
 
 def test_streaming_ingest_maintains_band_index_cap(spark, tmp_path):
@@ -454,8 +455,8 @@ def test_streaming_ingest_maintains_band_index_cap(spark, tmp_path):
         SI.run_dedup_ingest(
             spark, str(land), wh, str(tmp_path / f"cp_{wh_name}"),
             threshold=0.99, max_bucket=max_bucket)
-        docs = spark.read.parquet(f"{wh}/silver/documents")
-        idx = spark.read.parquet(f"{wh}/silver/doc_band_index")
+        docs = read_table(spark, wh, "silver", "documents")
+        idx = read_table(spark, wh, "silver", "doc_band_index")
         return ({r.doc_id for r in docs.select("doc_id").collect()},
                 idx.groupBy("band_key").count())
 
@@ -471,7 +472,7 @@ def test_streaming_ingest_maintains_band_index_cap(spark, tmp_path):
     assert full_sizes.agg(SF.max("count")).first()[0] > 3
     # earliest-accepted members retained: doc 1's rows survive capping
     wh = str(tmp_path / "wh_capped")
-    idx = spark.read.parquet(f"{wh}/silver/doc_band_index")
+    idx = read_table(spark, wh, "silver", "doc_band_index")
     assert idx.filter(SF.col("doc") == 1).count() > 0
 
 
@@ -730,9 +731,9 @@ def test_streaming_ingest_quality_gate(spark, tmp_path):
     wh = str(tmp_path / "wh")
     SI.run_dedup_ingest(spark, str(land), wh, str(tmp_path / "cp"),
                         quality_gate=True)
-    docs = spark.read.parquet(f"{wh}/silver/documents")
+    docs = read_table(spark, wh, "silver", "documents")
     assert {r.doc_id for r in docs.collect()} == {1}  # 2 gated, 3 deduped
-    idx = spark.read.parquet(f"{wh}/silver/doc_band_index")
+    idx = read_table(spark, wh, "silver", "doc_band_index")
     assert {r.doc for r in idx.select("doc").distinct().collect()} == {1}
 
 
@@ -886,7 +887,7 @@ def test_streaming_jsonl_url_canonical_dedup(spark, tmp_path):
                         str(tmp_path / "cp1"), pk=["canonical_url"],
                         canonicalize_url_from="url")
     first = {r.canonical_url: r.text
-             for r in spark.read.parquet(f"{wh}/bronze/pages").collect()}
+             for r in read_table(spark, wh, "bronze", "pages").collect()}
     assert first == {"http://example.com/a": "v1",
                      "https://other.net/b?a=1&b=2": "w1"}
 
@@ -899,7 +900,7 @@ def test_streaming_jsonl_url_canonical_dedup(spark, tmp_path):
                         str(tmp_path / "cp1"), pk=["canonical_url"],
                         canonicalize_url_from="url")
     rows = {r.canonical_url: (r.text, r.url_host)
-            for r in spark.read.parquet(f"{wh}/bronze/pages").collect()}
+            for r in read_table(spark, wh, "bronze", "pages").collect()}
     assert rows == {
         "http://example.com/a": ("v2", "example.com"),
         "https://other.net/b?a=1&b=2": ("w2", "other.net"),
@@ -910,7 +911,7 @@ def test_streaming_jsonl_url_canonical_dedup(spark, tmp_path):
                         str(tmp_path / "cp2"), pk=["canonical_url"],
                         canonicalize_url_from="url")
     again = {r.canonical_url: (r.text, r.url_host)
-             for r in spark.read.parquet(f"{wh}/bronze/pages").collect()}
+             for r in read_table(spark, wh, "bronze", "pages").collect()}
     assert again == rows
 
 
@@ -1007,7 +1008,7 @@ def test_streaming_jsonl_host_budget_cap(spark, tmp_path):
                    "http://b.net/1": "b1", "http://b.net/2": "b2"}
     capped = sorted(
         r.canonical_url for r in
-        spark.read.parquet(f"{wh}/audit/pages_host_capped").collect())
+        read_table(spark, wh, "audit", "pages_host_capped").collect())
     assert capped == ["http://a.com/3", "http://a.com/4"]
 
     # replay from scratch: keepers are already present -> updates,
@@ -1139,7 +1140,7 @@ def test_streaming_jsonl_host_budget_batch_dup_one_slot(spark, tmp_path):
                         str(tmp_path / "cp1"), pk=["canonical_url"],
                         canonicalize_url_from="url", host_budget=2)
     got = sorted(r.canonical_url
-                 for r in spark.read.parquet(f"{wh}/bronze/pages").collect())
+                 for r in read_table(spark, wh, "bronze", "pages").collect())
     assert got == ["http://a.com/1", "http://a.com/2"]
     import os as _os
     capped_root = f"{wh}/audit/pages_host_capped"
@@ -1179,7 +1180,7 @@ def test_streaming_phash_index_self_heals(spark, tmp_path):
 
     # the variant was flagged against the SELF-HEALED index…
     flags = {r.doc_id: r.dup_of for r in
-             spark.read.parquet(f"{wh}/audit/media_phash_dups").collect()}
+             read_table(spark, wh, "audit", "media_phash_dups").collect()}
     assert flags == {3: 1}
     # …and the index again holds exactly the keepers' fingerprints
     assert {r.doc_id for r in spark.read.parquet(idx).collect()} == {1}
@@ -1227,7 +1228,7 @@ def test_streaming_phash_incremental_dedup(spark, tmp_path):
     kept = {r.doc_id for r in spark.read.parquet(docs).collect()}
     assert kept == {1, 2, 4}
     flags = {r.doc_id: (r.dup_of, r.hamming) for r in
-             spark.read.parquet(f"{wh}/audit/media_phash_dups").collect()}
+             read_table(spark, wh, "audit", "media_phash_dups").collect()}
     assert flags[3][0] == 1 and flags[3][1] <= 4    # cross-batch
     assert flags[5] == (4, 0)                       # within-batch, lower id
     idx_ids = {r.doc_id for r in spark.read.parquet(idx).collect()}

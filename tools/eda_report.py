@@ -64,6 +64,7 @@ def main() -> int:
     ap.add_argument("--out", default="/tmp/mdp_eda_out")
     args = ap.parse_args()
 
+    from medallion_data_pipeline_spark._util import read_table
     from medallion_data_pipeline_spark.operators import profiling as P
     from medallion_data_pipeline_spark.plans import (bronze, fixtures, gold,
                                                      quality, silver)
@@ -83,7 +84,7 @@ def main() -> int:
     # 1. data quality ------------------------------------------------
     sec.append("## 1. Data quality")
     for name in silver.SILVER_TABLES:
-        df = silver.read_silver(spark, wh, name)
+        df = read_table(spark, wh, "silver", name)
         nulls = P.null_profile(df)
         worst_rows = nulls.orderBy(F.desc("pct_nulls")).limit(1).collect()
         dups = P.duplicate_count(df)
@@ -94,19 +95,18 @@ def main() -> int:
                      f"({float(w['pct_nulls']):.2f}%)")
         sec.append(line)
         _csv(nulls, args.out, f"nulls_{name}")
-    rejects = spark.read.parquet(os.path.join(wh, "audit", "rejected_rows"))
+    rejects = read_table(spark, wh, "audit", "rejected_rows")
     by_reason = rejects.groupBy("table_name", "reason") \
         .agg(F.count(F.lit(1)).alias("n")).orderBy(F.desc("n"))
     sec += ["", "Rejected rows by reason:", ""]
     sec += _md_table([r.asDict() for r in by_reason.limit(10).collect()])
-    n_rej = rejects.count()
-    insights.append(f"Validation rejected {n_rej} rows into the audit "
-                    "layer (top reasons tabled above) — audit-don't-drop")
+    insights.append(f"Validation rejected {rejects.count()} rows into the "
+                    "audit layer (top reasons tabled above) — audit-don't-drop")
     _csv(by_reason, args.out, "rejects_by_reason")
 
     # 2. overview ----------------------------------------------------
     sec.append("\n## 2. Supply chain overview")
-    orders = silver.read_silver(spark, wh, "supply_orders")
+    orders = read_table(spark, wh, "silver", "supply_orders")
     status = orders.groupBy("status").agg(
         F.count(F.lit(1)).alias("n")).orderBy(F.desc("n"))
     sec += _md_table([r.asDict() for r in status.collect()])
@@ -117,7 +117,7 @@ def main() -> int:
 
     # 3. financial ---------------------------------------------------
     sec.append("\n## 3. Financial analysis")
-    monthly = gold.read_gold(spark, wh, "monthly_sales_performance")
+    monthly = read_table(spark, wh, "gold", "monthly_sales_performance")
     kpis = monthly.agg(
         F.sum("total_revenue").alias("revenue"),
         F.sum("order_count").alias("orders")).collect()[0]
@@ -133,7 +133,7 @@ def main() -> int:
 
     # 4. inventory ---------------------------------------------------
     sec.append("\n## 4. Inventory analysis")
-    inv = gold.read_gold(spark, wh, "inventory_health_metrics")
+    inv = read_table(spark, wh, "gold", "inventory_health_metrics")
     stock_col = next((c for c in inv.columns if "status" in c), None)
     if stock_col:
         dist = inv.groupBy(stock_col).agg(F.count(F.lit(1)).alias("n"))
