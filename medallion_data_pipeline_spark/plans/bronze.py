@@ -17,10 +17,12 @@ whole table.
 
 from __future__ import annotations
 
+import csv
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 from .._util import StageRecorder, write_counted
 
@@ -71,15 +73,35 @@ def write_bronze(dfs: dict[str, DataFrame], warehouse: str) -> dict[str, int]:
     return {r.stage: r.rows_out for r in rec.results}
 
 
+def _csv_text_schema(path: str) -> StructType:
+    """The all-TEXT schema of a headed CSV file, named from its header
+    line as Spark's CSV reader names a header (an empty name becomes
+    ``_c<i>``; a name repeated case-insensitively gets its index
+    appended). Bronze lands every column as text, as the reference's
+    landing tables do (bronze/database_setup.py:62-175), so handing the
+    reader this schema replaces the header-inference job it would run
+    per file."""
+    with open(path, newline="", encoding="utf-8") as fh:
+        header = next(csv.reader(fh), [])
+    lowered = [h.lower() for h in header]
+    names = [f"_c{i}" if not h else
+             f"{h}{i}" if lowered.count(h.lower()) > 1 else h
+             for i, h in enumerate(header)]
+    return StructType([StructField(n, StringType()) for n in names])
+
+
 def ingest_csv_dir(spark: SparkSession, csv_dir: str, warehouse: str) -> dict[str, int]:
     """CSV ingest path (the Sheets-export equivalent of S1): PERMISSIVE
     mode tolerates short/dirty rows like the reference's row padding
-    (bronze/data_loader.py:74-77)."""
+    (bronze/data_loader.py:74-77). The schema comes from each file's
+    header line (:func:`_csv_text_schema`), so the read runs no Spark
+    job."""
     dfs = {}
     for name in BRONZE_TABLES:
         path = os.path.join(csv_dir, f"{name}.csv")
         if os.path.exists(path):
-            dfs[name] = spark.read.csv(path, header=True, mode="PERMISSIVE")
+            dfs[name] = spark.read.schema(_csv_text_schema(path)).csv(
+                path, header=True, mode="PERMISSIVE")
     return write_bronze(dfs, warehouse)
 
 

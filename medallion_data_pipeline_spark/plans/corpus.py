@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from .._util import StageRecorder, StageResult
+from .._util import StageRecorder, StageResult, read_parquet
 from ..functions import text as X
 from ..operators.dedup import exact_duplicates, minhash_near_duplicates
 from ..operators.graph import connected_components
@@ -184,7 +184,7 @@ def run_corpus_pipeline(spark: SparkSession, sf_dir: str, out_dir: str,
     # dataclass — ADVICE r15: reconstructing results[0] coupled the
     # patch to the stage's index and left a -1 sentinel on failure)
     rec.results[-1].rows_in = int(raw_obs.get["n"])
-    gated = spark.read.parquet(os.path.join(out_dir, "filtered"))
+    gated = read_parquet(spark, os.path.join(out_dir, "filtered"))
 
     t0 = time.time()
     # persisted: feeds its own count plus both sides of the near-dup

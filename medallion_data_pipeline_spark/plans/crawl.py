@@ -64,7 +64,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .corpus import quality_gate
-from .._util import StageRecorder, StageResult, write_counted
+from .._util import StageRecorder, StageResult, read_parquet, write_counted
 from ..sources.testdata import load_table
 
 #: landing contract for synthesized + real crawl shards
@@ -241,7 +241,7 @@ def _crawl_front(spark: SparkSession, landing_dir: str,
             raise
         fut_bad.result()
     n = rec.record("ingest", -1, n_good, t0)
-    bronze = spark.read.parquet(os.path.join(out_dir, "bronze"))
+    bronze = read_parquet(spark, os.path.join(out_dir, "bronze"))
 
     t0 = time.time()
     extracted = with_html_extraction(bronze, "html") \
@@ -249,26 +249,26 @@ def _crawl_front(spark: SparkSession, landing_dir: str,
                 F.col("text_extracted").alias("text"),
                 F.size("links").alias("n_links"))
     n = rec.write("html_extract", n, extracted, "extracted", t0)
-    extracted = spark.read.parquet(os.path.join(out_dir, "extracted"))
+    extracted = read_parquet(spark, os.path.join(out_dir, "extracted"))
 
     canon = with_canonical_url(extracted, "url")
     if robots_dir is not None:
         from ..functions.robots import with_robots_decision
 
         t0 = time.time()
-        robots = spark.read.parquet(robots_dir)
+        robots = read_parquet(spark, robots_dir)
         verdicts = with_robots_decision(canon, robots,
                                         agent=robots_agent)
         canon = canon.join(
             verdicts.filter(F.col("allowed")).select("doc_id"),
             "doc_id", "left_semi")
         n = rec.write("robots_gate", n, canon, "robotspass", t0)
-        canon = spark.read.parquet(os.path.join(out_dir, "robotspass"))
+        canon = read_parquet(spark, os.path.join(out_dir, "robotspass"))
 
     t0 = time.time()
     admitted = frontier_admit(canon)
     n = rec.write("canonicalize_frontier", n, admitted, "admitted", t0)
-    admitted = spark.read.parquet(os.path.join(out_dir, "admitted"))
+    admitted = read_parquet(spark, os.path.join(out_dir, "admitted"))
 
     t0 = time.time()
     # keep-lowest per canonical URL (crawl identity), then per content
@@ -307,7 +307,7 @@ def _crawl_back(spark: SparkSession, docs: DataFrame,
                     & (F.col("margin") > 0)).select("doc_id"),
         "doc_id", "left_semi")
     n_out = rec.write("langid_gate", n, kept, "langpass", t0)
-    kept = spark.read.parquet(os.path.join(rec.out_dir, "langpass"))
+    kept = read_parquet(spark, os.path.join(rec.out_dir, "langpass"))
 
     t0 = time.time()
     return rec.write("quality_gate", n_out, quality_gate(kept), "corpus",
@@ -435,7 +435,7 @@ def run_crawl_increment_epochs(spark: SparkSession, landing_dir: str,
     rec = StageRecorder(out_dir, stage_hook)
     n = _crawl_front(spark, landing_dir, rec, robots_dir=robots_dir,
                      robots_agent=robots_agent)
-    deduped = spark.read.parquet(os.path.join(out_dir, "deduped"))
+    deduped = read_parquet(spark, os.path.join(out_dir, "deduped"))
 
     bloom_root = os.path.join(seen_root, "bloom_epochs")
     t0 = time.time()
@@ -448,7 +448,7 @@ def run_crawl_increment_epochs(spark: SparkSession, landing_dir: str,
         # whole probe (deduped x ALL epoch filters) — guide §2.4
         pairs = K.bloom_epoch_hit_pairs_sized(
             deduped.select(F.col("digest").alias("item")),
-            spark.read.parquet(bloom_root)) \
+            read_parquet(spark, bloom_root)) \
             .select(F.col("item").alias("digest"), "epoch").persist()
         # which epochs actually hit: one tiny collect, then exact
         # verification reads ONLY the hit epochs' digest shards (by
@@ -459,8 +459,8 @@ def run_crawl_increment_epochs(spark: SparkSession, landing_dir: str,
                             .collect())
         verified = None
         for e in hit_epochs:
-            shard = spark.read.parquet(
-                os.path.join(seen_root, "digests", f"epoch={e}"))
+            shard = read_parquet(
+                spark, os.path.join(seen_root, "digests", f"epoch={e}"))
             v = pairs.filter(F.col("epoch") == e).select("digest") \
                 .join(shard, "digest", "left_semi")
             verified = v if verified is None else verified.unionByName(v)
@@ -471,7 +471,7 @@ def run_crawl_increment_epochs(spark: SparkSession, landing_dir: str,
         n_new = write_counted(new_docs, os.path.join(out_dir, "new_docs"))
         pairs.unpersist()
         rec.record("seen_filter", n, n_new, t0)
-        new_docs = spark.read.parquet(os.path.join(out_dir, "new_docs"))
+        new_docs = read_parquet(spark, os.path.join(out_dir, "new_docs"))
     else:
         # bootstrap: nothing was ever seen, so the landed deduped/ is
         # already the new docs — no copy

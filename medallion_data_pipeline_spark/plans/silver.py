@@ -45,19 +45,20 @@ def _split_and_write(raw: DataFrame, cleaned: DataFrame, reject_reason, name: st
     reference silver_builder.py:464-469) for the caller's batched
     audit write.
 
-    The flagged frame needs a lineage barrier — the valid/rejected
-    filters reference ``_reject_reason``, and without a barrier
-    predicate pushdown re-substitutes the full cleaning when-chains
-    into the filter condition (the products tree then exceeds janino's
-    64 KB method limit and falls back to interpreted eval, recomputing
-    every regex inside the condition: measured 2.9-3.8 s for the 50k
-    supply_orders chain). Of the two barriers, ``localCheckpoint
-    (eager=False)`` beats ``persist()`` here (1.3-1.4 s vs 1.6-2.2 s
-    steady-state and no first-call CacheManager spike — 5.3 s
-    observed): blocks materialize on the write action itself, and the
-    rejected pass reads them back without the cache-build overhead.
-    Costs the usual localCheckpoint trade: blocks free on GC (no
-    explicit unpersist) and executor loss fails the job instead of
+    The flagged frame needs a lineage barrier: the valid/rejected
+    filters reference ``_reject_reason``, and PushDownPredicates still
+    inlines it through the cleaners' staged projections
+    (functions/cleaning.py), so without a barrier each filter condition
+    re-evaluates the cleaning steps that the projections compute once
+    (the products tree then also exceeds janino's 64 KB method limit
+    and falls back to interpreted evaluation: 2.9-3.8 s measured for
+    the 50k supply_orders chain). Of the two barriers,
+    ``localCheckpoint(eager=False)`` beats ``persist()`` here (1.3-1.4
+    s vs 1.6-2.2 s steady-state and no first-call CacheManager spike,
+    5.3 s observed): blocks materialize on the write action itself,
+    and the rejected pass reads them back without the cache-build
+    overhead. Costs the usual localCheckpoint trade: blocks free on GC
+    (no explicit unpersist) and executor loss fails the job instead of
     recomputing — acceptable for a batch stage that reruns
     idempotently.
 
@@ -105,25 +106,22 @@ def _split_and_write(raw: DataFrame, cleaned: DataFrame, reject_reason, name: st
 
 
 def _expr_cache(build):
-    """Build a cleaner's (extra columns, reject reason) ONCE per
-    process and reapply forever. The trees are pure UNRESOLVED columns
-    (F.col by name, no DataFrame reference), so selecting the same
-    Column objects onto a new DataFrame is standard Spark — analysis
-    resolves them per-plan. Building them is NOT cheap: each clean_*
-    chain is hundreds of py4j round-trips (the 7-format date
-    precedence alone), the six cleaners cost ~3.9 s summed per
-    run_silver call, and because py4j calls serialize on the driver
-    GIL, the thread-pool overlap in run_silver cannot hide plan
-    construction the way it hides job latency — profiled as the
-    dominant cost of the 50k silver bench entry (docs/PERFORMANCE.md
-    #37). On a long-lived cluster driver this is the difference
-    between paying tree construction per micro-batch/run and paying
-    it once. run_silver calls the cleaners from
-    ``StageRecorder.fan_out``'s pool threads, so the first build is
-    double-checked-locked: without the lock two threads could race
-    past the empty check and both pay the py4j build (defeating the cache on the run that
-    matters most) — and the pattern would silently misbehave for any
-    future non-idempotent builder."""
+    """Build a cleaner's (layers, output columns, reject reason) ONCE
+    per process and reapply forever. The layers are pure UNRESOLVED
+    columns (F.col by name, no DataFrame reference), so selecting the
+    same Column objects onto a new DataFrame is standard Spark —
+    analysis resolves them per-plan. Building them is hundreds of py4j
+    round-trips (all six tables: 0.25-0.38 s on a warm 4-core driver),
+    and because py4j calls serialize on the driver GIL, the thread-pool
+    overlap in run_silver cannot hide plan construction the way it
+    hides job latency: a warm run_silver over 50K orders took a median
+    1.44 s rebuilding them and 1.20 s reusing them (6 alternating
+    pairs). run_silver calls the cleaners from ``StageRecorder.fan_out``'s
+    pool threads, so the first build is double-checked-locked: without
+    the lock two threads could race past the empty check and both pay
+    the py4j build (defeating the cache on the run that matters most)
+    — and the pattern would silently misbehave for any future
+    non-idempotent builder."""
     import threading
 
     box: list = []
@@ -138,106 +136,111 @@ def _expr_cache(build):
     return get
 
 
+def _cleaned(df: DataFrame, plan) -> tuple[DataFrame, object]:
+    """``df`` with a table's cleaned columns appended after its own."""
+    layers, outputs, reason = plan()
+    return C.apply_layers(df, layers, keep=[*df.columns, *outputs]), reason
+
+
 @_expr_cache
-def _supplier_exprs():
-    name = C.clean_text_field("supplier_name")
-    cols = [
-        name.alias("supplier_name_clean"),
-        C.clean_email("contact_email").alias("contact_email_clean"),
-        C.clean_phone("phone_number").alias("phone_number_clean"),
-        C.quality_score(
+def _supplier_plan():
+    name = F.col("supplier_name_clean")
+    layers = [
+        *C.stack(C.text_layers("supplier_name", "supplier_name_clean"),
+                 C.email_layers("contact_email", "contact_email_clean"),
+                 C.phone_layers("phone_number", "phone_number_clean")),
+        [("quality_score", C.quality_score(
             [name.isNull() | (name != F.col("supplier_name")),
-             C.clean_email("contact_email").isNull(),
-             C.clean_phone("phone_number").isNull()], 3).alias("quality_score"),
+             F.col("contact_email_clean").isNull(),
+             F.col("phone_number_clean").isNull()], 3))],
     ]
+    outputs = ["supplier_name_clean", "contact_email_clean",
+               "phone_number_clean", "quality_score"]
     # reject: missing essentials (reference silver_builder.py:566-576)
-    reason = F.when(F.col("supplier_name_clean").isNull(), "missing_supplier_name")
-    return cols, reason
+    return layers, outputs, F.when(name.isNull(), "missing_supplier_name")
 
 
 def clean_suppliers(df: DataFrame) -> tuple[DataFrame, object]:
-    cols, reason = _supplier_exprs()
-    return df.select("*", *cols), reason
+    return _cleaned(df, _supplier_plan)
 
 
 @_expr_cache
-def _product_exprs():
-    name = C.clean_text_field("product_name")
-    cost = C.clean_numeric_field("unit_cost")
-    price = C.clean_numeric_field("selling_price")
-    cols = [
-        name.alias("product_name_clean"),
-        cost.alias("unit_cost_clean"),
-        price.alias("selling_price_clean"),
-        C.clean_status_field("status", C.PRODUCT_STATUS_MAP).alias("status_clean"),
+def _product_plan():
+    cost, price = F.col("unit_cost_clean"), F.col("selling_price_clean")
+    layers = [
+        *C.stack(C.category_layers("product_category"),
+                 C.text_layers("product_name", "product_name_clean"),
+                 C.numeric_layers("unit_cost", "unit_cost_clean"),
+                 C.numeric_layers("selling_price", "selling_price_clean"),
+                 C.status_layers("status", "status_clean", C.PRODUCT_STATUS_MAP)),
         # price_margin: 0 when cost <= 0 (reference silver_builder.py:688)
-        F.when(cost > 0, F.round(price - cost, 4)).otherwise(F.lit(0.0)).alias("price_margin"),
-        C.quality_score([name != F.col("product_name"), cost.isNull(), price.isNull()], 3)
-        .alias("quality_score"),
+        [("price_margin", F.when(cost > 0, F.round(price - cost, 4))
+          .otherwise(F.lit(0.0))),
+         ("quality_score", C.quality_score(
+             [F.col("product_name_clean") != F.col("product_name"),
+              cost.isNull(), price.isNull()], 3))],
     ]
+    outputs = ["main_category", "sub_category", "product_name_clean",
+               "unit_cost_clean", "selling_price_clean", "status_clean",
+               "price_margin", "quality_score"]
     reason = (
         F.when(F.col("product_name_clean").isNull(), "missing_product_name")
-        .when(F.col("unit_cost_clean").isNull(), "invalid_unit_cost")
-        .when(F.col("selling_price_clean").isNull(), "invalid_selling_price")
+        .when(cost.isNull(), "invalid_unit_cost")
+        .when(price.isNull(), "invalid_selling_price")
     )
-    return cols, reason
+    return layers, outputs, reason
 
 
 def clean_products(df: DataFrame) -> tuple[DataFrame, object]:
-    staged = C.with_parsed_category(df, "product_category", "main_category", "sub_category")
-    cols, reason = _product_exprs()
-    return staged.select("*", *cols), reason
+    return _cleaned(df, _product_plan)
 
 
 @_expr_cache
-def _warehouse_exprs():
-    cols = [
-        C.clean_text_field("warehouse_name").alias("warehouse_name_clean"),
-        C.clean_text_field("city").alias("city_clean"),
-        C.clean_text_field("region").alias("region_clean"),
-        C.clean_integer_field("storage_capacity").alias("storage_capacity_clean"),
-    ]
+def _warehouse_plan():
+    layers = C.stack(
+        C.text_layers("warehouse_name", "warehouse_name_clean"),
+        C.text_layers("city", "city_clean"),
+        C.text_layers("region", "region_clean"),
+        C.integer_layers("storage_capacity", "storage_capacity_clean"))
+    outputs = ["warehouse_name_clean", "city_clean", "region_clean",
+               "storage_capacity_clean"]
     reason = F.when(F.col("warehouse_name_clean").isNull(), "missing_warehouse_name")
-    return cols, reason
+    return layers, outputs, reason
 
 
 def clean_warehouses(df: DataFrame) -> tuple[DataFrame, object]:
-    cols, reason = _warehouse_exprs()
-    return df.select("*", *cols), reason
+    return _cleaned(df, _warehouse_plan)
 
 
 @_expr_cache
-def _retail_store_exprs():
-    cols = [
-        C.clean_text_field("store_name").alias("store_name_clean"),
-        C.clean_text_field("city").alias("city_clean"),
-        C.clean_text_field("region").alias("region_clean"),
-        C.clean_text_field("store_type").alias("store_type_clean"),
-        C.clean_status_field("store_status", C.STORE_STATUS_MAP).alias("store_status_clean"),
-    ]
+def _retail_store_plan():
+    layers = C.stack(
+        C.text_layers("store_name", "store_name_clean"),
+        C.text_layers("city", "city_clean"),
+        C.text_layers("region", "region_clean"),
+        C.text_layers("store_type", "store_type_clean"),
+        C.status_layers("store_status", "store_status_clean", C.STORE_STATUS_MAP))
+    outputs = ["store_name_clean", "city_clean", "region_clean",
+               "store_type_clean", "store_status_clean"]
     reason = F.when(F.col("store_name_clean").isNull(), "missing_store_name")
-    return cols, reason
+    return layers, outputs, reason
 
 
 def clean_retail_stores(df: DataFrame) -> tuple[DataFrame, object]:
-    cols, reason = _retail_store_exprs()
-    return df.select("*", *cols), reason
+    return _cleaned(df, _retail_store_plan)
 
 
 @_expr_cache
-def _inventory_exprs():
-    cols = [
-        C.clean_date_field("last_stocked_date").alias("last_stocked_date_clean"),
-    ]
+def _inventory_plan():
+    layers = C.date_layers("last_stocked_date", "last_stocked_date_clean")
     # negative quantity -> reject (reference silver_builder.py:1052-1063;
     # bronze kept the sign, FIXTURES.md §4)
     reason = F.when(F.col("quantity_on_hand") < 0, "negative_quantity")
-    return cols, reason
+    return layers, ["last_stocked_date_clean"], reason
 
 
 def clean_inventory(df: DataFrame) -> tuple[DataFrame, object]:
-    cols, reason = _inventory_exprs()
-    return df.select("*", *cols), reason
+    return _cleaned(df, _inventory_plan)
 
 
 def _calc_ok(invoice, qty, price):
@@ -250,47 +253,44 @@ def _calc_ok(invoice, qty, price):
 
 
 @_expr_cache
-def _supply_order_exprs():
-    qty = C.clean_integer_field("quantity")
-    price = C.clean_numeric_field("price")
-    invoice = C.clean_numeric_field("total_invoice")
-    od = C.clean_date_field("order_date")
-    sd = C.clean_date_field("shipped_date")
-    dd = C.clean_date_field("delivered_date")
-    cols = [
-        "supply_order_id",
-        C.clean_integer_field("product_id").alias("product_id"),
-        C.clean_integer_field("warehouse_id").alias("warehouse_id"),
-        C.clean_integer_field("retail_store_id").alias("retail_store_id"),
-        qty.alias("quantity"),
-        price.alias("price"),
-        invoice.alias("total_invoice"),
-        od.alias("order_date"),
-        sd.alias("shipped_date"),
-        dd.alias("delivered_date"),
-        C.clean_status_field("status", C.ORDER_STATUS_MAP).alias("status"),
+def _supply_order_plan():
+    """The cleaned columns replace their raw namesakes, so they are
+    built as ``_<name>`` and renamed by the final projection."""
+    ints = ("product_id", "warehouse_id", "retail_store_id", "quantity")
+    nums = ("price", "total_invoice")
+    dates = ("order_date", "shipped_date", "delivered_date")
+    qty, price, invoice, od, sd, dd = (
+        F.col(f"_{c}") for c in ("quantity", *nums, *dates))
+    layers = [
+        *C.stack(*(C.integer_layers(c, f"_{c}") for c in ints),
+                 *(C.numeric_layers(c, f"_{c}") for c in nums),
+                 *(C.date_layers(c, f"_{c}") for c in dates),
+                 C.status_layers("status", "_status", C.ORDER_STATUS_MAP)),
         # validation flags (reference silver_builder.py:964-981, 402-403):
         # the calc check only fires when total_invoice is truthy (NULL or
         # 0 keeps the flag True — the reference's falsy guard), and date
         # logic is invalid when shipped < order OR delivered < shipped.
-        _calc_ok(invoice, qty, price).alias("is_calculation_correct"),
-        ((sd.isNull() | od.isNull() | (sd >= od))
-         & (dd.isNull() | sd.isNull() | (dd >= sd))).alias("date_logic_valid"),
-        C.quality_score(
+        [("is_calculation_correct", _calc_ok(invoice, qty, price)),
+         ("date_logic_valid", (sd.isNull() | od.isNull() | (sd >= od))
+          & (dd.isNull() | sd.isNull() | (dd >= sd)))],
+        [("quality_score", C.quality_score(
             [qty.isNull(), price.isNull(), od.isNull(),
-             ~_calc_ok(invoice, qty, price)], 4).alias("quality_score"),
+             ~F.col("is_calculation_correct")], 4))],
     ]
+    keep = ["supply_order_id",
+            *(F.col(f"_{c}").alias(c) for c in (*ints, *nums, *dates, "status")),
+            "is_calculation_correct", "date_logic_valid", "quality_score"]
     reason = (
         F.when(F.col("quantity").isNull(), "invalid_quantity")
         .when(F.col("price").isNull(), "invalid_price")
         .when(F.col("order_date").isNull(), "invalid_order_date")
     )
-    return cols, reason
+    return layers, keep, reason
 
 
 def clean_supply_orders(df: DataFrame) -> tuple[DataFrame, object]:
-    cols, reason = _supply_order_exprs()
-    return df.select(*cols), reason
+    layers, keep, reason = _supply_order_plan()
+    return C.apply_layers(df, layers, keep=keep), reason
 
 
 _CLEANERS = {
@@ -352,9 +352,8 @@ def run_silver(spark: SparkSession, warehouse: str,
     # the three audit sinks land in distinct directories, so their
     # jobs overlap safely (the per-DIRECTORY committer constraint
     # that batches all rejected rows into one write still holds);
-    # the rejected union recomputes each table's cleaning projection
-    # off the bronze scan — cheaper than the persist it replaced
-    # (see _split_and_write) and overlapped here anyway
+    # the rejected union reads each table's checkpointed flagged rows
+    # (see _split_and_write)
     sinks = {
         "rejected_rows": (n_rejected, reduce(
             DataFrame.unionByName, [rejected for _, rejected in outcomes])),

@@ -3,7 +3,7 @@ r"""Cleaning-operator queries (SURVEY §2.7 F1-F19 / §2.9 U1).
 The driver testdata is clean, so each query first MANUFACTURES dirty
 values deterministically from real columns (mod-keyed variants: wrapped
 currency, mixed date formats, shouting text, status codes), then cleans
-them with the engine's column-expression cleaner library. The oracle
+them with the engine's layered cleaner library. The oracle
 re-implements the reference cleaning semantics in ANSI SQL, so a
 hash-match proves behavioral parity of the cleaners themselves — the
 hardest-to-verify semantics in the reference (SURVEY §7 "hard parts").
@@ -51,7 +51,7 @@ def _sql_sentinel_null_py(expr: str) -> str:
 
 
 # ---------------------------------------------------------------------------
-# q20 — clean_numeric_field parity (F4): currency strip, extraction,
+# q20 — numeric cleaner parity (F4): currency strip, extraction,
 # negative clamp, 4-dp rounding.
 # ---------------------------------------------------------------------------
 
@@ -81,7 +81,7 @@ FROM ext
 
 @register("clean_numeric_parity", oracle=_CLEAN_NUMERIC_SQL)
 def clean_numeric_parity(spark, sf_dir):
-    """clean_numeric_field over manufactured dirty currency strings
+    """numeric_layers over manufactured dirty currency strings
     (reference silver_builder.py:94-132): sentinel->NULL, '$'/commas
     stripped, negatives clamped to 0, rounded to 4 dp."""
     o = t(spark, sf_dir, "orders")
@@ -93,11 +93,13 @@ def clean_numeric_parity(spark, sf_dir):
         .when(F.col("o_orderkey") % 5 == 3, F.concat(F.lit("approx "), price_str))
         .otherwise(price_str)
     )
-    return o.select("o_orderkey", C.clean_numeric_field(raw).alias("cleaned_price"))
+    return C.apply_layers(o.select("o_orderkey", raw.alias("raw")),
+                          C.numeric_layers("raw", "cleaned_price"),
+                          keep=["o_orderkey", "cleaned_price"])
 
 
 # ---------------------------------------------------------------------------
-# q21 — clean_date_field parity (F6): seven-format ordered precedence.
+# q21 — date cleaner parity (F6): seven-format ordered precedence.
 # ---------------------------------------------------------------------------
 
 _CLEAN_DATE_SQL = """
@@ -130,7 +132,7 @@ FROM base
 
 @register("clean_date_parity", oracle=_CLEAN_DATE_SQL)
 def clean_date_parity(spark, sf_dir):
-    """clean_date_field over four mixed date formats + sentinels
+    """date_layers over four mixed date formats + sentinels
     (reference silver_builder.py:153-185) — ordered precedence means
     ambiguous mm/dd strings resolve US-style, and the round-trip is
     still the identity on the originals."""
@@ -143,14 +145,15 @@ def clean_date_parity(spark, sf_dir):
         .when(k == 3, F.date_format("o_orderdate", "yyyy/MM/dd"))
         .otherwise(F.lit("TBD"))
     )
-    return o.select(
-        "o_orderkey",
-        F.date_format(C.clean_date_field(raw), "yyyy-MM-dd").alias("cleaned_date"),
-    )
+    return C.apply_layers(
+        o.select("o_orderkey", raw.alias("raw")),
+        C.date_layers("raw", "cleaned_date"),
+        keep=["o_orderkey",
+              F.date_format("cleaned_date", "yyyy-MM-dd").alias("cleaned_date")])
 
 
 # ---------------------------------------------------------------------------
-# q22 — clean_text_field parity (F1): whitespace collapse, mono-case
+# q22 — text cleaner parity (F1): whitespace collapse, mono-case
 # title-casing, edge-punctuation strip.
 # ---------------------------------------------------------------------------
 
@@ -197,7 +200,7 @@ FROM stripped
 
 @register("clean_text_parity", oracle=_CLEAN_TEXT_SQL)
 def clean_text_parity(spark, sf_dir):
-    """clean_text_field over shouting/whispering/punct-wrapped strings
+    """text_layers over shouting/whispering/punct-wrapped strings
     (reference silver_builder.py:36-57), plus Unicode-whitespace rows
     (NEL/NBSP/LS/ideographic space) that pin the Python-``\\s`` parity
     semantics of PY_WS/PY_WORD — the '\\r\\x850' -> '0' shape that
@@ -216,11 +219,13 @@ def clean_text_parity(spark, sf_dir):
         .when(k == 6, F.lit(" NULL"))
         .otherwise(F.concat(F.lit("\r"), (F.col("c_custkey") % 10).cast("string")))
     )
-    return c.select("c_custkey", C.clean_text_field(raw).alias("cleaned_text"))
+    return C.apply_layers(c.select("c_custkey", raw.alias("raw")),
+                          C.text_layers("raw", "cleaned_text"),
+                          keep=["c_custkey", "cleaned_text"])
 
 
 # ---------------------------------------------------------------------------
-# q23 — clean_status_field parity (F7): variant canonicalization.
+# q23 — status cleaner parity (F7): variant canonicalization.
 # ---------------------------------------------------------------------------
 
 _ORDERSTATUS_MAP = {
@@ -253,7 +258,7 @@ SELECT status, COUNT(*) AS n FROM canon GROUP BY status
 
 @register("clean_status_parity", oracle=_CLEAN_STATUS_SQL)
 def clean_status_parity(spark, sf_dir):
-    """clean_status_field variant mapping + sentinel->'unknown'
+    """status_layers variant mapping + sentinel->'unknown'
     (reference silver_builder.py:187-202)."""
     o = t(spark, sf_dir, "orders")
     k = F.col("o_orderkey") % 3
@@ -263,7 +268,9 @@ def clean_status_parity(spark, sf_dir):
         .otherwise(F.lit("N/A"))
     )
     return (
-        o.select(C.clean_status_field(raw, _ORDERSTATUS_MAP).alias("status"))
+        C.apply_layers(o.select(raw.alias("raw")),
+                       C.status_layers("raw", "status", _ORDERSTATUS_MAP),
+                       keep=["status"])
         .groupBy("status")
         .agg(F.count(F.lit(1)).alias("n"))
     )
@@ -280,7 +287,7 @@ def clean_status_parity(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 def _sql_clean_text_stages(expr: str, prefix: str) -> str:
-    """clean_text_field as lateral-alias SELECT stages; final value is
+    """text_layers as lateral-alias SELECT stages; final value is
     ``{prefix}_cleaned``. ASCII dual (fixture contract: no Unicode)."""
     return f"""
            {_sql_sentinel_null(expr)} AS {prefix}_s,
@@ -384,7 +391,7 @@ FROM fixed
 
 @register("clean_category_parity", oracle=_CLEAN_CATEGORY_SQL)
 def clean_category_parity(spark, sf_dir):
-    """with_parsed_category over manufactured dirty categories
+    """category_layers over manufactured dirty categories
     (reference parse_category_field, silver_builder.py:206-278):
     separator precedence ('>' family before '-' before '|' before
     '/'), typo canonicalization on both levels, ' Parts' suffix
@@ -404,8 +411,8 @@ def clean_category_parity(spark, sf_dir):
         .otherwise(F.lit("a>b-c"))
     )
     df = p.select("p_partkey", raw.alias("raw_category"))
-    df = C.with_parsed_category(df, "raw_category")
-    return df.select("p_partkey", "main_category", "sub_category")
+    return C.apply_layers(df, C.category_layers("raw_category"),
+                          keep=["p_partkey", "main_category", "sub_category"])
 
 
 # ---------------------------------------------------------------------------

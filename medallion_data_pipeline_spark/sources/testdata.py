@@ -18,6 +18,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .._util import read_parquet
+
 TABLES = (
     "region",
     "nation",
@@ -74,8 +76,11 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ensure_utc_session(spark)
     path = os.path.join(sf_dir, f"{name}.parquet")
     nano_cols = NANO_TS_COLUMNS.get(name, ())
-    if nano_cols:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    if not nano_cols:
+        return read_parquet(spark, path)
+    # the one inferred read: whether ``ts`` arrives as TIMESTAMP(NANOS)
+    # read as raw longs or as NTZ micros is Spark's inference to make
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     df = spark.read.parquet(path)
     dtypes = dict(df.dtypes)
     for c in nano_cols:

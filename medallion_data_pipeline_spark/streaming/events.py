@@ -20,6 +20,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .._util import read_parquet
+
 EVENT_SCHEMA = T.StructType([
     T.StructField("event_id", T.LongType()),
     T.StructField("ts", T.TimestampType()),
@@ -197,7 +199,7 @@ def merge_sink(path: str, pk: list[str]):
         spark = batch_df.sparkSession
         batch = batch_df.dropDuplicates(pk)
         if os.path.isdir(path):
-            merged = merge_upsert(spark.read.parquet(path), batch, pk)
+            merged = merge_upsert(read_parquet(spark, path), batch, pk)
         else:
             merged = batch
         staging = path + ".staging"

@@ -23,6 +23,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .._util import read_parquet
 from ..plans.bronze import PRIMARY_KEYS
 from .events import merge_sink
 
@@ -122,7 +123,7 @@ def dedup_ingest_sink(warehouse: str, threshold: float = 0.4,
             batch = _gate(batch)
         have_corpus = os.path.isdir(docs_path)
         if have_corpus:
-            corpus = spark.read.parquet(docs_path)
+            corpus = read_parquet(spark, docs_path)
             # replay guard: already-accepted ids are no-ops
             batch = batch.join(corpus.select("doc_id"), "doc_id", "left_anti")
         batch = batch.persist()
@@ -140,7 +141,7 @@ def dedup_ingest_sink(warehouse: str, threshold: float = 0.4,
                                  bands=bands).localCheckpoint(eager=True)
         try:
             if have_corpus:
-                idx = spark.read.parquet(idx_path)
+                idx = read_parquet(spark, idx_path)
                 flagged = incremental_near_duplicates(
                     corpus, batch, k=k, num_hashes=num_hashes, bands=bands,
                     threshold=threshold, corpus_index=idx,
@@ -184,7 +185,7 @@ def dedup_ingest_sink(warehouse: str, threshold: float = 0.4,
                     # into the aggregation
                     touched = new_idx.select("band_key").distinct()
                     have = (
-                        spark.read.parquet(idx_path)
+                        read_parquet(spark, idx_path)
                         .join(F.broadcast(touched), "band_key",
                               "left_semi")
                         .groupBy("band_key")
@@ -315,7 +316,7 @@ def jsonl_bronze_sink(warehouse: str, table: str, pk: list[str],
             good = good.dropDuplicates(pk)
             spark = batch_df.sparkSession
             if os.path.isdir(target):
-                existing = spark.read.parquet(target)
+                existing = read_parquet(spark, target)
                 keys = existing.select(*pk).dropDuplicates(pk)
                 upd = good.join(keys, pk, "left_semi")
                 new = good.join(keys, pk, "left_anti")
@@ -401,7 +402,7 @@ def read_cms_counters(spark: SparkSession, warehouse: str) -> DataFrame:
     from ..operators import sketch as K
 
     root = os.path.join(warehouse, "sketch", "cms")
-    return K.merge_counters(spark.read.parquet(root).select("j", "b", "c"))
+    return K.merge_counters(read_parquet(spark, root).select("j", "b", "c"))
 
 
 def run_cms_stream(spark: SparkSession, docs_dir: str, warehouse: str,
@@ -451,7 +452,7 @@ def read_bloom_bits(spark: SparkSession, warehouse: str) -> DataFrame:
     from ..operators import sketch as K
 
     root = os.path.join(warehouse, "sketch", "bloom")
-    return K.merge_bloom(spark.read.parquet(root).select("word_idx", "bits"))
+    return K.merge_bloom(read_parquet(spark, root).select("word_idx", "bits"))
 
 
 def _bloom_epoch_assignments(meta_rows, epoch_rows: int):
@@ -519,7 +520,7 @@ def bloom_epoch_stream_sink(warehouse: str, item_col: str = "item",
         prior = []
         if os.path.isdir(meta_root):
             prior = [(int(r.batch_id), int(r.n_items))
-                     for r in spark.read.parquet(meta_root).collect()
+                     for r in read_parquet(spark, meta_root).collect()
                      if int(r.batch_id) != batch_id]
         assign, newest = _bloom_epoch_assignments(prior + [(batch_id, n)],
                                                   epoch_rows)
@@ -554,7 +555,7 @@ def read_bloom_epoch_bits(spark: SparkSession, warehouse: str,
     ``live_epochs`` epochs — the frame bloom_epochs_might_contain
     probes against."""
     root = os.path.join(warehouse, "sketch", "bloom_epochs")
-    df = spark.read.option("basePath", root).parquet(root)
+    df = read_parquet(spark, root)
     epochs = sorted(int(r.epoch) for r in df.select("epoch")
                     .dropDuplicates(["epoch"]).collect())
     live = set(epochs[-live_epochs:])
@@ -662,7 +663,7 @@ def phash_ingest_sink(warehouse: str, max_distance: int = 4):
         batch = batch_df.select("doc_id", "text").dropDuplicates(["doc_id"])
         have = os.path.isdir(docs_path)
         if have:
-            docs = spark.read.parquet(docs_path)
+            docs = read_parquet(spark, docs_path)
             if not healed["done"]:
                 # self-heal the index ONCE per sink lifetime (see
                 # docstring): the docs/index gap can only exist at
@@ -673,7 +674,7 @@ def phash_ingest_sink(warehouse: str, max_distance: int = 4):
                 # tax for provably-empty healing.
                 if os.path.isdir(idx_path):
                     missing = docs.join(
-                        spark.read.parquet(idx_path).select("doc_id"),
+                        read_parquet(spark, idx_path).select("doc_id"),
                         "doc_id", "left_anti")
                 else:
                     missing = docs
@@ -693,7 +694,7 @@ def phash_ingest_sink(warehouse: str, max_distance: int = 4):
         # there (same self-read guard as dedup_ingest_sink)
         fps = phash_binary(with_binary_payload(batch, "text"),
                            decoder="stub").localCheckpoint(eager=True)
-        idx = (spark.read.parquet(idx_path) if os.path.isdir(idx_path)
+        idx = (read_parquet(spark, idx_path) if os.path.isdir(idx_path)
                else spark.createDataFrame([], "doc_id long, phash long"))
         flagged = phash_incremental_flags(
             idx, fps, max_distance=max_distance).localCheckpoint(eager=True)

@@ -1,4 +1,4 @@
-"""Unit tests for the cleaning column-expression library.
+"""Unit tests for the layered cleaning library.
 
 Each case pins a documented reference behavior (file:line cited in
 functions/cleaning.py docstrings), including the deliberate quirks:
@@ -15,14 +15,15 @@ from pyspark.sql import functions as F
 from medallion_data_pipeline_spark.functions import cleaning as C
 
 
-def _run(spark, col_fn, values):
+def _run(spark, layers_fn, values):
     df = spark.createDataFrame([(v,) for v in values], "raw string")
-    return [r.out for r in df.select(col_fn(F.col("raw")).alias("out")).collect()]
+    cleaned = C.apply_layers(df, layers_fn("raw", "out"), keep=["out"])
+    return [r.out for r in cleaned.collect()]
 
 
 def test_null_sentinels(spark):
     vals = ["NULL", "n/a", "TBD", "unknown", "", "  ", "NONE", "nil", "ok"]
-    out = _run(spark, C.nullify_sentinels, vals)
+    out = _run(spark, C.sentinel_layers, vals)
     assert out == [None] * 8 + ["ok"]
 
 
@@ -37,7 +38,7 @@ def test_clean_text_field(spark):
         "   ": None,
         "123": "123",                            # no cased chars -> no title-case
     }
-    out = _run(spark, C.clean_text_field, list(cases))
+    out = _run(spark, C.text_layers, list(cases))
     expected = list(cases.values())
     # first case is actually mixed-case ('ACME corp'), stays as-is after collapse
     expected[0] = "ACME corp"
@@ -62,7 +63,7 @@ def test_clean_text_unicode_whitespace_parity(spark):
         "***\x85***": None,                 # whitespace-only after edge strip -> NULL
         "\x85": None,
     }
-    out = _run(spark, C.clean_text_field, list(cases))
+    out = _run(spark, C.text_layers, list(cases))
     assert out == list(cases.values())
 
 
@@ -74,7 +75,7 @@ def test_clean_email(spark):
         "x@y": None,
         "NULL": None,
     }
-    assert _run(spark, C.clean_email, list(cases)) == list(cases.values())
+    assert _run(spark, C.email_layers, list(cases)) == list(cases.values())
 
 
 def test_clean_phone(spark):
@@ -84,7 +85,7 @@ def test_clean_phone(spark):
         "12345": None,
         "N/A": None,
     }
-    assert _run(spark, C.clean_phone, list(cases)) == list(cases.values())
+    assert _run(spark, C.phone_layers, list(cases)) == list(cases.values())
 
 
 def test_clean_numeric_field(spark):
@@ -96,11 +97,11 @@ def test_clean_numeric_field(spark):
         "price: 42 usd": 42.0,
         "NULL": None,
     }
-    assert _run(spark, C.clean_numeric_field, list(cases)) == list(cases.values())
+    assert _run(spark, C.numeric_layers, list(cases)) == list(cases.values())
 
 
 def test_clean_numeric_allow_negative(spark):
-    out = _run(spark, lambda c: C.clean_numeric_field(c, allow_negative=True), ["-5.5"])
+    out = _run(spark, lambda src, out: C.numeric_layers(src, out, allow_negative=True), ["-5.5"])
     assert out == [-5.5]
 
 
@@ -111,13 +112,15 @@ def test_clean_integer_sign_drop_quirk(spark):
         "1,000 units": 1000,
         "none": None,
     }
-    assert _run(spark, C.clean_integer_field, list(cases)) == list(cases.values())
+    assert _run(spark, C.integer_layers, list(cases)) == list(cases.values())
 
 
 def test_bronze_extract_int_keeps_sign(spark):
-    # bronze extract_int allows negatives (data_loader.py:437) — the
-    # bronze/silver asymmetry is deliberate (FIXTURES.md §4)
-    assert _run(spark, C.extract_int, ["-5"]) == [-5]
+    # bronze's lenient int extraction allows negatives
+    # (data_loader.py:437) — the bronze/silver asymmetry is deliberate
+    # (FIXTURES.md §4)
+    signed = lambda src, out: C.integer_layers(src, out, signed=True)
+    assert _run(spark, signed, ["-5"]) == [-5]
 
 
 def test_clean_date_ordered_precedence(spark):
@@ -132,11 +135,11 @@ def test_clean_date_ordered_precedence(spark):
         "not a date": None,
         "TBD": None,
     }
-    assert _run(spark, C.clean_date_field, list(cases)) == list(cases.values())
+    assert _run(spark, C.date_layers, list(cases)) == list(cases.values())
 
 
 def test_clean_status_field(spark):
-    fn = lambda c: C.clean_status_field(c, C.ORDER_STATUS_MAP)
+    fn = lambda src, out: C.status_layers(src, out, C.ORDER_STATUS_MAP)
     cases = {
         "Delivered": "delivered",
         "In Transit": "shipped",
@@ -162,7 +165,8 @@ def test_parse_category_field(spark):
         ],
         "raw string",
     )
-    rows = C.with_parsed_category(df, "raw", "m", "s").select("m", "s").collect()
+    rows = C.apply_layers(df, C.category_layers("raw", "m", "s"),
+                          keep=["m", "s"]).collect()
     got = [(r.m, r.s) for r in rows]
     assert got == [
         ("Automotive Parts", "Batteries"),
@@ -191,17 +195,17 @@ def test_status_maps_match_reference_vocabularies(spark):
     """Reference maps verbatim (silver_builder.py:949-954, 860-864,
     662-665), including the first-match quirk: a raw 'closed' store
     canonicalizes to 'inactive' (listed first), never 'closed'."""
-    fn = lambda c: C.clean_status_field(c, C.ORDER_STATUS_MAP)
+    fn = lambda src, out: C.status_layers(src, out, C.ORDER_STATUS_MAP)
     cases = {"In Process": "pending", "On Route": "shipped",
              "Received": "delivered", "Canceled": "cancelled",
              "fulfilled": "fulfilled"}   # NOT in the reference map -> raw
     assert _run(spark, fn, list(cases)) == list(cases.values())
 
-    sfn = lambda c: C.clean_status_field(c, C.STORE_STATUS_MAP)
+    sfn = lambda src, out: C.status_layers(src, out, C.STORE_STATUS_MAP)
     s_cases = {"closed": "inactive", "Shutdown": "closed", "OPEN": "active"}
     assert _run(spark, sfn, list(s_cases)) == list(s_cases.values())
 
-    pfn = lambda c: C.clean_status_field(c, C.PRODUCT_STATUS_MAP)
+    pfn = lambda src, out: C.status_layers(src, out, C.PRODUCT_STATUS_MAP)
     p_cases = {"inactive": "discontinued", "in stock": "in stock"}
     assert _run(spark, pfn, list(p_cases)) == list(p_cases.values())
 
@@ -234,3 +238,38 @@ def test_supply_order_validation_flags_reference_semantics(spark):
     assert got[4] == (False, True)    # drift > 0.01
     assert got[5] == (True, False)    # shipped < order
     assert got[6] == (True, False)    # delivered < shipped
+
+
+def _bronze_table(spark, wh, table):
+    """A landed bronze table, as silver reads it (a scan: a local
+    relation would fold the projections away at plan time)."""
+    from medallion_data_pipeline_spark._util import read_table
+    from medallion_data_pipeline_spark.plans import bronze, fixtures
+
+    frames = fixtures.generate_bronze(spark, n_orders=20)
+    bronze.write_bronze({table: frames[table]}, str(wh))
+    return read_table(spark, str(wh), "bronze", table)
+
+
+def test_supply_orders_extract_each_value_once(spark, tmp_path):
+    """The layered cleaners compute each shared value once per row: the
+    executed plan of supply_orders holds one ``regexp_extract`` per
+    integer or numeric source column (four ids/quantity, price and
+    total_invoice), where nested Column trees repeat the extraction at
+    every later step that reads it."""
+    from medallion_data_pipeline_spark.metrics import executed_plan
+    from medallion_data_pipeline_spark.plans.silver import clean_supply_orders
+
+    cleaned, _ = clean_supply_orders(
+        _bronze_table(spark, tmp_path, "supply_orders"))
+    assert executed_plan(cleaned).count("regexp_extract(") == 6
+
+
+def test_products_extract_each_value_once(spark, tmp_path):
+    """products has two numeric source columns (unit_cost,
+    selling_price): two ``regexp_extract`` in its executed plan."""
+    from medallion_data_pipeline_spark.metrics import executed_plan
+    from medallion_data_pipeline_spark.plans.silver import clean_products
+
+    cleaned, _ = clean_products(_bronze_table(spark, tmp_path, "products"))
+    assert executed_plan(cleaned).count("regexp_extract(") == 2

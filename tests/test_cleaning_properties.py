@@ -39,15 +39,16 @@ text_batch = st.lists(
 )
 
 
-def _clean(spark, values, fn):
+def _clean(spark, values, layers_fn):
     df = spark.createDataFrame([(v,) for v in values], "raw string")
-    return [r.out for r in df.select(fn(F.col("raw")).alias("out")).collect()]
+    cleaned = C.apply_layers(df, layers_fn("raw", "out"), keep=["out"])
+    return [r.out for r in cleaned.collect()]
 
 
 @given(values=text_batch)
 @settings(**_SETTINGS)
 def test_numeric_never_negative_and_rounded(spark, values):
-    out = _clean(spark, values, C.clean_numeric_field)
+    out = _clean(spark, values, C.numeric_layers)
     for v in out:
         if v is not None:
             assert v >= 0.0
@@ -58,14 +59,14 @@ def test_numeric_never_negative_and_rounded(spark, values):
 @settings(**_SETTINGS)
 def test_integer_always_nonnegative(spark, values):
     # the reference's sign-drop quirk implies the result is never negative
-    out = _clean(spark, values, C.clean_integer_field)
+    out = _clean(spark, values, C.integer_layers)
     assert all(v is None or v >= 0 for v in out)
 
 
 @given(values=text_batch)
 @settings(**_SETTINGS)
 def test_text_clean_never_empty_string(spark, values):
-    out = _clean(spark, values, C.clean_text_field)
+    out = _clean(spark, values, C.text_layers)
     for v in out:
         assert v is None or (v == v.strip() and v != "")
 
@@ -73,7 +74,7 @@ def test_text_clean_never_empty_string(spark, values):
 @given(values=text_batch)
 @settings(**_SETTINGS)
 def test_status_always_lowercase_nonnull(spark, values):
-    out = _clean(spark, values, lambda c: C.clean_status_field(c, C.ORDER_STATUS_MAP))
+    out = _clean(spark, values, lambda src, out: C.status_layers(src, out, C.ORDER_STATUS_MAP))
     for v in out:
         assert v is not None and v == v.lower()
 
@@ -85,7 +86,7 @@ def test_status_always_lowercase_nonnull(spark, values):
 @settings(**_SETTINGS)
 def test_date_roundtrip_all_formats(spark, dates, fmt):
     values = [d.strftime(fmt) for d in dates]
-    out = _clean(spark, values, C.clean_date_field)
+    out = _clean(spark, values, C.date_layers)
     for d, parsed in zip(dates, out):
         if fmt == "%d-%m-%Y" and d.day <= 12:
             # ambiguous day/month under earlier-precedence formats may
