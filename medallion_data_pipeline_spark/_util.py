@@ -12,7 +12,7 @@ from typing import Any
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import LongType, StructField, StructType
 
 
 def tiny_df(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
@@ -90,6 +90,7 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     Partition columns are found from the paths, as inference finds
     them. A path with no data file falls through to Spark's own
     inference and error."""
+    import pyarrow as pa
     import pyarrow.parquet as pq
     from pyspark.sql.pandas.types import from_arrow_schema
 
@@ -103,8 +104,15 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     else:
         ntz = spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled",
                              "true") == "true"
-        schema = from_arrow_schema(meta.schema.to_arrow_schema(),
-                                   prefer_timestamp_ntz=ntz)
+        arrow = meta.schema.to_arrow_schema()
+        schema = from_arrow_schema(arrow, prefer_timestamp_ntz=ntz)
+        if spark.conf.get("spark.sql.legacy.parquet.nanosAsLong",
+                          "false") == "true":
+            # the only way Spark reads TIMESTAMP(NANOS): as raw longs
+            schema = StructType([
+                StructField(f.name, LongType(), f.nullable)
+                if pa.types.is_timestamp(a.type) and a.type.unit == "ns"
+                else f for f, a in zip(schema.fields, arrow)])
     return spark.read.schema(schema).parquet(path)
 
 

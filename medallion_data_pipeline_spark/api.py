@@ -59,36 +59,25 @@ class MedallionEngine:
     PREVIEW_ROWS = 100
 
     # -- query runner ------------------------------------------------------
-    def sql(self, query: str,
-            consistent_preview: bool = True) -> tuple[DataFrame, float, list]:
+    def sql(self, query: str) -> tuple[DataFrame, float, list]:
         """Ad-hoc SQL passthrough with the reference's timing metric
         (app.py:1377-1394). Catalyst parses/optimizes/executes.
 
-        With ``consistent_preview`` (default) the plan executes ONCE:
-        it is persisted (memory, spilling to disk — bounded DRIVER
-        memory regardless of result size), timed through the
-        executor-side ``noop`` sink, and the capped preview page
-        (``PREVIEW_ROWS``) is read back from that same cached execution
-        — preview rows are consistent with the timed run even under
-        nondeterministic ordering/sampling, and an expensive query is
-        not paid for twice. The timed seconds include the cache write;
-        the cache needs executor memory+disk proportional to the
-        result, so for a result bigger than local disk pass
-        ``consistent_preview=False``: nothing is materialized anywhere
-        (the old behavior — the plan runs twice, once noop-timed and
-        once limit-pruned for the preview, which may come from a
-        different execution). The cache is released before returning;
-        re-running the returned DataFrame recomputes. Callers page the
-        rest via :meth:`page` or ``df.limit(...)``.
+        The plan executes ONCE: it is persisted (memory, spilling to
+        disk — bounded DRIVER memory regardless of result size), timed
+        through the executor-side ``noop`` sink, and the capped preview
+        page (``PREVIEW_ROWS``) is read back from that same cached
+        execution — preview rows are consistent with the timed run even
+        under nondeterministic ordering/sampling, and an expensive query
+        is not paid for twice. The timed seconds include the cache
+        write; the cache needs executor memory+disk proportional to the
+        result. The cache is released before returning; re-running the
+        returned DataFrame recomputes. Callers page the rest via
+        :meth:`page` or ``df.limit(...)``.
         """
         from pyspark import StorageLevel
 
         df = self.spark.sql(query)
-        if not consistent_preview:
-            t0 = time.time()
-            df.write.format("noop").mode("overwrite").save()
-            secs = time.time() - t0
-            return df, secs, df.limit(self.PREVIEW_ROWS).collect()
         df.persist(StorageLevel.MEMORY_AND_DISK)
         try:
             t0 = time.time()

@@ -68,57 +68,25 @@ def _staged_shingles(docs: DataFrame, text_col: str, id_col: str, k: int,
     )
 
 
-def minhash_candidates(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-                       k: int = 3, num_hashes: int = 16, bands: int = 4,
-                       min_tokens: int = 3,
-                       oversized_star: int | None = None) -> DataFrame:
-    """Near-duplicate candidate pairs (id_a < id_b) sharing >=1 LSH band.
-
-    Explode band keys and self-join on the key: at 100 TB this is the
-    only viable plan — work is proportional to colliding pairs, not n².
-    Skewed buckets (boilerplate docs) are handled by AQE skew-join on
-    the join itself; what AQE cannot fix is the OUTPUT of a giant
-    bucket — an m-doc boilerplate clique emits m(m-1)/2 candidate rows
-    by construction, and every one is a true near-dup the verifier
-    must score.
-
-    ``oversized_star`` is the cluster-flow answer: band buckets larger
-    than the cap emit only (hub, member) edges — hub = the bucket's
-    minimum id — so candidates are LINEAR in bucket size. This is NOT
-    pair-set-preserving (use it for the dedup/cluster flow, never for
-    pair-level reporting): connected components are preserved whenever
-    in-bucket near-dup relations reach members through the hub (true
-    boilerplate cliques — the shape that creates oversized buckets in
-    the first place); a member that fails Jaccard against the hub but
-    would have passed against another member can fall out of the
-    cluster unless the pair also collides in a small bucket. Pinned by
-    the cluster-equality test on a clique corpus; measured linear-vs-
-    quadratic in docs/SCALING.md addendum 4.
-
-    Cost note: enabling ``oversized_star`` adds one whole-partition
-    window pass (count+min over band_key) over the ENTIRE exploded
-    frame — an extra full shuffle paid even when no bucket exceeds the
-    cap. That is why it defaults to None: turn it on for corpora where
-    boilerplate cliques are expected (real crawls), leave it off for
-    vetted-uniform ones.
-    """
-    with_bands = (
-        _staged_shingles(docs, text_col, id_col, k, min_tokens)
-        .withColumn("_xs", X.shingle_ints(F.col("shingles")))
+def _band_rows(staged: DataFrame, id_col: str, num_hashes: int,
+               bands: int) -> DataFrame:
+    """(doc, band_key) MinHash-LSH rows of a staged (id, shingles)
+    frame: one row per band of each doc's signature."""
+    return (
+        staged.withColumn("_xs", X.shingle_ints(F.col("shingles")))
         .withColumn("_sig", X.minhash_sig_from_ints(F.col("_xs"), num_hashes))
         .select(
             F.col(id_col).alias("doc"),
             F.explode(X.band_keys_from_int_sig(F.col("_sig"), num_hashes, bands)).alias("band_key"),
         )
     )
-    return _band_candidates(with_bands, oversized_star)
 
 
 def _band_candidates(with_bands: DataFrame,
                      oversized_star: int | None = None) -> DataFrame:
     """Distinct candidate pairs from an exploded (doc, band_key) frame:
     full within-bucket self-join, with buckets over ``oversized_star``
-    reduced to (hub, member) star edges (see minhash_candidates)."""
+    reduced to (hub, member) star edges (see minhash_near_duplicates)."""
     if oversized_star:
         # one whole-partition window pass tags each row with its
         # bucket's size and hub (no ordering -> full-partition agg);
@@ -145,22 +113,23 @@ def _band_candidates(with_bands: DataFrame,
     return pairs.distinct()
 
 
-def jaccard_pairs(docs: DataFrame, candidates: DataFrame,
-                  text_col: str = "text", id_col: str = "doc_id",
-                  k: int = 3, threshold: float = 0.4) -> DataFrame:
-    """Exact k-shingle Jaccard on candidate pairs; keeps pairs >= threshold.
+def jaccard_pairs(shingled: DataFrame, candidates: DataFrame,
+                  id_col: str = "doc_id",
+                  threshold: float = 0.4) -> DataFrame:
+    """Exact k-shingle Jaccard on candidate (id_a, id_b) pairs over a
+    staged (id, shingles) frame; keeps pairs >= threshold.
 
-    Set semantics (distinct shingles). Joining shingle arrays onto the
-    (small) candidate set twice; the arrays travel with the join — at
-    scale, pre-project only (id, shingles) so the shuffle is narrow.
+    Set semantics (distinct shingles). The shingle arrays join onto
+    the (small) candidate set twice; only (id, distinct shingles)
+    travels, so the shuffle is narrow.
     """
-    shingled = _staged_shingles(docs, text_col, id_col, k).select(
+    sets = shingled.select(
         F.col(id_col).alias("sid"), F.array_distinct("shingles").alias("ds")
     )
     out = (
         candidates
-        .join(shingled.withColumnRenamed("sid", "id_a").withColumnRenamed("ds", "sh_a"), "id_a")
-        .join(shingled.withColumnRenamed("sid", "id_b").withColumnRenamed("ds", "sh_b"), "id_b")
+        .join(sets.withColumnRenamed("sid", "id_a").withColumnRenamed("ds", "sh_a"), "id_a")
+        .join(sets.withColumnRenamed("sid", "id_b").withColumnRenamed("ds", "sh_b"), "id_b")
         .withColumn("_inter", F.size(F.array_intersect("sh_a", "sh_b")))
         .withColumn("_union", F.size("sh_a") + F.size("sh_b") - F.col("_inter"))
     )
@@ -177,9 +146,18 @@ def jaccard_pairs(docs: DataFrame, candidates: DataFrame,
 def minhash_near_duplicates(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
                             k: int = 3, num_hashes: int = 16, bands: int = 4,
                             threshold: float = 0.4, min_tokens: int = 3,
-                            persist_intermediate: bool = True,
                             oversized_star: int | None = None) -> DataFrame:
-    """Full MinHash-LSH near-dup pipeline: candidates -> exact Jaccard.
+    """Full MinHash-LSH near-dup pipeline: band candidates -> exact
+    Jaccard.
+
+    Candidates are pairs (id_a < id_b) sharing >= 1 LSH band: explode
+    band keys and self-join on the key. At 100 TB this is the only
+    viable plan — work is proportional to colliding pairs, not n².
+    Skewed buckets (boilerplate docs) are handled by AQE skew-join on
+    the join itself; what AQE cannot fix is the OUTPUT of a giant
+    bucket — an m-doc boilerplate clique emits m(m-1)/2 candidate rows
+    by construction, and every one is a true near-dup the verifier
+    must score.
 
     The staged (id, shingles) frame feeds FOUR subplans (both sides of
     the band self-join, both sides of the Jaccard join); persisting it
@@ -187,47 +165,37 @@ def minhash_near_duplicates(docs: DataFrame, text_col: str = "text", id_col: str
     end-to-end at sf0.1. At 100 TB use StorageLevel.DISK_ONLY or a
     materialized intermediate table instead of memory.
 
-    ``oversized_star`` (cluster-flow only — changes the PAIR SET, see
-    minhash_candidates) caps a boilerplate clique's candidate volume
-    at linear: verified star edges still connect the clique for the
-    connected-components consumer (drop_near_duplicates).
+    ``oversized_star`` is the cluster-flow answer: band buckets larger
+    than the cap emit only (hub, member) edges — hub = the bucket's
+    minimum id — so candidates are LINEAR in bucket size. This is NOT
+    pair-set-preserving (use it for the dedup/cluster flow, never for
+    pair-level reporting): connected components are preserved whenever
+    in-bucket near-dup relations reach members through the hub (true
+    boilerplate cliques — the shape that creates oversized buckets in
+    the first place); a member that fails Jaccard against the hub but
+    would have passed against another member can fall out of the
+    cluster unless the pair also collides in a small bucket. Verified
+    star edges still connect the clique for the connected-components
+    consumer (drop_near_duplicates). Pinned by the cluster-equality
+    test on a clique corpus; measured linear-vs-quadratic in
+    docs/SCALING.md addendum 4.
+
+    Cost note: enabling ``oversized_star`` adds one whole-partition
+    window pass (count+min over band_key) over the ENTIRE exploded
+    frame — an extra full shuffle paid even when no bucket exceeds the
+    cap. That is why it defaults to None: turn it on for corpora where
+    boilerplate cliques are expected (real crawls), leave it off for
+    vetted-uniform ones.
     """
-    staged = _staged_shingles(docs, text_col, id_col, k, min_tokens)
-    if persist_intermediate:
-        staged = staged.persist()
-
-    with_bands = (
-        staged.withColumn("_xs", X.shingle_ints(F.col("shingles")))
-        .withColumn("_sig", X.minhash_sig_from_ints(F.col("_xs"), num_hashes))
-        .select(
-            F.col(id_col).alias("doc"),
-            F.explode(X.band_keys_from_int_sig(F.col("_sig"), num_hashes, bands)).alias("band_key"),
-        )
-    )
-    cands = _band_candidates(with_bands, oversized_star)
-
-    shingled = staged.select(F.col(id_col).alias("sid"), F.array_distinct("shingles").alias("ds"))
-    out = (
-        cands
-        .join(shingled.withColumnRenamed("sid", "id_a").withColumnRenamed("ds", "sh_a"), "id_a")
-        .join(shingled.withColumnRenamed("sid", "id_b").withColumnRenamed("ds", "sh_b"), "id_b")
-        .withColumn("_inter", F.size(F.array_intersect("sh_a", "sh_b")))
-        .withColumn("_union", F.size("sh_a") + F.size("sh_b") - F.col("_inter"))
-    )
-    jac = F.round(
-        F.when(F.col("_union") > 0, F.col("_inter").cast("double") / F.col("_union").cast("double")),
-        6,
-    )
-    return (
-        out.select("id_a", "id_b", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
-    )
+    staged = _staged_shingles(docs, text_col, id_col, k, min_tokens).persist()
+    cands = _band_candidates(_band_rows(staged, id_col, num_hashes, bands),
+                             oversized_star)
+    return jaccard_pairs(staged, cands, id_col, threshold)
 
 
 def ngram_jaccard_duplicates(docs: DataFrame, text_col: str = "text",
                              id_col: str = "doc_id", k: int = 3,
-                             threshold: float = 0.4, min_tokens: int = 3,
-                             persist_intermediate: bool = True) -> DataFrame:
+                             threshold: float = 0.4, min_tokens: int = 3) -> DataFrame:
     """EXACT n-gram Jaccard near-dup pairs (>= ``threshold``) via a
     prefix-filtering set-similarity join (AllPairs/PPJoin family).
 
@@ -269,9 +237,7 @@ def ngram_jaccard_duplicates(docs: DataFrame, text_col: str = "text",
         F.col(id_col).alias("sid"), F.array_distinct("shingles").alias("ds")
     ).withColumn(
         "xs", F.array_distinct(X.shingle_ints(F.col("ds")))
-    )
-    if persist_intermediate:
-        staged = staged.persist()
+    ).persist()
 
     # Candidate generation and pre-verification run over the 8-byte md5
     # image of each shingle, not the string: narrower shuffles and a
@@ -406,16 +372,8 @@ def band_index(docs: DataFrame, text_col: str = "text",
     shuffle at build time.
     The same invariant is maintained incrementally (append-time
     capacity check) by streaming/ingest.py::dedup_ingest_sink."""
-    staged = _staged_shingles(docs, text_col, id_col, k, min_tokens)
-    idx = (
-        staged.withColumn("_xs", X.shingle_ints(F.col("shingles")))
-        .withColumn("_sig", X.minhash_sig_from_ints(F.col("_xs"), num_hashes))
-        .select(
-            F.col(id_col).alias("doc"),
-            F.explode(X.band_keys_from_int_sig(F.col("_sig"), num_hashes, bands))
-            .alias("band_key"),
-        )
-    )
+    idx = _band_rows(_staged_shingles(docs, text_col, id_col, k, min_tokens),
+                     id_col, num_hashes, bands)
     if max_bucket:
         from pyspark.sql.window import Window as W
 
@@ -434,7 +392,6 @@ def incremental_near_duplicates(corpus: DataFrame, new_docs: DataFrame,
                                 text_col: str = "text", id_col: str = "doc_id",
                                 k: int = 3, num_hashes: int = 16, bands: int = 4,
                                 threshold: float = 0.4, min_tokens: int = 3,
-                                persist_intermediate: bool = True,
                                 corpus_index: DataFrame | None = None,
                                 new_index: DataFrame | None = None) -> DataFrame:
     """Flag near-duplicates in an INCOMING batch against an existing
@@ -504,9 +461,7 @@ def incremental_near_duplicates(corpus: DataFrame, new_docs: DataFrame,
         # pass per batch instead of two
         new_bands = new_index.select("doc", "band_key")
     else:
-        new_bands = _bands(new_docs)
-        if persist_intermediate:
-            new_bands = new_bands.persist()
+        new_bands = _bands(new_docs).persist()
 
     a = corpus_index.unionByName(
         new_bands.withColumn("is_corpus", F.lit(False))
@@ -529,7 +484,8 @@ def incremental_near_duplicates(corpus: DataFrame, new_docs: DataFrame,
     all_docs = corpus.select(id_col, text_col).unionByName(
         new_docs.select(id_col, text_col)
     )
-    scored = jaccard_pairs(all_docs, cands, text_col, id_col, k, threshold)
+    scored = jaccard_pairs(_staged_shingles(all_docs, text_col, id_col, k),
+                           cands, id_col, threshold)
     w = W.partitionBy("id_b").orderBy(F.desc("jaccard"), F.asc("id_a"))
     return (
         scored.withColumn("_rk", F.row_number().over(w))
@@ -549,9 +505,7 @@ def simhash_groups(docs: DataFrame, text_col: str = "text", id_col: str = "doc_i
     drift between two near-identical docs flips a fingerprint bit) are
     recovered by :func:`simhash_hamming_pairs`."""
     return (
-        docs.withColumn("_toks", X.words(F.col(text_col)))
-        .withColumn("_hashed", F.transform("_toks", F.md5))
-        .select(F.col(id_col), X.simhash_from_hashes(F.col("_hashed"), bits).alias("simhash"))
+        simhash_fingerprints(docs, text_col, id_col, bits)
         .groupBy("simhash")
         .agg(F.count(F.lit(1)).alias("n_docs"), F.min(id_col).alias("keep_id"))
     )
@@ -571,8 +525,7 @@ def simhash_fingerprints(docs: DataFrame, text_col: str = "text",
 
 def simhash_hamming_pairs(docs: DataFrame, text_col: str = "text",
                           id_col: str = "doc_id", bits: int = 16,
-                          max_distance: int = 1,
-                          persist_intermediate: bool = True) -> DataFrame:
+                          max_distance: int = 1) -> DataFrame:
     """Near-dup pairs at Hamming distance <= ``max_distance`` between
     SimHash fingerprints — the bit-flip bucket expansion that
     equal-fingerprint grouping misses.
@@ -592,10 +545,9 @@ def simhash_hamming_pairs(docs: DataFrame, text_col: str = "text",
     Cache lifetime: the persisted fingerprint frame lives until the
     session ends (same idiom as minhash_near_duplicates' staged
     shingles). Long-lived sessions making many independent calls
-    should either pass ``persist_intermediate=False`` or call
-    ``spark.catalog.clearCache()`` between batches; the cache is not
-    unpersisted here because the returned (lazy) DataFrame still
-    references it.
+    clear it with ``spark.catalog.clearCache()`` between batches; the
+    cache is not unpersisted here because the returned (lazy)
+    DataFrame still references it.
     """
     from itertools import combinations
 
@@ -607,13 +559,11 @@ def simhash_hamming_pairs(docs: DataFrame, text_col: str = "text",
                 m |= 1 << b
             masks.append(m)
 
-    fp = simhash_fingerprints(docs, text_col, id_col, bits)
-    if persist_intermediate:
-        # fp feeds BOTH join sides; unpersisted, the per-token md5 +
-        # bit-vote scan runs twice (measured ~2x end-to-end at sf0.1 —
-        # same rationale as minhash_near_duplicates). At 100 TB use
-        # DISK_ONLY or a materialized fingerprint table.
-        fp = fp.persist()
+    # fp feeds BOTH join sides; unpersisted, the per-token md5 +
+    # bit-vote scan runs twice (measured ~2x end-to-end at sf0.1 — same
+    # rationale as minhash_near_duplicates). At 100 TB use DISK_ONLY or
+    # a materialized fingerprint table.
+    fp = simhash_fingerprints(docs, text_col, id_col, bits).persist()
     probe = fp.select(
         F.col(id_col).alias("id_a"), F.col("simhash").alias("fp_a"),
         F.explode(F.array(*[F.lit(m).cast("long") for m in masks])).alias("mask"),
@@ -823,7 +773,6 @@ def duplicate_span_intervals(docs: DataFrame, text_col: str = "text",
 def fingerprint_hamming_pairs(fp: DataFrame, id_col: str = "doc_id",
                               fp_col: str = "phash", bits: int = 64,
                               max_distance: int = 4,
-                              persist_intermediate: bool = True,
                               group_identical: bool = False) -> DataFrame:
     """All pairs of fingerprints at Hamming distance <= ``max_distance``
     via pigeonhole block retrieval (Manku/Jain/Das Sarma, WWW'07 — the
@@ -885,9 +834,7 @@ def fingerprint_hamming_pairs(fp: DataFrame, id_col: str = "doc_id",
         .filter(F.col("_fp").isNotNull())
     member_edges = None
     if group_identical:
-        reps = fp.groupBy("_fp").agg(F.min("_id").alias("_rep"))
-        if persist_intermediate:
-            reps = reps.persist()
+        reps = fp.groupBy("_fp").agg(F.min("_id").alias("_rep")).persist()
         member_edges = (
             fp.join(reps, "_fp")
             .filter(F.col("_id") != F.col("_rep"))
@@ -895,8 +842,7 @@ def fingerprint_hamming_pairs(fp: DataFrame, id_col: str = "doc_id",
                     F.col("_id").alias("id_b"),
                     F.lit(0).alias("hamming")))
         fp = reps.select(F.col("_rep").alias("_id"), "_fp")
-    if persist_intermediate:
-        fp = fp.persist()
+    fp = fp.persist()
 
     def block_val(lo: int, width: int):
         shifted = F.shiftrightunsigned(F.col("_fp"), lo) if lo else F.col("_fp")
@@ -997,7 +943,6 @@ def phash_incremental_flags(index_fp: DataFrame, new_fp: DataFrame,
 def containment_pairs(docs: DataFrame, text_col: str = "text",
                       id_col: str = "doc_id", k: int = 3,
                       threshold: float = 0.8,
-                      persist_intermediate: bool = True,
                       df_cap: int | None = None) -> DataFrame:
     """Ordered near-CONTAINMENT pairs: (contained, container,
     containment, jaccard) where containment(A in B) =
@@ -1042,9 +987,7 @@ def containment_pairs(docs: DataFrame, text_col: str = "text",
     sets = staged.select(
         F.col(id_col).alias("id"),
         F.array_distinct(X.shingle_ints(F.col("shingles"))).alias("xs"),
-    ).filter(F.size("xs") >= 1)
-    if persist_intermediate:
-        sets = sets.persist()
+    ).filter(F.size("xs") >= 1).persist()
 
     lf = sets.select("id", F.explode("xs").alias("h"))
     from pyspark.sql.window import Window as W

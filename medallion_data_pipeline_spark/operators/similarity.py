@@ -180,12 +180,17 @@ _INTEGRAL_TYPES = ("tinyint", "smallint", "int", "bigint")
 
 
 def _id_is_integral(df: DataFrame, id_col: str) -> bool:
-    """The Python/Arrow scoring kernels materialize the id column as
-    int64 (``to_numpy(dtype="int64")``) and declare it ``long`` in
-    their output schema, so they only accept integral id columns; the
-    pure-plan join kernels carry any orderable id type. Callers of
-    the kernel-defaulted operators get an automatic fallback."""
+    """An integral id is its own chunk key in :func:`_chunk_split_oversized`
+    (``pmod(vid, C)``); any other id type (string, decimal) is hashed
+    to a long first."""
     return dict(df.dtypes).get(id_col) in _INTEGRAL_TYPES
+
+
+def _pairs_schema(keyed: DataFrame, *fields: str) -> str:
+    """``applyInPandas`` output schema of a pair kernel: ``id_a`` and
+    ``id_b`` in the type of ``keyed``'s ``vid`` column, then ``fields``."""
+    id_t = keyed.schema["vid"].dataType.simpleString()
+    return ", ".join([f"id_a {id_t}", f"id_b {id_t}", *fields])
 
 
 def _paired_cosine(qv="qv", cv="cv", qn="qn", cn="cn"):
@@ -209,7 +214,8 @@ def _chunk_split_oversized(keyed: DataFrame, group_cols, max_group: int,
     corpora in docs/SCALING.md can never produce this shape; the skew
     measurement is addendum 4). Groups larger than ``max_group`` rows
     split into C = ceil(|group|/max_group) deterministic id-chunks
-    (``pmod(vid, C)``); each unordered chunk pair (lo <= hi) becomes an
+    (``pmod(vid, C)``, or ``pmod(xxhash64(vid), C)`` for a non-integral
+    id); each unordered chunk pair (lo <= hi) becomes an
     independent subtask scoring only its wedge — lo == hi the
     within-chunk upper triangle, lo < hi the cross rectangle — so every
     candidate pair is scored exactly once and the giant group
@@ -297,8 +303,10 @@ def _chunk_split_oversized(keyed: DataFrame, group_cols, max_group: int,
         keyed = keyed.join(lut, cond, "left") \
             .drop(*[f"_k_{k}" for k in group_cols])
         c = F.coalesce(F.col("_c0"), F.lit(1))
+    chunk_key = (F.col("vid") if _id_is_integral(keyed, "vid")
+                 else F.xxhash64("vid"))
     keyed = (
-        keyed.withColumn("_ci", F.pmod(F.col("vid"), c).cast("int"))
+        keyed.withColumn("_ci", F.pmod(chunk_key, c).cast("int"))
         .withColumn("_cj", F.explode(F.sequence(F.lit(0), c - F.lit(1))))
         .withColumn("_lo", F.least("_ci", "_cj"))
         .withColumn("_hi", F.greatest("_ci", "_cj"))
@@ -309,7 +317,9 @@ def _chunk_split_oversized(keyed: DataFrame, group_cols, max_group: int,
 
 def _score_group_pairs(pdf, vec_field: str, thr: float, chunk: int = 1024):
     """Shared numpy kernel for one pair-scoring (sub)group: returns
-    (id_a, id_b, cos) arrays with id_a < id_b, cos >= thr.
+    (id_a, id_b, cos) arrays with id_a < id_b, cos >= thr. Ids keep
+    the type they arrive in (int64, or objects for string and decimal
+    ids), so the pair order is the id column's own order.
 
     The hot loop is MEMORY-BANDWIDTH-bound at 32-way task concurrency
     (measured: the same loop runs 5x slower in 32 concurrent workers
@@ -321,8 +331,8 @@ def _score_group_pairs(pdf, vec_field: str, thr: float, chunk: int = 1024):
     grid. Output is assembled once per group, not once per chunk.
     Pre-normalized cosines differ from dot/(na*nb) in the last ulps —
     covered by the same empirical 6-dp parity contract as
-    all_pairs_cosine_matmul, pinned by the kernel-equality tests and
-    the oracle gates.
+    all_pairs_cosine_matmul, pinned by the exact-cosine tests and the
+    oracle gates.
 
     Two shapes, selected by the :func:`_chunk_split_oversized` columns:
 
@@ -337,9 +347,8 @@ def _score_group_pairs(pdf, vec_field: str, thr: float, chunk: int = 1024):
     """
     import numpy as np
 
-    ids = pdf["vid"].to_numpy(dtype="int64")
-    empty = (np.empty(0, dtype="int64"), np.empty(0, dtype="int64"),
-             np.empty(0, dtype="float64"))
+    ids = pdf["vid"].to_numpy()
+    empty = (ids[:0], ids[:0], np.empty(0, dtype="float64"))
     if not len(ids):
         return empty
     m = np.stack(pdf[vec_field].to_numpy())
@@ -565,8 +574,6 @@ def embedding_lsh_pairs(emb: DataFrame, threshold: float = 0.42,
                         n_planes: int = 4, n_tables: int = 8, seed: int = 101,
                         dim: int = 64, id_col: str = "vec_id",
                         vec_col: str = "embedding",
-                        carry_vectors: bool = True,
-                        kernel: str = "bucket",
                         max_group: int | None = 8192,
                         n_rows: int | None = None) -> DataFrame:
     """Embedding-cosine near-dup pairs via banded sign-LSH — the scale
@@ -575,11 +582,10 @@ def embedding_lsh_pairs(emb: DataFrame, threshold: float = 0.42,
     ``n_tables`` independent hash tables, each keyed by an
     ``n_planes``-bit sign-LSH bucket (deterministic md5-derived
     hyperplanes, seeds ``seed..seed+n_tables-1``). Candidates are pairs
-    colliding in ANY table (explode (table, bucket) keys -> self
-    equi-join on both), scored exactly, filtered at ``threshold``, then
-    deduped across tables with groupBy+max (map-side combine — never
-    `.distinct()` on the scored triple). The plan contains no all-pairs
-    join: work is proportional to colliding pairs.
+    colliding in ANY table, scored exactly, filtered at ``threshold``,
+    then deduped across tables with groupBy+max (map-side combine —
+    never `.distinct()` on the scored triple). The plan contains no
+    all-pairs join: work is proportional to colliding pairs.
 
     Recall for a pair at cosine c is 1-(1-p^n_planes)^n_tables with
     p = 1 - arccos(c)/pi (~0.80 theoretical at c=0.42 for the 4x8
@@ -589,153 +595,72 @@ def embedding_lsh_pairs(emb: DataFrame, threshold: float = 0.42,
     more sharply). At 100 TB, grow n_planes with log2(n) to keep buckets
     bounded, and raise n_tables to buy recall back.
 
-    Shuffle-width knob: with ``carry_vectors=True`` the exploded rows
-    carry the vector (dim doubles) x n_tables through the bucket join
-    and pairs dedupe AFTER scoring (groupBy+max, map-side combine).
-    With ``carry_vectors=False`` only (id, table, bucket) triples are
-    exploded and joined; candidate PAIRS are deduped pre-score
-    (dropDuplicates on two longs), then the vectors join back once per
-    side and each surviving pair is scored exactly once. Same result
-    by construction (both paths are tested equal).
-
-    Which to pick: ``False`` wins whenever pairs collide in more than
-    ~1 table on average (the cosine fold is then paid per collision
-    instead of per pair — measured 12.2s vs 4.9s warm at sf0.1 with
-    the 4x8 default, avg multiplicity ~2) AND always at large dim
-    (1024-dim pushes ~8 KB x n_tables per row through the exchange).
-    ``True`` only pays off when buckets are so sparse that collisions
-    are near-unique (high n_planes) and dim is small, where skipping
-    the two vector re-joins saves more than duplicate scoring costs.
-
-    ``kernel="bucket"`` (default) skips the bucket self-JOIN entirely:
-    explode (vid, vector) by (table, bucket) once, group by the bucket
-    key, and score every within-bucket pair with a chunked BLAS
-    ``M_chunk @ M.T`` inside ``applyInPandas`` — then dedupe surviving
-    pairs across tables with the same groupBy+max. Vectors cross the
+    Scoring never self-joins the buckets: explode (vid, vector) by
+    (table, bucket) once, group by the bucket key, and score every
+    within-bucket pair with a chunked BLAS ``M_chunk @ M.T`` inside
+    ``applyInPandas`` (:func:`_score_group_pairs`). Vectors cross the
     Arrow boundary once per EXPLODED ROW (n x n_tables), never once
-    per candidate pair. This is decisive on collision-heavy corpora:
-    at 10x sf0.1 the uniform test embeddings produce 104.6M
-    table-collisions (82.1M distinct candidate pairs) under the 4x8
-    default, and the join kernel pays per pair — measured 30.4s
-    (expression fold, ~14 us/pair/core) vs the bucket kernel's one
-    90 MB explode plus BLAS arithmetic (docs/SCALING.md). Same
-    empirical 6-dp BLAS parity contract as all_pairs_cosine_matmul,
-    pinned by the path-equality tests. Per-bucket memory is chunk x |bucket|
-    doubles; n_planes ~ log2(n) keeps |bucket| bounded at scale —
-    for UNIFORM data. A power-law corpus (real crawls: one
-    boilerplate cluster holding 5-10% of all docs) lands its whole
-    cluster in ONE bucket in every table regardless of plane count,
-    so ``max_group`` (default 8192) chunk-splits any bucket larger
-    than that into C(C+1)/2 independent wedge/rectangle subtasks via
-    :func:`_chunk_split_oversized` — identical pair set, bounded task
-    size (straggler measurement: docs/SCALING.md addendum 4). Pass
-    ``max_group=None`` to pin the one-task-per-bucket layout, and
-    ``n_rows`` (a caller-known row-count bound: catalog stats /
-    parquet footer metadata) to make the no-split decision job-free —
-    a bucket never holds more than one row per input vector, so
-    ``n_rows <= max_group`` proves no split is needed without running
-    any Spark job at plan-build time.
-    The kernel requires an INTEGRAL ``id_col`` (ids cross Arrow as
-    int64 and the output schema says ``long``); non-integral ids
-    fall back to ``kernel="join"`` automatically.
+    per candidate pair — decisive on collision-heavy corpora: at 10x
+    sf0.1 the uniform test embeddings produce 104.6M table-collisions
+    (82.1M distinct candidate pairs) under the 4x8 default, where a
+    bucket self-join paid 30.4s of per-pair expression folds
+    (docs/SCALING.md). Same empirical 6-dp BLAS parity contract as
+    all_pairs_cosine_matmul, pinned by the exact-cosine tests and the
+    oracle gates. Ids of any orderable type (integral, string,
+    decimal) pass through the kernel in their own type, and the output
+    id columns keep it.
 
-    ``kernel="join"`` keeps the pure-plan bucket self-join (the
-    in-engine cross-check and the shape to reach for when buckets are
-    sharp and collisions sparse): ``carry_vectors`` picks the shuffle
-    width as above.
+    Per-bucket memory is chunk x |bucket| doubles; n_planes ~ log2(n)
+    keeps |bucket| bounded at scale — for UNIFORM data. A power-law
+    corpus (real crawls: one boilerplate cluster holding 5-10% of all
+    docs) lands its whole cluster in ONE bucket in every table
+    regardless of plane count, so ``max_group`` (default 8192)
+    chunk-splits any bucket larger than that into C(C+1)/2 independent
+    wedge/rectangle subtasks via :func:`_chunk_split_oversized` —
+    identical pair set, bounded task size (straggler measurement:
+    docs/SCALING.md addendum 4). Pass ``max_group=None`` to pin the
+    one-task-per-bucket layout, and ``n_rows`` (a caller-known
+    row-count bound: catalog stats / parquet footer metadata) to make
+    the no-split decision job-free — a bucket never holds more than
+    one row per input vector, so ``n_rows <= max_group`` proves no
+    split is needed without running any Spark job at plan-build time.
     """
+    import pandas as pd
+
     dv = _as_double(F.col(vec_col))
-    pre_spread = emb  # count the un-spread frame (spread's round-robin
-    # repartition would turn a metadata-ish count into a shuffle)
-    emb = spread(emb)
     keys = F.array(*[
         V.sign_lsh_key(dv, n_planes, seed + t, dim) for t in range(n_tables)
     ])
-    if kernel == "bucket" and not _id_is_integral(emb, id_col):
-        # the BLAS kernel int64-casts ids and emits schema `long`; a
-        # string/decimal id would fail inside the Arrow worker, so fall
-        # back to the pure-plan bucket join which carries any id type
-        kernel = "join"
-    if kernel == "bucket":
-        import pandas as pd
-
-        thr = threshold
-        keyed = emb.select(
-            F.col(id_col).alias("vid"), dv.alias("v"),
-            F.posexplode(keys).alias("tbl", "bucket"),
-        )
-        group_cols = ["tbl", "bucket"]
-        if max_group:
-            # |bucket| <= n (one exploded row per vector per table), so
-            # a corpus at or under max_group provably needs no split —
-            # a caller-supplied ``n_rows`` (catalog stats / parquet
-            # footer metadata) makes that decision JOB-FREE; without
-            # the hint, one cheap count of the un-spread input skips
-            # the exploded-frame size pass (measured +0.3-0.6 s per
-            # sf0.1 bench entry — the hint exists to shave exactly that)
-            keyed, group_cols = _chunk_split_oversized(
-                keyed, group_cols, max_group,
-                row_bound=n_rows if n_rows is not None
-                else pre_spread.count())
-
-        def score_bucket(pdf: "pd.DataFrame") -> "pd.DataFrame":
-            # bandwidth-lean shared kernel (_score_group_pairs): wedge
-            # GEMM for within-chunk groups, cross rectangle for
-            # chunk-pair subtasks of a split oversized bucket
-            id_a, id_b, cos = _score_group_pairs(pdf, "v", thr)
-            return pd.DataFrame(
-                {"id_a": id_a, "id_b": id_b, "cos_raw": cos})
-
-        scored = keyed.groupBy(*group_cols).applyInPandas(
-            score_bucket, schema="id_a long, id_b long, cos_raw double")
-        return (
-            scored.groupBy("id_a", "id_b")
-            .agg(F.round(F.max("cos_raw"), 6).alias("cosine"))
-        )
-    if carry_vectors:
-        keyed = emb.select(
-            F.col(id_col).alias("vid"), dv.alias("v"), V.norm(dv).alias("nrm"),
-            F.posexplode(keys).alias("tbl", "bucket"),
-        )
-        a, b = keyed.alias("a"), keyed.alias("b")
-        scored = (
-            a.join(b, (F.col("a.tbl") == F.col("b.tbl"))
-                   & (F.col("a.bucket") == F.col("b.bucket"))
-                   & (F.col("a.vid") < F.col("b.vid")))
-            .select(F.col("a.vid").alias("id_a"), F.col("b.vid").alias("id_b"),
-                    _paired_cosine("a.v", "b.v", "a.nrm", "b.nrm")
-                    .alias("cos_raw"))
-            .filter(F.col("cos_raw") >= threshold)
-        )
-        return (
-            scored.groupBy("id_a", "id_b")
-            .agg(F.round(F.max("cos_raw"), 6).alias("cosine"))
-        )
-    keyed = emb.select(F.col(id_col).alias("vid"),
-                       F.posexplode(keys).alias("tbl", "bucket"))
-    a, b = keyed.alias("a"), keyed.alias("b")
-    cand = (
-        a.join(b, (F.col("a.tbl") == F.col("b.tbl"))
-               & (F.col("a.bucket") == F.col("b.bucket"))
-               & (F.col("a.vid") < F.col("b.vid")))
-        .select(F.col("a.vid").alias("id_a"), F.col("b.vid").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
+    thr = threshold
+    keyed = spread(emb).select(
+        F.col(id_col).alias("vid"), dv.alias("v"),
+        F.posexplode(keys).alias("tbl", "bucket"),
     )
-    vecs = emb.select(F.col(id_col).alias("vid"), dv.alias("v"),
-                      V.norm(dv).alias("nrm"))
-    paired = (
-        cand
-        .join(vecs.select(F.col("vid").alias("id_a"), F.col("v").alias("va"),
-                          F.col("nrm").alias("na")), "id_a")
-        .join(vecs.select(F.col("vid").alias("id_b"), F.col("v").alias("vb"),
-                          F.col("nrm").alias("nb")), "id_b")
+    schema = _pairs_schema(keyed, "cos_raw double")
+    group_cols = ["tbl", "bucket"]
+    if max_group:
+        # |bucket| <= n (one exploded row per vector per table), so
+        # a corpus at or under max_group provably needs no split —
+        # a caller-supplied ``n_rows`` (catalog stats / parquet
+        # footer metadata) makes that decision JOB-FREE; without
+        # the hint, one cheap count of the un-spread input (spread's
+        # round-robin repartition would turn it into a shuffle) skips
+        # the exploded-frame size pass
+        keyed, group_cols = _chunk_split_oversized(
+            keyed, group_cols, max_group,
+            row_bound=n_rows if n_rows is not None else emb.count())
+
+    def score_bucket(pdf: "pd.DataFrame") -> "pd.DataFrame":
+        # wedge GEMM for within-chunk groups, cross rectangle for
+        # chunk-pair subtasks of a split oversized bucket
+        id_a, id_b, cos = _score_group_pairs(pdf, "v", thr)
+        return pd.DataFrame({"id_a": id_a, "id_b": id_b, "cos_raw": cos})
+
+    scored = keyed.groupBy(*group_cols).applyInPandas(score_bucket, schema)
+    return (
+        scored.groupBy("id_a", "id_b")
+        .agg(F.round(F.max("cos_raw"), 6).alias("cosine"))
     )
-    scored = paired.select(
-        "id_a", "id_b",
-        _paired_cosine("va", "vb", "na", "nb").alias("cos_raw")) \
-        .filter(F.col("cos_raw") >= threshold)
-    return scored.select("id_a", "id_b",
-                         F.round("cos_raw", 6).alias("cosine"))
 
 
 def lloyd_centroids(emb: DataFrame, k: int = 4, iters: int = 2,
@@ -860,7 +785,6 @@ def knn_ivf_probe(corpus: DataFrame, queries: DataFrame, k: int = 5,
 def semantic_dedup_cells(emb: DataFrame, k: int = 4, iters: int = 2,
                          threshold: float = 0.42,
                          id_col: str = "vec_id", vec_col: str = "embedding",
-                         kernel: str = "blas", salt: int = 8,
                          max_group: int | None = 8192,
                          n_rows: int | None = None,
                          centroids: list | None = None) -> DataFrame:
@@ -881,105 +805,65 @@ def semantic_dedup_cells(emb: DataFrame, k: int = 4, iters: int = 2,
     means, tie-broken argmin), so an SQL oracle can replay the exact
     cell assignment AND the in-cell pair set.
 
-    Two in-cell scoring kernels, identical output (equality pinned in
-    tests; sf1 measurement in docs/SCALING.md):
-
-    - ``kernel="blas"`` (default): one ``applyInPandas`` per cell,
-      chunked ``M_chunk @ M.T`` so peak memory is chunk*|cell| doubles
-      regardless of cell size. The expression path costs ~10 us per
-      candidate pair (measured: 2*10^8 HOF cosine folds = ~30 s of a
-      32 s sf1 wall); the BLAS kernel pays the same n²/k arithmetic at
-      vectorized speed. Same empirical-not-bit-guaranteed 6-dp parity
-      caveat as :func:`all_pairs_cosine_matmul` (BLAS may reassociate
-      the dot sum); the expr kernel exists as the in-engine
-      cross-check. Requires an INTEGRAL ``id_col`` (ids cross Arrow
-      as int64, output schema ``long``); non-integral ids fall back
-      to ``kernel="expr"`` automatically.
-      Parallelism is k tasks (one per cell) — with the
-      paper's k ~ sqrt(n) that is also the scale-out knob, and cells
-      arrive via one shuffle of (id, vector), never a broadcast.
-      On a power-law corpus the dominant cluster is one CELL whatever
-      k is, so ``max_group`` (default 8192) chunk-splits oversized
-      cells into independent wedge/rectangle subtasks exactly like
-      embedding_lsh_pairs' bucket kernel (:func:`_chunk_split_oversized`;
-      identical pair set, docs/SCALING.md addendum 4); ``None`` pins
-      the one-task-per-cell layout, and ``n_rows`` (caller-known row
-      bound) makes the no-split decision job-free exactly as in
-      embedding_lsh_pairs.
-    - ``kernel="expr"``: pure-JVM salted self-join. Each right-side
-      row keeps one deterministic bucket (vid % salt) and the left
-      side explodes to all ``salt`` buckets, so every (u, v) pair
-      meets exactly once (via u's copy in v's bucket) over k*salt
-      join keys — output identical for any salt value.
+    In-cell scoring is one ``applyInPandas`` per cell, chunked
+    ``M_chunk @ M.T`` (:func:`_score_group_pairs`) so peak memory is
+    chunk*|cell| doubles regardless of cell size. An expression-fold
+    self-join costs ~10 us per candidate pair (measured: 2*10^8 HOF
+    cosine folds = ~30 s of a 32 s sf1 wall); the BLAS kernel pays the
+    same n²/k arithmetic at vectorized speed. Same
+    empirical-not-bit-guaranteed 6-dp parity caveat as
+    :func:`all_pairs_cosine_matmul` (BLAS may reassociate the dot sum),
+    pinned by the exact-cosine tests and the oracle gates. Ids of any
+    orderable type pass through in their own type, as in
+    embedding_lsh_pairs. Parallelism is k tasks (one per cell) — with
+    the paper's k ~ sqrt(n) that is also the scale-out knob, and cells
+    arrive via one shuffle of (id, vector), never a broadcast. On a
+    power-law corpus the dominant cluster is one CELL whatever k is,
+    so ``max_group`` (default 8192) chunk-splits oversized cells into
+    independent wedge/rectangle subtasks exactly like
+    embedding_lsh_pairs (:func:`_chunk_split_oversized`; identical pair
+    set, docs/SCALING.md addendum 4); ``None`` pins the
+    one-task-per-cell layout, and ``n_rows`` (caller-known row bound)
+    makes the no-split decision job-free exactly as in
+    embedding_lsh_pairs.
 
     Assignments are locally checkpointed first so the Lloyd argmin
     chain (a k*dim-literal expression tree) is computed once and the
     scoring stage carries a truncated lineage, not extra copies of
     the staged-argmin plan.
     """
+    import numpy as np
+    import pandas as pd
+
     a = lloyd_assignments(emb, k, iters, id_col, vec_col, centroids).select(
         F.col(id_col).alias("vid"), "dv", "cell",
     ).withColumn("nrm", V.norm(F.col("dv"))).localCheckpoint(eager=False)
 
-    if kernel == "blas" and not _id_is_integral(emb, id_col):
-        # same int64-id constraint as embedding_lsh_pairs' bucket
-        # kernel: fall back to the pure-plan salted join for
-        # non-integral id columns
-        kernel = "expr"
-    if kernel == "blas":
-        import numpy as np
-        import pandas as pd
+    thr = threshold
+    schema = _pairs_schema(a, "cell int", "cos_raw double")
+    group_cols = ["cell"]
+    if max_group:
+        # |cell| <= n; a caller-supplied ``n_rows`` keeps plan
+        # construction job-free (the lazy checkpoint then
+        # materializes at the scoring action); without the hint,
+        # counting `a` also materializes the checkpoint the size
+        # pass would have materialized anyway
+        a, group_cols = _chunk_split_oversized(
+            a, group_cols, max_group,
+            row_bound=n_rows if n_rows is not None else a.count())
 
-        thr = threshold
-        group_cols = ["cell"]
-        if max_group:
-            # |cell| <= n; a caller-supplied ``n_rows`` keeps plan
-            # construction job-free (the lazy checkpoint then
-            # materializes at the scoring action); without the hint,
-            # counting `a` also materializes the checkpoint the size
-            # pass would have materialized anyway
-            a, group_cols = _chunk_split_oversized(
-                a, group_cols, max_group,
-                row_bound=n_rows if n_rows is not None else a.count())
+    def score_cell(pdf: "pd.DataFrame") -> "pd.DataFrame":
+        # wedge GEMM within a (chunk of a) cell, cross rectangle for
+        # the chunk-pair subtasks of a split oversized cell
+        cell = int(pdf["cell"].iloc[0])
+        id_a, id_b, cos = _score_group_pairs(pdf, "dv", thr)
+        return pd.DataFrame({
+            "id_a": id_a,
+            "id_b": id_b,
+            "cell": np.full(len(id_a), cell, dtype="int32"),
+            "cos_raw": cos})
 
-        def score_cell(pdf: "pd.DataFrame") -> "pd.DataFrame":
-            # bandwidth-lean shared kernel (_score_group_pairs): wedge
-            # GEMM within a (chunk of a) cell, cross rectangle for the
-            # chunk-pair subtasks of a split oversized cell
-            cell = int(pdf["cell"].iloc[0])
-            id_a, id_b, cos = _score_group_pairs(pdf, "dv", thr)
-            return pd.DataFrame({
-                "id_a": id_a,
-                "id_b": id_b,
-                "cell": np.full(len(id_a), cell, dtype="int32"),
-                "cos_raw": cos})
-
-        pairs = a.groupBy(*group_cols).applyInPandas(
-            score_cell, schema="id_a long, id_b long, cell int, cos_raw double")
-    else:
-        l = a.withColumn(
-            "s", F.explode(F.array(*[F.lit(i) for i in range(salt)])))
-        # any deterministic per-row bucket works (each pair still meets
-        # exactly once via u's copy in v's bucket); pmod on the id
-        # needs a numeric id, so non-integral ids bucket by hash
-        r_salt = (F.pmod(F.col("vid"), F.lit(salt))
-                  if _id_is_integral(emb, id_col)
-                  else F.pmod(F.abs(F.hash(F.col("vid"))), F.lit(salt)))
-        r = a.withColumn("s", r_salt)
-        pairs = (
-            l.alias("l").join(
-                r.alias("r"),
-                (F.col("l.cell") == F.col("r.cell"))
-                & (F.col("l.s") == F.col("r.s"))
-                & (F.col("l.vid") < F.col("r.vid")))
-            .select(
-                F.col("l.vid").alias("id_a"), F.col("r.vid").alias("id_b"),
-                F.col("l.cell").alias("cell"),
-                _paired_cosine("l.dv", "r.dv", "l.nrm", "r.nrm")
-                .alias("cos_raw"),
-            )
-            .filter(F.col("cos_raw") >= threshold)
-        )
+    pairs = a.groupBy(*group_cols).applyInPandas(score_cell, schema)
     return pairs.select("id_a", "id_b", "cell",
                         F.round("cos_raw", 6).alias("cosine"))
 

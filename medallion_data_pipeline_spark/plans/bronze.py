@@ -109,11 +109,16 @@ def ingest_json_dir(spark: SparkSession, json_dir: str, warehouse: str) -> dict[
     """JSON-lines ingest path (API-export shape of S1): PERMISSIVE mode
     keeps malformed lines in `_corrupt_record` instead of failing the
     load — bronze's accept-anything contract for a second wire format.
-    Tables land through the same pk-dedup writer as CSV/fixtures."""
+    ``primitivesAsString`` lands every field as TEXT, as the CSV path
+    does, so silver's cleaners see the raw strings. The field names
+    still come from Spark's schema inference, which runs one job per
+    table. Tables land through the same pk-dedup writer as
+    CSV/fixtures."""
     dfs = {}
     for name in BRONZE_TABLES:
         path = os.path.join(json_dir, f"{name}.jsonl")
         if os.path.exists(path):
-            dfs[name] = spark.read.option("mode", "PERMISSIVE").option(
-                "columnNameOfCorruptRecord", "_corrupt_record").json(path)
+            dfs[name] = (spark.read.option("mode", "PERMISSIVE")
+                         .option("columnNameOfCorruptRecord", "_corrupt_record")
+                         .option("primitivesAsString", True).json(path))
     return write_bronze(dfs, warehouse)

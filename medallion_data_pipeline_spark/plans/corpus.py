@@ -86,7 +86,7 @@ def drop_near_duplicates(docs: DataFrame, threshold: float = 0.4,
 
     ``oversized_star`` is the boilerplate-clique knob: this flow only
     consumes connected COMPONENTS, so star candidates in oversized
-    band buckets (operators/dedup.py::minhash_candidates) keep the
+    band buckets (operators/dedup.py::minhash_near_duplicates) keep the
     clusters while cutting a clique's candidate volume from quadratic
     to linear — the knob to turn on for crawl-scale corpora."""
     pairs = minhash_near_duplicates(docs, text_col, id_col,

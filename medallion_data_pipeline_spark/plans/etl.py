@@ -5,7 +5,10 @@ idempotent overwrite semantics per layer.
 
 Usage:
     python -m medallion_data_pipeline_spark.plans.etl --layer all \
-        --warehouse /tmp/mdp_warehouse [--fixtures]
+        --warehouse /tmp/mdp_warehouse [--csv-dir DIR]
+
+Bronze lands the deterministic dirty fixtures unless ``--csv-dir``
+names CSVs to ingest instead.
 """
 
 from __future__ import annotations
@@ -30,17 +33,15 @@ def _report(layer: str, records: dict[str, object], ok: bool, t0: float) -> bool
 
 
 def run_pipeline(spark: SparkSession, warehouse: str, layer: str = "all",
-                 use_fixtures: bool = True, csv_dir: str | None = None) -> bool:
+                 csv_dir: str | None = None) -> bool:
     t0 = time.time()
     ok = True
 
     if layer in ("bronze", "all"):
         if csv_dir:
             counts = bronze.ingest_csv_dir(spark, csv_dir, warehouse)
-        elif use_fixtures:
-            counts = bronze.write_bronze(fixtures.generate_bronze(spark), warehouse)
         else:
-            raise ValueError("bronze needs --fixtures or --csv-dir")
+            counts = bronze.write_bronze(fixtures.generate_bronze(spark), warehouse)
         if not _report("bronze", counts, all(v > 0 for v in counts.values()), t0):
             return False
 
@@ -90,13 +91,10 @@ def main() -> int:
     ap.add_argument("--layer", default="all",
                     choices=["bronze", "silver", "gold", "quality", "forecast", "all"])
     ap.add_argument("--warehouse", default="/tmp/mdp_warehouse")
-    ap.add_argument("--fixtures", action="store_true", default=True,
-                    help="generate deterministic dirty fixtures for bronze")
     ap.add_argument("--csv-dir", default=None, help="ingest bronze from CSVs instead")
     args = ap.parse_args()
     spark = get_spark("mdp-etl")
-    ok = run_pipeline(spark, args.warehouse, args.layer,
-                      use_fixtures=args.fixtures, csv_dir=args.csv_dir)
+    ok = run_pipeline(spark, args.warehouse, args.layer, csv_dir=args.csv_dir)
     return 0 if ok else 1
 
 

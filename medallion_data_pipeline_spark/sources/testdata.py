@@ -18,7 +18,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .._util import read_parquet
+from .._util import _first_data_file, read_parquet
 
 TABLES = (
     "region",
@@ -76,12 +76,11 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ensure_utc_session(spark)
     path = os.path.join(sf_dir, f"{name}.parquet")
     nano_cols = NANO_TS_COLUMNS.get(name, ())
-    if not nano_cols:
-        return read_parquet(spark, path)
-    # the one inferred read: whether ``ts`` arrives as TIMESTAMP(NANOS)
-    # read as raw longs or as NTZ micros is Spark's inference to make
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
+    if nano_cols and _has_nanos(path, nano_cols):
+        # Spark reads TIMESTAMP(NANOS) only as raw longs, and only under
+        # this conf, which the scan reads again when the plan executes
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    df = read_parquet(spark, path)
     dtypes = dict(df.dtypes)
     for c in nano_cols:
         if dtypes.get(c) == "bigint":
@@ -91,6 +90,22 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # NTZ wall-clock -> UTC instant, session-timezone independent
             df = df.withColumn(c, F.to_utc_timestamp(F.col(c), "UTC"))
     return df
+
+
+def _has_nanos(path: str, cols: tuple[str, ...]) -> bool:
+    """Whether any of ``cols`` is a TIMESTAMP(NANOS) column in the
+    footer of ``path``'s first data file (read with pyarrow, no Spark
+    job)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    data_file = _first_data_file(path)
+    if data_file is None:
+        return False
+    schema = pq.read_schema(data_file)
+    return any(c in schema.names
+               and pa.types.is_timestamp(schema.field(c).type)
+               and schema.field(c).type.unit == "ns" for c in cols)
 
 
 def table_rows(sf_dir: str, name: str) -> int:

@@ -311,7 +311,8 @@ def clicks_to_purchases_join(events: DataFrame,
     sides carry a watermark and the join condition bounds event-time
     distance, so Spark can expire buffered state — the interval-join
     contract that keeps stream-stream joins bounded-memory at scale.
-    Batch dual: operators/temporal.py::range_join (same pairs)."""
+    Batch dual: operators/temporal.py::range_join_count (the same
+    time-bounded pairs, counted per left row)."""
     clicks = (
         events.filter(F.col("event_type") == "click")
         .select(F.col("user_id").alias("c_user"),

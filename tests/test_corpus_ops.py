@@ -334,30 +334,11 @@ def test_embedding_lsh_pairs_sound_and_recalls(spark):
     assert len(got) / len(exact) >= 0.5    # recall floor (measured ~0.7)
 
 
-def test_embedding_lsh_ids_only_path_equals_default(spark):
-    """Every execution shape of the banded-LSH pair search must
-    produce EXACTLY the same pair set and 6-dp cosines: the default
-    bucket-grouped BLAS kernel, and the join kernel with and without
-    carried vectors (wide vs narrow shuffle)."""
-    from medallion_data_pipeline_spark.operators import similarity as S
-
-    emb = load_table(spark, "/root/testdata/sf0.01", "embeddings")
-    bucket = {(r.id_a, r.id_b): r.cosine
-              for r in S.embedding_lsh_pairs(emb, threshold=0.42).collect()}
-    assert len(bucket) > 0
-    for cv in (True, False):
-        join = {(r.id_a, r.id_b): r.cosine
-                for r in S.embedding_lsh_pairs(
-                    emb, threshold=0.42, kernel="join",
-                    carry_vectors=cv).collect()}
-        assert join == bucket, cv
-
-
-def test_embedding_kernels_fall_back_on_string_ids(spark):
-    """The Arrow kernels int64-cast the id column, so a non-integral
-    id_col must transparently fall back to the pure-plan kernels
-    (join/expr) instead of failing inside the Python worker — and the
-    pair SET must match the integer-id run modulo the id rename."""
+def test_embedding_kernels_carry_string_and_decimal_ids(spark):
+    """The Arrow pair kernels carry the id column in its own type: string
+    and decimal(12,0) ids give the integer-id run's pairs and 6-dp
+    cosines, also when the oversized-group split runs on them
+    (max_group=64), and the output ids keep the input's type."""
     from pyspark.sql import functions as F
 
     from medallion_data_pipeline_spark.operators import similarity as S
@@ -365,20 +346,27 @@ def test_embedding_kernels_fall_back_on_string_ids(spark):
     emb = load_table(spark, "/root/testdata/sf0.01", "embeddings")
     int_pairs = {(r.id_a, r.id_b): r.cosine
                  for r in S.embedding_lsh_pairs(emb, threshold=0.42).collect()}
-    s_emb = emb.withColumn("sid", F.format_string("v%08d", "vec_id"))
-    str_pairs = {(int(r.id_a[1:]), int(r.id_b[1:])): r.cosine
-                 for r in S.embedding_lsh_pairs(
-                     s_emb, threshold=0.42, id_col="sid").collect()}
-    assert str_pairs == int_pairs
-
     int_cells = {(r.id_a, r.id_b): r.cosine
                  for r in S.semantic_dedup_cells(
                      emb, k=4, iters=2, threshold=0.42).collect()}
-    str_cells = {(int(r.id_a[1:]), int(r.id_b[1:])): r.cosine
-                 for r in S.semantic_dedup_cells(
-                     s_emb, k=4, iters=2, threshold=0.42,
-                     id_col="sid").collect()}
-    assert str_cells == int_cells
+    assert int_pairs and int_cells
+    ids = {
+        "string": (F.format_string("v%08d", "vec_id"), lambda v: int(v[1:])),
+        "decimal(12,0)": (F.col("vec_id").cast("decimal(12,0)"), int),
+    }
+    for id_type, (id_expr, to_int) in ids.items():
+        typed = emb.withColumn("tid", id_expr)
+        for max_group in (8192, 64):
+            lsh = S.embedding_lsh_pairs(typed, threshold=0.42, id_col="tid",
+                                        max_group=max_group)
+            assert dict(lsh.dtypes)["id_a"] == id_type
+            assert {(to_int(r.id_a), to_int(r.id_b)): r.cosine
+                    for r in lsh.collect()} == int_pairs, (id_type, max_group)
+            cells = S.semantic_dedup_cells(typed, k=4, iters=2, threshold=0.42,
+                                           id_col="tid", max_group=max_group)
+            assert dict(cells.dtypes)["id_b"] == id_type
+            assert {(to_int(r.id_a), to_int(r.id_b)): r.cosine
+                    for r in cells.collect()} == int_cells, (id_type, max_group)
 
 
 def test_segment_dedup_first_occurrence_wins(spark):
@@ -466,31 +454,6 @@ def test_semantic_dedup_cells_sound_and_partitioned(spark):
     for (a, b) in set(exact) - set(got):
         assert cells[a] != cells[b]
     assert len(got) / len(exact) >= 0.3    # k=4 coarse-cell floor
-
-
-def test_semantic_dedup_cells_kernels_agree(spark):
-    """The two in-cell scoring kernels are execution strategies, not
-    semantics: the per-cell chunked-BLAS kernel (default) and the
-    pure-JVM salted expression join yield the identical pair set with
-    identical 6-dp cosines, and the expr join's salt is output-
-    invariant (every (u, v) meets exactly once, via u's exploded copy
-    in v's bucket)."""
-    from medallion_data_pipeline_spark.operators import similarity as S
-
-    emb = load_table(spark, "/root/testdata/sf0.01", "embeddings")
-
-    def run(**kw):
-        return sorted(
-            (r.id_a, r.id_b, r.cell, r.cosine)
-            for r in S.semantic_dedup_cells(emb, k=4, iters=2,
-                                            threshold=0.42,
-                                            **kw).collect())
-
-    blas = run()    # default kernel
-    assert len(blas) > 0
-    assert run(kernel="expr", salt=1) == blas   # unsalted expr join
-    assert run(kernel="expr", salt=3) == blas   # salt ∤ id space
-    assert run(kernel="expr", salt=8) == blas
 
 
 def test_segment_dedup_global_uniqueness_property(spark):

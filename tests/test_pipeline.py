@@ -200,7 +200,7 @@ def test_bronze_json_ingest(spark, tmp_path):
     landed = read_table(spark, wh, "bronze", "suppliers")
     assert "_corrupt_record" in landed.columns
     assert landed.filter(F.col("_corrupt_record").isNotNull()).count() == 1
-    assert {r.supplier_id for r in landed.select("supplier_id").collect()} == {1, 2, None}
+    assert {r.supplier_id for r in landed.select("supplier_id").collect()} == {"1", "2", None}
 
 
 def test_silver_empty_table_yields_zero_counts(spark, tmp_path):

@@ -81,7 +81,7 @@ def test_footer_schema_equals_inferred_schema(spark, warehouse):
     """The footer schema is the schema Spark's own inference reads, for
     the pyarrow-written testdata and for Spark-written warehouse
     tables (partitioned ones included)."""
-    paths = [os.path.join(SF_SMOKE, f"{t}.parquet") for t in TABLES if t != "events"]
+    paths = [os.path.join(SF_SMOKE, f"{t}.parquet") for t in TABLES]
     paths += [os.path.join(warehouse, layer, name)
               for layer, name in MedallionEngine(spark, warehouse).list_tables()]
     for path in paths:
@@ -91,9 +91,7 @@ def test_footer_schema_equals_inferred_schema(spark, warehouse):
 
 def test_parquet_and_csv_reads_go_through_the_helper():
     """No bare ``spark.read.parquet(`` / ``spark.read.csv(`` outside
-    ``_util.read_parquet``. The one exception is testdata's ``events``
-    read, whose ``ts`` physical type (TIMESTAMP(NANOS) read as longs, or
-    NTZ micros) is left to Spark's inference."""
+    ``_util.read_parquet``."""
     found = []
     for root, _dirs, files in os.walk(PKG):
         for f in files:
@@ -103,8 +101,38 @@ def test_parquet_and_csv_reads_go_through_the_helper():
             for line in open(path, encoding="utf-8"):
                 if re.search(r"\bread\.(parquet|csv)\(", line):
                     found.append((os.path.relpath(path, PKG), line.strip()))
-    assert found == [(os.path.join("sources", "testdata.py"),
-                      "df = spark.read.parquet(path)")]
+    assert found == []
+
+
+def test_events_read_runs_no_job_and_keeps_the_session_conf(spark, tmp_path):
+    """testdata ``events`` reads ``ts``'s physical type from the footer:
+    a micros file runs no job and leaves the legacy nanos conf alone;
+    only a TIMESTAMP(NANOS) file sets it, and lands the same UTC
+    instants."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    spark.conf.unset(key)
+    before = spark.conf.get(key)
+    jobs, df = _jobs(spark, lambda: load_table(spark, SF_SMOKE, "events"))
+    assert jobs == 0
+    assert spark.conf.get(key) == before
+    assert dict(df.dtypes)["ts"] == "timestamp"
+
+    micros = pq.read_table(os.path.join(SF_SMOKE, "events.parquet")).slice(0, 50)
+    nanos = micros.set_column(micros.schema.get_field_index("ts"), "ts",
+                              micros["ts"].cast(pa.timestamp("ns")))
+    pq.write_table(nanos, str(tmp_path / "events.parquet"))
+    try:
+        got = load_table(spark, str(tmp_path), "events")
+        assert spark.conf.get(key) == "true"
+        assert got.schema == df.schema
+        want = {r.event_id: r for r in df.collect()}
+        rows = got.collect()
+        assert len(rows) == 50 and all(r == want[r.event_id] for r in rows)
+    finally:
+        spark.conf.unset(key)
 
 
 def test_tiny_df_starts_no_python_worker(spark):
