@@ -225,37 +225,14 @@ def word_shingles(col: Column, k: int = 3) -> Column:
     return shingles_from_tokens(words(col), k)
 
 
-def minhash_sig_from_shingles(shingles: Column, num_hashes: int = 16) -> Column:
-    """MinHash signature (array<string>, length ``num_hashes``) from a
-    MATERIALIZED shingle-array column.
-
-    Each hash family h_i(s) = md5(i || ':' || s); the signature element
-    is the lexicographic MIN of the hex digests over all shingles.
-    Lexicographic min over md5 hex is a valid uniform min-hash (hex
-    order == byte order) and is reproducible in any engine with md5.
-    Empty docs -> array of NULLs.
-    """
-    def hash_family(prefix: str):
-        # closure factory — a default-arg lambda would be treated as the
-        # two-arg (element, index) HOF form and bind prefix to the index
-        return lambda s: F.md5(F.concat(F.lit(prefix), s))
-
-    sig = []
-    for i in range(num_hashes):
-        sig.append(F.array_min(F.transform(shingles, hash_family(f"{i}:"))))
-    return F.array(*sig)
-
-
 # --- integer universal-hash MinHash family -------------------------------
 #
-# The md5-per-(shingle × hash) family above is simple and portable but
-# does num_hashes full digests per shingle — the measured hot loop of the
-# fuzzy-dedup pipeline. This family digests each shingle ONCE (md5 -> the
-# first 8 hex chars as a 32-bit integer x) and derives every hash by an
-# affine map h_i(x) = (a_i*x + b_i) mod p over that integer: ~16 integer
-# mults instead of 16 digests per shingle (measured ~2.5x end-to-end at
-# sf0.1). Constants are generated from a FIXED seed so the DuckDB oracle
-# regenerates the identical family. All intermediates fit signed 64-bit:
+# Each shingle is digested ONCE (md5 -> the first 8 hex chars as a 32-bit
+# integer x) and every hash is derived by an affine map
+# h_i(x) = (a_i*x + b_i) mod p over that integer: ~16 integer mults
+# instead of 16 digests per shingle (measured ~2.5x end-to-end at sf0.1
+# against an md5-per-(shingle × hash) family). Constants are generated
+# from a FIXED seed so the DuckDB oracle regenerates the identical family. All intermediates fit signed 64-bit:
 # a < 2^31, x < 2^32 => a*x + b < 2^63 (both engines overflow-safe).
 
 MINHASH_PRIME = 4_294_967_311  # smallest prime > 2^32
@@ -287,7 +264,8 @@ def minhash_sig_from_ints(xs: Column, num_hashes: int = 16) -> Column:
     """MinHash signature (array<long>) from the materialized shingle-int
     column: sig_i = min over shingles of (a_i*x + b_i) mod p."""
     def fam(a: int, b: int):
-        # closure factory — see hash_family note above on HOF lambda arity
+        # closure factory — a default-arg lambda changes the HOF arity
+        # and pyspark would bind the extra parameter to the element index
         return lambda x: (F.lit(a) * x + F.lit(b)) % F.lit(MINHASH_PRIME)
 
     return F.array(*[
@@ -305,25 +283,6 @@ def band_keys_from_int_sig(sig: Column, num_hashes: int = 16, bands: int = 4) ->
         joined = F.concat_ws(",", F.transform(band, lambda v: v.cast("string")))
         keys.append(F.md5(F.concat_ws("|", F.lit(str(b)), joined)))
     return F.array(*keys)
-
-
-def band_keys_from_sig(sig: Column, num_hashes: int = 16, bands: int = 4) -> Column:
-    """LSH band keys from a MATERIALIZED signature column: split into
-    ``bands`` rows of ``num_hashes/bands`` values; each key is md5 of
-    the joined band. Documents sharing ANY band key are near-dup
-    candidates. Returns array<string> of length ``bands``."""
-    rows = num_hashes // bands
-    keys = []
-    for b in range(bands):
-        band = F.slice(sig, b * rows + 1, rows)
-        keys.append(F.md5(F.concat_ws("|", F.lit(str(b)), F.concat_ws(",", band))))
-    return F.array(*keys)
-
-
-def minhash_signature(col: Column, k: int = 3, num_hashes: int = 16) -> Column:
-    """Convenience single-expression form; for bulk paths stage
-    words/shingles as columns first (see word_shingles PERF note)."""
-    return minhash_sig_from_shingles(word_shingles(col, k), num_hashes)
 
 
 def simhash(col: Column, bits: int = 16) -> Column:

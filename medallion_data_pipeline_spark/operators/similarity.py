@@ -1,24 +1,30 @@
 """Similarity search over embedding columns (array<float>).
 
-Every top-k operator is one pipeline: prepare the query and corpus
-sides, optionally route them to coarse partitions, score candidate
-pairs from a vector code, optionally re-rank a shortlist exactly, and
-rank per query (``_top_k``):
+Top-k search is one pipeline, :func:`search`: prepare the query and
+corpus sides, optionally route them to coarse partitions, score
+candidate pairs from a vector code, optionally re-rank a shortlist
+exactly, and rank per query (``_top_k``). Each stage is set by its
+arguments:
 
-=================  ===========  =====  =============  ==============
-operator           route        code   re-rank        output score
-=================  ===========  =====  =============  ==============
-knn_bruteforce     none         raw    —              cosine
-knn_matmul         none         raw    —              cosine (BLAS)
-hard_negatives     none         raw    —              cosine + labels
-knn_lsh            sign-LSH     raw    —              cosine
-knn_ivf_probe      IVF(nprobe)  raw    —              cosine
-knn_pq_adc         none         PQ     —              cosine_adc
-knn_pq_rerank      none         PQ     exact top-k′   cosine
-knn_ivf_pq         IVF(nprobe)  PQ     exact top-k′   cosine
-knn_sq8            none         SQ8    —              cosine_sq8
-knn_ivf_sq8        IVF(nprobe)  SQ8    —              cosine_sq8
-=================  ===========  =====  =============  ==============
+=======  ===========================  =====================  ============
+stage    argument                     effect                 score column
+=======  ===========================  =====================  ============
+route    (none)                       exhaustive cross join
+route    ``cents``, ``nprobe``        IVF: the query's
+                                      ``nprobe`` nearest
+                                      cells
+route    ``lsh=(n_planes, seed,       sign-LSH bucket
+         dim)``
+code     (none)                       raw vectors            cosine
+code     ``sq8=(vmins, vmaxs)``       decoded 8-bit codes    cosine_sq8
+code     ``books``                    PQ-ADC lookups         cosine_adc
+re-rank  ``shortlist``                exact cosine of the    cosine
+                                      top ``shortlist``
+=======  ===========================  =====================  ============
+
+``knn_matmul`` (the same exhaustive raw search on Arrow-batched BLAS)
+and ``hard_negatives`` (label mismatch fused into the join condition)
+are separate kernels.
 
 Ranking is cosine descending, NULL (zero-norm pair) last, ties to the
 lower neighbor id; a query never matches itself. LSH buckets come from
@@ -121,16 +127,21 @@ def _adc_cosine(codes: DataFrame, lut: DataFrame, keys) -> DataFrame:
     )
 
 
-def _sq8_codec(vmins, vmaxs, levels: int):
+#: Code levels of the 8-bit scalar quantizer (codes 0..255); the SQ8
+#: oracles in queries/llmops.py read the same constant.
+SQ8_LEVELS = 255
+
+
+def _sq8_codec(vmins, vmaxs):
     """(encode, decode) Column builders of the 8-bit scalar quantizer.
-    encode: per element ``round((x - vmin_d) * levels / span_d)``
-    clamped to [0, levels], code 0 when the dimension is constant;
-    decode: ``vmin_d + code_d * span_d / levels``. Every step is a
+    encode: per element ``round((x - vmin_d) * L / span_d)`` clamped
+    to [0, L] with L = ``SQ8_LEVELS``, code 0 when the dimension is
+    constant; decode: ``vmin_d + code_d * span_d / L``. Every step is a
     single IEEE op in a fixed order (subtract, multiply, divide, +0.5,
     floor), so the DuckDB oracle replays the exact codes."""
     mn = V.lit_double_array(vmins)
     span = V.lit_double_array([mx - mnv for mnv, mx in zip(vmins, vmaxs)])
-    lv = F.lit(float(levels))
+    lv = F.lit(float(SQ8_LEVELS))
 
     def encode(dv):
         shifted = F.zip_with(dv, mn, lambda x, m: x - m)
@@ -397,20 +408,107 @@ def _score_group_pairs(pdf, vec_field: str, thr: float, chunk: int = 1024):
             np.concatenate(out_c))
 
 
-def knn_bruteforce(corpus: DataFrame, queries: DataFrame, k: int = 5,
-                   id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
-    """Exact top-k cosine neighbors of each query vector (excluding
-    itself). Embeddings are cast float->double BEFORE the products so
-    the arithmetic is engine-portable (float*float truncates)."""
+def search(corpus: DataFrame, queries: DataFrame, k: int = 5, *,
+           cents: list | None = None, nprobe: int = 1,
+           lsh: tuple[int, int, int] | None = None,
+           sq8: tuple[list[float], list[float]] | None = None,
+           books: list | None = None, shortlist: int | None = None,
+           id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
+    """Top-``k`` cosine neighbors of each query vector (excluding
+    itself), one stage per argument (module table): ``cents`` /
+    ``lsh`` route, ``sq8`` / ``books`` pick the corpus code,
+    ``shortlist`` re-ranks exactly (``sq8`` and ``books`` are
+    alternative codes). Recall knobs: ``nprobe`` (equal to the cell
+    count it is exact), fewer LSH planes (bigger buckets), the
+    shortlist width and the codebook resolution; with ``shortlist``
+    the reported cosines are exact. Trained artifacts are inputs —
+    :func:`deterministic_centroids`, :func:`sq_train` and
+    :func:`pq_train` build them once, and a caller that searches the
+    same corpus repeatedly keeps them (train once, serve many).
+
+    Embeddings are cast float->double BEFORE the products so the
+    arithmetic is engine-portable (float*float truncates). The corpus
+    is scanned once: the IVF cell argmin and every PQ subspace argmin
+    are independent argmins over the same row, so they run in ONE
+    :func:`_staged_argmin_multi` pass. Only the query side fans out
+    over its ``nprobe`` cells, so the join cost scales with queries ×
+    nprobe, not corpus size. Deterministic end to end (seeded
+    centroids, decimal-exact Lloyd, strict argmins, fixed-order
+    quantize ops, tie-broken ranks), so the DuckDB oracle replays
+    routing, training, codes, scoring and the re-rank."""
+    c = spread(corpus).select(F.col(id_col),
+                              _as_double(F.col(vec_col)).alias("dv"))
     q = _side(queries, "q", id_col, _as_double(vec_col))
-    c = _side(spread(corpus), "c", id_col, _as_double(vec_col))
-    return _top_k(_cosine_pairs(F.broadcast(q).crossJoin(c)), k)
+    routed, keys, argmins = q, [], []
+    if cents is not None:
+        routed = _route_nprobe(routed, cents, nprobe)
+        argmins.append(("dv", list(enumerate(cents)), "cell", "_d2c"))
+        keys.append("cell")
+    if lsh is not None:
+        c = c.withColumn("bucket", V.sign_lsh_key(F.col("dv"), *lsh))
+        routed = routed.withColumn("bucket", V.sign_lsh_key(F.col("qv"), *lsh))
+        keys.append("bucket")
+    if books is not None:
+        subdim = len(books[0][0][1])
+        c = c.select("*", *[
+            F.slice("dv", s * subdim + 1, subdim).alias(f"_sub{s}")
+            for s in range(len(books))])
+        argmins += [(f"_sub{s}", book, f"_cell{s}", f"_d2_{s}")
+                    for s, book in enumerate(books)]
+    if argmins:
+        c = _staged_argmin_multi(c, argmins)
+
+    if books is not None:
+        # one row per (vector, subspace): the 8-byte-per-subspace index
+        codes = F.explode(F.array(*[
+            F.struct(F.lit(s).alias("subspace"),
+                     F.col(f"_cell{s}").alias("code"))
+            for s in range(len(books))]))
+        c = (c.select(F.col(id_col).alias("neighbor_id"), *keys,
+                      codes.alias("e"))
+             .select("neighbor_id", *keys, "e.subspace", "e.code"))
+    elif sq8 is not None:
+        # decode-at-scan: the candidate vector derives from the 1-byte
+        # codes, never from the raw vector
+        encode, decode = _sq8_codec(*sq8)
+        c = _side(c, "c", id_col, decode(encode(F.col("dv"))), *keys)
+    else:
+        c = _side(c, "c", id_col, F.col("dv"), *keys)
+    if cents is not None:
+        # lineage barrier: CollapseProject otherwise merges the staged
+        # argmin back together when the join consumes it, re-substituting
+        # every per-centroid distance fold into the least()/when-chain
+        # references (a 276 KB plan; 7.9 s -> 1.9 s at sf0.1 with it)
+        c = c.localCheckpoint(eager=False)
+
+    # No post-score dedup is needed: every corpus vector routes to
+    # exactly ONE cell and bucket (strict-< argmin) and a query's probed
+    # cells are distinct, so each (query, neighbor) pair is scored at
+    # most once. If corpus routing ever becomes multi-cell, dedupe with
+    # groupBy(query_id, neighbor_id).agg(F.max("cos_raw")) — map-side
+    # combine — never `.distinct()` on the near-unique scored triple.
+    if books is not None:
+        # the lookup is built from the UNROUTED queries and then joined
+        # to their probed keys; built from the routed side it would be
+        # duplicated once per probed cell
+        lut = _adc_lut(q, books)
+        if keys:
+            lut = routed.select("query_id", *keys).join(lut, "query_id")
+        scored = _adc_cosine(c, lut, keys + ["subspace", "code"])
+        out = "cosine_adc"
+    else:
+        scored = _cosine_pairs(c.join(F.broadcast(routed), keys or None))
+        out = "cosine" if sq8 is None else "cosine_sq8"
+    if shortlist is None:
+        return _top_k(scored, k, out)
+    cand = _top_k(scored, shortlist).select("query_id", "neighbor_id")
+    return _top_k(_rerank(cand, queries, corpus, id_col, vec_col), k)
 
 
 def knn_matmul(corpus: DataFrame, queries: DataFrame, k: int = 5,
                id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
     """Exact top-k cosine neighbors via Arrow-batched BLAS — the
-    vectorized-Pandas-UDF dual of :func:`knn_bruteforce` (same result).
+    vectorized-Pandas-UDF dual of exhaustive :func:`search` (same result).
 
     The (small-by-contract) query set is collected once into a numpy
     matrix (with its row norms) and broadcast; each corpus Arrow batch
@@ -530,20 +628,6 @@ def all_pairs_cosine_matmul(emb: DataFrame, threshold: float = 0.42,
     return out.select("id_a", "id_b", F.round("cos_raw", 6).alias("cosine"))
 
 
-def ivf_assign(df: DataFrame, centroids: list[list[float]],
-               id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
-    """Assign each vector to its nearest centroid (IVF cell).
-
-    Centroids arrive as driver-side literals (in production: a k-means
-    fit on a sample, broadcast). Assignment is a codegen'd argmin over
-    k distance expressions — no shuffle; the later search shuffles on
-    the small cell id instead of cross-joining the corpus.
-    """
-    v = spread(df).select(F.col(id_col), _as_double(F.col(vec_col)).alias("dv"))
-    return (_staged_argmin(v, "dv", list(enumerate(centroids)))
-            .select(F.col(id_col), "dv", "cell"))
-
-
 def deterministic_centroids(corpus: DataFrame, n_cells: int = 8,
                             id_col: str = "vec_id", vec_col: str = "embedding") -> list[list[float]]:
     """Pick n_cells seed vectors deterministically (lowest ids) — the
@@ -553,21 +637,6 @@ def deterministic_centroids(corpus: DataFrame, n_cells: int = 8,
         .select(_as_double(F.col(vec_col)).alias("v")).collect()
     )
     return [list(r.v) for r in rows]
-
-
-def knn_lsh(corpus: DataFrame, queries: DataFrame, k: int = 5,
-            id_col: str = "vec_id", vec_col: str = "embedding",
-            n_planes: int = 8, seed: int = 7, dim: int = 64) -> DataFrame:
-    """Approximate top-k: candidates limited to the query's sign-LSH
-    bucket, then exact cosine within it. At scale the bucket join is an
-    equi-join (shuffle on bucket key) instead of a cross join; recall
-    is tuned by n_planes (fewer planes = bigger buckets = higher
-    recall, more compute)."""
-    dv = _as_double(vec_col)
-    bucket = V.sign_lsh_key(dv, n_planes, seed, dim).alias("bucket")
-    q = _side(queries, "q", id_col, dv, bucket)
-    c = _side(spread(corpus), "c", id_col, dv, bucket)
-    return _top_k(_cosine_pairs(q.join(c, "bucket")), k)
 
 
 def embedding_lsh_pairs(emb: DataFrame, threshold: float = 0.42,
@@ -745,43 +814,6 @@ def lloyd_kmeans_stats(emb: DataFrame, k: int = 4, iters: int = 2,
     )
 
 
-def knn_ivf_probe(corpus: DataFrame, queries: DataFrame, k: int = 5,
-                  n_cells: int = 8, nprobe: int = 2,
-                  id_col: str = "vec_id", vec_col: str = "embedding",
-                  cents: list | None = None) -> DataFrame:
-    """IVF ANN: route query and corpus vectors to centroid cells and
-    search exactly within the query's ``nprobe`` nearest cells — the
-    standard recall knob (recall grows with nprobe at proportional
-    cost; nprobe = n_cells degenerates to exact search). Corpus routing
-    stays single-cell; only the query side fans out, so the join cost
-    scales with queries × nprobe, not corpus size.
-
-    The corpus assignment is locally checkpointed: CollapseProject
-    merges the staged-argmin projections back together when the join
-    consumes them, re-substituting every per-centroid distance fold
-    into the least()/when-chain references — a 276 KB plan with 161
-    zip_with folds whose per-action analysis+codegen dominated the
-    query (measured 7.9 s -> 1.9 s at sf0.1 with the barrier).
-
-    ``cents``: pre-selected cell centroids (the registry pattern —
-    IVF index construction is offline in production); omitted, the
-    deterministic seed pick runs inline (identical result)."""
-    if cents is None:
-        cents = deterministic_centroids(corpus, n_cells, id_col, vec_col)
-    c = _side(ivf_assign(corpus, cents, id_col, vec_col), "c", id_col,
-              F.col("dv"), "cell").localCheckpoint(eager=False)
-    q = _route_nprobe(_side(queries, "q", id_col, _as_double(vec_col)),
-                      cents, nprobe)
-    # No post-score dedup is needed: ivf_assign routes every corpus
-    # vector to exactly ONE cell (strict-< argmin) and the probed cells
-    # per query are distinct by construction, so each (query, neighbor)
-    # pair is scored at most once. If corpus routing ever becomes
-    # multi-cell, dedupe with groupBy(query_id, neighbor_id)
-    # .agg(F.max("cos_raw")) — map-side combine — never `.distinct()`
-    # on the near-unique scored triple (a full shuffle of every pair).
-    return _top_k(_cosine_pairs(q.join(c, "cell")), k)
-
-
 def semantic_dedup_cells(emb: DataFrame, k: int = 4, iters: int = 2,
                          threshold: float = 0.42,
                          id_col: str = "vec_id", vec_col: str = "embedding",
@@ -837,7 +869,7 @@ def semantic_dedup_cells(emb: DataFrame, k: int = 4, iters: int = 2,
 
     a = lloyd_assignments(emb, k, iters, id_col, vec_col, centroids).select(
         F.col(id_col).alias("vid"), "dv", "cell",
-    ).withColumn("nrm", V.norm(F.col("dv"))).localCheckpoint(eager=False)
+    ).localCheckpoint(eager=False)
 
     thr = threshold
     schema = _pairs_schema(a, "cell int", "cos_raw double")
@@ -1044,143 +1076,6 @@ def pq_quantization_stats(emb: DataFrame, m: int = 2, k: int = 4,
     )
 
 
-def knn_pq_adc(corpus: DataFrame, queries: DataFrame, k: int = 5,
-               m: int = 2, n_codes: int = 4, iters: int = 1,
-               id_col: str = "vec_id", vec_col: str = "embedding",
-               dim: int = 64, books: list | None = None) -> DataFrame:
-    """Approximate top-k cosine via PQ asymmetric distance computation
-    (ADC): the corpus is reduced to ``m`` small codes per vector; each
-    query precomputes dot(q_sub, centroid) for every (subspace, code) —
-    an m×n_codes lookup — and a candidate's approximate cosine is
-    assembled from m lookup entries, never from its raw vector.
-
-    The 100 TB shape: the scored join carries only (id, subspace,
-    code) — the 8-byte-per-subspace compressed corpus — against a
-    broadcast |Q|×m×n_codes lookup; per-pair math is m additions. The
-    recall knob is n_codes (codebook resolution) and m (subspace
-    granularity); re-ranking the ADC top-k' with exact vectors is the
-    standard refinement (knn_bruteforce on the candidate set).
-
-    Deterministic end-to-end (training, codes, tie-broken ranking), so
-    the SQL oracle replays training AND scoring exactly.
-
-    ``books``: pre-trained codebooks (the :func:`pq_train` return
-    shape). PQ training is an OFFLINE amortized step in any production
-    ANN system — train once, serve many — so callers that search the
-    same corpus repeatedly pass their registry's codebooks here and
-    skip the per-call Lloyd jobs; omitted, training runs inline
-    (identical output — training is deterministic).
-    """
-    if books is None:
-        books = pq_train(corpus, m, n_codes, iters, id_col, vec_col, dim)
-    codes = pq_assign_long(corpus, books, id_col, vec_col).select(
-        F.col(id_col).alias("neighbor_id"), "subspace", "code")
-    lut = _adc_lut(_side(queries, "q", id_col, _as_double(vec_col)), books)
-    return _top_k(_adc_cosine(codes, lut, ["subspace", "code"]), k,
-                  "cosine_adc")
-
-
-def knn_pq_rerank(corpus: DataFrame, queries: DataFrame, k: int = 5,
-                  shortlist: int = 50, m: int = 4, n_codes: int = 8,
-                  iters: int = 1, id_col: str = "vec_id",
-                  vec_col: str = "embedding", dim: int = 64,
-                  books: list | None = None) -> DataFrame:
-    """The full IVF-PQ search pattern: ADC over the compressed corpus
-    produces a ``shortlist`` of candidates per query, then ONLY those
-    |Q| x shortlist pairs fetch their raw vectors for exact cosine
-    re-ranking. Reported cosines are therefore exact (identical values
-    to knn_bruteforce for the pairs returned); the approximation lives
-    entirely in which candidates make the shortlist.
-
-    Measured on the synthetic corpus (uniform-random 64-dim vectors —
-    distance concentration makes this the hardest regime for vector
-    quantization): true-top-5 shortlist coverage 0.40 at sf0.01
-    (k'=50/500) and 0.49 at sf0.1 (k'=200/5000); clustered production
-    embeddings bucket far more sharply. Recall knobs: shortlist width,
-    n_codes, m.
-    """
-    cand = knn_pq_adc(corpus, queries, k=shortlist, m=m, n_codes=n_codes,
-                      iters=iters, id_col=id_col, vec_col=vec_col,
-                      dim=dim, books=books).select("query_id", "neighbor_id")
-    return _top_k(_rerank(cand, queries, corpus, id_col, vec_col), k)
-
-
-def knn_ivf_pq(corpus: DataFrame, queries: DataFrame, k: int = 5,
-               n_cells: int = 8, nprobe: int = 2, shortlist: int = 50,
-               m: int = 4, n_codes: int = 8, iters: int = 1,
-               id_col: str = "vec_id", vec_col: str = "embedding",
-               dim: int = 64, cents: list | None = None,
-               books: list | None = None) -> DataFrame:
-    """The full production ANN composition (FAISS IVFADC): an IVF
-    coarse quantizer routes each query to its ``nprobe`` nearest
-    cells, PQ-ADC scores ONLY the compressed codes living in those
-    cells, and the top-``shortlist`` candidates fetch raw vectors for
-    exact cosine re-ranking.
-
-    What each prior operator lacked alone: :func:`knn_pq_adc` /
-    :func:`knn_pq_rerank` scan EVERY corpus code per query (compressed
-    but exhaustive — memory solved, CPU not); :func:`knn_ivf_probe`
-    prunes the candidate set but scores raw vectors (CPU per pair high,
-    memory unsolved). Composed, the scored join touches ~nprobe/n_cells
-    of the corpus AND moves only (id, cell, subspace, code) — at 100 TB
-    that is the difference between an exhaustive pass over compressed
-    codes and reading ~2/8 of an 8-byte-per-subspace index, which is
-    why this is the shape every production vector store ships.
-
-    Deterministic end-to-end (seeded centroids, decimal-exact Lloyd,
-    strict argmins, tie-broken ranks), so the DuckDB oracle replays
-    coarse routing, codebook training, code assignment, restricted ADC,
-    and the re-rank. Reported cosines are exact (the approximation is
-    confined to shortlist membership, as in :func:`knn_pq_rerank`).
-    ``cents``/``books``: pass registry artifacts to skip the offline
-    training jobs (train-once-serve-many), as in the other ANN ops.
-    """
-    if cents is None:
-        cents = deterministic_centroids(corpus, n_cells, id_col, vec_col)
-    if books is None:
-        books = pq_train(corpus, m, n_codes, iters, id_col, vec_col, dim)
-    subdim = len(books[0][0][1])
-
-    # corpus side: one row per (vector, subspace) carrying its coarse
-    # cell + PQ code — the entire serving index. The coarse-cell argmin
-    # and the m subspace argmins are independent argmins over the SAME
-    # row, so they run in ONE _staged_argmin_multi pass over ONE corpus
-    # scan, with a lineage barrier for the CollapseProject reason given
-    # in knn_ivf_probe.
-    m_sub = len(books)
-    cdf = spread(corpus).select(F.col(id_col),
-                                _as_double(F.col(vec_col)).alias("dv"))
-    cdf = cdf.select("*", *[
-        F.slice("dv", s * subdim + 1, subdim).alias(f"_sub{s}")
-        for s in range(m_sub)])
-    cdf = _staged_argmin_multi(cdf, [
-        ("dv", list(enumerate(cents)), "cell", "_d2c")] + [
-        (f"_sub{s}", book, f"_cell{s}", f"_d2_{s}")
-        for s, book in enumerate(books)])
-    structs = [
-        F.struct(F.lit(s).alias("subspace"),
-                 F.col(f"_cell{s}").alias("code"))
-        for s in range(m_sub)]
-    coded = (
-        cdf.select(F.col(id_col).alias("neighbor_id"), "cell",
-                   F.explode(F.array(*structs)).alias("e"))
-        .select("neighbor_id", "cell", "e.subspace", "e.code")
-        .localCheckpoint(eager=False)
-    )
-
-    q = _side(queries, "q", id_col, _as_double(vec_col))
-    probed = _route_nprobe(q, cents, nprobe).select("query_id", "cell")
-    # broadcast |Q| x nprobe x m x n_codes probe-scoped lookup; the
-    # (cell, subspace, code) equi-join restricts the ADC scan to the
-    # probed cells. Corpus routing is single-cell and a query's probed
-    # cells are distinct, so each (query, neighbor, subspace) scores
-    # exactly once — the groupBy sums exactly m rows per pair.
-    scored = _adc_cosine(coded, probed.join(_adc_lut(q, books), "query_id"),
-                         ["cell", "subspace", "code"])
-    cand = _top_k(scored, shortlist).select("query_id", "neighbor_id")
-    return _top_k(_rerank(cand, queries, corpus, id_col, vec_col), k)
-
-
 def sq_train(emb: DataFrame, id_col: str = "vec_id",
              vec_col: str = "embedding", dim: int = 64
              ) -> tuple[list[float], list[float]]:
@@ -1201,10 +1096,9 @@ def sq_train(emb: DataFrame, id_col: str = "vec_id",
 
 
 def sq_assign(emb: DataFrame, vmins: list[float], vmaxs: list[float],
-              levels: int = 255, id_col: str = "vec_id",
-              vec_col: str = "embedding") -> DataFrame:
+              id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
     """8-bit scalar-quantization codes: per element,
-    ``round((x - vmin_d) * levels / span_d)`` clamped to [0, levels]
+    ``round((x - vmin_d) * 255 / span_d)`` clamped to [0, 255]
     (code 0 when the dimension is constant). Map-only — zip_with over
     broadcast literal min/span arrays inside whole-stage codegen; the
     output row is (id, array<int>) — the 1-byte-per-dimension
@@ -1215,46 +1109,9 @@ def sq_assign(emb: DataFrame, vmins: list[float], vmaxs: list[float],
     Out-of-range values (queries quantized against stale stats) clamp
     to the edge codes instead of corrupting neighbors — the same
     graceful-degradation contract as functions/layout.normalize_dim."""
-    encode, _ = _sq8_codec(vmins, vmaxs, levels)
+    encode, _ = _sq8_codec(vmins, vmaxs)
     return spread(emb).select(F.col(id_col),
                               encode(_as_double(vec_col)).alias("codes"))
-
-
-def knn_sq8(corpus: DataFrame, queries: DataFrame, k: int = 5,
-            levels: int = 255, id_col: str = "vec_id",
-            vec_col: str = "embedding", dim: int = 64,
-            stats: tuple[list[float], list[float]] | None = None
-            ) -> DataFrame:
-    """Approximate top-k cosine over an 8-bit scalar-quantized corpus
-    (FAISS IndexScalarQuantizer / QT_8bit flat search). The corpus is
-    stored as 1-byte-per-dimension codes; each candidate dequantizes
-    ``vhat_d = vmin_d + code_d * span_d / levels`` at scan time and
-    scores exact cosine against the raw query vector (asymmetric:
-    query uncompressed, corpus compressed).
-
-    The 100 TB shape: exhaustive like knn_bruteforce, but the scanned
-    index is 8× smaller (64 B vs 512 B per vector at dim=64 float64,
-    4× vs float32) — the memory/IO axis of ANN, complementary to IVF's
-    CPU-pruning axis; compose with an IVF route for both (the
-    knn_ivf_pq precedent). Decode is map-only zip_with math in
-    whole-stage codegen; scoring is the same broadcast-|Q| pattern as
-    the rest of the family.
-
-    Deterministic end-to-end — training (order-independent min/max),
-    codes (fixed-order IEEE ops + floor), dequantize, tie-broken
-    ranking — so the DuckDB oracle replays training, quantization, and
-    scoring exactly. ``stats``: pre-trained (vmins, vmaxs) from a model
-    registry (train-once-serve-many, as the other ANN ops)."""
-    if stats is None:
-        stats = sq_train(corpus, id_col, vec_col, dim)
-    _, decode = _sq8_codec(*stats, levels)
-    # decode-at-scan: the candidate vector derives from the CODES (the
-    # persisted form), never from the raw vector — information flows
-    # through 1 byte/dim
-    c = _side(sq_assign(corpus, *stats, levels, id_col, vec_col), "c",
-              id_col, decode(F.col("codes")))
-    q = _side(queries, "q", id_col, _as_double(vec_col))
-    return _top_k(_cosine_pairs(c.join(F.broadcast(q))), k, "cosine_sq8")
 
 
 def hard_negatives(corpus: DataFrame, queries: DataFrame, k: int = 3,
@@ -1266,7 +1123,7 @@ def hard_negatives(corpus: DataFrame, queries: DataFrame, k: int = 3,
     or InfoNCE loss learns most from (easy negatives are already far;
     these are the boundary cases).
 
-    Same broadcast-|Q| exhaustive shape as knn_bruteforce with the
+    Same broadcast-|Q| exhaustive shape as :func:`search` with the
     label-mismatch predicate fused into the join condition, so
     same-label pairs are dropped BEFORE scoring ever materializes —
     at 100 TB the pruned pairs never enter the pair stream. Swap the
@@ -1282,44 +1139,3 @@ def hard_negatives(corpus: DataFrame, queries: DataFrame, k: int = 3,
         "query_label", "neighbor_label")
     return _top_k(scored, k, cols=("query_id", "query_label", "rank",
                                    "neighbor_id", "neighbor_label"))
-
-
-def knn_ivf_sq8(corpus: DataFrame, queries: DataFrame, k: int = 5,
-                n_cells: int = 8, nprobe: int = 2, levels: int = 255,
-                id_col: str = "vec_id", vec_col: str = "embedding",
-                dim: int = 64, cents: list | None = None,
-                stats: tuple[list[float], list[float]] | None = None
-                ) -> DataFrame:
-    """FAISS IVF-SQ composition: an IVF coarse quantizer routes each
-    query to its ``nprobe`` nearest cells, and scoring touches ONLY
-    the 1-byte-per-dimension SQ8 codes living in those cells —
-    :func:`knn_ivf_probe`'s CPU-pruning axis times :func:`knn_sq8`'s
-    memory axis. Where IVF-PQ's codebook floors recall (~0.4 on
-    uniform vectors at the pinned params), IVF-SQ keeps SQ8's
-    near-lossless codes (recall limited only by cell routing) at 4-8×
-    less index than IVF-flat — the standard middle tier real vector
-    stores ship between IVFFlat and IVFPQ.
-
-    Deterministic end-to-end (seeded centroids, min/max stats,
-    fixed-order quantize ops, tie-broken ranks): the oracle replays
-    routing, quantization, decode, and scoring. ``cents``/``stats``:
-    registry artifacts (train once, serve many)."""
-    if cents is None:
-        cents = deterministic_centroids(corpus, n_cells, id_col, vec_col)
-    if stats is None:
-        stats = sq_train(corpus, id_col, vec_col, dim)
-    encode, decode = _sq8_codec(*stats, levels)
-    # corpus index: (neighbor_id, cell, cv, cn) — decode-at-scan from the
-    # 1-byte codes, routed by the coarse quantizer. The coarse-cell
-    # argmin and the quantize/dequantize are row-local functions of the
-    # same vector, so they run in ONE map-only pass over ONE corpus
-    # scan, with a lineage barrier for the CollapseProject reason given
-    # in knn_ivf_probe.
-    c = _side(ivf_assign(corpus, cents, id_col, vec_col), "c", id_col,
-              decode(encode(F.col("dv"))), "cell")
-    c = c.localCheckpoint(eager=False)
-    q = _side(queries, "q", id_col, _as_double(vec_col))
-    # the routed query side keeps q's columns: broadcast it directly
-    return _top_k(_cosine_pairs(
-        c.join(F.broadcast(_route_nprobe(q, cents, nprobe)), "cell")), k,
-        "cosine_sq8")

@@ -252,22 +252,11 @@ def make_autoregressive_worker(model, horizon: int, run_id: str, level: str):
     inherently sequential per entity, so it lives inside applyInPandas
     where each executor walks its own entities.
 
-    ``model``: either a theta list (OLS coefficients over
-    [1, lag_1, lag_7, roll_mean_7, isodow, month]) or a
-    ``(name, predict_fn)`` pair from :func:`fit_global_model` — the
-    predict closure (e.g. a pickled LightGBM booster) ships to
-    executors inside the applyInPandas closure, the reference's
-    one-booster-for-all-entities design."""
-    if isinstance(model, tuple):
-        model_name, predict = model
-    else:
-        theta = [float(t) for t in model]
-        model_name = "global_linear"
-
-        def predict(x: list[float]) -> float:
-            import numpy as np
-
-            return float(np.dot(theta, x))
+    ``model``: the ``(name, predict_fn)`` pair from
+    :func:`fit_global_model` — the predict closure (e.g. a pickled
+    LightGBM booster) ships to executors inside the applyInPandas
+    closure, the reference's one-booster-for-all-entities design."""
+    model_name, predict = model
 
     def worker(pdf: pd.DataFrame) -> pd.DataFrame:
         import numpy as np

@@ -410,10 +410,10 @@ FROM ranked WHERE rank <= 5
 def knn_cosine_bruteforce(spark, sf_dir):
     """Exact top-5 cosine neighbors for the query subset (vec_id%50=0)
     via broadcast cross join + codegen'd array math
-    (operators/similarity.py)."""
+    (operators/similarity.py::search)."""
     emb = t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") % 50 == 0)
-    return S.knn_bruteforce(emb, queries, k=5)
+    return S.search(emb, queries, 5)
 
 
 @register("knn_cosine_matmul", oracle=_KNN_SQL)
@@ -436,7 +436,11 @@ def knn_cosine_matmul(spark, sf_dir):
 # and in-bucket exact cosine are all reproduced in SQL.
 # ---------------------------------------------------------------------------
 
-def _lsh_oracle(n_planes: int = 8, seed: int = 7, dim: int = 64, k: int = 5) -> str:
+#: (n_planes, seed, dim) of knn_cosine_lsh's sign-LSH route.
+_KNN_LSH = (8, 7, 64)
+
+
+def _lsh_oracle(n_planes: int, seed: int, dim: int, k: int = 5) -> str:
     """Hyperplane vectors are hoisted into a VALUES CTE and cross-joined
     (one dot product per (vector, plane) row) instead of inlined as
     per-plane array literals in the projection expression — DuckDB
@@ -479,15 +483,15 @@ FROM ranked WHERE rank <= {k}
 """
 
 
-@register("knn_cosine_lsh", oracle=_lsh_oracle())
+@register("knn_cosine_lsh", oracle=_lsh_oracle(*_KNN_LSH))
 def knn_cosine_lsh(spark, sf_dir):
     """Approximate top-5 cosine neighbors within sign-LSH buckets
-    (operators/similarity.py::knn_lsh) — candidate pruning via
+    (operators/similarity.py::search with ``lsh``) — candidate pruning via
     deterministic random-hyperplane buckets; the equi-join plan that
     replaces the cross join at 100 TB."""
     emb = t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") % 50 == 0)
-    return S.knn_lsh(emb, queries, k=5)
+    return S.search(emb, queries, 5, lsh=_KNN_LSH)
 
 
 # ---------------------------------------------------------------------------
@@ -943,15 +947,15 @@ WHERE rank <= 5
 @register("knn_cosine_ivf", oracle=_IVF_SQL, bench=True)
 def knn_cosine_ivf(spark, sf_dir):
     """IVF-bucketed approximate top-5 cosine neighbors
-    (operators/similarity.py::knn_ivf_probe with nprobe=1):
+    (operators/similarity.py::search with ``cents``, nprobe=1):
     deterministic centroid routing, exact search within the query's
     nearest cell — the inverted-file scale path next to the LSH
     variant. The oracle replays the same routing in SQL: the nearest
     cell with ties to the lower index == ORDER BY d2, cell_idx."""
     emb = t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") % 50 == 0)
-    return S.knn_ivf_probe(emb, queries, k=5, nprobe=1,
-                           cents=_ivf_cents(spark, sf_dir, 8))
+    return S.search(emb, queries, 5, cents=_ivf_cents(spark, sf_dir, 8),
+                    nprobe=1)
 
 
 # ---------------------------------------------------------------------------
@@ -2132,13 +2136,13 @@ WHERE rank <= 5
 @register("knn_cosine_ivf_probe2", oracle=_IVF_PROBE_SQL)
 def knn_cosine_ivf_probe2(spark, sf_dir):
     """IVF ANN probing the query's 2 nearest cells
-    (operators/similarity.py::knn_ivf_probe): corpus routing stays
+    (operators/similarity.py::search): corpus routing stays
     single-cell, only queries fan out — cost ∝ queries × nprobe. The
     oracle replays the 2-cell routing and the cross-cell DISTINCT."""
     emb = t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") % 50 == 0)
-    return S.knn_ivf_probe(emb, queries, k=5, nprobe=2,
-                           cents=_ivf_cents(spark, sf_dir, 8))
+    return S.search(emb, queries, 5, cents=_ivf_cents(spark, sf_dir, 8),
+                    nprobe=2)
 
 
 # --- dedup_exact_segments --------------------------------------------------
@@ -2663,10 +2667,11 @@ FROM ranked WHERE rank <= 5
 
 @register("knn_cosine_pq_adc", oracle=_PQ_ADC_SQL, bench=True)
 def knn_cosine_pq_adc(spark, sf_dir):
-    """PQ asymmetric-distance top-5 (operators/similarity.py::
-    knn_pq_adc): the corpus carries only (id, subspace, code) through
-    the scored join — the 8-bytes-per-subspace compressed form — and
-    every float op lives in the broadcast |Q| x m x k query lookup.
+    """PQ asymmetric-distance top-5 (operators/similarity.py::search
+    with ``books``): the corpus carries only (id, subspace, code)
+    through the scored join — the 8-bytes-per-subspace compressed
+    form — and every float op lives in the broadcast |Q| x m x k
+    query lookup.
     Completes the ANN tier's memory story (LSH/IVF prune candidates;
     PQ shrinks the candidates themselves). Recall is code-resolution
     bound at this tiny k; the standard refinement is exact re-ranking
@@ -2674,8 +2679,7 @@ def knn_cosine_pq_adc(spark, sf_dir):
     replays training + codes + ADC scoring."""
     emb = t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") % 50 == 0)
-    return S.knn_pq_adc(emb, queries, k=5, m=_PQ_M, n_codes=_PQ_K, iters=1,
-                        books=_pq_books(spark, sf_dir))
+    return S.search(emb, queries, 5, books=_pq_books(spark, sf_dir))
 
 
 _PQ_SHORTLIST = 50
@@ -2711,10 +2715,11 @@ FROM rer WHERE rank <= 5
 
 @register("knn_cosine_pq_rerank", oracle=_PQ_RERANK_SQL, bench=True)
 def knn_cosine_pq_rerank(spark, sf_dir):
-    """The complete IVF-PQ search (operators/similarity.py::
-    knn_pq_rerank): ADC over the compressed corpus shortlists 50
-    candidates per query, then only those |Q| x 50 pairs fetch raw
-    vectors for exact cosine re-ranking — reported cosines are exact;
+    """The complete IVF-PQ search (operators/similarity.py::search
+    with ``books`` and ``shortlist``): ADC over the compressed corpus
+    shortlists 50 candidates per query, then only those |Q| x 50 pairs
+    fetch raw vectors for exact cosine re-ranking — reported cosines
+    are exact;
     the approximation is confined to shortlist membership. Measured
     true-top-5 shortlist coverage 0.40-0.49 on the uniform-random
     synthetic corpus (distance concentration — quantization's hardest
@@ -2722,9 +2727,8 @@ def knn_cosine_pq_rerank(spark, sf_dir):
     Oracle replays training, codes, ADC shortlist, and the re-rank."""
     emb = t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") % 50 == 0)
-    return S.knn_pq_rerank(emb, queries, k=5, shortlist=_PQ_SHORTLIST,
-                           m=_PQ_M, n_codes=_PQ_K, iters=1,
-                           books=_pq_books(spark, sf_dir))
+    return S.search(emb, queries, 5, books=_pq_books(spark, sf_dir),
+                    shortlist=_PQ_SHORTLIST)
 
 
 # ---------------------------------------------------------------------------
@@ -2785,7 +2789,7 @@ def knn_label_vote(spark, sf_dir):
 
     emb = t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") % 50 == 0)
-    top5 = S.knn_bruteforce(emb, queries, k=5)
+    top5 = S.search(emb, queries, 5)
     labels = emb.select(F.col("vec_id"), F.col("label"))
     tagged = (
         top5
@@ -3159,7 +3163,7 @@ FROM rer WHERE rank <= 5
 @register("knn_cosine_ivf_pq", oracle=_IVFPQ_SQL, bench=True)
 def knn_cosine_ivf_pq(spark, sf_dir):
     """IVF-routed PQ-ADC search with exact re-rank
-    (operators/similarity.py::knn_ivf_pq) — the FAISS-IVFADC
+    (operators/similarity.py::search) — the FAISS-IVFADC
     composition: nprobe=2 of 8 cells bounds the ADC scan to ~1/4 of
     the compressed corpus, the 50-candidate shortlist re-ranks with
     raw vectors, reported cosines are exact. Both trained artifacts
@@ -3178,11 +3182,10 @@ def knn_cosine_ivf_pq(spark, sf_dir):
     better than uniform noise)."""
     emb = t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") % 50 == 0)
-    return S.knn_ivf_pq(
-        emb, queries, k=5, n_cells=_IVFPQ_CELLS, nprobe=_IVFPQ_NPROBE,
-        shortlist=_PQ_SHORTLIST, m=_PQ_M, n_codes=_PQ_K, iters=1,
-        cents=_ivf_cents(spark, sf_dir, _IVFPQ_CELLS),
-        books=_pq_books(spark, sf_dir))
+    return S.search(
+        emb, queries, 5, cents=_ivf_cents(spark, sf_dir, _IVFPQ_CELLS),
+        nprobe=_IVFPQ_NPROBE, books=_pq_books(spark, sf_dir),
+        shortlist=_PQ_SHORTLIST)
 
 
 # ---------------------------------------------------------------------------
@@ -3198,7 +3201,6 @@ def knn_cosine_ivf_pq(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 _SQ8_DIM = 64
-_SQ8_LEVELS = 255
 
 _SQ8_SQL = f"""
 WITH v AS (
@@ -3216,8 +3218,8 @@ WITH v AS (
     SELECT vec_id AS neighbor_id,
            list_transform(range(1, {_SQ8_DIM + 1}), i ->
              CASE WHEN spans[i] > 0
-                  THEN CAST(FLOOR(GREATEST(0.0, LEAST({_SQ8_LEVELS}.0,
-                       (dv[i] - mns[i]) * {_SQ8_LEVELS}.0 / spans[i]))
+                  THEN CAST(FLOOR(GREATEST(0.0, LEAST({S.SQ8_LEVELS}.0,
+                       (dv[i] - mns[i]) * {S.SQ8_LEVELS}.0 / spans[i]))
                        + 0.5) AS INT)
                   ELSE 0 END) AS codes
     FROM v CROSS JOIN arrs
@@ -3227,7 +3229,7 @@ WITH v AS (
     FROM (
         SELECT neighbor_id,
                list_transform(range(1, {_SQ8_DIM + 1}), i ->
-                 codes[i] * spans[i] / {_SQ8_LEVELS}.0 + mns[i]) AS vhat
+                 codes[i] * spans[i] / {S.SQ8_LEVELS}.0 + mns[i]) AS vhat
         FROM coded CROSS JOIN arrs
     )
 ), q AS (
@@ -3256,17 +3258,18 @@ def _sq_stats(spark, sf_dir):
     min/max aggregate, but the registry keeps bench/test re-runs from
     re-scanning the corpus per call (same rationale as _pq_books)."""
     return _trained_model(
-        sf_dir, "embeddings", ("sq8", _SQ8_LEVELS),
+        sf_dir, "embeddings", ("sq8", S.SQ8_LEVELS),
         lambda: S.sq_train(t(spark, sf_dir, "embeddings"), dim=_SQ8_DIM))
 
 
 @register("knn_cosine_sq8", oracle=_SQ8_SQL, bench=True)
 def knn_cosine_sq8(spark, sf_dir):
     """Scalar-quantized (8-bit) flat cosine top-5
-    (operators/similarity.py::knn_sq8): per-dimension affine codes in
-    [0, 255], decode-at-scan, broadcast-|Q| exhaustive scoring — the
-    memory/IO axis of ANN with NO codebook training (min/max only),
-    the standard FAISS SQ8 tier between raw flat and PQ. Unlike
+    (operators/similarity.py::search with ``sq8``): per-dimension
+    affine codes in [0, 255], decode-at-scan, broadcast-|Q| exhaustive
+    scoring — the memory/IO axis of ANN with NO codebook training
+    (min/max only), the standard FAISS SQ8 tier between raw flat and
+    PQ. Unlike
     PQ-ADC's codebook floor, SQ8 at 8 bits is near-lossless even on
     the uniform-random corpus (quantization's hardest regime):
     measured recall@5 vs knn_cosine_bruteforce is 0.98 at sf0.01 and
@@ -3275,8 +3278,7 @@ def knn_cosine_sq8(spark, sf_dir):
     code assignment, dequantize, and scoring."""
     emb = t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") % 50 == 0)
-    return S.knn_sq8(emb, queries, k=5, levels=_SQ8_LEVELS, dim=_SQ8_DIM,
-                     stats=_sq_stats(spark, sf_dir))
+    return S.search(emb, queries, 5, sq8=_sq_stats(spark, sf_dir))
 
 
 # ---------------------------------------------------------------------------
@@ -4052,7 +4054,7 @@ def weighted_sample_race(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# q — IVF-SQ composed search (operators/similarity.py::knn_ivf_sq8):
+# q — IVF-SQ composed search (operators/similarity.py::search):
 # coarse routing bounds the scan to ~nprobe/n_cells of the corpus,
 # and what is scanned is the 1-byte-per-dimension SQ8 index — the
 # CPU axis times the memory axis with SQ8's near-lossless codes
@@ -4080,8 +4082,8 @@ WITH v AS (
     SELECT vec_id AS neighbor_id,
            list_transform(range(1, {_SQ8_DIM + 1}), i ->
              CASE WHEN spans[i] > 0
-                  THEN CAST(FLOOR(GREATEST(0.0, LEAST({_SQ8_LEVELS}.0,
-                       (dv[i] - mns[i]) * {_SQ8_LEVELS}.0 / spans[i]))
+                  THEN CAST(FLOOR(GREATEST(0.0, LEAST({S.SQ8_LEVELS}.0,
+                       (dv[i] - mns[i]) * {S.SQ8_LEVELS}.0 / spans[i]))
                        + 0.5) AS INT)
                   ELSE 0 END) AS codes
     FROM v CROSS JOIN arrs
@@ -4091,7 +4093,7 @@ WITH v AS (
     FROM (
         SELECT neighbor_id,
                list_transform(range(1, {_SQ8_DIM + 1}), i ->
-                 codes[i] * spans[i] / {_SQ8_LEVELS}.0 + mns[i]) AS vhat
+                 codes[i] * spans[i] / {S.SQ8_LEVELS}.0 + mns[i]) AS vhat
         FROM coded CROSS JOIN arrs
     )
 ), icents AS (
@@ -4142,7 +4144,7 @@ FROM ranked WHERE rank <= 5
 
 @register("knn_cosine_ivf_sq8", oracle=_IVFSQ_SQL)
 def knn_cosine_ivf_sq8(spark, sf_dir):
-    """IVF-routed SQ8 search (operators/similarity.py::knn_ivf_sq8):
+    """IVF-routed SQ8 search (operators/similarity.py::search):
     nprobe=2 of 8 cells bounds the scan to ~1/4 of the corpus and the
     scanned index is the 1-byte-per-dimension codes — the composition
     tier between knn_cosine_ivf_probe2 (raw vectors) and
@@ -4154,11 +4156,9 @@ def knn_cosine_ivf_sq8(spark, sf_dir):
     everything."""
     emb = t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") % 50 == 0)
-    return S.knn_ivf_sq8(
-        emb, queries, k=5, n_cells=_IVFSQ_CELLS, nprobe=_IVFSQ_NPROBE,
-        levels=_SQ8_LEVELS, dim=_SQ8_DIM,
-        cents=_ivf_cents(spark, sf_dir, _IVFSQ_CELLS),
-        stats=_sq_stats(spark, sf_dir))
+    return S.search(
+        emb, queries, 5, cents=_ivf_cents(spark, sf_dir, _IVFSQ_CELLS),
+        nprobe=_IVFSQ_NPROBE, sq8=_sq_stats(spark, sf_dir))
 
 
 # ---------------------------------------------------------------------------
@@ -4308,7 +4308,7 @@ def ann_recall_certification(spark, sf_dir):
     their own gated queries train) and counts exact pair hits. The
     measured hierarchy this pins at sf0.01: sq8 ~0.98 (near-lossless
     scalar codes) > ivf_probe2 == ivf_sq8 at 0.52 (quantization free,
-    loss is pure cell routing) > pq_adc ~0.4 (2-subspace/4-code
+    loss is pure cell routing) > pq_adc ~0.4 (4-subspace/8-code
     resolution floor on uniform-random vectors — the regime quantization hates most; see the PQ
     queries' docstrings for the rerank/parameter-growth remedies)."""
     # The bruteforce frame is consumed five times (four hit-joins +

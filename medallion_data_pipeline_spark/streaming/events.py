@@ -184,11 +184,14 @@ def merge_sink(path: str, pk: list[str]):
     Update-mode aggregations re-emit a key whenever it changes; a
     replayed batch after restart re-emits the same keys. Both collapse
     to last-write-wins on pk, so results are exactly-once over
-    at-least-once delivery. The overwrite goes through a staging dir +
-    atomic rename because the merge plan READS the same target path
-    (self-overwrite guard, local-fs semantics). On a real cluster swap
-    the body for `MERGE INTO` on a Delta/Iceberg table — the stream
-    wiring is unchanged.
+    at-least-once delivery. The overwrite goes through a staging dir
+    because the merge plan READS the same target path (self-overwrite
+    guard, local-fs semantics): the old target is renamed aside, the
+    staging dir renamed in, and only then is the aside copy deleted.
+    A crash between the two renames leaves the target missing and the
+    aside copy intact, so the next call restores it before replaying
+    the batch. On a real cluster swap the body for `MERGE INTO` on a
+    Delta/Iceberg table — the stream wiring is unchanged.
     """
     from ..operators.upsert import merge_upsert
 
@@ -196,6 +199,12 @@ def merge_sink(path: str, pk: list[str]):
         import os
         import shutil
 
+        aside = path + ".aside"
+        if os.path.isdir(aside):
+            if os.path.isdir(path):
+                shutil.rmtree(aside)
+            else:
+                os.replace(aside, path)
         spark = batch_df.sparkSession
         batch = batch_df.dropDuplicates(pk)
         if os.path.isdir(path):
@@ -205,8 +214,10 @@ def merge_sink(path: str, pk: list[str]):
         staging = path + ".staging"
         merged.write.mode("overwrite").parquet(staging)
         if os.path.isdir(path):
-            shutil.rmtree(path)
+            os.replace(path, aside)
         os.replace(staging, path)
+        if os.path.isdir(aside):
+            shutil.rmtree(aside)
 
     return _sink
 

@@ -133,13 +133,14 @@ def test_ann_variants_recall_floor(spark):
     def pairs(df):
         return {(r.query_id, r.neighbor_id) for r in df.collect()}
 
-    exact = pairs(S.knn_bruteforce(emb, qs, k=5))
+    exact = pairs(S.search(emb, qs, 5))
     # wider buckets (fewer planes) for recall; the synthetic embeddings
     # are near-isotropic, so hyperplane agreement among true neighbors
     # is weak — floors sit far above the ~0.01 chance baseline, not at
     # production levels (real clustered embeddings bucket far better)
-    lsh = pairs(S.knn_lsh(emb, qs, k=5, n_planes=4))
-    ivf = pairs(S.knn_ivf_probe(emb, qs, k=5, nprobe=1))
+    lsh = pairs(S.search(emb, qs, 5, lsh=(4, 7, 64)))
+    ivf = pairs(S.search(emb, qs, 5, nprobe=1,
+                         cents=S.deterministic_centroids(emb, 8)))
     assert len(exact) > 0
     assert len(lsh & exact) / len(exact) >= 0.1
     assert len(ivf & exact) / len(exact) >= 0.3
@@ -563,9 +564,10 @@ def test_pq_codes_are_argmin_and_rerank_is_exact(spark):
 
     q = emb.filter(F.col("vec_id") % 50 == 0)
     rer = {(r.query_id, r.neighbor_id): r.cosine
-           for r in S.knn_pq_rerank(emb, q, k=5, shortlist=50).collect()}
+           for r in S.search(emb, q, 5, books=books,
+                             shortlist=50).collect()}
     bf = {(r.query_id, r.neighbor_id): r.cosine
-          for r in S.knn_bruteforce(emb, q, k=5).collect()}
+          for r in S.search(emb, q, 5).collect()}
 
     def cos(a, b):
         return float(a @ b / (np.linalg.norm(a) * np.linalg.norm(b)))
@@ -1024,9 +1026,9 @@ def test_sq8_codes_roundtrip_and_recall(spark):
 
     q = emb.filter(F.col("vec_id") % 50 == 0)
     sq = {(r.query_id, r.neighbor_id)
-          for r in S.knn_sq8(emb, q, k=5, stats=(vmins, vmaxs)).collect()}
+          for r in S.search(emb, q, 5, sq8=(vmins, vmaxs)).collect()}
     bf = {(r.query_id, r.neighbor_id)
-          for r in S.knn_bruteforce(emb, q, k=5).collect()}
+          for r in S.search(emb, q, 5).collect()}
     assert len(sq & bf) / len(bf) >= 0.9
 
 

@@ -55,7 +55,7 @@ def test_knn_bruteforce_identical_vector_is_top1(spark):
         (3, [0.9, 0.1, 0.0]),    # close
     ]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    out = S.knn_bruteforce(emb, emb.filter("vec_id = 0"), k=2).collect()
+    out = S.search(emb, emb.filter("vec_id = 0"), 2).collect()
     assert [r.neighbor_id for r in out] == [1, 3]
     assert out[0].cosine == 1.0
 
@@ -68,7 +68,7 @@ def test_knn_matmul_matches_bruteforce(spark):
     rows.append((80, [0.0] * 16))  # zero vector: NULL cosines, ranked last
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     queries = emb.filter("vec_id % 20 = 0")
-    bf = sorted(map(tuple, S.knn_bruteforce(emb, queries, k=4).collect()))
+    bf = sorted(map(tuple, S.search(emb, queries, 4).collect()))
     mm = sorted(map(tuple, S.knn_matmul(emb, queries, k=4).collect()))
     assert bf == mm
 
@@ -77,7 +77,8 @@ def test_knn_lsh_finds_identical(spark):
     rows = [(i, [float(i == j) for j in range(8)]) for i in range(8)]
     rows.append((100, [1.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0]))  # dup of vec 0
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    out = S.knn_lsh(emb, emb.filter("vec_id = 0"), k=3, dim=8).collect()
+    out = S.search(emb, emb.filter("vec_id = 0"), 3,
+                   lsh=(8, 7, 8)).collect()
     assert any(r.neighbor_id == 100 and r.cosine == 1.0 for r in out)
 
 
@@ -115,8 +116,8 @@ def test_knn_ivf_finds_identical_in_cell(spark):
     rows = [(i, [float(i == j) for j in range(8)]) for i in range(8)]
     rows.append((100, [1.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0]))  # dup of vec 0
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    out = S.knn_ivf_probe(emb, emb.filter("vec_id = 0"), k=3, n_cells=4,
-                          nprobe=1).collect()
+    out = S.search(emb, emb.filter("vec_id = 0"), 3, nprobe=1,
+                   cents=S.deterministic_centroids(emb, 4)).collect()
     assert any(r.neighbor_id == 100 and r.cosine == 1.0 for r in out)
 
 

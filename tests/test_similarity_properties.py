@@ -1,6 +1,6 @@
 """Property-based tests for the similarity kernel and the tokenizer.
 
-- ``knn_bruteforce`` against a Python mirror on random INTEGER-valued
+- exhaustive ``search`` against a Python mirror on random INTEGER-valued
   embeddings: integer components keep every dot product and squared
   norm exact in IEEE doubles regardless of summation order, so the
   engine's sequential fold and the mirror's math produce bit-identical
@@ -50,7 +50,7 @@ def test_knn_bruteforce_matches_python_mirror(spark, vecs):
         "vec_id long, embedding array<float>")
     k = 2
     got: dict[int, list[tuple[int, int]]] = {}
-    for r in S.knn_bruteforce(df, df, k=k).collect():
+    for r in S.search(df, df, k).collect():
         got.setdefault(r.query_id, []).append((r.rank, r.neighbor_id))
 
     norms = [math.sqrt(float(sum(x * x for x in v))) for v in vecs]

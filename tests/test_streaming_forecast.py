@@ -319,10 +319,14 @@ def test_foreach_batch_jdbc_merge_idempotent(spark, tmp_path):
     assert read_target() == expected
 
 
-def test_streaming_bronze_csv_ingest(spark, tmp_path):
+def test_streaming_bronze_csv_ingest(spark, tmp_path, monkeypatch):
     """File-watch CSV -> keyed merge into bronze: later files upsert on
     pk, incremental runs only process new files, silver can read the
-    result."""
+    result, and a crash mid-swap loses no rows."""
+    import os
+
+    import pytest
+
     from medallion_data_pipeline_spark.streaming import ingest as SI
 
     land = tmp_path / "landing"
@@ -350,6 +354,34 @@ def test_streaming_bronze_csv_ingest(spark, tmp_path):
     got = {r.supplier_id: r.supplier_name
            for r in read_table(spark, wh, "bronze", "suppliers").collect()}
     assert got == {1: "Acme Corp", 2: "Beta Holdings", 3: "Gamma Inc"}
+
+    # third file dies between the sink's two renames (old target out,
+    # staging in); the restart on the same checkpoint replays the batch
+    # and bronze converges to the clean-run state
+    (land / "batch3.csv").write_text(
+        "supplier_id,supplier_name,contact_email,phone_number\n"
+        "4,Delta Co,d@x.com,555-0004\n")
+    target = os.path.join(wh, "bronze", "suppliers")
+    real_replace = os.replace
+    crashed = []
+
+    def crash_once(src, dst):
+        if os.fspath(dst) == target and not crashed \
+                and os.fspath(src).endswith(".staging"):
+            crashed.append(src)
+            raise OSError("simulated crash between the swap renames")
+        return real_replace(src, dst)
+
+    monkeypatch.setattr(os, "replace", crash_once)
+    with pytest.raises(Exception):
+        SI.run_csv_ingest(spark, str(land), wh, "suppliers", schema, cp)
+    assert crashed
+    SI.run_csv_ingest(spark, str(land), wh, "suppliers", schema, cp)
+    got = {r.supplier_id: r.supplier_name
+           for r in read_table(spark, wh, "bronze", "suppliers").collect()}
+    assert got == {1: "Acme Corp", 2: "Beta Holdings", 3: "Gamma Inc",
+                   4: "Delta Co"}
+    assert not os.path.exists(target + ".aside")
 
 
 def test_streaming_incremental_dedup_ingest(spark, tmp_path):

@@ -25,6 +25,7 @@ POINTER_SOURCES = (
     *sorted(PKG.rglob("*.py")),
     ROOT / "README.md",
     ROOT / "docs" / "SCALE_PLAYBOOK.md",
+    ROOT / "docs" / "COVERAGE.md",
     ROOT / ".claude" / "skills" / "verify" / "SKILL.md",
 )
 
